@@ -13,14 +13,23 @@ ignoreParseErrors=false, TimestampFormat.SQL``):
   also accepted by flink-json's SQL parser fallback).
 - Nested ROW columns recurse (nested projection supported,
   ``HttpLookupTableSource.scala:70``).
+
+:func:`arrow_table` is the columnar fast path over the same nodes.  It
+takes a column only when its JSON values need no conversion the reference
+would judge differently, and otherwise declines, so the caller runs
+:func:`deserialize_nodes` and keeps the reference's values and error text.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
+import decimal
 import json
 from typing import Any
 
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -37,6 +46,10 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+
+#: wide enough for any DECIMAL(38, s) value
+_DECIMAL_CONTEXT = decimal.Context(prec=38)
 
 
 def _parse_sql_timestamp(text: str) -> _dt.datetime:
@@ -86,9 +99,13 @@ def coerce_value(value: Any, dtype: DataType) -> Any:
             return float(value.strip())
         raise ValueError(f"cannot cast {value!r} to double")
     if isinstance(dtype, DecimalType):
-        import decimal
-
-        return decimal.Decimal(str(value))
+        # rounded half-up to the declared scale, as flink's
+        # DecimalData.fromBigDecimal and Spark's Decimal.set round
+        return decimal.Decimal(str(value)).quantize(
+            decimal.Decimal(1).scaleb(-dtype.scale),
+            rounding=decimal.ROUND_HALF_UP,
+            context=_DECIMAL_CONTEXT,
+        )
     if isinstance(dtype, TimestampType):
         if isinstance(value, str):
             return _parse_sql_timestamp(value)
@@ -130,3 +147,85 @@ def deserialize_nodes(nodes: list[Any], schema: StructType) -> list[tuple]:
             pretty = json.dumps(node, indent=2, default=str)
             raise RuntimeError(f"Failed to deserialize JSON node: {pretty}") from e
     return out
+
+
+# --- columnar fast path -----------------------------------------------------
+
+#: declared type → the JSON value types it takes without a conversion the
+#: reference could judge differently.  ``bool`` is its own type here (never
+#: an ``int``); inferring with ``pa.array`` instead would read
+#: ``[1.5, True]`` as ``double [1.5, 1.0]`` where the reference rejects True.
+_AS_IS: dict[type, frozenset[type]] = {
+    LongType: frozenset({int}),
+    IntegerType: frozenset({int}),
+    ShortType: frozenset({int}),
+    DoubleType: frozenset({int, float}),
+    FloatType: frozenset({int, float}),
+    StringType: frozenset({str}),
+    BooleanType: frozenset({bool}),
+    TimestampType: frozenset({str}),
+    DateType: frozenset({str}),
+}
+
+# The subsets of ``_parse_sql_timestamp`` and ``date.fromisoformat`` that
+# Arrow's ISO-8601 cast parses to the same value: zero-padded fields, year
+# 0001-9999, at most 6 fractional digits, an optional 'T' and trailing 'Z',
+# no surrounding space.  Out-of-range months, days and times pass the regex
+# and fail the cast, which declines.
+_YEAR = r"(?:[1-9]\d{3}|0[1-9]\d{2}|00[1-9]\d|000[1-9])"
+_DATE_RE = rf"^{_YEAR}-\d{{2}}-\d{{2}}$"
+_TIMESTAMP_RE = rf"^{_YEAR}-\d{{2}}-\d{{2}}[ T]\d{{2}}:\d{{2}}:\d{{2}}(?:\.\d{{1,6}})?Z?$"
+
+
+def _temporal_column(values: list[Any], dtype: DataType, target: pa.DataType) -> pa.Array | None:
+    """TIMESTAMP/DATE strings → Arrow, or None when any value could parse
+    differently from the reference.  A TIMESTAMP is read as a UTC instant,
+    as the reference's naive datetime is when it reaches Spark."""
+    text = pa.array(values, pa.string())
+    is_ts = isinstance(dtype, TimestampType)
+    matched = pc.match_substring_regex(text, _TIMESTAMP_RE if is_ts else _DATE_RE)
+    if pc.sum(matched).as_py() != len(values) - text.null_count:
+        return None
+    if is_ts:
+        naive = pc.utf8_rtrim(text, characters="Z").cast(pa.timestamp("us"))
+        return naive.cast(target)
+    return text.cast(target)
+
+
+def arrow_table(nodes: list[Any], schema: StructType) -> pa.Table | None:
+    """Parsed row-nodes → Arrow table of ``schema``, or None to decline.
+
+    A column is built only from values of the types ``_AS_IS`` lists for
+    its declared type, or from nulls alone (any declared type).  Anything
+    else declines: a non-object node, DECIMAL or nested ROW/ARRAY/MAP
+    values, a value out of the declared range, a timestamp or date string
+    outside the regex, and any Arrow error.
+    """
+    if not all(type(node) is dict for node in nodes):
+        return None
+    arrow_schema = to_arrow_schema(schema)
+    columns = []
+    try:
+        for field, target in zip(schema.fields, arrow_schema.types):
+            values = [node.get(field.name) for node in nodes]
+            kinds = set(map(type, values))
+            kinds.discard(type(None))
+            if kinds and not kinds <= _AS_IS.get(type(field.dataType), frozenset()):
+                return None
+            if kinds and isinstance(field.dataType, (TimestampType, DateType)):
+                column = _temporal_column(values, field.dataType, target)
+                if column is None:
+                    return None
+            else:
+                column = pa.array(values, target)
+            columns.append(column)
+    except (pa.ArrowException, OverflowError):
+        return None
+    return pa.Table.from_arrays(columns, schema=arrow_schema)
+
+
+def rows_table(rows: list[tuple], schema: StructType) -> pa.Table:
+    """Row tuples from :func:`deserialize_nodes` → Arrow table of ``schema``
+    (naive datetimes read as UTC instants, like :func:`arrow_table`)."""
+    struct = pa.struct(list(to_arrow_schema(schema)))
+    return pa.Table.from_struct_array(pa.array(rows, struct))

@@ -29,6 +29,7 @@ Parity notes:
 
 from __future__ import annotations
 
+import time
 from typing import Iterator
 
 from pyspark.sql.datasource import (
@@ -45,6 +46,7 @@ from flink_http_full_cache_connector_spark.options import (
     ValidationException,
     validate_options,
 )
+from flink_http_full_cache_connector_spark.sources.lookup import fetch_rows
 
 #: reader-side option keys injected by Spark itself, not user DDL
 _SPARK_INTERNAL_OPTIONS = {"path", "paths"}
@@ -89,8 +91,6 @@ class HttpLookupReader(DataSourceReader):
         return [InputPartition(0)]
 
     def read(self, partition: InputPartition) -> Iterator[tuple]:
-        from flink_http_full_cache_connector_spark.sources.lookup import fetch_rows
-
         yield from fetch_rows(self.opts, self.schema_)
 
 
@@ -112,10 +112,6 @@ class HttpLookupStreamReader(SimpleDataSourceStreamReader):
         return {"epoch": 0, "last_load_end_ms": 0}
 
     def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
-        import time
-
-        from flink_http_full_cache_connector_spark.sources.lookup import fetch_rows
-
         now_ms = int(time.time() * 1000)
         interval_ms = int(self.opts.refresh_interval_seconds * 1000)
         if now_ms - start["last_load_end_ms"] < interval_ms:
@@ -129,8 +125,6 @@ class HttpLookupStreamReader(SimpleDataSourceStreamReader):
         # always rebuilt from scratch, never persisted).
         if end["epoch"] <= start["epoch"]:
             return iter(())
-        from flink_http_full_cache_connector_spark.sources.lookup import fetch_rows
-
         return iter(fetch_rows(self.opts, self.schema_))
 
 

@@ -30,7 +30,7 @@ from flink_http_full_cache_connector_spark.http_client import (
     parse_payload,
 )
 from flink_http_full_cache_connector_spark.options import HttpLookupOptions, validate_options
-from flink_http_full_cache_connector_spark.rows import deserialize_nodes
+from flink_http_full_cache_connector_spark.rows import arrow_table, deserialize_nodes, rows_table
 
 
 @dataclass
@@ -38,12 +38,15 @@ class FetchStats:
     """Cache observability — the metric families the reference README
     documents but never registers (``README.md:199-208``): refresh
     durations, row counts, and (via ``http``) request/retry/failure
-    counts and response times."""
+    counts and response times.  ``arrow_fallbacks`` counts refreshes whose
+    payload the columnar build declined, so they ran the row-at-a-time
+    reference coercer."""
 
     fetch_count: int = 0
     last_fetch_duration_s: float = 0.0
     total_fetch_duration_s: float = 0.0
     last_row_count: int = 0
+    arrow_fallbacks: int = 0
     http: RequestMetrics = dataclass_field(default_factory=RequestMetrics)
 
     def as_dict(self) -> dict[str, float]:
@@ -53,8 +56,22 @@ class FetchStats:
             "last_refresh_duration_s": self.last_fetch_duration_s,
             "total_refresh_duration_s": self.total_fetch_duration_s,
             "cached_row_count": self.last_row_count,
+            "arrow_fallbacks": self.arrow_fallbacks,
             **self.http.as_dict(),
         }
+
+
+def fetch_nodes(opts: HttpLookupOptions, *, http_metrics: RequestMetrics | None = None) -> list:
+    """One full scan up to the row-nodes: GET → parse → pointer → fan-out."""
+    body = fetch_with_retry(
+        opts.url,
+        connect_timeout_seconds=opts.connect_timeout_seconds,
+        read_timeout_seconds=opts.read_timeout_seconds,
+        max_retries=opts.max_retries,
+        retry_delay_ms=opts.retry_delay_ms,
+        metrics=http_metrics,
+    )
+    return parse_payload(body, opts.xpath)
 
 
 def fetch_rows(
@@ -64,16 +81,7 @@ def fetch_rows(
     http_metrics: RequestMetrics | None = None,
 ) -> list[tuple]:
     """One full scan: GET → parse → pointer → fan-out → typed rows."""
-    body = fetch_with_retry(
-        opts.url,
-        connect_timeout_seconds=opts.connect_timeout_seconds,
-        read_timeout_seconds=opts.read_timeout_seconds,
-        max_retries=opts.max_retries,
-        retry_delay_ms=opts.retry_delay_ms,
-        metrics=http_metrics,
-    )
-    nodes = parse_payload(body, opts.xpath)
-    return deserialize_nodes(nodes, schema)
+    return deserialize_nodes(fetch_nodes(opts, http_metrics=http_metrics), schema)
 
 
 def _local_relation(spark: SparkSession, rows: list[tuple], schema: StructType) -> DataFrame:
@@ -103,11 +111,14 @@ def create_lookup_df(
 
     The whole payload lives on the driver ≙ the reference's single
     ``GenericInputSplit`` (``HttpInputFormatProvider.scala:80-81``).  The
-    rows become an Arrow-backed **LocalTableScan** — a JVM-side local
-    relation with no Python workers in the execution path, which Catalyst
-    broadcasts directly in the lookup join (no shuffle, no scan stage).
-    Falls back to the classic ``createDataFrame`` path for payloads pandas
-    can't represent (e.g. deeply nested rows).
+    parsed nodes become one Arrow table — built column by column by
+    :func:`rows.arrow_table`, or from :func:`rows.deserialize_nodes`'s rows
+    when that declines — and the table is handed to the JVM as a local
+    relation.  The relation is built eagerly, so a payload that does not
+    coerce fails here.  Up to ``spark.sql.execution.arrow.localRelationThreshold``
+    (48 MB by default) it is a **LocalTableScan**, above it an RDD of Arrow
+    batches held in the JVM; either way no Python worker runs, and Catalyst
+    broadcasts it directly in the lookup join.
     """
     if isinstance(schema, str):
         # DDL-string convenience (`"id INT, name STRING"`); without this,
@@ -116,13 +127,16 @@ def create_lookup_df(
         schema = StructType.fromDDL(schema)
     opts = options if isinstance(options, HttpLookupOptions) else validate_options(options)
     t0 = time.monotonic()
-    rows = fetch_rows(
-        opts, schema, http_metrics=stats.http if stats is not None else None
-    )
-    df = _local_relation(spark, rows, schema)
+    nodes = fetch_nodes(opts, http_metrics=stats.http if stats is not None else None)
+    table = arrow_table(nodes, schema)
+    declined = table is None
+    if declined:
+        table = rows_table(deserialize_nodes(nodes, schema), schema)
+    df = spark.createDataFrame(table, schema)
     if stats is not None:
         stats.fetch_count += 1
+        stats.arrow_fallbacks += declined
         stats.last_fetch_duration_s = time.monotonic() - t0
         stats.total_fetch_duration_s += stats.last_fetch_duration_s
-        stats.last_row_count = len(rows)
+        stats.last_row_count = table.num_rows
     return df

@@ -8,11 +8,13 @@ atomically replaces the old; a reload whose retries exhaust **fails the
 job** (no stale-cache fallback, pinned by
 ``HttpLookupConnectorIntegrationTest.scala:546-672``).
 
-Spark realization: the snapshot is a driver-built, Spark-cached DataFrame.
+Spark realization: the snapshot is a driver-built local relation
+(:func:`sources.lookup.create_lookup_df`), whose rows already live in the
+JVM when the build returns, so it needs no Spark cache and nothing to
+release: the old snapshot goes once no plan refers to it.
 ``check_and_reload`` is invoked between microbatches (from ``foreachBatch``
 or any driver loop) — never concurrently with a running batch, so the swap
-cannot race in-flight tasks.  The old snapshot is unpersisted (non-blocking)
-after the swap.
+cannot race in-flight tasks.
 """
 
 from __future__ import annotations
@@ -81,15 +83,12 @@ class RefreshingLookupCache:
         with self._lock:
             if not force and not self.due():
                 return False
-            new_df = create_lookup_df(
+            # the build is eager: a failed fetch or coercion raises here,
+            # before the swap, and the old snapshot keeps serving
+            self._snapshot = create_lookup_df(
                 self.spark, self.opts, self.schema, stats=self.stats
-            ).cache()
-            new_df.count()  # materialize now: load errors surface here, not mid-join
-            old = self._snapshot
-            self._snapshot = new_df
+            )
             self._last_load_end = time.monotonic()
-            if old is not None:
-                old.unpersist(blocking=False)
             return True
 
 

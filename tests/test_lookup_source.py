@@ -174,6 +174,61 @@ def test_nested_row_schema_through_arrow_path(spark, http_server):
     assert "LocalTableScan" in df._jdf.queryExecution().executedPlan().toString()
 
 
+@pytest.mark.parametrize(
+    "payload, fallbacks",
+    [
+        # plain values: the columnar build takes every column
+        (
+            [
+                {"id": 1, "at": "2024-03-10 02:30:00", "day": "2024-03-10", "v": 1.5},
+                {"id": 2, "at": "2024-11-03T01:30:00.25Z", "day": None, "v": 2},
+                {"id": 3, "at": "2024-07-01 12:00:00.123456", "day": "1999-12-31"},
+                {"id": 4},
+            ],
+            0,
+        ),
+        # an unpadded hour, a string-typed key and decimals to round: the
+        # row coercer builds it
+        (
+            [
+                {"id": "5", "at": " 2024-01-02 3:04:05", "day": "2024-01-02", "v": 1,
+                 "amount": 2.25},
+                {"id": 6, "at": "2024-06-30T23:59:59Z", "day": None, "v": None,
+                 "amount": "-0.35"},
+            ],
+            1,
+        ),
+    ],
+)
+def test_lookup_df_matches_row_build_under_non_utc_session(spark, http_server, payload, fallbacks):
+    """The relation from the Arrow build collects the same rows as the
+    former pandas-frame build of the reference's rows, under a session
+    time zone that is not UTC (a timestamp read as local time there would
+    be 7-8 h off), on both the columnar and the row-coercer route.  The
+    former build rounded excess decimal digits half-up in the JVM; the
+    reference coercer now does it."""
+    from flink_http_full_cache_connector_spark.rows import deserialize_nodes
+    from flink_http_full_cache_connector_spark.sources.lookup import _local_relation
+
+    schema = StructType.fromDDL("id BIGINT, at TIMESTAMP, day DATE, v DOUBLE, amount DECIMAL(10,1)")
+    http_server.set_payload(payload)
+    keys = ("spark.sql.session.timeZone", "spark.sql.execution.arrow.pyspark.enabled")
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        stats = FetchStats()
+        got = create_lookup_df(spark, {"url": http_server.url}, schema, stats=stats)
+        want = _local_relation(spark, deserialize_nodes(payload, schema), schema)
+        assert sorted(got.collect()) == sorted(want.collect())
+        assert stats.arrow_fallbacks == fallbacks
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def test_lookup_join_accepts_column_condition(spark, http_server):
     """The `df.join(other, cond)` shape Spark users reach for first: a raw
     boolean Column condition must pass through (it used to crash with

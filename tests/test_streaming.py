@@ -103,8 +103,45 @@ def test_refresh_fixed_delay_and_swap(spark, http_server):
     assert m["refresh_count"] == 2 and m["cached_row_count"] == 10
     assert m["http_attempts"] == 2 and m["http_retries"] == 0
     assert m["http_failures"] == 0
+    assert m["arrow_fallbacks"] == 0  # the users payload stays columnar
     assert 0 < m["last_refresh_duration_s"] <= m["total_refresh_duration_s"]
     assert 0 < m["http_last_duration_s"] <= m["http_total_duration_s"]
+
+
+@pytest.mark.parametrize("local_relation_threshold", [None, "0"])
+def test_refresh_snapshots_hold_no_spark_cache(spark, http_server, local_relation_threshold):
+    """Reloads build local relations and never register them with Spark's
+    cache, so nothing accumulates across reloads; the snapshot serves joins
+    from the JVM without fetching again.  A threshold of 0 turns the
+    snapshot into an RDD of Arrow batches instead of a LocalTableScan."""
+    from flink_http_full_cache_connector_spark.operators.lookup_join import lookup_join
+
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    saved = spark.conf.get(key)
+    if local_relation_threshold is not None:
+        spark.conf.set(key, local_relation_threshold)
+    try:
+        cache = RefreshingLookupCache(
+            spark, {"url": http_server.url, "cache.refresh-interval": "PT1H"}, USERS_SCHEMA
+        )
+        for _ in range(20):
+            cache.check_and_reload(force=True)
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+        snapshot = cache.current()
+        plan = snapshot._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" not in plan
+        if local_relation_threshold is None:
+            assert "LocalTableScan" in plan, plan
+        else:
+            assert "LocalTableScan" not in plan and "ExistingRDD" in plan, plan
+        fetched = http_server.request_count
+        assert fetched == 21
+        probe = spark.range(1, 13).select(F.col("id").cast("int").alias("user_id"))
+        out = lookup_join(probe, snapshot, on=[("user_id", "id")], how="left").collect()
+        assert sum(r.name is not None for r in out) == 10
+        assert http_server.request_count == fetched
+    finally:
+        spark.conf.set(key, saved)
 
 
 def test_refresh_fail_fast_propagates(spark, http_server):
