@@ -1126,9 +1126,7 @@ def connected_components(
     if n_edges <= local_threshold:
         from pyspark.sql.types import LongType, StructField, StructType
 
-        from flink_http_full_cache_connector_spark.sources.lookup import (
-            _local_relation,
-        )
+        from flink_http_full_cache_connector_spark.rows import rows_table
 
         parent: dict[int, int] = {}
 
@@ -1148,7 +1146,7 @@ def connected_components(
         schema = StructType(
             [StructField("id", LongType()), StructField("label", LongType())]
         )
-        return _local_relation(edges.sparkSession, rows, schema)
+        return edges.sparkSession.createDataFrame(rows_table(rows, schema), schema)
     labels = sym.select(F.col("a").alias("id")).distinct().withColumn(
         "label", F.col("id")
     )

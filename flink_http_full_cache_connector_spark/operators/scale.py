@@ -32,9 +32,12 @@ def parquet_num_rows(sf_dir: str, name: str) -> int | None:
             return int(pq.ParquetFile(path).metadata.num_rows)
         if os.path.isdir(path):
             total = 0
-            for root, _dirs, files in os.walk(path):
+            for root, dirs, files in os.walk(path):
+                # skip what Spark's reader skips: `_temporary` staging
+                # leftovers and hidden files
+                dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
                 for f in files:
-                    if f.endswith(".parquet"):
+                    if f.endswith(".parquet") and not f.startswith(("_", ".")):
                         total += int(
                             pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
                         )

@@ -406,7 +406,9 @@ def two_level_assign_arrow(
             # cell: nothing to emit
             out = pd.DataFrame({c: [] for c in cols}).astype(cols)
             if carry_through:
-                out["v"] = []
+                # an empty list column is float64 to pandas, which Arrow
+                # cannot convert to array<double>; object can
+                out["v"] = pd.Series([], dtype=object)
             return out
         fine_pdf = fine_pdf.sort_values("cent_id")
         ids = fine_pdf["cent_id"].to_numpy(dtype=np.int64)
@@ -1219,10 +1221,6 @@ def sim_ann_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from flink_http_full_cache_connector_spark.sources.lookup import (
-        _local_relation,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     work = tempfile.mkdtemp(prefix="spark_graft_ivfidx_")
     try:
@@ -1233,8 +1231,7 @@ def sim_ann_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = _ivf_probe_topk(emb, cent, assign)
         # materialize the queries*k-sized result so the temp index dir
         # can be removed (the relation is lazily read from it)
-        rows = [tuple(r) for r in out.collect()]
-        return _local_relation(spark, rows, out.schema)
+        return spark.createDataFrame(out.toArrow(), out.schema)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -1290,10 +1287,6 @@ def sim_ann_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from flink_http_full_cache_connector_spark.sources.lookup import (
-        _local_relation,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     bucket = (
         F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8), 16, 10)
@@ -1341,8 +1334,7 @@ def sim_ann_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).parquet(f"{work}/assign")
         cent, assign = ivf_index_load(spark, work)
         out = _ivf_probe_topk(emb, cent, assign)
-        rows = [tuple(r) for r in out.collect()]
-        return _local_relation(spark, rows, out.schema)
+        return spark.createDataFrame(out.toArrow(), out.schema)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -2095,10 +2087,6 @@ def sim_ann_ivf_2level_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from flink_http_full_cache_connector_spark.sources.lookup import (
-        _local_relation,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     work = tempfile.mkdtemp(prefix="spark_graft_ivf2idx_")
     try:
@@ -2120,8 +2108,7 @@ def sim_ann_ivf_2level_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # materialize the queries*k-sized result so the temp index dir
         # can be removed (the probe reads lazily from it)
-        rows = [tuple(r) for r in out.collect()]
-        return _local_relation(spark, rows, out.schema)
+        return spark.createDataFrame(out.toArrow(), out.schema)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 

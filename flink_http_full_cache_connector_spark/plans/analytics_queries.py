@@ -530,9 +530,6 @@ def bm25_segments_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         bm25_from_segments,
         posting_segments_save,
     )
-    from flink_http_full_cache_connector_spark.sources.lookup import (
-        _local_relation,
-    )
 
     docs = widen(load_table(spark, sf_dir, "documents"))
     work = tempfile.mkdtemp(prefix="spark_graft_postseg_")
@@ -543,8 +540,7 @@ def bm25_segments_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # materialize the top-N (metadata-sized) so the temp segment dir
         # can be removed (the relations read lazily from it)
-        rows = [tuple(r) for r in out.collect()]
-        return _local_relation(spark, rows, out.schema)
+        return spark.createDataFrame(out.toArrow(), out.schema)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -579,9 +575,6 @@ def bm25_delta_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         bm25_from_segments,
         posting_segments_save,
     )
-    from flink_http_full_cache_connector_spark.sources.lookup import (
-        _local_relation,
-    )
 
     docs = widen(load_table(spark, sf_dir, "documents"))
     bucket = (
@@ -615,8 +608,7 @@ def bm25_delta_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             b=BM25_B,
             topn=BM25_TOP_N,
         )
-        rows = [tuple(r) for r in out.collect()]
-        return _local_relation(spark, rows, out.schema)
+        return spark.createDataFrame(out.toArrow(), out.schema)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -662,9 +654,6 @@ def streaming_postings_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from flink_http_full_cache_connector_spark.sources.lookup import (
-        _local_relation,
-    )
     from flink_http_full_cache_connector_spark.streaming.upsert import (
         run_update_merge_stream,
     )
@@ -764,8 +753,8 @@ def streaming_postings_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged = run_update_merge_stream(
             stats, key_cols=["tok"], out_dir=f"{work}/state"
         )
-        rows = [tuple(r) for r in merged.collect()]  # vocabulary-sized
-        return _local_relation(spark, rows, merged.schema)
+        # vocabulary-sized
+        return spark.createDataFrame(merged.toArrow(), merged.schema)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -1120,9 +1109,6 @@ def hybrid_rrf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_index_load,
         ivf_index_save,
     )
-    from flink_http_full_cache_connector_spark.sources.lookup import (
-        _local_relation,
-    )
 
     docs = widen(load_table(spark, sf_dir, "documents"))
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1139,8 +1125,7 @@ def hybrid_rrf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = rrf_fuse(bm, dense, k=RRF_K, topn=BM25_TOP_N)
         # materialize the fused top-N (metadata-sized) so the temp index
         # dir can be removed (the dense leg reads lazily from it)
-        rows = [tuple(r) for r in out.collect()]
-        return _local_relation(spark, rows, out.schema)
+        return spark.createDataFrame(out.toArrow(), out.schema)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -1301,9 +1286,6 @@ def hybrid_rrf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_index_load,
         ivf_index_save,
     )
-    from flink_http_full_cache_connector_spark.sources.lookup import (
-        _local_relation,
-    )
 
     docs = widen(load_table(spark, sf_dir, "documents"))
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1326,8 +1308,7 @@ def hybrid_rrf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             qvecs, cent, assign, topn=RRF_POOL, nprobe=NPROBE
         )
         out = rrf_fuse_batch(bm, dense, k=RRF_K, topn=BM25_TOP_N)
-        rows = [tuple(r) for r in out.collect()]
-        return _local_relation(spark, rows, out.schema)
+        return spark.createDataFrame(out.toArrow(), out.schema)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 

@@ -39,10 +39,7 @@ from flink_http_full_cache_connector_spark.sources.local_http import (
     parquet_as_records,
     serve_json,
 )
-from flink_http_full_cache_connector_spark.sources.lookup import (
-    _local_relation,
-    create_lookup_df,
-)
+from flink_http_full_cache_connector_spark.sources.lookup import create_lookup_df
 
 NATION_SCHEMA = StructType(
     [
@@ -888,8 +885,7 @@ def file_formats_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materialize the 3-row aggregate eagerly so the format directories
         # can be deleted before returning — the lazy version leaked three
         # /tmp trees of orders data per bench/correctness run
-        rows = [tuple(r) for r in out.collect()]
-        return _local_relation(spark, rows, out.schema)
+        return spark.createDataFrame(out.toArrow(), out.schema)
     finally:
         shutil.rmtree(base, ignore_errors=True)
 

@@ -891,9 +891,6 @@ def streaming_histogram_quantiles_update(
     import shutil
     import tempfile
 
-    from flink_http_full_cache_connector_spark.sources.lookup import (
-        _local_relation,
-    )
     from flink_http_full_cache_connector_spark.streaming.upsert import (
         run_update_merge_stream,
     )
@@ -933,8 +930,7 @@ def streaming_histogram_quantiles_update(
         )
         out = _quantiles_from_bins(spark, merged, HQ_QUANTILES, SHQ_WIDTH)
         # materialize the quantiles-sized result so the temp dirs can go
-        rows = [tuple(r) for r in out.collect()]
-        return _local_relation(spark, rows, out.schema)
+        return spark.createDataFrame(out.toArrow(), out.schema)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -1285,10 +1281,6 @@ def streaming_drift_ks_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from flink_http_full_cache_connector_spark.sources.lookup import (
-        _local_relation,
-    )
-
     ev = load_table(spark, sf_dir, "events")
     proj = ev.select("event_id", "event_type", "ts", "value")
     work = tempfile.mkdtemp(prefix="spark_graft_ksupd_")
@@ -1322,7 +1314,6 @@ def streaming_drift_ks_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out = _ks_from_counts(merged)
         # materialize the types-sized result so the temp state dirs can go
-        rows = [tuple(r) for r in out.collect()]
-        return _local_relation(spark, rows, out.schema)
+        return spark.createDataFrame(out.toArrow(), out.schema)
     finally:
         shutil.rmtree(work, ignore_errors=True)

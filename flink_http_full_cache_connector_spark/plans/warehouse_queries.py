@@ -972,9 +972,6 @@ def streaming_rollup_incremental_update(
     import shutil
     import tempfile
 
-    from flink_http_full_cache_connector_spark.sources.lookup import (
-        _local_relation,
-    )
     from flink_http_full_cache_connector_spark.streaming.upsert import (
         run_update_merge_stream,
     )
@@ -1008,7 +1005,6 @@ def streaming_rollup_incremental_update(
         )
         out = _merge_day_states(merged)
         # materialize the months-x-types-sized result so temp dirs can go
-        rows = [tuple(r) for r in out.collect()]
-        return _local_relation(spark, rows, out.schema)
+        return spark.createDataFrame(out.toArrow(), out.schema)
     finally:
         shutil.rmtree(work, ignore_errors=True)

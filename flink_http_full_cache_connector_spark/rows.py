@@ -225,7 +225,7 @@ def arrow_table(nodes: list[Any], schema: StructType) -> pa.Table | None:
 
 
 def rows_table(rows: list[tuple], schema: StructType) -> pa.Table:
-    """Row tuples from :func:`deserialize_nodes` → Arrow table of ``schema``
-    (naive datetimes read as UTC instants, like :func:`arrow_table`)."""
+    """Driver-side row tuples → Arrow table of ``schema`` (naive datetimes
+    read as UTC instants, like :func:`arrow_table`)."""
     struct = pa.struct(list(to_arrow_schema(schema)))
     return pa.Table.from_struct_array(pa.array(rows, struct))

@@ -11,7 +11,7 @@ One place encodes the 100 TB posture so tests, bench, and user code agree:
 
 (Moved out of ``streaming/session.py`` — round-3 verdict, "What's wrong"
 #2: the session factory and the stateful sessionization operator shared a
-file by name pun only.  ``streaming.session`` keeps a re-export.)
+file by name pun only.)
 """
 
 from __future__ import annotations

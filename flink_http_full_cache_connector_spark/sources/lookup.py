@@ -84,22 +84,6 @@ def fetch_rows(
     return deserialize_nodes(fetch_nodes(opts, http_metrics=http_metrics), schema)
 
 
-def _local_relation(spark: SparkSession, rows: list[tuple], schema: StructType) -> DataFrame:
-    """Driver rows → LocalTableScan via Arrow; classic path as fallback.
-
-    ``dtype=object`` keeps int64 keys exact (no float64 round-trip for
-    columns containing NULLs).
-    """
-    try:
-        import pandas as pd
-
-        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-        pdf = pd.DataFrame(rows, columns=[f.name for f in schema.fields], dtype=object)
-        return spark.createDataFrame(pdf, schema)
-    except Exception:
-        return spark.createDataFrame(rows, schema).coalesce(1)
-
-
 def create_lookup_df(
     spark: SparkSession,
     options: dict[str, object] | HttpLookupOptions,

@@ -37,8 +37,6 @@ class RefreshingLookupCache:
         spark: SparkSession,
         options: dict[str, object] | HttpLookupOptions,
         schema: StructType,
-        *,
-        eager: bool = True,
     ):
         self.spark = spark
         self.opts = (
@@ -47,16 +45,11 @@ class RefreshingLookupCache:
         self.schema = schema
         self.stats = FetchStats()
         self._lock = Lock()
-        self._snapshot: DataFrame | None = None
         self._last_load_end: float | None = None
-        if eager:
-            self.check_and_reload(force=True)
+        self.check_and_reload(force=True)
 
     def current(self) -> DataFrame:
-        """The current snapshot (loads on first access if lazy)."""
-        if self._snapshot is None:
-            self.check_and_reload(force=True)
-        assert self._snapshot is not None
+        """The current snapshot."""
         return self._snapshot
 
     def metrics(self) -> dict[str, float]:

@@ -1,17 +1,9 @@
 """Custom stateful sessionization — the session-window operator rebuilt as
 a user-level applyInPandasWithState handler (the shape Flink users write as
 a KeyedProcessFunction; reference has no session surface — SURVEY.md 2.C).
-
-``build_session`` (the tuned SparkSession factory that historically lived
-here) moved to :mod:`flink_http_full_cache_connector_spark.session`; the
-re-export below keeps old imports working.
 """
 
 from __future__ import annotations
-
-from flink_http_full_cache_connector_spark.session import (  # noqa: F401
-    build_session,
-)
 
 #: inactivity gap closing a session, in integer microseconds (the same
 #: constant the batch twin sessionize_events uses).

@@ -207,8 +207,9 @@ def test_lookup_df_matches_row_build_under_non_utc_session(spark, http_server, p
     be 7-8 h off), on both the columnar and the row-coercer route.  The
     former build rounded excess decimal digits half-up in the JVM; the
     reference coercer now does it."""
+    import pandas as pd
+
     from flink_http_full_cache_connector_spark.rows import deserialize_nodes
-    from flink_http_full_cache_connector_spark.sources.lookup import _local_relation
 
     schema = StructType.fromDDL("id BIGINT, at TIMESTAMP, day DATE, v DOUBLE, amount DECIMAL(10,1)")
     http_server.set_payload(payload)
@@ -218,7 +219,13 @@ def test_lookup_df_matches_row_build_under_non_utc_session(spark, http_server, p
     try:
         stats = FetchStats()
         got = create_lookup_df(spark, {"url": http_server.url}, schema, stats=stats)
-        want = _local_relation(spark, deserialize_nodes(payload, schema), schema)
+        # the former build: a dtype=object frame (int64 keys stay exact
+        # next to NULLs) converted through Arrow
+        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
+        pdf = pd.DataFrame(
+            deserialize_nodes(payload, schema), columns=schema.fieldNames(), dtype=object
+        )
+        want = spark.createDataFrame(pdf, schema)
         assert sorted(got.collect()) == sorted(want.collect())
         assert stats.arrow_fallbacks == fallbacks
     finally:

@@ -208,7 +208,9 @@ def test_stateful_dedup_suppresses_across_microbatches(spark, tmp_path):
 
 def test_connected_components_chain_and_islands(spark):
     """Min-label propagation must converge across a 5-hop chain (multiple
-    rounds), keep islands separate, and label by component-min id."""
+    rounds), keep islands separate, and label by component-min id.  The
+    driver-side union-find result is a local relation built without
+    writing any session conf."""
     from flink_http_full_cache_connector_spark.operators.dedup import (
         connected_components,
     )
@@ -219,7 +221,18 @@ def test_connected_components_chain_and_islands(spark):
          (20, 21)],                                # pair
         "src long, dst long",
     )
-    labels = {r.id: r.label for r in connected_components(edges).collect()}
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    saved = spark.conf.get(key, None)
+    spark.conf.unset(key)
+    try:
+        out = connected_components(edges)
+        assert spark.conf.get(key, None) is None
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan, plan
+        labels = {r.id: r.label for r in out.collect()}
+    finally:
+        if saved is not None:
+            spark.conf.set(key, saved)
     assert {labels[i] for i in (1, 2, 3, 4, 5, 6)} == {1}
     assert {labels[i] for i in (10, 11, 12)} == {10}
     assert {labels[i] for i in (20, 21)} == {20}
@@ -861,6 +874,25 @@ def test_two_level_assign_kernels_agree_near_tie(spark):
         for r in two_level_assign(emb, coarse, fine, kernel="fold").collect()
     )
     assert arrow == fold
+
+
+def test_two_level_assign_arrow_carries_vec_past_unprobed_cell(spark):
+    """A coarse cell that owns a fine centroid but gets no probe reaches
+    the cogroup's empty branch; under ``carry_vec=True, score=False`` its
+    empty ``v`` column must still convert to ``array<double>``."""
+    from flink_http_full_cache_connector_spark.operators.similarity import (
+        two_level_assign_arrow,
+        two_level_index,
+    )
+
+    schema = "vec_id long, embedding array<double>"
+    index = spark.createDataFrame([(0, [1.0, 0.0]), (1, [0.0, 1.0])], schema)
+    coarse, fine = two_level_index(index, cells=2, k=2)
+    # both probes sit next to cell 0, so cell 1 is never probed
+    probes = spark.createDataFrame([(10, [1.0, 0.1]), (11, [0.9, 0.0])], schema)
+    out = two_level_assign_arrow(probes, coarse, fine, carry_vec=True, score=False)
+    got = sorted((r.vec_id, r.cell_id, list(r.v)) for r in out.collect())
+    assert got == [(10, 0, [1.0, 0.1]), (11, 0, [0.9, 0.0])]
 
 
 def test_pq_encode_arrow_codes_bit_identical_to_fold(spark):

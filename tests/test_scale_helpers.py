@@ -56,6 +56,23 @@ def test_widen_is_noop_on_wide_input(spark):
     assert widen(wide.toDF("id")).rdd.getNumPartitions() == 64
 
 
+def test_parquet_num_rows_skips_staging_and_hidden_files(spark, tmp_path):
+    """Footer row counts cover only the parts Spark's reader sees: files
+    under ``_temporary/`` and hidden files are skipped."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from flink_http_full_cache_connector_spark.operators.scale import parquet_num_rows
+
+    table_dir = tmp_path / "t.parquet"
+    (table_dir / "_temporary").mkdir(parents=True)
+    pq.write_table(pa.table({"x": [1, 2, 3]}), table_dir / "part-0.parquet")
+    pq.write_table(pa.table({"x": [4, 5]}), table_dir / "_temporary" / "part-0.parquet")
+    pq.write_table(pa.table({"x": [6]}), table_dir / ".x.parquet")
+    assert parquet_num_rows(str(tmp_path), "t") == 3
+    assert spark.read.parquet(str(table_dir)).count() == 3
+
+
 def test_build_session_reuses_active_with_aqe(spark):
     # getOrCreate returns the active session; confs on the active session
     # are what bench/tests actually run with
@@ -63,12 +80,6 @@ def test_build_session_reuses_active_with_aqe(spark):
 
     s = build_session()
     assert s.conf.get("spark.sql.adaptive.enabled") == "true"
-    # the historical import path keeps working (deprecation re-export)
-    from flink_http_full_cache_connector_spark.streaming.session import (
-        build_session as legacy_build_session,
-    )
-
-    assert legacy_build_session is build_session
 
 
 def test_kafka_reader_is_declarative(spark):
