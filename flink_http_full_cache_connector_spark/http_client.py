@@ -3,10 +3,11 @@
 Re-expresses the reference runtime's fetch path
 (``HttpInputFormatProvider.scala:83-161``):
 
-- ``fetch_with_retry``  — GET with connect/read timeouts, redirects followed,
-  non-200 → retry, up to ``max_retries`` retries with a fixed
-  ``retry_delay_ms`` sleep; exhaustion raises ``RuntimeError`` with the
-  reference's message text (fail-fast, no stale-cache fallback).
+- ``fetch_with_retry``  — GET of an :class:`HttpLookupOptions`' ``url`` with
+  its connect/read timeouts, redirects followed, non-200 → retry, up to
+  ``max_retries`` retries with a fixed ``retry_delay_ms`` sleep; exhaustion
+  raises ``RuntimeError`` with the reference's message text (fail-fast, no
+  stale-cache fallback).
 - ``resolve_json_pointer`` — RFC 6901 resolution incl. ``~0``/``~1``
   unescaping; ``""`` means root; a non-matching pointer is a hard error.
 - ``fan_out`` — JSON array → N rows, single object → 1 row
@@ -23,6 +24,8 @@ import time
 import urllib.error
 import urllib.request
 from typing import Any, Callable
+
+from flink_http_full_cache_connector_spark.options import HttpLookupOptions
 
 _MISSING = object()
 
@@ -63,17 +66,13 @@ class RequestMetrics:
 
 
 def fetch_with_retry(
-    url: str,
+    opts: HttpLookupOptions,
     *,
-    connect_timeout_seconds: int = 10,
-    read_timeout_seconds: int = 30,
-    max_retries: int = 3,
-    retry_delay_ms: int = 1000,
     sleep: Callable[[float], None] = time.sleep,
-    opener: Callable[..., Any] | None = None,
+    opener: Callable[..., Any] = urllib.request.urlopen,
     metrics: RequestMetrics | None = None,
 ) -> str:
-    """GET ``url`` returning the response body as text.
+    """GET ``opts.url`` returning the response body as text.
 
     Semantics pinned by ``HttpInputFormatProvider.scala:83-124``: the loop
     runs ``max_retries + 1`` attempts total; any exception (including a
@@ -82,24 +81,24 @@ def fetch_with_retry(
     {max_retries} retries")`` chaining the last error.  Redirects are
     followed (urllib default ≙ HttpClient.Redirect.NORMAL).
 
-    ``sleep``/``opener`` are injection points for tests.
+    ``sleep``/``opener`` are injection points for tests; without
+    ``metrics`` the counts go to a fresh record.
     """
+    metrics = metrics or RequestMetrics()
     # urllib exposes one timeout covering connect+read; use the larger bound
     # so neither reference timeout is violated early.
-    timeout = max(connect_timeout_seconds, read_timeout_seconds)
-    open_fn = opener or urllib.request.urlopen
+    timeout = max(opts.connect_timeout_seconds, opts.read_timeout_seconds)
 
     last_exception: Exception | None = None
     attempt = 0
-    while attempt <= max_retries:
+    while attempt <= opts.max_retries:
         t0 = time.monotonic()
-        if metrics is not None:
-            metrics.attempts += 1
-            if attempt > 0:
-                metrics.retries += 1
+        metrics.attempts += 1
+        if attempt > 0:
+            metrics.retries += 1
         try:
-            req = urllib.request.Request(url, method="GET")
-            with open_fn(req, timeout=timeout) as resp:
+            req = urllib.request.Request(opts.url, method="GET")
+            with opener(req, timeout=timeout) as resp:
                 status = getattr(resp, "status", 200)
                 body = resp.read()
                 if status != 200:
@@ -111,9 +110,8 @@ def fetch_with_retry(
                 headers = getattr(resp, "headers", None)
                 if headers is not None:
                     charset = headers.get_content_charset() or "utf-8"
-                if metrics is not None:
-                    metrics.last_duration_s = time.monotonic() - t0
-                    metrics.total_duration_s += metrics.last_duration_s
+                metrics.last_duration_s = time.monotonic() - t0
+                metrics.total_duration_s += metrics.last_duration_s
                 return body.decode(charset)
         except urllib.error.HTTPError as e:
             # urllib raises on 4xx/5xx; normalize to the reference's message.
@@ -123,16 +121,15 @@ def fetch_with_retry(
             )
         except Exception as e:  # noqa: BLE001 — any failure triggers retry
             last_exception = e
-        if metrics is not None:
-            metrics.failures += 1
-            metrics.last_duration_s = time.monotonic() - t0
-            metrics.total_duration_s += metrics.last_duration_s
+        metrics.failures += 1
+        metrics.last_duration_s = time.monotonic() - t0
+        metrics.total_duration_s += metrics.last_duration_s
         attempt += 1
-        if attempt <= max_retries:
-            sleep(retry_delay_ms / 1000.0)
+        if attempt <= opts.max_retries:
+            sleep(opts.retry_delay_ms / 1000.0)
 
     raise HttpFetchError(
-        f"Failed to fetch data from {url} after {max_retries} retries"
+        f"Failed to fetch data from {opts.url} after {opts.max_retries} retries"
     ) from last_exception
 
 

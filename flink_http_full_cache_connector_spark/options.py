@@ -1,20 +1,26 @@
-"""Connector option parsing & validation.
+"""Connector options: the one place that knows the option set.
 
 Mirrors the reference factory's option surface and error behavior
-(``HttpLookupTableSourceFactory.scala:27-123``): required ``url``; optional
-``xpath`` (RFC-6901 JSON pointer), ``method`` (parsed/validated but the
-runtime always issues GET — dead option replicated for parity,
+(``HttpLookupTableSourceFactory.scala:27-123``).  Each
+:class:`HttpLookupOptions` field declares its ``WITH(...)`` key, its default
+and, for integers, its lower bound: required ``url``; optional ``xpath``
+(RFC-6901 JSON pointer), ``method`` (parsed but the runtime always issues
+GET — dead option replicated for parity,
 ``HttpInputFormatProvider.scala:89-94``), ``cache.refresh-interval``
-(ISO-8601 duration string, default PT5M), ``connect.timeout.seconds`` (10),
-``read.timeout.seconds`` (30), ``max.retries`` (3), ``retry.delay.ms``
-(1000).  Validation failures raise :class:`ValidationException` with the
-reference's message text so plan-time errors are recognizable.
+(ISO-8601 duration string, default PT5M), ``connect.timeout.seconds`` (10,
+positive), ``read.timeout.seconds`` (30, positive), ``max.retries`` (3,
+non-negative), ``retry.delay.ms`` (1000, positive).  An instance is checked
+when it is built, so an invalid one cannot exist; :func:`validate_options`
+maps a ``WITH(...)`` dict onto it.  Failures raise
+:class:`ValidationException` with the reference's message text so plan-time
+errors are recognizable.
 """
 
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, fields
+from typing import Mapping
 
 
 class ValidationException(ValueError):
@@ -22,20 +28,6 @@ class ValidationException(ValueError):
 
 
 FACTORY_IDENTIFIER = "http-lookup-full-cache"
-
-#: option key → default (None ⇒ no default; ``url`` is the only required key)
-OPTION_DEFAULTS: dict[str, object] = {
-    "url": None,
-    "xpath": "",
-    "method": "GET",
-    "cache.refresh-interval": "PT5M",
-    "connect.timeout.seconds": 10,
-    "read.timeout.seconds": 30,
-    "max.retries": 3,
-    "retry.delay.ms": 1000,
-}
-
-_REQUIRED_OPTIONS = ("url",)
 
 # ISO-8601 duration, the subset java.time.Duration.parse accepts:
 # PnDTnHnMn.nS (at least one component; case-insensitive; optional sign).
@@ -68,52 +60,84 @@ def parse_iso8601_duration_seconds(text: str) -> float:
     return total
 
 
+#: lower bound → the reference's wording of it
+_BOUND_TEXT = {0: "non-negative", 1: "positive"}
+
+
+def _option(key: str, default: object, *, minimum: int | None = None):
+    return field(default=default, metadata={"key": key, "minimum": minimum})
+
+
 @dataclass(frozen=True)
 class HttpLookupOptions:
-    """Validated options for the http-lookup-full-cache source."""
+    """Options of the http-lookup-full-cache source, checked when built.
 
-    url: str
-    xpath: str = ""
-    method: str = "GET"
-    cache_refresh_interval: str = "PT5M"
-    connect_timeout_seconds: int = 10
-    read_timeout_seconds: int = 30
-    max_retries: int = 3
-    retry_delay_ms: int = 1000
-    #: parsed refresh interval, seconds (derived)
-    refresh_interval_seconds: float = field(default=300.0, compare=False)
+    Checks run in the reference's order: ``url`` present, the refresh
+    interval an ISO-8601 duration, then each integer option in key order.
+    An integer option takes any value ``int(str(value))`` reads, as the
+    ``WITH(...)`` block's text values, and holds the parsed ``int``.
+    """
 
-    def as_dict(self) -> dict[str, str]:
-        return {
-            "url": self.url,
-            "xpath": self.xpath,
-            "method": self.method,
-            "cache.refresh-interval": self.cache_refresh_interval,
-            "connect.timeout.seconds": str(self.connect_timeout_seconds),
-            "read.timeout.seconds": str(self.read_timeout_seconds),
-            "max.retries": str(self.max_retries),
-            "retry.delay.ms": str(self.retry_delay_ms),
-        }
+    url: str = _option("url", "")
+    xpath: str = _option("xpath", "")
+    method: str = _option("method", "GET")
+    cache_refresh_interval: str = _option("cache.refresh-interval", "PT5M")
+    connect_timeout_seconds: int = _option("connect.timeout.seconds", 10, minimum=1)
+    read_timeout_seconds: int = _option("read.timeout.seconds", 30, minimum=1)
+    max_retries: int = _option("max.retries", 3, minimum=0)
+    retry_delay_ms: int = _option("retry.delay.ms", 1000, minimum=1)
+
+    def __post_init__(self) -> None:
+        if self.url in (None, ""):
+            raise ValidationException(
+                "One or more required options are missing.\n\n"
+                "Missing required options are:\n\nurl"
+            )
+        try:
+            parse_iso8601_duration_seconds(self.cache_refresh_interval)
+        except ValueError:
+            raise ValidationException(
+                f"Invalid format for cache.refresh-interval: '{self.cache_refresh_interval}'. "
+                "Expected format is ISO-8601 duration (e.g., PT5M for 5 minutes)."
+            ) from None
+        for f in fields(self):
+            minimum = f.metadata["minimum"]
+            if minimum is None:
+                continue
+            key, value = f.metadata["key"], getattr(self, f.name)
+            try:
+                value = int(str(value))
+            except ValueError:
+                raise ValidationException(
+                    f"Invalid value for {key}: {value}. Must be an integer."
+                ) from None
+            if value < minimum:
+                raise ValidationException(
+                    f"Invalid value for {key}: {value}. Must be {_BOUND_TEXT[minimum]}."
+                )
+            object.__setattr__(self, f.name, value)
+
+    @property
+    def refresh_interval_seconds(self) -> float:
+        """``cache.refresh-interval`` in seconds."""
+        return parse_iso8601_duration_seconds(self.cache_refresh_interval)
 
 
-def _as_int(key: str, value: object) -> int:
-    try:
-        return int(str(value))
-    except (TypeError, ValueError):
-        raise ValidationException(
-            f"Invalid value for {key}: {value}. Must be an integer."
-        ) from None
+#: ``WITH(...)`` key → field name
+_FIELD_BY_KEY = {f.metadata["key"]: f.name for f in fields(HttpLookupOptions)}
 
 
-def validate_options(options: dict[str, object]) -> HttpLookupOptions:
-    """Validate a DDL-style ``WITH(...)`` options dict.
+def validate_options(options: Mapping[str, object] | HttpLookupOptions) -> HttpLookupOptions:
+    """Validate a DDL-style ``WITH(...)`` options dict; an
+    :class:`HttpLookupOptions` is returned unchanged.
 
     Reference parity (``HttpLookupTableSourceFactory.scala:58-123``):
-    unknown options rejected (FactoryUtil.validate), missing ``url``
-    rejected, ISO-8601 refresh-interval format-checked, timeouts/retry-delay
-    must be positive, max.retries non-negative.
+    unknown options rejected (FactoryUtil.validate) before the checks
+    :class:`HttpLookupOptions` makes when built.
     """
-    unknown = set(options) - set(OPTION_DEFAULTS) - {"connector", "format"}
+    if isinstance(options, HttpLookupOptions):
+        return options
+    unknown = set(options) - set(_FIELD_BY_KEY) - {"connector", "format"}
     if unknown:
         raise ValidationException(
             "Unsupported options found for '"
@@ -121,71 +145,6 @@ def validate_options(options: dict[str, object]) -> HttpLookupOptions:
             + "'.\n\nUnsupported options:\n\n"
             + "\n".join(sorted(str(k) for k in unknown))
         )
-
-    for key in _REQUIRED_OPTIONS:
-        if key not in options or options[key] in (None, ""):
-            raise ValidationException(
-                "One or more required options are missing.\n\n"
-                "Missing required options are:\n\n" + key
-            )
-
-    url = str(options["url"])
-    xpath = str(options.get("xpath", OPTION_DEFAULTS["xpath"]) or "")
-    method = str(options.get("method", OPTION_DEFAULTS["method"]))
-
-    refresh_str = str(
-        options.get("cache.refresh-interval", OPTION_DEFAULTS["cache.refresh-interval"])
-    )
-    try:
-        refresh_seconds = parse_iso8601_duration_seconds(refresh_str)
-    except ValueError:
-        raise ValidationException(
-            f"Invalid format for cache.refresh-interval: '{refresh_str}'. "
-            "Expected format is ISO-8601 duration (e.g., PT5M for 5 minutes)."
-        ) from None
-
-    connect_timeout = _as_int(
-        "connect.timeout.seconds",
-        options.get("connect.timeout.seconds", OPTION_DEFAULTS["connect.timeout.seconds"]),
-    )
-    if connect_timeout <= 0:
-        raise ValidationException(
-            f"Invalid value for connect.timeout.seconds: {connect_timeout}. Must be positive."
-        )
-
-    read_timeout = _as_int(
-        "read.timeout.seconds",
-        options.get("read.timeout.seconds", OPTION_DEFAULTS["read.timeout.seconds"]),
-    )
-    if read_timeout <= 0:
-        raise ValidationException(
-            f"Invalid value for read.timeout.seconds: {read_timeout}. Must be positive."
-        )
-
-    max_retries = _as_int(
-        "max.retries", options.get("max.retries", OPTION_DEFAULTS["max.retries"])
-    )
-    if max_retries < 0:
-        raise ValidationException(
-            f"Invalid value for max.retries: {max_retries}. Must be non-negative."
-        )
-
-    retry_delay = _as_int(
-        "retry.delay.ms", options.get("retry.delay.ms", OPTION_DEFAULTS["retry.delay.ms"])
-    )
-    if retry_delay <= 0:
-        raise ValidationException(
-            f"Invalid value for retry.delay.ms: {retry_delay}. Must be positive."
-        )
-
     return HttpLookupOptions(
-        url=url,
-        xpath=xpath,
-        method=method,
-        cache_refresh_interval=refresh_str,
-        connect_timeout_seconds=connect_timeout,
-        read_timeout_seconds=read_timeout,
-        max_retries=max_retries,
-        retry_delay_ms=retry_delay,
-        refresh_interval_seconds=refresh_seconds,
+        **{_FIELD_BY_KEY[k]: v for k, v in options.items() if k in _FIELD_BY_KEY}
     )

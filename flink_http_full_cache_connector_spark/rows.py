@@ -10,7 +10,7 @@ ignoreParseErrors=false, TimestampFormat.SQL``):
 - A malformed value fails the job (``RuntimeError("Failed to deserialize
   JSON node: ...")``).
 - Timestamps use SQL format ``yyyy-MM-dd HH:mm:ss[.fff]`` (ISO 'T' separator
-  also accepted by flink-json's SQL parser fallback).
+  also accepted by flink-json's SQL parser fallback) and are read as UTC.
 - Nested ROW columns recurse (nested projection supported,
   ``HttpLookupTableSource.scala:70``).
 
@@ -53,13 +53,16 @@ _DECIMAL_CONTEXT = decimal.Context(prec=38)
 
 
 def _parse_sql_timestamp(text: str) -> _dt.datetime:
+    """SQL-format text → UTC-aware datetime.  Aware, so Spark's Python
+    data source worker (which reads a naive value in the process's local
+    zone) and the Arrow build (which reads it as UTC) agree."""
     t = text.strip().replace("T", " ")
     # yyyy-MM-dd HH:mm:ss[.fraction][Z]
     if t.endswith("Z"):
         t = t[:-1]
     for fmt in ("%Y-%m-%d %H:%M:%S.%f", "%Y-%m-%d %H:%M:%S"):
         try:
-            return _dt.datetime.strptime(t, fmt)
+            return _dt.datetime.strptime(t, fmt).replace(tzinfo=_dt.timezone.utc)
         except ValueError:
             continue
     raise ValueError(f"not a SQL-format timestamp: {text!r}")
@@ -180,7 +183,7 @@ _TIMESTAMP_RE = rf"^{_YEAR}-\d{{2}}-\d{{2}}[ T]\d{{2}}:\d{{2}}:\d{{2}}(?:\.\d{{1
 def _temporal_column(values: list[Any], dtype: DataType, target: pa.DataType) -> pa.Array | None:
     """TIMESTAMP/DATE strings → Arrow, or None when any value could parse
     differently from the reference.  A TIMESTAMP is read as a UTC instant,
-    as the reference's naive datetime is when it reaches Spark."""
+    as :func:`coerce_value` reads it."""
     text = pa.array(values, pa.string())
     is_ts = isinstance(dtype, TimestampType)
     matched = pc.match_substring_regex(text, _TIMESTAMP_RE if is_ts else _DATE_RE)

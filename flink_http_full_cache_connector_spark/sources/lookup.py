@@ -63,25 +63,12 @@ class FetchStats:
 
 def fetch_nodes(opts: HttpLookupOptions, *, http_metrics: RequestMetrics | None = None) -> list:
     """One full scan up to the row-nodes: GET → parse → pointer → fan-out."""
-    body = fetch_with_retry(
-        opts.url,
-        connect_timeout_seconds=opts.connect_timeout_seconds,
-        read_timeout_seconds=opts.read_timeout_seconds,
-        max_retries=opts.max_retries,
-        retry_delay_ms=opts.retry_delay_ms,
-        metrics=http_metrics,
-    )
-    return parse_payload(body, opts.xpath)
+    return parse_payload(fetch_with_retry(opts, metrics=http_metrics), opts.xpath)
 
 
-def fetch_rows(
-    opts: HttpLookupOptions,
-    schema: StructType,
-    *,
-    http_metrics: RequestMetrics | None = None,
-) -> list[tuple]:
+def fetch_rows(opts: HttpLookupOptions, schema: StructType) -> list[tuple]:
     """One full scan: GET → parse → pointer → fan-out → typed rows."""
-    return deserialize_nodes(fetch_nodes(opts, http_metrics=http_metrics), schema)
+    return deserialize_nodes(fetch_nodes(opts), schema)
 
 
 def create_lookup_df(
@@ -109,18 +96,18 @@ def create_lookup_df(
         # a string schema fails deep inside row deserialization with an
         # opaque AttributeError instead of at the API boundary
         schema = StructType.fromDDL(schema)
-    opts = options if isinstance(options, HttpLookupOptions) else validate_options(options)
+    opts = validate_options(options)
+    stats = stats or FetchStats()
     t0 = time.monotonic()
-    nodes = fetch_nodes(opts, http_metrics=stats.http if stats is not None else None)
+    nodes = fetch_nodes(opts, http_metrics=stats.http)
     table = arrow_table(nodes, schema)
     declined = table is None
     if declined:
         table = rows_table(deserialize_nodes(nodes, schema), schema)
     df = spark.createDataFrame(table, schema)
-    if stats is not None:
-        stats.fetch_count += 1
-        stats.arrow_fallbacks += declined
-        stats.last_fetch_duration_s = time.monotonic() - t0
-        stats.total_fetch_duration_s += stats.last_fetch_duration_s
-        stats.last_row_count = table.num_rows
+    stats.fetch_count += 1
+    stats.arrow_fallbacks += declined
+    stats.last_fetch_duration_s = time.monotonic() - t0
+    stats.total_fetch_duration_s += stats.last_fetch_duration_s
+    stats.last_row_count = table.num_rows
     return df

@@ -39,13 +39,10 @@ class RefreshingLookupCache:
         schema: StructType,
     ):
         self.spark = spark
-        self.opts = (
-            options if isinstance(options, HttpLookupOptions) else validate_options(options)
-        )
+        self.opts = validate_options(options)
         self.schema = schema
         self.stats = FetchStats()
         self._lock = Lock()
-        self._last_load_end: float | None = None
         self.check_and_reload(force=True)
 
     def current(self) -> DataFrame:
@@ -62,8 +59,6 @@ class RefreshingLookupCache:
 
     def due(self) -> bool:
         """FIXED_DELAY: next reload is timed from *completion* of the last."""
-        if self._last_load_end is None:
-            return True
         return (time.monotonic() - self._last_load_end) >= self.opts.refresh_interval_seconds
 
     def check_and_reload(self, *, force: bool = False) -> bool:

@@ -3,9 +3,14 @@ schema, projection narrowing, batch read, microbatch streaming refresh."""
 
 import time
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.datasource import InputPartition
+from pyspark.sql.types import StructType
+from pyspark.sql.worker.plan_data_source_read import records_to_arrow_batches
 
+from flink_http_full_cache_connector_spark.rows import arrow_table
 from flink_http_full_cache_connector_spark.sources.datasource import (
     HttpLookupDataSource,
     register,
@@ -115,3 +120,30 @@ def test_stream_refresh_v1_to_v2(registered, http_server, tmp_path):
     finally:
         query.stop()
     assert http_server.request_count >= 2
+
+
+@pytest.fixture
+def los_angeles_tz(monkeypatch):
+    """The Python process's local zone set away from UTC, for one test."""
+    monkeypatch.setenv("TZ", "America/Los_Angeles")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+def test_reader_timestamps_ignore_worker_time_zone(http_server, los_angeles_tz):
+    """The reader's rows, converted as Spark's Python data source worker
+    converts them, hold the same instants as the driver's Arrow build: a
+    timestamp string is UTC whatever the worker process's local zone."""
+    nodes = [
+        {"id": 1, "ts": "2024-01-01 00:00:00"},
+        {"id": 2, "ts": "2024-07-01T12:30:00.250"},
+        {"id": 3, "ts": None},
+    ]
+    http_server.set_payload(nodes)
+    schema = StructType.fromDDL("id INT, ts TIMESTAMP")
+    source = HttpLookupDataSource({"url": http_server.url})
+    rows = source.reader(schema).read(InputPartition(0))
+    batches = records_to_arrow_batches(rows, 1000, schema, source)
+    assert pa.Table.from_batches(batches).to_pylist() == arrow_table(nodes, schema).to_pylist()

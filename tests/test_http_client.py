@@ -20,6 +20,7 @@ from flink_http_full_cache_connector_spark.http_client import (
     parse_payload,
     resolve_json_pointer,
 )
+from flink_http_full_cache_connector_spark.options import HttpLookupOptions
 from flink_http_full_cache_connector_spark.rows import coerce_object, deserialize_nodes
 
 
@@ -29,7 +30,8 @@ def test_fetch_retries_then_succeeds(http_server):
     http_server.set_status_sequence([500, 500])
     sleeps = []
     body = fetch_with_retry(
-        http_server.url, max_retries=3, retry_delay_ms=10, sleep=sleeps.append
+        HttpLookupOptions(url=http_server.url, max_retries=3, retry_delay_ms=10),
+        sleep=sleeps.append,
     )
     assert '"Mock User 1"' in body
     assert http_server.request_count == 3  # 500, 500, 200 → exactly 3 calls
@@ -39,7 +41,10 @@ def test_fetch_retries_then_succeeds(http_server):
 def test_fetch_fail_fast_after_exhausted_retries(http_server):
     http_server.set_status_sequence([500] * 10)
     with pytest.raises(HttpFetchError) as exc:
-        fetch_with_retry(http_server.url, max_retries=1, retry_delay_ms=1, sleep=lambda s: None)
+        fetch_with_retry(
+            HttpLookupOptions(url=http_server.url, max_retries=1, retry_delay_ms=1),
+            sleep=lambda s: None,
+        )
     assert f"Failed to fetch data from {http_server.url} after 1 retries" in str(exc.value)
     # exception chain contains the HTTP status (pinned behavior 5)
     assert "HTTP request failed with status 500" in str(exc.value.__cause__)
@@ -49,7 +54,10 @@ def test_fetch_fail_fast_after_exhausted_retries(http_server):
 def test_fetch_zero_retries_single_attempt(http_server):
     http_server.set_status_sequence([500])
     with pytest.raises(HttpFetchError, match="after 0 retries"):
-        fetch_with_retry(http_server.url, max_retries=0, retry_delay_ms=1, sleep=lambda s: None)
+        fetch_with_retry(
+            HttpLookupOptions(url=http_server.url, max_retries=0, retry_delay_ms=1),
+            sleep=lambda s: None,
+        )
     assert http_server.request_count == 1
 
 
@@ -70,9 +78,7 @@ def test_metrics_count_http_error_failures():
     metrics = RequestMetrics()
     with pytest.raises(HttpFetchError, match="after 1 retries"):
         fetch_with_retry(
-            "http://example.invalid/x",
-            max_retries=1,
-            retry_delay_ms=1,
+            HttpLookupOptions(url="http://example.invalid/x", max_retries=1, retry_delay_ms=1),
             sleep=lambda s: None,
             opener=opener,
             metrics=metrics,
@@ -146,7 +152,9 @@ def test_coerce_full_row():
     row = coerce_object(
         {"id": 7, "name": "x", "amount": 1.5, "ts": "2024-01-02 03:04:05.678"}, SCHEMA
     )
-    assert row == (7, "x", 1.5, datetime.datetime(2024, 1, 2, 3, 4, 5, 678000))
+    assert row == (
+        7, "x", 1.5, datetime.datetime(2024, 1, 2, 3, 4, 5, 678000, tzinfo=datetime.timezone.utc)
+    )
 
 
 def test_missing_field_is_null_and_extra_ignored():
@@ -172,7 +180,7 @@ def test_numeric_widening_and_string_numbers():
 
 def test_timestamp_sql_format_no_fraction():
     row = coerce_object({"ts": "2024-01-02 03:04:05"}, SCHEMA)
-    assert row[3] == datetime.datetime(2024, 1, 2, 3, 4, 5)
+    assert row[3] == datetime.datetime(2024, 1, 2, 3, 4, 5, tzinfo=datetime.timezone.utc)
 
 
 def test_nested_row():

@@ -44,6 +44,9 @@ def test_create_with_all_options():
     assert opts.read_timeout_seconds == 15
     assert opts.max_retries == 2
     assert opts.retry_delay_ms == 500
+    # built directly, the parsed interval follows the field
+    direct = HttpLookupOptions(url="http://example.com/api", cache_refresh_interval="PT30S")
+    assert direct.refresh_interval_seconds == 30.0
 
 
 def test_missing_url_raises_mentioning_url():
@@ -72,6 +75,11 @@ def test_invalid_duration_format():
 def test_invalid_numeric_options(key, value, message):
     with pytest.raises(ValidationException) as exc:
         validate_options({"url": "http://x", key: value})
+    assert message in str(exc.value)
+    # built directly, the same bound holds with the same message
+    field_name = key.replace(".", "_")
+    with pytest.raises(ValidationException) as exc:
+        HttpLookupOptions(url="http://x", **{field_name: int(value)})
     assert message in str(exc.value)
 
 

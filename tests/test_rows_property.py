@@ -83,6 +83,7 @@ def test_coercion_round_trips_arbitrary_payloads(node):
 def test_sql_timestamp_round_trip(ts):
     ts = ts.replace(microsecond=(ts.microsecond // 1000) * 1000)  # ms precision
     text = ts.strftime("%Y-%m-%d %H:%M:%S.%f")[:-3]
+    ts = ts.replace(tzinfo=dt.timezone.utc)  # same wall clock, read as UTC
     assert coerce_value(text, TimestampType()) == ts
     # ISO 'T' separator accepted too
     assert coerce_value(text.replace(" ", "T"), TimestampType()) == ts
