@@ -4,7 +4,8 @@ Re-expresses the reference runtime's fetch path
 (``HttpInputFormatProvider.scala:83-161``):
 
 - ``fetch_with_retry``  — GET of an :class:`HttpLookupOptions`' ``url`` with
-  its connect/read timeouts, redirects followed, non-200 → retry, up to
+  its connect timeout on the connect and its read timeout on every socket
+  read, redirects followed, non-200 → retry, up to
   ``max_retries`` retries with a fixed ``retry_delay_ms`` sleep; exhaustion
   raises ``RuntimeError`` with the reference's message text (fail-fast, no
   stale-cache fallback).
@@ -19,6 +20,7 @@ Python Data Source reader (executor-side) can use it.
 
 from __future__ import annotations
 
+import http.client
 import json
 import time
 import urllib.error
@@ -65,11 +67,48 @@ class RequestMetrics:
         }
 
 
+class _SplitTimeouts:
+    """``http.client`` connection whose ``timeout`` is a ``(connect, read)``
+    pair: the first bounds the TCP connect (and a TLS handshake), the
+    second every socket read after it.  urllib hands the pair through
+    unchanged, redirects included."""
+
+    def __init__(self, host, *, timeout, **kwargs):
+        connect_timeout, self.read_timeout = timeout
+        super().__init__(host, timeout=connect_timeout, **kwargs)
+
+    def connect(self):
+        super().connect()
+        self.sock.settimeout(self.read_timeout)
+
+
+class _HTTPConnection(_SplitTimeouts, http.client.HTTPConnection):
+    pass
+
+
+class _HTTPSConnection(_SplitTimeouts, http.client.HTTPSConnection):
+    pass
+
+
+class _HTTPHandler(urllib.request.HTTPHandler):
+    def http_open(self, req):
+        return self.do_open(_HTTPConnection, req)
+
+
+class _HTTPSHandler(urllib.request.HTTPSHandler):
+    def https_open(self, req):
+        return self.do_open(_HTTPSConnection, req, context=self._context)
+
+
+#: urllib's default opener with the split-timeout connections
+_OPENER = urllib.request.build_opener(_HTTPHandler, _HTTPSHandler)
+
+
 def fetch_with_retry(
     opts: HttpLookupOptions,
     *,
     sleep: Callable[[float], None] = time.sleep,
-    opener: Callable[..., Any] = urllib.request.urlopen,
+    opener: Callable[..., Any] = _OPENER.open,
     metrics: RequestMetrics | None = None,
 ) -> str:
     """GET ``opts.url`` returning the response body as text.
@@ -80,14 +119,16 @@ def fetch_with_retry(
     raises ``HttpFetchError("Failed to fetch data from {url} after
     {max_retries} retries")`` chaining the last error.  Redirects are
     followed (urllib default ≙ HttpClient.Redirect.NORMAL).
+    ``connect_timeout_seconds`` bounds the connect and
+    ``read_timeout_seconds`` each socket read; a timeout is a failed
+    attempt like any other.
 
-    ``sleep``/``opener`` are injection points for tests; without
+    ``sleep``/``opener`` are injection points for tests: ``opener`` is
+    called as ``opener(request, timeout=(connect_s, read_s))``.  Without
     ``metrics`` the counts go to a fresh record.
     """
     metrics = metrics or RequestMetrics()
-    # urllib exposes one timeout covering connect+read; use the larger bound
-    # so neither reference timeout is violated early.
-    timeout = max(opts.connect_timeout_seconds, opts.read_timeout_seconds)
+    timeout = (opts.connect_timeout_seconds, opts.read_timeout_seconds)
 
     last_exception: Exception | None = None
     attempt = 0

@@ -16,10 +16,27 @@ per executor).
 
 from __future__ import annotations
 
+import functools
+import operator
+import weakref
 from collections.abc import Sequence
 
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BinaryType,
+    BooleanType,
+    ByteType,
+    DateType,
+    DecimalType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 
 def lookup_join(
@@ -70,6 +87,92 @@ def lookup_join(
 
 _HIT_MARKER = "__lookup_hit__"
 
+#: join-key types whose equality Python judges as Spark's join does;
+#: floating keys (Spark's join equates NaN with NaN), nested keys and
+#: collated strings take the marker path
+_EXACT_KEY_TYPES = (
+    BooleanType, ByteType, ShortType, IntegerType, LongType, DecimalType,
+    DateType, TimestampType, TimestampNTZType, BinaryType,
+)
+
+#: cache DataFrame → {cache key columns: witness candidates}
+_WITNESSES: weakref.WeakKeyDictionary[DataFrame, dict[tuple[str, ...], tuple[str, ...]]] = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def _quoted(name: str) -> Column:
+    """The column ``name`` as written, dots and backticks included."""
+    return F.col("`" + name.replace("`", "``") + "`")
+
+
+def _profile(cache: DataFrame, keys: tuple[str, ...]) -> tuple[str, ...]:
+    """The witness candidates of ``cache`` joined on ``keys``.
+
+    A candidate is a non-key column that is non-null on every row whose
+    keys are all non-null (only those rows can match), and there are
+    candidates only when those rows' keys are unique.  Then every probe
+    row yields exactly one output row, and a candidate is non-null
+    exactly on the hits.  One driver-side pass: the matchable rows' keys
+    and the non-key columns' null flags, collected as Arrow.
+
+    Only a cache whose rows are the same on every evaluation is read: a
+    bare in-memory local relation, as :func:`~sources.lookup.create_lookup_df`
+    builds below Arrow's local relation threshold.  Anything else — a
+    data-source read, a table, file or RDD scan, a query over any relation
+    — may yield other rows on its next evaluation, so a profile of one
+    says nothing of the next; it has no candidates.
+    """
+    if not cache.isLocal():
+        return ()
+    types = {f.name: f.dataType for f in cache.schema}
+    others = [c for c in types if c not in keys]
+    # a key named in another case than the cache column takes the marker path
+    exact = all(
+        isinstance(types.get(k), _EXACT_KEY_TYPES) or types.get(k) == StringType()
+        for k in keys
+    )
+    if not others or not exact:
+        return ()
+    matchable = functools.reduce(operator.and_, (_quoted(k).isNotNull() for k in keys))
+    table = (
+        cache.where(matchable)
+        .select(*map(_quoted, keys), *(_quoted(c).isNotNull() for c in others))
+        .toArrow()
+    )
+    # a set of Python tuples, not Arrow's group_by: same answer on these
+    # key types, without loading Arrow's query engine into the driver
+    if len(set(zip(*(table.column(i).to_pylist() for i in range(len(keys)))))) != table.num_rows:
+        return ()
+    return tuple(
+        c for i, c in enumerate(others, len(keys))
+        if pc.all(table.column(i), min_count=0).as_py()
+    )
+
+
+def _witness(probe: DataFrame, cache: DataFrame, keys: tuple[str, ...]) -> str | None:
+    """A witness candidate no probe column shares a name with, so it
+    resolves by name in the join output, even when the probe derives from
+    the cache itself.  :func:`_profile` runs once per cache DataFrame and
+    key tuple."""
+    by_keys = _WITNESSES.setdefault(cache, {})
+    if keys not in by_keys:
+        by_keys[keys] = _profile(cache, keys)
+    # Spark resolves names case-insensitively by default
+    taken = {c.lower() for c in probe.columns}
+    return next((c for c in by_keys[keys] if c.lower() not in taken), None)
+
+
+def _cache_keys(on) -> tuple[str, ...] | None:
+    """The cache-side key columns of ``on``; None for a raw ``Column``."""
+    if isinstance(on, str):
+        return (on,)
+    if isinstance(on, Column):
+        return None
+    if on and isinstance(on[0], tuple):
+        return tuple(c for _, c in on)
+    return tuple(on)
+
 
 def observed_lookup_join(
     probe: DataFrame,
@@ -84,9 +187,9 @@ def observed_lookup_join(
     The reference README documents a "Cache Hit Rate: Percentage of
     successful cache lookups" metric it never registers
     (``README.md:199-208``); Spark's observed-metrics channel delivers
-    it for free: ``lookup_total`` (probe rows) and ``lookup_hits``
-    (probe rows that matched the cache) are aggregated JVM-side during
-    the join's own pass — zero extra scans, zero Python.
+    it: ``lookup_total`` (probe rows) and ``lookup_hits`` (probe rows
+    that matched the cache) are aggregated JVM-side during the join's own
+    pass, with no Python per row.
 
     ``observation`` is a ``pyspark.sql.Observation`` (batch: read
     ``observation.get`` after an action) or a string name (streaming:
@@ -94,17 +197,48 @@ def observed_lookup_join(
 
     Both metrics count PROBE rows (lookup requests), not join output
     rows: a cache with duplicate join keys fans one probe row out to
-    several matches, and counting output rows would inflate the hit
-    rate.  Observed metrics forbid DISTINCT aggregates, so dedup is
-    done structurally: exactly ONE cache row per join key carries
-    marker=1 (``row_number`` on the metadata-sized cache side — never
-    on the probe), duplicates carry 0, and a LEFT miss surfaces as the
-    single NULL-marker row — so ``sum(marker==1)`` counts hitting probe
-    rows once each and ``sum(marker==1 or marker is null)`` counts
-    every probe row once.  For a raw ``Column`` condition the cache key
-    is not derivable; there the marker is constant 1 and the metrics
-    degrade to output-row counts (exact whenever the condition matches
-    at most one cache row per probe row).
+    several matches, and counting output rows would inflate the hit rate.
+    Which of two plans counts them is decided once per cache DataFrame
+    object (and key columns), and remembered for as long as the DataFrame
+    lives.  A refreshed :class:`~streaming.refresh.RefreshingLookupCache`
+    snapshot is a new object and is decided again.
+
+    - **Witness path** — the cache's rows are fixed: it is a bare
+      in-memory local relation (``cache.isLocal()``), as
+      :func:`~sources.lookup.create_lookup_df` builds up to
+      ``spark.sql.execution.arrow.localRelationThreshold``.  A
+      driver-side profile of those rows — one collect of the key columns
+      and the null flags as Arrow — finds the non-null join keys unique
+      and some non-key cache column (the *witness*) non-null on every row
+      with non-null keys, sharing its name with no probe column.  Each
+      probe row then yields exactly one output row, and the witness is
+      non-null exactly on the hits, so the observe is ``count(1)`` and
+      ``count(witness)`` over the plain join, the last operator of the
+      plan.  Measured against plain :func:`lookup_join` written to the
+      ``noop`` sink (8M-row, 16-partition probe, 10k-row snapshot,
+      ``local[4]``, interleaved in one process): 0.34 s against 0.28 s
+      (+22%), plus one profile per snapshot (0.1–0.3 s for 10k rows).
+      A local relation that fails the profile (duplicate keys, no
+      witness) pays that profile once and then takes the marker path; a
+      caller that builds a new snapshot object for every join pays it on
+      every join (+0.15–0.19 s measured on 10k rows).
+    - **Marker path** — every other cache: rows that may change between
+      evaluations (a data-source read, a table, file or RDD scan — these
+      are never profiled), duplicate keys, key columns only, no usable
+      witness, floating/nested/collated key types, or a raw ``Column``
+      condition.  Exactly ONE cache row per join key
+      carries marker=1 (``row_number`` on the dimension-sized cache side,
+      never on the probe), duplicates carry 0, and a LEFT miss surfaces as
+      the single NULL-marker row, so ``sum(marker==1)`` counts hitting
+      probe rows once each and ``sum(marker==1 or marker is null)`` counts
+      every probe row once; the marker is dropped after the observe.  For
+      a raw ``Column`` condition the cache key is not derivable; there
+      the marker is constant 1 and the metrics degrade to output-row
+      counts (exact whenever the condition matches at most one cache row
+      per probe row).  Measured on the same shape: 0.57 s against 0.28 s
+      (+105%) — the cache-side Window + Exchange, and a second
+      whole-stage pass above the observe that re-projects every row to
+      drop the marker.
 
     ``lookup_total`` is only exact for ``how="left"``: an INNER join
     drops missed probe rows from the output entirely, so nothing can
@@ -124,14 +258,26 @@ def observed_lookup_join(
             UserWarning,
             stacklevel=2,
         )
-    if isinstance(on, str):
-        key_cols: list[str] | None = [on]
-    elif isinstance(on, Column):
-        key_cols = None
-    elif on and isinstance(on[0], tuple):
-        key_cols = [c for _, c in on]  # type: ignore[misc]
-    else:
-        key_cols = list(on)  # type: ignore[arg-type]
+    key_cols = _cache_keys(on)
+    witness = None if key_cols is None else _witness(probe, cache, key_cols)
+    if witness is None:
+        return _marked_join(probe, cache, on, how, observation, key_cols)
+    return lookup_join(probe, cache, on, how).observe(
+        observation,
+        F.count(F.lit(1)).alias("lookup_total"),
+        F.count(_quoted(witness)).alias("lookup_hits"),
+    )
+
+
+def _marked_join(
+    probe: DataFrame,
+    cache: DataFrame,
+    on: str | Column | Sequence[str] | list[tuple[str, str]],
+    how: str,
+    observation,
+    key_cols: tuple[str, ...] | None,
+) -> DataFrame:
+    """The marker path of :func:`observed_lookup_join`, exact on any cache."""
     if key_cols is not None:
         from pyspark.sql import Window
 

@@ -89,6 +89,47 @@ def test_metrics_count_http_error_failures():
     assert metrics.total_duration_s > 0.0
 
 
+@pytest.mark.parametrize(
+    ("scheme", "connect_s", "read_s"),
+    [
+        # the request goes out and no response byte comes back
+        ("http", 10, 1),
+        # the TLS handshake is part of the connect
+        ("https", 1, 10),
+    ],
+)
+def test_read_timeout_applies_separately_from_connect(scheme, connect_s, read_s):
+    """A server that accepts the connection and then sends nothing fails
+    the attempt after the timeout of the phase it stalls in, not after the
+    larger of the two."""
+    import socket
+    import time
+
+    from flink_http_full_cache_connector_spark.http_client import RequestMetrics
+
+    # the kernel completes the handshake for the listen backlog: the
+    # connect succeeds, what the client sends is buffered, and no byte
+    # ever comes back
+    with socket.create_server(("127.0.0.1", 0)) as server:
+        host, port = server.getsockname()
+        metrics = RequestMetrics()
+        t0 = time.monotonic()
+        with pytest.raises(HttpFetchError, match="after 0 retries") as exc:
+            fetch_with_retry(
+                HttpLookupOptions(
+                    url=f"{scheme}://{host}:{port}/users",
+                    connect_timeout_seconds=connect_s,
+                    read_timeout_seconds=read_s,
+                    max_retries=0,
+                ),
+                metrics=metrics,
+            )
+        elapsed = time.monotonic() - t0
+    assert 0.9 <= elapsed < 5, elapsed
+    assert "timed out" in str(exc.value.__cause__)
+    assert (metrics.attempts, metrics.failures) == (1, 1)
+
+
 # --- JSON pointer (RFC 6901; HttpInputFormatProvider.scala:137-146) ---------
 
 DOC = {"data": {"items": [1, 2], "a/b": {"c~d": "deep"}}, "": "empty-key"}

@@ -1,0 +1,288 @@
+"""``observed_lookup_join``'s witness path against its marker path.
+
+The witness path counts ``count(1)`` / ``count(witness)`` over the plain
+join; the marker path marks one cache row per key with a Window and is
+exact on any cache, so it is the reference.  Both must give the same
+``(lookup_total, lookup_hits)`` as a pure-Python count of lookup requests,
+and the same join output rows, on random caches with unique, duplicate
+and null keys, null non-key values, and key columns only.  The caches are
+in-memory local relations, as ``create_lookup_df`` builds; a cache whose
+rows may change between evaluations must take the marker path unprofiled.
+"""
+
+from __future__ import annotations
+
+import re
+import warnings
+
+import pyarrow as pa
+import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
+from pyspark.sql import Observation, Row
+from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import StructType
+
+from flink_http_full_cache_connector_spark.operators import lookup_join as lj
+from flink_http_full_cache_connector_spark.sources.datasource import register
+from flink_http_full_cache_connector_spark.streaming.refresh import RefreshingLookupCache
+from tests.conftest import USERS_V1
+from tests.test_lookup_source import USERS_SCHEMA
+
+#: value column names: plain, or a dotted second one (a top-level column
+#: whose name Spark would parse as a field access unless quoted)
+NAMES = (("v0", "v1"), ("v0", "geo.lat"))
+
+#: join shapes: cache key columns, probe key columns, the ``on`` form that
+#: names them, and the probe's other column — under "pairs" it takes the
+#: name of the cache's first value column, so that column cannot be the witness
+SHAPES = {
+    "str": (("id",), ("id",), "id", "n"),
+    "list": (("id",), ("id",), ["id"], "n"),
+    "pairs": (("id",), ("pid",), [("pid", "id")], "v0"),
+    "multi": (("a", "b"), ("a", "b"), ["a", "b"], "n"),
+    "multi_pairs": (("a", "b"), ("pa", "pb"), [("pa", "a"), ("pb", "b")], "n"),
+}
+
+key = st.one_of(st.none(), st.integers(0, 3))
+value = st.one_of(st.none(), st.text("xyz", max_size=2))
+
+
+def local_df(spark, rows, ddl):
+    """``rows`` as an in-memory local relation, built from Arrow as
+    ``create_lookup_df`` builds a snapshot."""
+    schema = StructType.fromDDL(ddl)
+    columns = list(zip(*rows)) or [()] * len(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, to_arrow_type(f.dataType)) for c, f in zip(columns, schema)],
+        names=schema.names,
+    )
+    return spark.createDataFrame(table, schema)
+
+
+@st.composite
+def cases(draw):
+    shape = draw(st.sampled_from(sorted(SHAPES)))
+    width = len(SHAPES[shape][0])
+    # 0 value columns: a cache with key columns only
+    n_values = draw(st.integers(0, 2))
+    mode = draw(st.sampled_from(["unique", "duplicate", "nullable"]))
+    if mode == "nullable":
+        keys = draw(st.lists(st.tuples(*[key] * width), min_size=1, max_size=6))
+    else:
+        keys = draw(
+            st.lists(st.tuples(*[st.integers(0, 3)] * width), min_size=1, max_size=4, unique=True)
+        )
+        if mode == "duplicate":
+            keys += draw(st.lists(st.sampled_from(keys), min_size=1, max_size=3))
+    # "v0" is non-null on every row in half the cases: a witness candidate
+    non_null_v0 = draw(st.booleans())
+    cache_rows = [
+        k + tuple(
+            draw(st.text("xyz", max_size=2) if (i == 0 and non_null_v0) else value)
+            for i in range(n_values)
+        )
+        for k in keys
+    ]
+    # probe keys aimed at the cache's keys, or anywhere
+    probe_key = st.one_of(st.sampled_from(keys), st.tuples(*[key] * width))
+    probe_rows = [draw(probe_key) + (n,) for n in range(draw(st.integers(1, 8)))]
+    how = draw(st.sampled_from(["left", "inner"]))
+    names = draw(st.sampled_from(NAMES))
+    return shape, n_values, cache_rows, probe_rows, how, names
+
+
+def python_counts(cache_keys, probe_rows, width, how):
+    """Lookup requests and hits: a probe row hits when its non-null key
+    equals the non-null key of some cache row."""
+    present = {k for k in cache_keys if None not in k}
+    hits = sum(1 for r in probe_rows if r[:width] in present)
+    return (len(probe_rows) if how == "left" else hits), hits
+
+
+def observe(df_fn):
+    obs = Observation()
+    df = df_fn(obs)
+    rows = sorted(df.collect(), key=repr)
+    got = obs.get
+    return df, rows, (got["lookup_total"], got["lookup_hits"])
+
+
+@settings(max_examples=30, deadline=None)
+@given(cases())
+# a duplicated key that a probe row hits
+@example(("list", 1, [(1, "a"), (1, "b"), (2, "c")], [(1, 0), (2, 1), (3, 2)], "left", NAMES[0]))
+# a null value in the only non-key column, on a row a probe row hits
+@example(("str", 1, [(1, None), (2, "b")], [(1, 0), (2, 1)], "left", NAMES[0]))
+# null keys on both sides; the non-null columns are the second one and
+# the one whose name the probe takes
+@example(("pairs", 2, [(None, None, None), (1, "y", "x")], [(None, 0), (1, 1)], "left", NAMES[0]))
+# the dotted column is the witness
+@example(("multi", 2, [(1, 2, None, "p"), (2, 1, "q", "r")], [(1, 2, 0), (2, 2, 1)], "left", NAMES[1]))
+# key columns only
+@example(("multi_pairs", 0, [(1, 2), (2, 1)], [(1, 2, 0), (2, 2, 1)], "inner", NAMES[0]))
+def test_witness_path_matches_marker_path_and_python(spark, case):
+    shape, n_values, cache_rows, probe_rows, how, names = case
+    cache_keys, probe_keys, on, other = SHAPES[shape]
+    width = len(cache_keys)
+    cache = local_df(
+        spark,
+        cache_rows,
+        ", ".join([f"{k} int" for k in cache_keys] + [f"`{n}` string" for n in names[:n_values]]),
+    )
+    probe = spark.createDataFrame(
+        probe_rows, ", ".join([f"{k} int" for k in probe_keys] + [f"{other} int"])
+    )
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", UserWarning)
+        fast, fast_rows, fast_counts = observe(
+            lambda obs: lj.observed_lookup_join(probe, cache, on, how, observation=obs)
+        )
+    ref, ref_rows, ref_counts = observe(
+        lambda obs: lj._marked_join(probe, cache, on, how, obs, cache_keys)
+    )
+    plain = lj.lookup_join(probe, cache, on, how)
+    plain_rows = sorted(plain.collect(), key=repr)
+
+    assert fast_counts == ref_counts == python_counts(
+        [r[:width] for r in cache_rows], probe_rows, width, how
+    )
+    assert fast_rows == ref_rows == plain_rows
+    assert fast.columns == ref.columns == plain.columns
+    assert lj._HIT_MARKER not in fast.columns
+
+    # the witness path runs exactly when the model says it can
+    matchable = [r for r in cache_rows if None not in r[:width]]
+    unique = len({r[:width] for r in matchable}) == len(matchable)
+    witness = any(
+        all(r[width + i] is not None for r in matchable)
+        for i in range(n_values)
+        if names[i] != other
+    )
+    plan = fast._jdf.queryExecution().executedPlan().toString()
+    # with no matchable row the optimizer empties the cache side, Window
+    # and all, whichever path built it
+    if matchable:
+        assert ("Window" not in plan) == (unique and witness)
+
+
+@pytest.mark.parametrize(
+    ("cache_rows", "cache_ddl", "probe_rows", "probe_ddl", "on", "n_rows", "counts"),
+    [
+        # Spark's join equates NaN with NaN, Python's == does not
+        (
+            [(0.0, "a"), (float("nan"), "b"), (float("nan"), "c")], "k double, v string",
+            [(0.0,), (float("nan"),), (1.0,)], "k double", "k", 4, (3, 2),
+        ),
+        # the key named in another case than the cache column
+        (
+            [(1, "a"), (2, "b")], "id int, v string",
+            [(1,), (3,)], "ID int", "ID", 2, (2, 1),
+        ),
+    ],
+    ids=["floating-key", "key-case"],
+)
+def test_declined_keys_take_the_marker_path(
+    spark, cache_rows, cache_ddl, probe_rows, probe_ddl, on, n_rows, counts
+):
+    cache = local_df(spark, cache_rows, cache_ddl)
+    probe = spark.createDataFrame(probe_rows, probe_ddl)
+    df, rows, got = observe(
+        lambda obs: lj.observed_lookup_join(probe, cache, on, observation=obs)
+    )
+    assert (len(rows), got) == (n_rows, counts)
+    assert "Window" in df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize(
+    "build",
+    [
+        # an RDD scan
+        lambda spark, base: spark.createDataFrame(base.collect(), base.schema),
+        lambda spark, base: base.withColumn("r", F.rand()),
+        lambda spark, base: base.withColumn("t", F.current_timestamp()),
+        lambda spark, base: spark.range(1, 3).withColumn("v", F.lit("a")),
+    ],
+    ids=["rdd", "rand", "clock", "range"],
+)
+def test_caches_whose_rows_may_change_are_not_profiled(spark, build):
+    """Each cache has unique keys and a non-null ``v``; only the bare
+    local relation is profiled and finds ``v``."""
+    base = local_df(spark, [(1, "a"), (2, "b")], "id bigint, v string")
+    assert lj._profile(base, ("id",)) == ("v",)
+    assert lj._profile(build(spark, base), ("id",)) == ()
+
+
+def test_data_source_cache_counts_every_generation_exactly(spark, http_server):
+    """A data-source cache fetches again on every evaluation, so a profile
+    of one generation would not hold for the next.  It takes the marker
+    path with no profile fetch, and stays exact when the second
+    generation duplicates a key."""
+    register(spark)
+    cache = (
+        spark.read.format("http-lookup-full-cache")
+        .schema("id INT, name STRING")
+        .option("url", http_server.url)
+        .load()
+    )
+    probe = spark.createDataFrame([Row(user_id=i) for i in (1, 2, 11)])
+
+    def counts():
+        obs = Observation()
+        df = lj.observed_lookup_join(probe, cache, [("user_id", "id")], observation=obs)
+        df.write.format("noop").mode("overwrite").save()
+        return obs.get
+
+    assert counts() == {"lookup_total": 3, "lookup_hits": 2}
+    http_server.set_payload(USERS_V1 + [dict(USERS_V1[0], name="again")])
+    assert counts() == {"lookup_total": 3, "lookup_hits": 2}
+    assert http_server.request_count == 2
+
+
+def operators(df) -> list[str]:
+    """Operator names of ``df``'s executed plan, root first: the final
+    adaptive plan, without the adaptive wrappers."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Final Plan ==")[-1].split("== Initial Plan ==")[0]
+    names = [
+        m.group(1)
+        for m in (re.match(r"[\s:+\-|]*(?:\*\(\d+\) )?(\w+)", ln) for ln in plan.splitlines())
+        if m
+    ]
+    return [n for n in names if n not in ("AdaptiveSparkPlan", "ResultQueryStage")]
+
+
+def test_unique_snapshot_plan_and_one_profile_per_snapshot(spark, http_server, monkeypatch):
+    """On a unique-keyed refresh snapshot the observe is the plan's last
+    operator, over a join with no Window and no cache-side shuffle, and the
+    snapshot is profiled once, then once more after a reload."""
+    profiles = []
+    profile = lj._profile
+    monkeypatch.setattr(
+        lj, "_profile", lambda cache, keys: profiles.append(keys) or profile(cache, keys)
+    )
+    cache = RefreshingLookupCache(
+        spark, {"url": http_server.url, "cache.refresh-interval": "PT1H"}, USERS_SCHEMA
+    )
+    probe = spark.createDataFrame([Row(user_id=i % 12 + 1) for i in range(12)])
+
+    def join():
+        obs = Observation()
+        df = lj.observed_lookup_join(
+            probe, cache.current(), [("user_id", "id")], observation=obs
+        )
+        df.write.format("noop").mode("overwrite").save()
+        assert obs.get == {"lookup_total": 12, "lookup_hits": 10}
+        return df
+
+    ops = operators(join())
+    assert ops[0] == "CollectMetrics", ops
+    assert "Window" not in ops and "Exchange" not in ops, ops
+    assert "BroadcastHashJoin" in ops
+    assert profiles == [("id",)]
+    join()
+    assert profiles == [("id",)]  # same snapshot object: no second profile
+    cache.check_and_reload(force=True)
+    join()
+    assert profiles == [("id",), ("id",)]

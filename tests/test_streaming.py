@@ -2,12 +2,15 @@
 v1→v2 swap + fail-fast (A5 / pinned behaviors 4-5), watermark (B6),
 collect-N (B10), and the flagship example-job shape (§3.3)."""
 
+import json
 import os
+import threading
 import time
+from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, StringType, StructField, StructType
+from pyspark.sql.types import DoubleType, IntegerType, StringType, StructField, StructType
 
 from flink_http_full_cache_connector_spark.http_client import HttpFetchError
 from flink_http_full_cache_connector_spark.sources.datagen import (
@@ -26,7 +29,7 @@ from flink_http_full_cache_connector_spark.streaming.refresh import (
     RefreshingLookupCache,
     enrich_stream,
 )
-from tests.conftest import USERS_V2
+from tests.conftest import USERS_V1, USERS_V2
 
 USERS_SCHEMA = StructType(
     [
@@ -166,6 +169,73 @@ def test_refresh_fail_fast_propagates(spark, http_server):
     assert m["refresh_count"] == 1
     assert m["http_attempts"] == 3 and m["http_retries"] == 1
     assert m["http_failures"] == 2
+
+
+@pytest.fixture()
+def truncating_server():
+    """Serves USERS_V1; the first GET's body stops halfway through its
+    declared ``Content-Length`` and the connection closes."""
+
+    class Handler(BaseHTTPRequestHandler):
+        def do_GET(self):  # noqa: N802
+            self.server.gets += 1
+            body = json.dumps(USERS_V1).encode()
+            self.send_response(200)
+            self.send_header("Content-Type", "application/json")
+            self.send_header("Content-Length", str(len(body)))
+            self.end_headers()
+            self.wfile.write(body if self.server.gets > 1 else body[: len(body) // 2])
+
+        def log_message(self, *args):
+            pass
+
+    httpd = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+    httpd.gets = 0
+    thread = threading.Thread(target=httpd.serve_forever, daemon=True)
+    thread.start()
+    try:
+        yield httpd
+    finally:
+        httpd.shutdown()
+        httpd.server_close()
+
+
+def test_refresh_retries_a_truncated_body(spark, truncating_server):
+    """A body shorter than its Content-Length is a failed attempt: the
+    load retries, and the next, whole response becomes the snapshot."""
+    host, port = truncating_server.server_address
+    cache = RefreshingLookupCache(
+        spark,
+        {"url": f"http://{host}:{port}/users", "max.retries": "2", "retry.delay.ms": "1"},
+        USERS_SCHEMA,
+    )
+    assert truncating_server.gets == 2
+    m = cache.metrics()
+    assert (m["http_attempts"], m["http_retries"], m["http_failures"]) == (2, 1, 1)
+    assert m["refresh_count"] == 1
+    assert sorted(r.id for r in cache.current().collect()) == list(range(1, 11))
+
+
+def test_refresh_schema_drift_fails_and_old_snapshot_serves(spark, http_server):
+    """A generation whose DOUBLE column turns to strings fails the reload
+    with the reference's coercion message; the previous snapshot object
+    keeps serving its rows and no refresh is counted."""
+    schema = StructType([StructField("id", IntegerType()), StructField("score", DoubleType())])
+    http_server.set_payload([{"id": 1, "score": 1.5}, {"id": 2, "score": 2}])
+    cache = RefreshingLookupCache(
+        spark, {"url": http_server.url, "cache.refresh-interval": "PT1H"}, schema
+    )
+    before = cache.current()
+    rows = before.collect()
+    http_server.set_payload([{"id": 1, "score": "high"}, {"id": 2, "score": "low"}])
+    with pytest.raises(RuntimeError, match="Failed to deserialize JSON node") as exc:
+        cache.check_and_reload(force=True)
+    assert '"score": "high"' in str(exc.value)
+    assert isinstance(exc.value.__cause__, ValueError)
+    assert cache.current() is before
+    assert cache.current().collect() == rows == [(1, 1.5), (2, 2.0)]
+    assert cache.stats.fetch_count == 1
+    assert http_server.request_count == 2
 
 
 def test_enrich_stream_example_job_shape(spark, http_server):
