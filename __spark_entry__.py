@@ -4,8 +4,8 @@
 reference, batch form): an HTTP-served dimension table fully cached as a
 static DataFrame, broadcast-joined to a parquet probe table.
 
-``queries()`` / ``oracle_sql()`` expose every implemented operator from
-SURVEY.md §2 via the central registry in
+``queries()`` / ``oracle_sql()`` expose the reference query shapes from
+SURVEY.md §2.B (``plans/reference_queries.py``) via the central registry in
 ``flink_http_full_cache_connector_spark.plans.registry``.
 """
 
@@ -45,7 +45,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
+    """One entry per reference query shape from SURVEY.md §2.B."""
     from flink_http_full_cache_connector_spark.plans.registry import all_queries
 
     return {name: qd.spark for name, qd in all_queries().items()}

@@ -80,25 +80,9 @@ def main() -> None:
     # one-off GC/container noise (observed ~2x swings on single runs)
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
     timings: dict[str, float] = {}
-    # registry enumeration puts driver-unverified queries FIRST (that order
-    # feeds the budget-capped correctness sweep); for TIMING that order is
-    # wrong — it pushes the heavy dedup/sketch family into the JVM's
-    # C2-JIT warm-up window (measured 3-5x inflation on the first ~20
-    # queries of a fresh session). Bench therefore runs the cheap
-    # scan/join/window queries first and the heavy families after the JVM
-    # is warm, regardless of sweep order.
-    from flink_http_full_cache_connector_spark.plans.registry import (
-        _R1_DRIVER_GREEN,
-    )
-
     q_all = all_queries()
-    # SPARK_GRAFT_SKIP_BASELINES=1: drop the tagged all-pairs correctness
-    # baselines (QueryDef.baseline) — the "run the registry at scale" mode
-    # SCALE.md prescribes, where O(n²) baselines must not run at all
-    if os.environ.get("SPARK_GRAFT_SKIP_BASELINES"):
-        q_all = {n: qd for n, qd in q_all.items() if not qd.baseline}
     # SPARK_GRAFT_ONLY=a,b,c: restrict to a named subset — the spot-sweep
-    # mode for targeted scale runs (e.g. the sf10 worst-ratio families)
+    # mode for targeted scale runs
     only = os.environ.get("SPARK_GRAFT_ONLY")
     if only:
         wanted = {n.strip() for n in only.split(",") if n.strip()}
@@ -106,46 +90,24 @@ def main() -> None:
         if missing:
             raise SystemExit(f"SPARK_GRAFT_ONLY: unknown queries {sorted(missing)}")
         q_all = {n: qd for n, qd in q_all.items() if n in wanted}
-    ordered = [
-        (n, q_all[n]) for n in q_all if n in _R1_DRIVER_GREEN
-    ] + [(n, q_all[n]) for n in q_all if n not in _R1_DRIVER_GREEN]
-    from flink_http_full_cache_connector_spark.operators.scale import (
-        drain_phases,
-    )
-
-    phases: dict[str, dict[str, float]] = {}
-    for name, qd in ordered:
+    for name, qd in q_all.items():
         best = float("inf")
         for _ in range(runs):
             t0 = time.perf_counter()
             qd.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            wall = time.perf_counter() - t0
-            # build/serve split (r10 verdict #6): queries with a one-time
-            # index build record build_s; keep the phases of the best run
-            # and derive serve_s as the lazily-executed remainder
-            p = drain_phases()
-            if wall < best:
-                best = wall
-                if p:
-                    if "build_s" in p and "serve_s" not in p:
-                        p["serve_s"] = round(max(0.0, wall - p["build_s"]), 3)
-                    phases[name] = p
-            # operators that persist() intermediates (LSH signatures, shingle
-            # tables, ...) would otherwise accumulate a new cache entry per
-            # run — dozens of dead cached relations by the end of the sweep,
-            # paying GC/memory pressure in whatever query runs later
+            best = min(best, time.perf_counter() - t0)
+            # queries that persist() intermediates would otherwise
+            # accumulate a new cache entry per run, paying GC/memory
+            # pressure in whatever query runs later
             spark.catalog.clearCache()
         # streaming queries leave uuid-named memory-sink tables behind —
         # complete-mode sinks pin their rows in memory for the rest of the
         # sweep; drop them eagerly
         for t in spark.catalog.listTables():
-            if t.isTemporary and "_" in t.name and any(
-                t.name.startswith(p)
-                for p in ("stream_", "stateful_", "kafka_", "upsert_")
-            ):
+            if t.isTemporary and t.name.startswith("stream_"):
                 spark.catalog.dropTempView(t.name)
         # broadcasts/shuffle state are only reclaimed when the JVM GCs and
-        # the ContextCleaner notices; a long 100+-query sweep otherwise
+        # the ContextCleaner notices; a long sweep otherwise
         # accumulates them until late queries pay multi-second GC pauses.
         # Forced GC every 10th query bounds the accumulation without
         # paying a full stop-the-world collection per query.
@@ -162,12 +124,8 @@ def main() -> None:
     # keys (registry.short_keys) and compact separators to stay well under
     # the window; the full-name timings + the key mapping go to repo files
     # (BENCH_FULL.json, BENCH_KEYS.json) and to stderr above.
-    from flink_http_full_cache_connector_spark.plans.registry import (
-        all_queries as _aq,
-        short_keys,
-    )
+    from flink_http_full_cache_connector_spark.plans.registry import short_keys
 
-    baseline_names = {n for n, qd in _aq().items() if qd.baseline}
     skey = short_keys(list(timings))
     repo_dir = os.path.dirname(os.path.abspath(__file__))
     # SPARK_GRAFT_BENCH_OUT: alternate full-timings path so scale/spot
@@ -196,13 +154,6 @@ def main() -> None:
                 # throughput, resistant to one-off GC/container noise)
                 "protocol": f"min_of_{runs}_runs",
                 "queries": timings,
-                # build/serve split for index-building queries (r10 #6):
-                # {query: {"build_s": ..., "serve_s": ...}} of the best run
-                "phases": phases,
-                "baseline_queries": sorted(baseline_names),
-                "total_excl_baselines": round(
-                    sum(t for n, t in timings.items() if n not in baseline_names), 3
-                ),
                 "sf": sf,
                 "cpus": cpus,
                 # machine-load markers (r8 verdict #8: two same-code min-of-2

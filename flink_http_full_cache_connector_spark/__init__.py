@@ -9,18 +9,19 @@ lookup joins.  This package re-expresses that surface Spark-first:
   GET (fetch w/ retry, RFC-6901 pointer, schema-driven JSON row coercion).
 - ``sources.datasource``  — first-class ``spark.read.format(
   "http-lookup-full-cache")`` via the PySpark Python Data Source API.
-- ``sources.datagen``     — Flink-datagen-equivalent rate source shim.
+- ``sources.datagen`` / ``sources.files`` / ``sources.kafka`` — the probe
+  sources of the reference's query shapes (Flink datagen, filesystem, Kafka).
 - ``operators.lookup_join`` — broadcast stream/batch-static equi-join
   (``FOR SYSTEM_TIME AS OF`` equivalent).
 - ``streaming.refresh``   — FIXED_DELAY periodic cache reload w/ atomic swap
   and fail-fast on exhausted retries.
-- ``operators.dedup`` / ``operators.similarity`` / ``operators.text`` /
-  ``operators.multimodal`` — large-scale training-data pipeline operators
-  (beyond the reference surface, per build target).
+- ``plans.reference_queries`` — the reference's query shapes as registered,
+  oracle-checked queries (``__spark_entry__.queries()``).
 
-Everything is DataFrame-declarative so Catalyst/AQE handle pushdown, pruning,
-broadcast and skew; Python UDFs appear only where built-ins cannot express the
-semantics (and then as Arrow-batched pandas UDFs).
+Everything is DataFrame-declarative so Catalyst/AQE handle pushdown, pruning
+and broadcast.  The training-data operator set (dedup, similarity, text,
+multimodal, ...) is the separate ``training_data_ops`` package, which builds
+on this one; nothing here imports it.
 """
 
 from flink_http_full_cache_connector_spark.options import HttpLookupOptions, validate_options

@@ -1,1 +1,1 @@
-"""Operators: lookup join + large-scale pipeline ops (dedup/similarity/text/multimodal)."""
+"""Operators: the broadcast lookup join."""

@@ -1,17 +1,17 @@
 """Central query registry backing the driver contract (__spark_entry__.py).
 
-Every implemented operator/query shape from SURVEY.md §2 registers a
+Every reference query shape from SURVEY.md §2.B registers a
 :class:`QueryDef` here: a Spark callable ``(spark, sf_dir) -> DataFrame``
 plus (when SQL-expressible) the equivalent ANSI SQL the DuckDB oracle runs
 over the same parquet tables.  Column names are aliased identically on both
 sides — the driver's compare hashes values after sorting columns by name.
+The training-data operator set registers its queries apart, in
+``training_data_ops.registry``.
 """
 
 from __future__ import annotations
 
 import functools
-import json
-import pathlib
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -26,264 +26,50 @@ class QueryDef:
     spark: SparkQuery
     oracle: str | None  # ANSI SQL for DuckDB; None → rows-only check
     doc: str = ""
-    # Correctness baselines (all-pairs / brute-force twins of a bucketed
-    # scale path).  They must stay registered — they ARE the oracle for the
-    # scale paths' recall tests — but a harness running "the registry at
-    # scale" should skip them: their cost is O(n²)/O(n·q) by design.
-    baseline: bool = False
 
 
 _REGISTRY: dict[str, QueryDef] = {}
 
 
+def clear_cache_first(fn: SparkQuery) -> SparkQuery:
+    """Wrap a query so it first drops cached relations left by PREVIOUS
+    queries: a harness that sweeps every registered query through one
+    session (the driver's correctness gate, bench.py, the oracle-parity
+    tests) would otherwise accumulate every persist() any query ever made."""
+
+    @functools.wraps(fn)
+    def gated(spark: SparkSession, sf_dir: str) -> DataFrame:
+        try:
+            spark.catalog.clearCache()
+        except Exception:
+            pass
+        return fn(spark, sf_dir)
+
+    return gated
+
+
 def register(
-    name: str, oracle: str | None, doc: str = "", baseline: bool = False
+    name: str, oracle: str | None, doc: str = ""
 ) -> Callable[[SparkQuery], SparkQuery]:
     def deco(fn: SparkQuery) -> SparkQuery:
-        @functools.wraps(fn)
-        def gated(spark: SparkSession, sf_dir: str) -> DataFrame:
-            # drop cached relations left by PREVIOUS queries: a harness that
-            # sweeps all 100 registered queries through one session (the
-            # driver's correctness gate, bench.py, the oracle-parity tests)
-            # would otherwise accumulate every persist() any query ever made
-            # — measured to end in driver OOM near the end of long sweeps
-            try:
-                spark.catalog.clearCache()
-            except Exception:
-                pass
-            return fn(spark, sf_dir)
-
         _REGISTRY[name] = QueryDef(
-            name=name, spark=gated, oracle=oracle, doc=doc, baseline=baseline
+            name=name, spark=clear_cache_first(fn), oracle=oracle, doc=doc
         )
-        # return the UNwrapped function: intra-module composition (e.g.
-        # dedup_components building on dedup_minhash_lsh) must not clear the
-        # caller's own cache mid-build
+        # return the UNwrapped function: intra-module composition must not
+        # clear the caller's own cache mid-build
         return fn
 
     return deco
 
 
-# Queries with a green (hash_match) row in the round-1 driver sweep
-# (CORRECTNESS_r01.json).  Driver sweeps are budget-capped (r1 and r2 each
-# covered exactly the first 50 entries of enumeration order and stopped), so
-# enumeration order decides which queries ever get a driver correctness
-# record.  all_queries() therefore yields queries with NO green row in ANY
-# past round FIRST (pending = not in _DRIVER_GREEN below); the cumulative
-# green tail follows.  Repo-local parity (tests/test_oracle_parity.py)
-# covers every query every round regardless of this ordering.
-#
-# The r1 set is also kept separately: bench.py uses it as the cheap
-# scan/join/window JVM warm-up prefix (the r2 green set contains the heavy
-# dedup/sketch families, which must run AFTER warm-up for honest timings).
-_R1_DRIVER_GREEN = frozenset(
-    {
-        "tfidf_top_terms", "rollup_events", "window_funcs_events",
-        "set_ops_users", "pricing_summary", "pivot_events", "semi_anti_joins",
-        "star_join_revenue", "scalar_subquery_spenders", "json_props_stats",
-        "percentiles_events", "funnel_users", "supplier_part_revenue",
-        "scd2_intervals", "ntile_buckets", "shipping_priority",
-        "array_funcs_users", "map_funcs_users", "window_dist_events",
-        "variant_props_stats", "window_first_last_events",
-        "outliers_iqr_events", "lookup_join_inner", "lookup_join_left",
-        "projection", "nested_subquery", "streaming_lookup_join",
-        "streaming_windowed_events", "hopping_windows", "session_windows",
-        "http_lookup_scan", "http_lookup_join", "streaming_interval_join",
-        "topk_orders", "latest_event_per_user", "sessionize_events",
-        "cube_events", "retention_cohorts", "orders_above_cust_avg",
-        "dedup_incremental", "region_nations_agg", "salted_join_orders",
-        "set_ops_all_events", "order_price_ranks", "grouping_sets_events",
-        "unpivot_lineitem_metrics",
-    }
-)
-
-# Green (hash_match) rows from the round-2 driver sweep (CORRECTNESS_r02.json).
-# NOT green in r2 and so still pending: sim_ann_ivf_trained (no_oracle) and
-# embedding_quantize_int8 (driver canonicalizer error on array schema).
-_R2_DRIVER_GREEN = frozenset(
-    {
-        "sketch_stats", "sketch_heavy_hitters", "datagen_probe",
-        "proctime_lookup_join", "rolling_1h_events", "gapfill_locf_events",
-        "recursive_order_chains", "profile_events_columns", "fk_integrity",
-        "asof_join_events", "asof_join_events_forward", "bloom_join_lineitem",
-        "dedup_exact", "streaming_dedup_exact", "streaming_dedup_stateful",
-        "dedup_ngram_jaccard", "dedup_ngram_jaccard_capped",
-        "dedup_minhash_lsh", "dedup_simhash", "dedup_embedding_cosine",
-        "dedup_components", "streaming_dedup_watermarked", "sim_topk_cosine",
-        "sim_ann_lsh", "sim_ann_ivf", "sim_rerank_pandas",
-        "embedding_dim_stats", "contrastive_negatives", "embedding_drift_int8",
-        "dedup_embedding_lsh", "dedup_simhash_pairs", "dedup_containment",
-        "dedup_containment_capped", "multimodal_metadata", "multimodal_sniff",
-        "multimodal_decode_features", "multimodal_frame_sample",
-        "multimodal_resize", "text_token_count", "text_lang_id",
-        "text_quality_score", "text_normalize", "text_vocabulary",
-        "text_fingerprint", "text_pii_scrub", "text_top_bigrams",
-        "corpus_report", "text_chunks_udtf",
-    }
-)
-
-# Green (hash_match) rows from the round-3 driver sweep (CORRECTNESS_r03.json)
-# — the first perfect sweep: 50/50 green, zero errors, zero no_oracle.
-_R3_DRIVER_GREEN = frozenset(
-    {
-        "sim_ann_ivf_trained", "embedding_quantize_int8",
-        "boilerplate_shingles", "text_token_gini", "text_quality_gopher",
-        "text_length_buckets", "pipeline_clean_corpus",
-        "observe_corpus_metrics", "training_corpus_build", "pack_sequences",
-        "decontaminate", "sample_hash_split", "sample_stratified",
-        "sample_weighted", "split_leakage_report", "corpus_mixture",
-        "range_join_events", "streaming_upsert_snapshot",
-        "market_basket_pairs", "abc_analysis_parts", "json_codec_roundtrip",
-        "event_anomaly_zscore", "winsorize_prices", "event_transitions",
-        "rolling_distinct_users", "late_arrival_report",
-        "attribution_last_touch", "volume_shipping", "market_share",
-        "important_parts", "cust_order_distribution", "parts_supplier_counts",
-        "idle_customers", "discount_effect", "promo_revenue_share",
-        "nation_yoy_growth", "top_parts_per_supplier", "fuzzy_part_match",
-        "scd2_apply_changes", "bpe_merges", "bpe_encode_stats",
-        "dedup_canonicalize", "sim_ann_ivf_pq", "embedding_pca_power",
-        "embedding_minmax_scale", "pagerank_nodes", "graph_triangles",
-        "text_surprisal_lm", "text_repetition_signals", "text_collocations",
-    }
-)
-
-
-def _driver_green_from_records(
-    root: "pathlib.Path | None" = None,
-) -> frozenset[str]:
-    """Derive the driver-green set from the CORRECTNESS_r*.json files the
-    driver writes at the repo root — a query is green iff its LATEST
-    recorded row has ``hash_match: true`` (last file mentioning the query
-    wins).  Any-round-ever-green would let a later regression
-    (green-then-red) hide in the green tier forever: a budget-capped
-    sweep deprioritizes green queries, so the red row would never be
-    re-checked (round-4 advice).  With latest-wins, a regressed query
-    drops back into the pending tier and re-sorts to the sweep front.
-
-    Rows with ``err == "no_oracle"`` are NOT green: in round 1 the four
-    no-oracle rows (sketch_stats, …) later gained oracles and earned real
-    hash rows in round 2, which only happened because no_oracle kept them
-    in the pending tier.  Missing/unreadable files degrade gracefully; if
-    no record file yields any green name (e.g. the package is imported
-    away from the repo checkout), fall back to the hardcoded per-round
-    frozensets so behavior is identical to the recorded history.
-
-    This derivation exists because hand-maintaining the union went stale
-    twice (round-2 and round-3 verdicts, "What's wrong" #1 both times):
-    a stale union makes a budget-capped driver sweep re-verify the same
-    green queries forever while new registrants never get a record.
-    """
-    latest: dict[str, bool] = {}
-    if root is None:
-        root = pathlib.Path(__file__).resolve().parents[2]
-    for path in sorted(root.glob("CORRECTNESS_r*.json")):
-        try:
-            records = json.loads(path.read_text())
-        except (OSError, ValueError):
-            continue
-        if not isinstance(records, dict):
-            continue
-        for name, row in records.items():
-            if isinstance(row, dict) and "hash_match" in row:
-                latest[name] = row.get("hash_match") is True
-    green = {name for name, ok in latest.items() if ok}
-    if not green:
-        return _R1_DRIVER_GREEN | _R2_DRIVER_GREEN | _R3_DRIVER_GREEN
-    return frozenset(green)
-
-
-# Cumulative: a query is "driver-green" if ANY past round recorded a green
-# hash_match row for it.  This is the set all_queries()'s pending-first
-# ordering keys off — pending must mean "never driver-verified", or a
-# budget-capped sweep re-walks already-green queries forever and the tail
-# never gets a record (round-2 verdict, What's wrong #3).  Derived from the
-# CORRECTNESS_r*.json driver records at import time so a new round's file
-# re-tiers the sweep automatically (round-3 verdict, next-round item #2).
-_DRIVER_GREEN = _driver_green_from_records()
-
-# Within pending, LONGEST-pending first: each era set names the queries
-# that existed by the end of that round.  A pending query sorts by the
-# earliest era that lists it; queries in no era (the newest registrants)
-# come last within pending.  With more pending queries than a sweep budget,
-# plain insertion order would strand the oldest unverified queries behind
-# newer registrants forever (this exact failure recurred in rounds 2 AND 3
-# before era-tiering).
-_R2_ERA_PENDING = frozenset(
-    {
-        "pack_sequences", "decontaminate", "corpus_mixture",
-        "text_quality_gopher", "text_length_buckets", "text_token_gini",
-        "boilerplate_shingles", "pipeline_clean_corpus",
-        "observe_corpus_metrics", "range_join_events", "sample_hash_split",
-        "sample_stratified", "sample_weighted", "split_leakage_report",
-        "streaming_upsert_snapshot", "training_corpus_build",
-        "sim_ann_ivf_trained", "embedding_quantize_int8",
-    }
-)
-
-# Registered during round 3 but past the 50-query sweep cap — the 8 queries
-# with no driver row of any kind (round-3 verdict, "What's missing" #1).
-_R3_ERA_PENDING = frozenset(
-    {
-        "cap_events_per_entity", "corpus_token_budget", "sample_temperature",
-        "skew_profile", "split_balance_audit", "streaming_heavy_hitters",
-        "streaming_sessionize", "streaming_transitions",
-    }
-)
-
-# Oldest era first; extend with one entry per round as registrants outpace
-# the sweep budget.
-_PENDING_ERAS: tuple[frozenset[str], ...] = (_R2_ERA_PENDING, _R3_ERA_PENDING)
-
-
-def _pending_rank(name: str) -> int:
-    for i, era in enumerate(_PENDING_ERAS):
-        if name in era:
-            return i
-    return len(_PENDING_ERAS)
-
-
 def all_queries() -> dict[str, QueryDef]:
-    # Import registrants lazily to avoid import cycles; each module appends
-    # to the registry at import time.
+    # Import the registrant lazily to avoid an import cycle; it appends to
+    # the registry at import time.
     from flink_http_full_cache_connector_spark.plans import (  # noqa: F401
-        analytics_queries,
         reference_queries,
-        timeseries_queries,
-        tpch_extra,
-        warehouse_queries,
     )
 
-    try:
-        from flink_http_full_cache_connector_spark.operators import (  # noqa: F401
-            asof,
-            bloom,
-            bpe,
-            dedup,
-            graph,
-            lm_score,
-            multimodal,
-            pipeline,
-            rangejoin,
-            sampling,
-            similarity,
-            skew,
-            substring_dedup,
-            text,
-        )
-    except ImportError:
-        pass
-    from flink_http_full_cache_connector_spark.streaming import (  # noqa: F401
-        heavy_hitters,
-        session,
-        upsert,
-    )
-
-    pending_names = [n for n in _REGISTRY if n not in _DRIVER_GREEN]
-    # stable sort: era rank first, registration (insertion) order within
-    pending_names.sort(key=_pending_rank)
-    pending = {n: _REGISTRY[n] for n in pending_names}
-    green = {n: q for n, q in _REGISTRY.items() if n in _DRIVER_GREEN}
-    return {**pending, **green}
+    return dict(_REGISTRY)
 
 
 def short_keys(names: list[str]) -> dict[str, str]:

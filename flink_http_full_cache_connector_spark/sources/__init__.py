@@ -1,1 +1,2 @@
-"""Sources: HTTP full-cache lookup table, Python Data Source, datagen shim."""
+"""Sources: HTTP full-cache lookup table, Python Data Source, and the
+datagen, file and Kafka probe sources."""

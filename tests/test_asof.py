@@ -7,7 +7,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from flink_http_full_cache_connector_spark.operators.asof import asof_join
+from training_data_ops.operators.asof import asof_join
 
 
 def _ts(s):

@@ -5,12 +5,12 @@ import struct
 import numpy as np
 import pytest
 
-from flink_http_full_cache_connector_spark.functions.avi_codec import (
+from training_data_ops.functions.avi_codec import (
     AviError,
     decode_avi_mjpeg,
     encode_avi_mjpeg,
 )
-from flink_http_full_cache_connector_spark.functions.jpeg_codec import (
+from training_data_ops.functions.jpeg_codec import (
     encode_jpeg_gray,
 )
 

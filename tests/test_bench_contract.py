@@ -24,10 +24,8 @@ def test_bench_emits_one_json_line_with_required_keys(tmp_path):
         SPARK_GRAFT_BENCH_RUNS="1",
         SPARK_GRAFT_BENCH_OUT=out_full,
     )
-    # 720s: the 231-query registry ran just under the previous 540s budget;
-    # round 11's three incremental/capped registrants (+43s measured quiet at
-    # sf0.001/4cpus — store writes + probe constants) pushed a quiet run to
-    # ~560s.  Sized for ~25% headroom, not for contended machines.
+    # 720s: sized when bench.py swept a 231-query registry (~560s quiet at
+    # sf0.001/4cpus); the 22 reference queries take a fraction of that.
     proc = subprocess.run(
         [sys.executable, "bench.py"],
         capture_output=True,
@@ -79,163 +77,3 @@ def test_short_keys_unique_and_stable():
     assert short_keys(sorted(names)) == {n: skey[n] for n in sorted(names)}
     rev = short_keys(list(reversed(names)))
     assert {n: rev[n] for n in names} == skey
-
-
-def test_sweep_order_puts_driver_unverified_queries_first():
-    """The driver's budget-capped correctness sweep walks queries() in
-    enumeration order (rounds 1 and 2 each covered exactly the first 50 and
-    stopped); the registry must keep queries with no green driver row in ANY
-    round ahead of the cumulative-green tail, or a capped sweep re-verifies
-    the same green queries forever and the tail never gets a record."""
-    from flink_http_full_cache_connector_spark.plans.registry import (
-        _DRIVER_GREEN,
-        _R1_DRIVER_GREEN,
-        _R2_DRIVER_GREEN,
-        _R3_DRIVER_GREEN,
-        all_queries,
-    )
-
-    names = list(all_queries())
-    seen_green = False
-    for n in names:
-        if n in _DRIVER_GREEN:
-            seen_green = True
-        else:
-            assert not seen_green, (
-                f"{n} (driver-unverified) enumerated after a driver-green query"
-            )
-    # both groups are non-empty and every driver-green query is registered
-    assert seen_green and _DRIVER_GREEN <= set(names)
-    # the cumulative set really is cumulative (r2+r3 regression guard: no
-    # past round's green queries may fall back into pending)
-    assert _R1_DRIVER_GREEN | _R2_DRIVER_GREEN | _R3_DRIVER_GREEN <= _DRIVER_GREEN
-    assert len(_R2_DRIVER_GREEN) == 48 and len(_R3_DRIVER_GREEN) == 50
-    # within pending, LONGEST-pending first: every older-era never-green
-    # query must enumerate before any newer registrant, so a 50-query capped
-    # sweep cannot strand an old query behind newer additions
-    from flink_http_full_cache_connector_spark.plans.registry import (
-        _PENDING_ERAS,
-        _pending_rank,
-    )
-
-    pending = [n for n in names if n not in _DRIVER_GREEN]
-    ranks = [_pending_rank(n) for n in pending]
-    assert ranks == sorted(ranks), pending
-    # every era query is either green by now or enumerated in pending
-    for era in _PENDING_ERAS:
-        assert era <= (_DRIVER_GREEN | set(pending))
-
-
-def test_driver_green_derived_from_correctness_records():
-    """_DRIVER_GREEN must be derived from the CORRECTNESS_r*.json driver
-    records (round-3 verdict, next-round item #2): hand-maintained unions
-    went stale in rounds 2 AND 3.  Recompute from the files here and require
-    exact agreement; a new CORRECTNESS_r*.json landing at the repo root must
-    re-tier the sweep with zero code edits."""
-    import pathlib
-
-    from flink_http_full_cache_connector_spark.plans.registry import (
-        _DRIVER_GREEN,
-        _driver_green_from_records,
-    )
-
-    repo = pathlib.Path(__file__).resolve().parents[1]
-    record_files = sorted(repo.glob("CORRECTNESS_r*.json"))
-    assert record_files, "driver record files missing from repo root"
-    latest = {}
-    for path in record_files:
-        for name, row in json.loads(path.read_text()).items():
-            if isinstance(row, dict) and "hash_match" in row:
-                latest[name] = row.get("hash_match") is True
-    expected = {name for name, ok in latest.items() if ok}
-    assert _DRIVER_GREEN == expected
-    assert _driver_green_from_records() == frozenset(expected)
-    # the 8 round-3-late queries have no driver record yet and so must be
-    # pending (delete this block when CORRECTNESS_r04.json lands with them)
-    from flink_http_full_cache_connector_spark.plans.registry import (
-        _R3_ERA_PENDING,
-        all_queries,
-    )
-
-    names = list(all_queries())
-    recorded = set()
-    for path in record_files:
-        recorded |= set(json.loads(path.read_text()))
-    never_recorded = _R3_ERA_PENDING - recorded
-    if never_recorded:  # auto-clears once CORRECTNESS_r04.json records them
-        assert never_recorded <= set(names[: len(never_recorded)]), (
-            f"{never_recorded} must lead the sweep enumeration, "
-            f"got head {names[: len(never_recorded)]}"
-        )
-
-
-def test_driver_green_latest_round_wins(tmp_path):
-    """A green-then-red transition (regression in a later sweep) must drop
-    the query back into the pending tier so a budget-capped sweep re-checks
-    it — any-round-ever-green would hide the red row forever (round-4
-    advice).  Rows that never carry a hash verdict leave the prior verdict
-    in place (a query absent from a capped sweep stays green)."""
-    from flink_http_full_cache_connector_spark.plans.registry import (
-        _driver_green_from_records,
-    )
-
-    r1 = {
-        "q_stays": {"hash_match": True, "err": None},
-        "q_regressed": {"hash_match": True, "err": None},
-        "q_never": {"hash_match": None, "err": "no_oracle"},
-    }
-    r2 = {
-        "q_regressed": {"hash_match": False, "err": None},
-        "q_recovered": {"hash_match": True, "err": None},
-    }
-    (tmp_path / "CORRECTNESS_r01.json").write_text(json.dumps(r1))
-    (tmp_path / "CORRECTNESS_r02.json").write_text(json.dumps(r2))
-    assert _driver_green_from_records(tmp_path) == {"q_stays", "q_recovered"}
-
-
-def test_skip_baselines_mode_excludes_only_tagged_baselines():
-    """bench.py's SPARK_GRAFT_SKIP_BASELINES scale mode (SCALE.md) filters
-    on QueryDef.baseline; pin the tag set so it cannot rot — every tagged
-    query must have a registered non-baseline production twin family, and
-    the filtered registry must still contain everything else."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
-
-    q_all = all_queries()
-    tagged = {n for n, qd in q_all.items() if qd.baseline}
-    assert tagged == {
-        "dedup_embedding_cosine",
-        "dedup_ngram_jaccard",
-        "dedup_containment",
-        "sim_topk_cosine",
-        # NoTimeout sessionizer: state grows with keys-ever-seen; the
-        # evicting variant is the production path at scale (r4 verdict #4)
-        "streaming_sessionize",
-        # flat SemDeDup: measured 74x wall at 10x data (sf10 spot sweep,
-        # SCALE.md round 6) — the n^1.5 balance point is a measurement,
-        # not a caveat; dedup_semantic_2level is the production twin
-        "dedup_semantic",
-        # uncapped bucket self-join: 639.7 s at sf100 (SCALE_SPOT_r8_minhash_cap
-        # .json) — pair work is unbounded in bucket size; dedup_minhash_capped
-        # is the production twin (count-window cap on the join's own shuffle)
-        "dedup_minhash_lsh",
-        # 24x fan-out exact sliding distinct: 619.9 s at sf100 — the linear
-        # anchor of the family, tagged once BOTH production twins landed
-        # (r10): the exact interval sweep (13.4x, same oracle) and the HLL
-        # contract twin
-        "rolling_distinct_users",
-    }
-    kept = {n: qd for n, qd in q_all.items() if not qd.baseline}
-    assert set(kept) == set(q_all) - tagged
-    # each baseline's scale-path twin survives the filter
-    for twin in (
-        "dedup_embedding_lsh",
-        "dedup_ngram_jaccard_capped",
-        "dedup_containment_capped",
-        "sim_ann_ivf",
-        "streaming_sessionize_evicting",
-        "dedup_semantic_2level",
-        "dedup_minhash_capped",
-        "rolling_distinct_users_sweep",
-        "rolling_distinct_users_hll",
-    ):
-        assert twin in kept

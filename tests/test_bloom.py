@@ -4,11 +4,11 @@ side must never shuffle; the only hash exchange is the tiny word agg)."""
 
 from pyspark.sql import functions as F
 
-from flink_http_full_cache_connector_spark.operators.bloom import (
+from training_data_ops.operators.bloom import (
     bloom_build,
     bloom_might_contain,
 )
-from flink_http_full_cache_connector_spark.plans.registry import all_queries
+from training_data_ops.registry import all_queries
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -45,7 +45,7 @@ def test_bloom_join_plan_never_shuffles_fact(spark):
 def test_bloom_prunes_before_join(spark):
     """The prefilter must actually drop rows: kept fact rows ≈ matches +
     false positives, far below the full table."""
-    from flink_http_full_cache_connector_spark.operators.bloom import (
+    from training_data_ops.operators.bloom import (
         BLOOM_PART_SIZE,
     )
     from flink_http_full_cache_connector_spark.plans.registry import load_table

@@ -4,7 +4,7 @@ Exchange on either side (the pay-the-shuffle-once 100 TB pattern)."""
 import pytest
 from pyspark.sql import functions as F
 
-from flink_http_full_cache_connector_spark.operators.bucketing import (
+from training_data_ops.operators.bucketing import (
     bucketed_join,
     write_bucketed,
 )

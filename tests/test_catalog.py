@@ -2,7 +2,7 @@
 
 from pyspark.sql import functions as F
 
-from flink_http_full_cache_connector_spark.catalog import (
+from training_data_ops.catalog import (
     compact_parquet,
     register_tables,
 )

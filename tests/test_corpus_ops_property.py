@@ -9,7 +9,7 @@ from collections import Counter
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from flink_http_full_cache_connector_spark.plans.registry import all_queries
+from training_data_ops.registry import all_queries
 
 # small word alphabet forces n-gram collisions (the interesting regime)
 words = st.sampled_from(["aa", "bb", "cc", "dd"])

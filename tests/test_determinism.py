@@ -5,7 +5,7 @@ partition counts and require byte-identical results."""
 
 import pytest
 
-import __spark_entry__ as entry_mod
+from training_data_ops.registry import all_queries
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -108,7 +108,7 @@ QUERIES = [
 
 
 def _rows(spark, name):
-    df = entry_mod.queries()[name](spark, SF_DIR)
+    df = all_queries()[name].spark(spark, SF_DIR)
     return sorted(tuple(r) for r in df.collect())
 
 

@@ -8,8 +8,8 @@ import numpy as np
 import pandas as pd
 import pyarrow.parquet as pq
 
-from flink_http_full_cache_connector_spark.plans.registry import all_queries
-from flink_http_full_cache_connector_spark.plans.timeseries_queries import KS_CRIT_C
+from training_data_ops.registry import all_queries
+from training_data_ops.plans.timeseries_queries import KS_CRIT_C
 
 SF_DIR = "/root/testdata/sf0.001"
 

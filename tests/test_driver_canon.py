@@ -31,6 +31,7 @@ import pandas as pd
 import pytest
 
 import __spark_entry__ as entry_mod
+from training_data_ops.registry import all_queries
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = [
@@ -103,9 +104,27 @@ def value_hash(df: pd.DataFrame) -> str:
 
 
 def queries_and_oracles():
+    """``(name, fn, sql)`` for the driver contract's queries, then for the
+    training-data operator set's."""
     qs = entry_mod.queries()
     osql = entry_mod.oracle_sql()
-    return [(name, qs[name], osql.get(name)) for name in sorted(qs)]
+    return [(name, qs[name], osql.get(name)) for name in sorted(qs)] + [
+        (name, qd.spark, qd.oracle)
+        for name, qd in sorted(all_queries().items())
+        if name not in qs
+    ]
+
+
+def full_sweep():
+    """Every query as a parameter; the training-data operator set's are
+    marked slow."""
+    driver = set(entry_mod.queries())
+    return [
+        pytest.param(
+            name, fn, sql, id=name, marks=() if name in driver else pytest.mark.slow
+        )
+        for name, fn, sql in queries_and_oracles()
+    ]
 
 
 def _fast_sample(items, stride: int = 10, offset: int = 5):
@@ -118,14 +137,10 @@ def _fast_sample(items, stride: int = 10, offset: int = 5):
     return ordered[offset::stride]
 
 
-#: Full-registry driver-gate replica — slow tier (see test_oracle_parity's
-#: note; the fast tier keeps the offset sample below).
-@pytest.mark.slow
-@pytest.mark.parametrize(
-    ("name", "fn", "sql"),
-    queries_and_oracles(),
-    ids=[n for n, _, _ in queries_and_oracles()],
-)
+#: Full-registry driver-gate replica — the driver contract's queries in the
+#: default tier, the rest in the slow tier (see test_oracle_parity's note;
+#: the fast tier keeps the offset sample below).
+@pytest.mark.parametrize(("name", "fn", "sql"), full_sweep())
 def test_driver_gate_replica(spark, oracle_con, name, fn, sql):
     _canon_check(spark, oracle_con, name, fn, sql)
 

@@ -6,12 +6,12 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from flink_http_full_cache_connector_spark.operators.asof import asof_join
-from flink_http_full_cache_connector_spark.operators.dedup import connected_components
-from flink_http_full_cache_connector_spark.operators.rangejoin import (
+from training_data_ops.operators.asof import asof_join
+from training_data_ops.operators.dedup import connected_components
+from training_data_ops.operators.rangejoin import (
     banded_interval_join,
 )
-from flink_http_full_cache_connector_spark.operators.similarity import (
+from training_data_ops.operators.similarity import (
     topk_cosine,
     topk_per_query,
 )
@@ -77,7 +77,7 @@ def test_connected_components_self_loop(spark):
 def test_sketch_stats_within_tolerance_of_exact(spark):
     """HLL++ (default rsd 5%) and approx_percentile(acc=10000) must land
     near their oracle-checked exact twins."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     sf = "/root/testdata/sf0.01"
     sketch = {
@@ -122,12 +122,10 @@ def test_heavy_hitters_exact_in_under_capacity_regime(spark):
     true count for that type (top-k property, modulo ties)."""
     from pyspark.sql import functions as F
 
-    from flink_http_full_cache_connector_spark.plans.registry import (
-        all_queries,
-        load_table,
-    )
+    from flink_http_full_cache_connector_spark.plans.registry import load_table
+    from training_data_ops.registry import all_queries
 
-    from flink_http_full_cache_connector_spark.plans.analytics_queries import HH_K
+    from training_data_ops.plans.analytics_queries import HH_K
 
     sf = "/root/testdata/sf0.01"
     got = all_queries()["sketch_heavy_hitters"].spark(spark, sf).collect()
@@ -160,7 +158,7 @@ def test_bloom_empty_dimension(spark):
     not a crash): the prefiltered join then returns no rows."""
     from pyspark.sql import functions as F
 
-    from flink_http_full_cache_connector_spark.operators.bloom import (
+    from training_data_ops.operators.bloom import (
         bloom_build,
         bloom_might_contain,
     )
@@ -174,7 +172,7 @@ def test_bloom_empty_dimension(spark):
 
 def test_gapfill_single_event_per_key(spark):
     """One event -> exactly one grid bucket carrying that value."""
-    from flink_http_full_cache_connector_spark.operators.gapfill import gapfill_locf
+    from training_data_ops.operators.gapfill import gapfill_locf
 
     df = spark.createDataFrame(
         [(1, 5_000_000, 42.0, 1)], "k int, us long, value double, eid int"
@@ -189,7 +187,7 @@ def test_gapfill_single_event_per_key(spark):
 
 def test_gapfill_tie_at_same_microsecond(spark):
     """Two events at one (key, us): the higher tie-break id's value wins."""
-    from flink_http_full_cache_connector_spark.operators.gapfill import gapfill_locf
+    from training_data_ops.operators.gapfill import gapfill_locf
 
     df = spark.createDataFrame(
         [(1, 10, 1.0, 1), (1, 10, 2.0, 2)], "k int, us long, value double, eid int"
@@ -204,7 +202,7 @@ def test_upsert_single_batch_equals_compaction(spark, tmp_path):
     """A one-batch stream degenerates to plain latest-per-key compaction."""
     from pyspark.sql import functions as F
 
-    from flink_http_full_cache_connector_spark.streaming.upsert import (
+    from training_data_ops.streaming.upsert import (
         run_upsert_stream,
     )
 
@@ -226,7 +224,7 @@ def test_upsert_single_batch_equals_compaction(spark, tmp_path):
 
 
 def test_contrastive_negatives_no_self_pairs_and_dense_range(spark):
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     rows = all_queries()["contrastive_negatives"].spark(
         spark, "/root/testdata/sf0.001"
@@ -250,7 +248,7 @@ def test_canonicalize_no_pairs_all_singletons(spark, tmp_path):
     """A corpus with NO near-dup pairs must come back entirely as kept
     singletons (component = own doc_id) — the empty-pair-graph path through
     connected_components and the broadcast anti-join."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     d = _tiny_docs(
         spark,
@@ -271,7 +269,7 @@ def test_token_budget_single_doc(spark, tmp_path):
     """One document holds ALL the tokens: budget = total // 2 < n_tokens,
     so the single boundary doc must be dropped (cum > budget) — the
     boundary-group window on a 1-row group."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     d = _tiny_docs(spark, tmp_path, [(1, "a b c d e f g h", "en", "s", 15)])
     rows = all_queries()["corpus_token_budget"].spark(spark, d).collect()
@@ -281,7 +279,7 @@ def test_token_budget_single_doc(spark, tmp_path):
 def test_temperature_single_source_keeps_everything(spark, tmp_path):
     """With one source, share = 1: n_target = n_total, exactly one epoch,
     no remainder draw."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     d = _tiny_docs(
         spark,

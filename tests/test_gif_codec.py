@@ -9,7 +9,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from flink_http_full_cache_connector_spark.functions.gif_codec import (
+from training_data_ops.functions.gif_codec import (
     GifError,
     decode_gif,
     encode_gif,
@@ -136,7 +136,7 @@ def test_encoder_rejects_bad_input():
 
 
 def test_decode_image_prefers_vendored_codec_for_gif():
-    from flink_http_full_cache_connector_spark.operators.multimodal import (
+    from training_data_ops.operators.multimodal import (
         PngImage,
         decode_image,
     )

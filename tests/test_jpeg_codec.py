@@ -8,7 +8,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from flink_http_full_cache_connector_spark.functions.jpeg_codec import (
+from training_data_ops.functions.jpeg_codec import (
     JPEG_MAX_ERR,
     JPEG_MAX_ERR_COLOR,
     JpegError,
@@ -221,7 +221,7 @@ def test_unsupported_sampling_rejected():
 
 
 def test_color_pipeline_contract_holds_in_spark(spark):
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     rows = (
         all_queries()["multimodal_jpeg_color_pipeline"]
@@ -236,7 +236,7 @@ def test_color_pipeline_contract_holds_in_spark(spark):
 
 
 def test_jpeg_pipeline_contract_holds_in_spark(spark):
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     rows = (
         all_queries()["multimodal_jpeg_pipeline"]
@@ -249,7 +249,7 @@ def test_jpeg_pipeline_contract_holds_in_spark(spark):
 
 
 def test_decode_image_uses_vendored_jpeg_codec():
-    from flink_http_full_cache_connector_spark.operators.multimodal import (
+    from training_data_ops.operators.multimodal import (
         PngImage,
         decode_image,
     )
@@ -272,7 +272,7 @@ def test_dqt_bytes_are_dezigzagged():
     byte to 2: the correctly-dezigzagged decoder must scale the actual
     coefficient (pixels ~double); a natural-order reader would scale a
     zero coefficient and return the unscaled image."""
-    from flink_http_full_cache_connector_spark.functions.jpeg_codec import (
+    from training_data_ops.functions.jpeg_codec import (
         _COS,
         _ZIGZAG,
         decode_jpeg_gray,

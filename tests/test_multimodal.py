@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from flink_http_full_cache_connector_spark.operators.multimodal import (
+from training_data_ops.operators.multimodal import (
     FRAME_LEN,
     FRAME_STRIDE,
     attach_media,
@@ -106,7 +106,7 @@ def test_mapinpandas_is_partition_parallel(spark, media):
 
 
 def test_fake_thumbnail_semantics():
-    from flink_http_full_cache_connector_spark.operators.multimodal import (
+    from training_data_ops.operators.multimodal import (
         MAX_SIDE,
         fake_thumbnail,
     )
@@ -149,7 +149,7 @@ def test_sniff_golden_bytes_python_and_jvm(spark):
     """Magic-number sniffing against REAL format signatures: a constructed
     spec-valid PNG, canonical JPEG/JFIF and GIF89a prefixes, a RIFF/WAVE
     header — both the Python batch twin and the JVM hex-ladder column."""
-    from flink_http_full_cache_connector_spark.operators.multimodal import (
+    from training_data_ops.operators.multimodal import (
         sniff_format_bytes,
         sniff_format_col,
     )
@@ -183,7 +183,7 @@ def test_decode_real_png_via_vendored_codec(media):
     grayscale image with the golden pixel value — with pillow when
     installed, else through the vendored stdlib codec (round-3 verdict
     item #3: decode used to raise NotImplementedError without PIL)."""
-    from flink_http_full_cache_connector_spark.operators.multimodal import (
+    from training_data_ops.operators.multimodal import (
         decode_image,
     )
 
@@ -258,7 +258,7 @@ def test_golden_fixtures_sniff_and_metadata(spark):
     semantics on genuine media bytes."""
     import hashlib
 
-    from flink_http_full_cache_connector_spark.operators.multimodal import (
+    from training_data_ops.operators.multimodal import (
         sniff_format_bytes,
         sniff_format_col,
     )
@@ -299,7 +299,7 @@ def test_decode_real_wav_via_stdlib(media):
     soundfile, in ANY environment (round-4 verdict item #3): 8 mono
     samples at 8 kHz with exact int16 values.  Non-WAV audio stays
     soundfile-gated and fails loudly without it."""
-    from flink_http_full_cache_connector_spark.operators.multimodal import (
+    from training_data_ops.operators.multimodal import (
         decode_audio,
     )
 
@@ -318,7 +318,7 @@ def test_decode_audio_stereo_and_widths():
     import struct
     import wave
 
-    from flink_http_full_cache_connector_spark.operators.multimodal import (
+    from training_data_ops.operators.multimodal import (
         decode_audio,
     )
 
@@ -371,7 +371,7 @@ def test_constructed_gif_through_sniff_and_decode_contract(spark, media):
     JVM hex ladder) and decode for REAL via the vendored codec — completing the
     constructed-fixture matrix for every sniffable format with a
     stdlib-expressible encoder; JPEG stays the env-blocked format."""
-    from flink_http_full_cache_connector_spark.operators.multimodal import (
+    from training_data_ops.operators.multimodal import (
         decode_image,
         sniff_format_bytes,
         sniff_format_col,
@@ -399,7 +399,7 @@ def test_pngimage_thumbnail_nonsquare_bounds_preserve_aspect():
     """Non-square size bounds must apply ONE scale factor to both axes
     (round-4 advice): two independent ratios distort aspect.  A 8x4 image
     into (4, 100): width binds, scale=1/2, -> 4x2 (not 4x50-ish or 4x?)."""
-    from flink_http_full_cache_connector_spark.operators.multimodal import (
+    from training_data_ops.operators.multimodal import (
         PngImage,
     )
 
@@ -420,10 +420,10 @@ def test_decode_image_prefers_vendored_codec_for_png():
     importable (round-4 advice): a PIL Image has no .pixels, so the
     registered thumbnail column would silently become b'' and pillow's
     rounding could shift dims by 1 across environments."""
-    from flink_http_full_cache_connector_spark.functions.png_codec import (
+    from training_data_ops.functions.png_codec import (
         encode_png,
     )
-    from flink_http_full_cache_connector_spark.operators.multimodal import (
+    from training_data_ops.operators.multimodal import (
         PngImage,
         decode_image,
     )
@@ -442,11 +442,11 @@ def test_vad_segmentation_matches_numpy_reference(spark):
     the DuckDB oracle."""
     import numpy as np
 
-    from flink_http_full_cache_connector_spark.operators.multimodal import (
+    from training_data_ops.operators.multimodal import (
         VAD_FRAME,
         WAV_N_MOD,
     )
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     rows = {
         r.doc_id: r
@@ -486,7 +486,7 @@ def test_audit_decode_bytes_all_classes():
     """Every fixture variant classifies to its designed (format, ok,
     reason) — including the progressive JPEG, which must degrade to an
     unsupported_codec row rather than raise (round-6 tolerance path)."""
-    from flink_http_full_cache_connector_spark.operators.multimodal import (
+    from training_data_ops.operators.multimodal import (
         AUDIT_VARIANTS,
         _audit_payload,
         audit_decode_bytes,
@@ -513,7 +513,7 @@ def test_audit_never_raises_on_arbitrary_bytes():
     """The audit is the no-task-failure path: arbitrary junk — including
     payloads that sniff as a known format but die immediately — must
     classify, never raise."""
-    from flink_http_full_cache_connector_spark.operators.multimodal import (
+    from training_data_ops.operators.multimodal import (
         audit_decode_bytes,
     )
 
@@ -543,7 +543,7 @@ def test_audit_classifies_parser_crashes_and_unsupported_attribute():
     import struct
     import zlib
 
-    from flink_http_full_cache_connector_spark.operators.multimodal import (
+    from training_data_ops.operators.multimodal import (
         audit_decode_bytes,
     )
 
@@ -575,7 +575,7 @@ def test_audit_classifies_parser_crashes_and_unsupported_attribute():
 
     # 4:2:2-sampled color JPEG: the message is 'only 4:4:4 and luma-first
     # 4:2:0 sampling supported' — again attribute-driven
-    from flink_http_full_cache_connector_spark.functions.jpeg_codec import (
+    from training_data_ops.functions.jpeg_codec import (
         encode_jpeg_rgb,
     )
 
@@ -594,7 +594,7 @@ def test_audit_classifies_parser_crashes_and_unsupported_attribute():
 def test_decode_audit_operator_over_payload_column(spark):
     """decode_audit takes an arbitrary (doc_id, payload) relation — the
     production shape where payloads come from the corpus, not fixtures."""
-    from flink_http_full_cache_connector_spark.operators.multimodal import (
+    from training_data_ops.operators.multimodal import (
         _audit_payload,
         decode_audit,
     )

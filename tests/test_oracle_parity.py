@@ -1,6 +1,7 @@
-"""Driver-contract parity: every registered query must match its DuckDB
-oracle at sf0.01 (row count + schema + order-insensitive values) — a local
-replica of the driver's CORRECTNESS gate."""
+"""Driver-contract parity: every registered query — the driver contract's
+reference queries and the training-data operator set's — must match its
+DuckDB oracle at sf0.01 (row count + schema + order-insensitive values) — a
+local replica of the driver's CORRECTNESS gate."""
 
 import duckdb
 import numpy as np
@@ -8,6 +9,7 @@ import pandas as pd
 import pytest
 
 import __spark_entry__ as entry_mod
+from training_data_ops.registry import all_queries
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = [
@@ -43,9 +45,27 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
 
 
 def queries_and_oracles():
+    """``(name, fn, sql)`` for the driver contract's queries, then for the
+    training-data operator set's."""
     qs = entry_mod.queries()
     osql = entry_mod.oracle_sql()
-    return [(name, qs[name], osql.get(name)) for name in sorted(qs)]
+    return [(name, qs[name], osql.get(name)) for name in sorted(qs)] + [
+        (name, qd.spark, qd.oracle)
+        for name, qd in sorted(all_queries().items())
+        if name not in qs
+    ]
+
+
+def full_sweep():
+    """Every query as a parameter; the training-data operator set's are
+    marked slow."""
+    driver = set(entry_mod.queries())
+    return [
+        pytest.param(
+            name, fn, sql, id=name, marks=() if name in driver else pytest.mark.slow
+        )
+        for name, fn, sql in queries_and_oracles()
+    ]
 
 
 def _parity_check(spark, oracle_con, name, fn, sql):
@@ -71,13 +91,10 @@ def _fast_sample(items, stride: int = 10):
 
 
 #: The FULL registry sweep is the driver's own correctness gate replicated
-#: locally — invaluable, but ~6 min of the suite's wall (r12 verdict #2: the
-#: driver's pytest budget was blown at ~36 min total).  Slow tier runs all
-#: 234; the fast tier keeps the deterministic sample below.
-@pytest.mark.slow
-@pytest.mark.parametrize(
-    ("name", "fn", "sql"), queries_and_oracles(), ids=[n for n, _, _ in queries_and_oracles()]
-)
+#: locally.  The driver contract's queries run in full in the default tier;
+#: the rest of the sweep is ~6 min of wall, so the slow tier runs all of it
+#: and the fast tier keeps the deterministic sample below.
+@pytest.mark.parametrize(("name", "fn", "sql"), full_sweep())
 def test_query_matches_oracle(spark, oracle_con, name, fn, sql):
     _parity_check(spark, oracle_con, name, fn, sql)
 

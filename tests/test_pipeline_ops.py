@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from flink_http_full_cache_connector_spark.operators.dedup import (
+from training_data_ops.operators.dedup import (
     dedup_minhash_lsh,
     dedup_ngram_jaccard,
     dedup_simhash,
@@ -15,12 +15,12 @@ from flink_http_full_cache_connector_spark.operators.dedup import (
     simhash_near_pairs,
     word_shingles,
 )
-from flink_http_full_cache_connector_spark.operators.similarity import (
+from training_data_ops.operators.similarity import (
     sim_ann_ivf,
     sim_topk_cosine,
     topk_cosine,
 )
-from flink_http_full_cache_connector_spark.operators.text import (
+from training_data_ops.operators.text import (
     lang_id,
     quality_score,
     rolling_hash,
@@ -153,7 +153,7 @@ def test_ivf_trained_centroids_recall(spark):
     """Lloyd-trained IVF must keep high recall (absolute bar; on this data
     the id-seeded naive centroids are already near-optimal, so the trained
     variant demonstrates the iterative path, not a recall win)."""
-    from flink_http_full_cache_connector_spark.operators.similarity import (
+    from training_data_ops.operators.similarity import (
         sim_ann_ivf_trained_neighbors,
     )
 
@@ -173,7 +173,7 @@ def test_stateful_dedup_suppresses_across_microbatches(spark, tmp_path):
     when batch 2 delivers more duplicates; new hashes in batch 2 emit once."""
     import pandas as pd
 
-    from flink_http_full_cache_connector_spark.operators.dedup import (
+    from training_data_ops.operators.dedup import (
         stateful_dedup_stream,
     )
 
@@ -211,7 +211,7 @@ def test_connected_components_chain_and_islands(spark):
     rounds), keep islands separate, and label by component-min id.  The
     driver-side union-find result is a local relation built without
     writing any session conf."""
-    from flink_http_full_cache_connector_spark.operators.dedup import (
+    from training_data_ops.operators.dedup import (
         connected_components,
     )
 
@@ -239,7 +239,7 @@ def test_connected_components_chain_and_islands(spark):
 
 
 def test_pii_scrub_redacts_crafted_text(spark):
-    from flink_http_full_cache_connector_spark.operators.text import (
+    from training_data_ops.operators.text import (
         pii_counts,
         scrub_pii,
     )
@@ -271,7 +271,7 @@ def test_build_training_corpus_end_to_end(spark, tmp_path):
     verified by reading the sink back."""
     from pyspark.sql import functions as F
 
-    from flink_http_full_cache_connector_spark.operators.pipeline import (
+    from training_data_ops.operators.pipeline import (
         build_training_corpus,
         pipeline_clean_corpus,
     )
@@ -298,7 +298,7 @@ def test_lang_id_predictions_consistent_on_corpus(spark):
     crafted-text tests above."""
     from pyspark.sql import functions as F
 
-    from flink_http_full_cache_connector_spark.operators.text import lang_id
+    from training_data_ops.operators.text import lang_id
     from flink_http_full_cache_connector_spark.plans.registry import load_table
 
     docs = load_table(spark, "/root/testdata/sf0.01", "documents")
@@ -314,7 +314,7 @@ def test_embedding_lsh_subset_and_recall_vs_exact(spark):
     exact cosine as the brute-force twin, so its pairs are a subset of the
     exact pairs; with 4 tables x 6 bits over the planted near-dup vectors,
     recall should stay high."""
-    from flink_http_full_cache_connector_spark.operators.dedup import (
+    from training_data_ops.operators.dedup import (
         dedup_embedding_cosine,
         dedup_embedding_lsh,
     )
@@ -332,7 +332,7 @@ def test_shingle_df_cap_drops_boilerplate(spark, tmp_path):
     a boilerplate footer shared by every doc must vanish from the capped
     shingle table (and with it the pairs it would fake), while genuinely
     duplicated content still pairs up."""
-    from flink_http_full_cache_connector_spark.operators.dedup import (
+    from training_data_ops.operators.dedup import (
         _ngram_jaccard,
         _shingle_table,
     )
@@ -374,7 +374,7 @@ def test_lang_id_trigram_separates_real_languages(spark):
     marker-bearing text, (b) classify marker-FREE prose the ladder drops to
     'und', and (c) detect CJK text by codepoint — the concrete separation
     wins over the r1 heuristic."""
-    from flink_http_full_cache_connector_spark.operators.text import (
+    from training_data_ops.operators.text import (
         TRIGRAM_WEIGHTS,
         lang_id,
         lang_id_trigram,
@@ -415,7 +415,7 @@ def test_decontaminate_flags_planted_eval_overlap(spark, tmp_path):
     """A training doc that copies an 8-gram run from an eval doc must be
     flagged; unrelated docs must not. Eval docs (id % 97 == 0) never appear
     in the output."""
-    from flink_http_full_cache_connector_spark.operators.pipeline import (
+    from training_data_ops.operators.pipeline import (
         decontaminate,
     )
 
@@ -440,7 +440,7 @@ def test_pack_sequences_window_semantics(spark):
     """Within every bucket, packs are contiguous prefix-sum fills: offsets
     stay below the window, pack ids are non-decreasing in doc order, and
     each doc's slot follows the previous doc's end."""
-    from flink_http_full_cache_connector_spark.operators.pipeline import (
+    from training_data_ops.operators.pipeline import (
         PACK_WINDOW,
         pack_sequences,
     )
@@ -464,7 +464,7 @@ def test_corpus_mixture_scarcest_source_binds(spark):
     """corpus_scale = min(n_s/share_s): the binding source keeps ~all rows,
     every source's target is its share of the total, and kept counts are
     the deterministic hash-bucket approximation of the target."""
-    from flink_http_full_cache_connector_spark.operators.sampling import (
+    from training_data_ops.operators.sampling import (
         MIXTURE_TARGET,
         corpus_mixture,
     )
@@ -485,7 +485,7 @@ def test_corpus_mixture_scarcest_source_binds(spark):
 def test_gopher_rules_fire_on_crafted_docs(spark, tmp_path):
     """Each rule must reject its own violation class: too short, repetition
     (top-token share), and absurd mean word length; ordinary prose passes."""
-    from flink_http_full_cache_connector_spark.operators.text import (
+    from training_data_ops.operators.text import (
         text_quality_gopher,
     )
 
@@ -511,7 +511,7 @@ def test_gopher_rules_fire_on_crafted_docs(spark, tmp_path):
 def test_length_buckets_partition_and_cover(spark):
     """Power-of-two buckets: every doc lands in exactly one bucket, bucket
     bounds hold (2^b <= tokens < 2^(b+1)), totals reconcile."""
-    from flink_http_full_cache_connector_spark.operators.text import (
+    from training_data_ops.operators.text import (
         text_length_buckets,
         token_count,
     )
@@ -532,7 +532,7 @@ def test_length_buckets_partition_and_cover(spark):
 def test_quantize_int8_reconstruction(spark):
     """Codes must be within [0,255], dequantization must land within half a
     quantization step of the original value in every dimension."""
-    from flink_http_full_cache_connector_spark.operators.similarity import (
+    from training_data_ops.operators.similarity import (
         QUANT_LEVELS,
         embedding_quantize_int8,
     )
@@ -566,7 +566,7 @@ def test_pack_sequences_long_doc_overflows_into_next_window(spark, tmp_path):
     """A document longer than the pack window must advance pack_id past the
     windows it spans (greedy contiguous fill never splits a doc); the next
     doc starts at the overflowing prefix."""
-    from flink_http_full_cache_connector_spark.operators.pipeline import (
+    from training_data_ops.operators.pipeline import (
         PACK_WINDOW,
         pack_sequences,
     )
@@ -600,7 +600,7 @@ def test_trigram_profiles_have_no_self_overlap():
     ('aaa') or period 2 ('aba').  Pin that invariant so adding such a
     trigram to TRIGRAM_PROFILES fails loudly instead of silently
     diverging the two formulations."""
-    from flink_http_full_cache_connector_spark.operators.text import (
+    from training_data_ops.operators.text import (
         TRIGRAM_PROFILES,
     )
 
@@ -614,7 +614,7 @@ def test_trigram_profiles_have_no_self_overlap():
 def test_repetition_signals_flag_planted_spam(spark, tmp_path):
     """A doc that is one phrase repeated 50x must be dropped (dup_ppm ~1e6);
     normal prose and sub-3-token docs must be kept with exact ppm values."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     d = str(tmp_path)
     docs = [
@@ -642,7 +642,7 @@ def test_canonicalize_one_keep_per_component(spark):
     """Exactly one canonical doc per component; the canonical doc is the
     max-n_chars (ties min doc_id) member; singleton count + member count
     covers the whole corpus exactly once."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     rows = all_queries()["dedup_canonicalize"].spark(spark, SF_DIR).collect()
     n_docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").count()
@@ -664,7 +664,7 @@ def test_token_budget_is_a_maximal_prefix(spark):
     PREFIX of the (qs_m desc, bucket, doc_id) total order: every kept doc
     ranks strictly before every dropped doc, and adding the first dropped
     doc would overshoot the budget."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     rows = all_queries()["corpus_token_budget"].spark(spark, SF_DIR).collect()
     total = sum(r.n_tokens for r in rows)
@@ -693,7 +693,7 @@ def test_ann_ivf_pq_recall_vs_bruteforce_l2(spark):
     slightly lower floor — and require ranks to be contiguous per query."""
     import numpy as np
 
-    from flink_http_full_cache_connector_spark.operators.similarity import (
+    from training_data_ops.operators.similarity import (
         sim_ann_ivf_pq,
     )
 
@@ -728,7 +728,7 @@ def test_shingle_table_arrow_identical_to_fold(spark):
     HOF expression pipeline EXACTLY — same shingle strings, same h/fp
     hashes, same first-occurrence dedup — including whitespace edge cases
     (F.trim is space-only; tabs/newlines are delimiters, not trim chars)."""
-    from flink_http_full_cache_connector_spark.operators.dedup import (
+    from training_data_ops.operators.dedup import (
         _shingle_table,
     )
 
@@ -760,7 +760,7 @@ def test_minhash_signatures_arrow_identical_to_fold(spark):
     """The zero-shuffle map-side signature kernel must reproduce the
     groupBy fold EXACTLY — all-integer affine minima, so identity (not
     closeness) is the bar."""
-    from flink_http_full_cache_connector_spark.operators.dedup import (
+    from training_data_ops.operators.dedup import (
         _shingle_table,
         minhash_signatures,
     )
@@ -796,7 +796,7 @@ def test_semantic_prune_kernels_agree_near_threshold(spark):
 
     import numpy as np
 
-    from flink_http_full_cache_connector_spark.operators.dedup import (
+    from training_data_ops.operators.dedup import (
         SEMANTIC_DUP_THRESHOLD,
         _semantic_prune,
     )
@@ -843,7 +843,7 @@ def test_two_level_assign_kernels_agree_near_tie(spark):
 
     import numpy as np
 
-    from flink_http_full_cache_connector_spark.operators.similarity import (
+    from training_data_ops.operators.similarity import (
         two_level_assign,
         two_level_index,
     )
@@ -880,7 +880,7 @@ def test_two_level_assign_arrow_carries_vec_past_unprobed_cell(spark):
     """A coarse cell that owns a fine centroid but gets no probe reaches
     the cogroup's empty branch; under ``carry_vec=True, score=False`` its
     empty ``v`` column must still convert to ``array<double>``."""
-    from flink_http_full_cache_connector_spark.operators.similarity import (
+    from training_data_ops.operators.similarity import (
         two_level_assign_arrow,
         two_level_index,
     )
@@ -900,7 +900,7 @@ def test_pq_encode_arrow_codes_bit_identical_to_fold(spark):
     over dims — the exact IEEE float64 sequence the fold kernel runs —
     so codes must be IDENTICAL, not merely close (the full SQL oracle of
     sim_ann_ivf_2level_pq depends on it; round-8 verdict #3)."""
-    from flink_http_full_cache_connector_spark.operators.similarity import (
+    from training_data_ops.operators.similarity import (
         PQ_K,
         as_double,
         pq_encode,
@@ -921,7 +921,7 @@ def test_temperature_sampling_flattens_shares(spark, tmp_path):
     (natural 80/20), sampled shares must sit strictly between natural and
     uniform, the scarce source must upsample (n_sampled > n_total via
     epochs+remainder), and Σ n_target ≈ corpus size (integer floors)."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     d = str(tmp_path)
     rows = [(i, f"doc {i} text", "en", "big" if i < 400 else "small", 10)
@@ -951,7 +951,7 @@ def test_pca_power_matches_numpy_top_eigenvector(spark):
     arbitrary direction."""
     import numpy as np
 
-    from flink_http_full_cache_connector_spark.operators.similarity import (
+    from training_data_ops.operators.similarity import (
         pca_power_train,
     )
 
@@ -1005,7 +1005,7 @@ def test_bpe_merges_match_python_reference(spark, tmp_path):
     merges chain (lo+w, low+e, ...) and ties occur."""
     from collections import Counter
 
-    from flink_http_full_cache_connector_spark.operators.bpe import (
+    from training_data_ops.operators.bpe import (
         bpe_train_merges,
     )
 
@@ -1030,7 +1030,7 @@ def test_bpe_encode_matches_python_tokenizer(spark, tmp_path):
     """Encoding with the trained merges must reproduce the reference
     tokenizer's subword counts per document, and merges must strictly
     shrink token counts versus character-level."""
-    from flink_http_full_cache_connector_spark.operators.bpe import (
+    from training_data_ops.operators.bpe import (
         bpe_encode,
         bpe_train_merges,
     )
@@ -1075,7 +1075,7 @@ def test_corpus_curriculum_total_order_and_determinism(spark):
     identical across executions (partitioning-invariant)."""
     import hashlib
 
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     fn = all_queries()["corpus_curriculum"].spark
     rows = fn(spark, "/root/testdata/sf0.001").collect()
@@ -1104,8 +1104,8 @@ def test_corpus_shard_manifest_balance_and_invariance(spark, monkeypatch):
     sort runs at a different partition width (partitioning-invariant)."""
     import hashlib
 
-    from flink_http_full_cache_connector_spark.operators import pipeline as P
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.operators import pipeline as P
+    from training_data_ops.registry import all_queries
 
     fn = all_queries()["corpus_shard_manifest"].spark
     rows = fn(spark, "/root/testdata/sf0.001").collect()
@@ -1141,7 +1141,7 @@ def test_manifest_sort_width_invariance_and_derivation(spark):
     be byte-identical at explicit widths 7 and 64, and the default width
     must derive from the input (>= the floor) rather than stay hardcoded —
     at 100 TB a fixed 32-way range sort would be the bottleneck stage."""
-    from flink_http_full_cache_connector_spark.operators import pipeline as P
+    from training_data_ops.operators import pipeline as P
 
     d = "/root/testdata/sf0.001"
     for fn in (P.corpus_curriculum, P.corpus_shard_manifest):
@@ -1160,7 +1160,7 @@ def test_importance_weights_prefer_target_like_docs(spark, tmp_path):
     wall-to-wall 'alpha beta' bigrams; the above-mean keep gate must
     select them and reject off-target docs, and a non-target lookalike
     must outscore pure-noise docs. Scores are deterministic across reruns."""
-    from flink_http_full_cache_connector_spark.operators.pipeline import (
+    from training_data_ops.operators.pipeline import (
         corpus_importance_weights,
     )
 
@@ -1196,7 +1196,7 @@ def test_corpus_shard_manifest_oversized_doc_skips_whole_shards(spark, tmp_path)
     """A document larger than the shard budget must occupy (at least) one
     whole shard and advance shard_id past intermediate multiples — the
     prefix law, not a per-shard reset, decides assignment."""
-    from flink_http_full_cache_connector_spark.operators import pipeline as P
+    from training_data_ops.operators import pipeline as P
 
     big = "w " * (P.SHARD_TOKEN_BUDGET * 2 + 10)
     rows = [
@@ -1231,7 +1231,7 @@ def test_ann_ivf_2level_recall_and_plan(spark):
     coarse-quantizer approximation, and the plan must be the scale shape
     (no cartesian product, partial max_by before each exchange, scalar
     aggregation values only)."""
-    from flink_http_full_cache_connector_spark.operators.similarity import (
+    from training_data_ops.operators.similarity import (
         sim_ann_ivf_2level,
     )
 
@@ -1268,7 +1268,7 @@ def test_ivf_persisted_index_lossless_and_partition_pruned(spark, tmp_path):
     join dynamically prunes the cell_id-partitioned index scan — the
     read-only-nprobe-cells story that makes 'build once, query many'
     cheap at scale."""
-    from flink_http_full_cache_connector_spark.operators.similarity import (
+    from training_data_ops.operators.similarity import (
         _ivf_probe_topk,
         ivf_index_load,
         ivf_index_save,
@@ -1299,16 +1299,14 @@ def test_ivf_incremental_gate_appends_clean_retrains_drifted(spark, tmp_path):
     md5-bucket-0 ingest rows are +0.5-shifted."""
     from pyspark.sql import functions as F
 
-    from flink_http_full_cache_connector_spark.operators.scale import widen
-    from flink_http_full_cache_connector_spark.operators.similarity import (
+    from training_data_ops.operators.scale import widen
+    from training_data_ops.operators.similarity import (
         IVF_INCR_MOD,
         NUM_CENTROIDS,
         cohort_drift_flags,
     )
-    from flink_http_full_cache_connector_spark.plans.registry import (
-        all_queries,
-        load_table,
-    )
+    from flink_http_full_cache_connector_spark.plans.registry import load_table
+    from training_data_ops.registry import all_queries
 
     emb = load_table(spark, SF_DIR, "embeddings")
     bucket = (
@@ -1354,7 +1352,7 @@ def test_posting_segments_layout_invariant_and_lossless(spark, tmp_path):
     tok order, never on range boundaries), the on-disk store holds the
     FULL posting lists (reload == doc_term_freq exactly), and the BM25
     read path prunes to the probed segments' partitions."""
-    from flink_http_full_cache_connector_spark.operators.retrieval import (
+    from training_data_ops.operators.retrieval import (
         bm25_from_segments,
         doc_term_freq,
         posting_segment_assignments,
@@ -1402,18 +1400,16 @@ def test_hybrid_ann_dense_leg_dpp_and_overlap(spark, tmp_path):
     overlaps the exact-dense hybrid's top-10 measured-minus-slack
     (measured 0.8 at sf0.01 — the two legs share BM25, so only dense-leg
     ANN misses can diverge the fusion)."""
-    from flink_http_full_cache_connector_spark.operators.retrieval import (
+    from training_data_ops.operators.retrieval import (
         ivf_topk_ranks,
     )
-    from flink_http_full_cache_connector_spark.operators.similarity import (
+    from training_data_ops.operators.similarity import (
         NPROBE,
         ivf_index_load,
         ivf_index_save,
     )
-    from flink_http_full_cache_connector_spark.plans.registry import (
-        all_queries,
-        load_table,
-    )
+    from flink_http_full_cache_connector_spark.plans.registry import load_table
+    from training_data_ops.registry import all_queries
 
     emb = load_table(spark, SF_DIR, "embeddings")
     work = str(tmp_path / "idx")
@@ -1441,13 +1437,13 @@ def test_hybrid_batch_dense_leg_dpp_and_two_stage(spark, tmp_path):
     query_id-only exchange sees the full score stream."""
     from pyspark.sql import functions as F
 
-    from flink_http_full_cache_connector_spark.functions.vectors import (
+    from training_data_ops.functions.vectors import (
         as_double,
     )
-    from flink_http_full_cache_connector_spark.operators.retrieval import (
+    from training_data_ops.operators.retrieval import (
         ivf_topk_ranks_batch,
     )
-    from flink_http_full_cache_connector_spark.operators.similarity import (
+    from training_data_ops.operators.similarity import (
         NPROBE,
         ivf_index_load,
         ivf_index_save,
@@ -1481,7 +1477,7 @@ def test_ann_ivf_2level_trained_recall_and_plan(spark):
     shape (no cartesian, partial max_by, scalar agg values)."""
     import math
 
-    from flink_http_full_cache_connector_spark.operators.similarity import (
+    from training_data_ops.operators.similarity import (
         _two_level_probe_topk,
         ivf2_cells_for,
         sim_ann_ivf_2level_trained,
@@ -1554,7 +1550,7 @@ def test_two_level_assign_survives_colinear_duplicate_centroids(spark):
     pin, assignment must stay complete for BOTH probe settings."""
     import math
 
-    from flink_http_full_cache_connector_spark.operators.similarity import (
+    from training_data_ops.operators.similarity import (
         two_level_assign,
         two_level_index,
     )
@@ -1589,7 +1585,7 @@ def test_two_level_assign_covers_every_vector(spark):
     contract."""
     import math
 
-    from flink_http_full_cache_connector_spark.operators.similarity import (
+    from training_data_ops.operators.similarity import (
         ivf2_cells_for,
         two_level_assign,
         two_level_index,
@@ -1612,7 +1608,7 @@ def test_bm25_weighted_all_ones_equals_unweighted(spark):
     """bm25_weighted_topk at weight 1.0 everywhere must be bit-identical
     to bm25_topk_scores (the weighted fold skips the 1.0 multiplications
     so the IEEE sequence is literally the same)."""
-    from flink_http_full_cache_connector_spark.operators.retrieval import (
+    from training_data_ops.operators.retrieval import (
         bm25_topk_scores,
         bm25_weighted_topk,
     )
@@ -1627,7 +1623,7 @@ def test_bm25_weighted_all_ones_equals_unweighted(spark):
 def test_prf_expansion_terms_exclude_query_and_rank_by_weight(spark):
     """Expansion terms never include the original query terms; ranks are
     1..n by weight desc with tok tie-break; weights are positive."""
-    from flink_http_full_cache_connector_spark.operators.retrieval import (
+    from training_data_ops.operators.retrieval import (
         prf_expansion_terms,
     )
 
@@ -1645,7 +1641,7 @@ def test_prf_damping_bounds_expanded_scores(spark):
     """With λ→0 the expanded ranking collapses to the base ranking; with
     the registered λ the expanded score of any doc is at least its base
     score (expansion contributions are non-negative)."""
-    from flink_http_full_cache_connector_spark.operators.retrieval import (
+    from training_data_ops.operators.retrieval import (
         bm25_topk_scores,
         bm25_weighted_topk,
         prf_expansion_terms,
@@ -1692,7 +1688,7 @@ def _py_bigram_surprisal(texts, lam=0.7, bigram_k=10**9, vocab_k=10**9):
 
 
 def test_bigram_surprisal_matches_python_reference(spark):
-    from flink_http_full_cache_connector_spark.operators.lm_score import (
+    from training_data_ops.operators.lm_score import (
         bigram_surprisal,
     )
 
@@ -1715,7 +1711,7 @@ def test_bigram_model_cap_falls_back_to_unigram(spark):
     """With bigram_k=1 only the single most frequent bigram keeps its ML
     term; every other position scores unigram-only — matched against the
     same Python reference with the cap applied."""
-    from flink_http_full_cache_connector_spark.operators.lm_score import (
+    from training_data_ops.operators.lm_score import (
         bigram_surprisal,
     )
 
@@ -1734,7 +1730,7 @@ def test_bigram_model_cap_falls_back_to_unigram(spark):
 def test_bigram_scoring_joins_broadcast(spark):
     """The capped model and vocab must broadcast onto the pair stream —
     no sort-merge join on the Zipf-skewed token keys anywhere."""
-    from flink_http_full_cache_connector_spark.operators.lm_score import (
+    from training_data_ops.operators.lm_score import (
         bigram_surprisal,
     )
 
@@ -1749,7 +1745,7 @@ def test_minhash_capped_equals_uncapped_at_fixture_scale(spark):
     fixture scale — no honest near-dup cluster approaches the cap — while
     the plan shows the cap costs NO extra exchange (the count window rides
     the same (band, bkey) shuffle the candidate self-join needs)."""
-    from flink_http_full_cache_connector_spark.operators.dedup import (
+    from training_data_ops.operators.dedup import (
         dedup_minhash_capped,
         dedup_minhash_lsh,
     )
@@ -1772,7 +1768,7 @@ def test_embedding_lsh_capped_equals_uncapped_at_fixture_scale(spark):
     256 cap) — this also pins that the coarsened shuffle groups
     (group_bits: adjacent buckets split in-kernel) change NOTHING about
     which pairs emit or their exact-fold cosines."""
-    from flink_http_full_cache_connector_spark.operators.dedup import (
+    from training_data_ops.operators.dedup import (
         dedup_embedding_lsh,
         dedup_embedding_lsh_capped,
     )
@@ -1793,7 +1789,7 @@ def test_embedding_lsh_cap_drops_mega_bucket_pairs(spark):
     the pair set shrinks to pairs some under-cap bucket still finds —
     and every emitted pair must clear the exact-fold threshold (the
     decision pass is cap-independent)."""
-    from flink_http_full_cache_connector_spark.operators.dedup import (
+    from training_data_ops.operators.dedup import (
         COSINE_DUP_THRESHOLD,
         _embedding_lsh_pairs,
     )
@@ -1814,11 +1810,11 @@ def test_minhash_incremental_equals_from_scratch_restricted(spark):
     applied across store ∪ batch) must reproduce EXACTLY the capped
     full-corpus pairs restricted to pairs involving a batch doc — same
     pair set, same verified Jaccard values."""
-    from flink_http_full_cache_connector_spark.operators.dedup import (
+    from training_data_ops.operators.dedup import (
         dedup_minhash_capped,
         dedup_minhash_incremental,
     )
-    from flink_http_full_cache_connector_spark.operators.substring_dedup import (
+    from training_data_ops.operators.substring_dedup import (
         NEW_BATCH_MOD,
     )
 
@@ -1845,17 +1841,17 @@ def test_semantic_incremental_matches_frozen_rebuild_and_drift_branch(
     crafted encoder-shift batch takes the retrain branch end-to-end."""
     from pyspark.sql import functions as F
 
-    from flink_http_full_cache_connector_spark.operators.dedup import (
+    from training_data_ops.operators.dedup import (
         _semantic_prune,
         dedup_semantic_incremental,
         semantic_2level_cells_for,
         semantic_coarse_for,
     )
-    from flink_http_full_cache_connector_spark.operators.similarity import (
+    from training_data_ops.operators.similarity import (
         two_level_assign,
         two_level_index,
     )
-    from flink_http_full_cache_connector_spark.operators.substring_dedup import (
+    from training_data_ops.operators.substring_dedup import (
         NEW_BATCH_MOD,
     )
     from flink_http_full_cache_connector_spark.plans.registry import load_table
@@ -1909,8 +1905,8 @@ def test_zero_vector_behavior_pinned(spark):
     lands in the lowest cell id."""
     import numpy as np
 
-    from flink_http_full_cache_connector_spark.functions.vectors import cosine
-    from flink_http_full_cache_connector_spark.operators.similarity import (
+    from training_data_ops.functions.vectors import cosine
+    from training_data_ops.operators.similarity import (
         flat_assign_arrow,
         two_level_assign,
         two_level_index,
@@ -1953,7 +1949,7 @@ def test_embedding_lsh_kernels_agree(spark):
     must emit the IDENTICAL pair set and sims — the exact fold makes the
     decision in both, so this pins the prune's no-miss property and the
     GEMM sign bits."""
-    from flink_http_full_cache_connector_spark.operators.dedup import (
+    from training_data_ops.operators.dedup import (
         _embedding_lsh_pairs,
     )
 
@@ -1978,16 +1974,16 @@ def test_lsh_sign_gemm_matches_fold_near_zero(spark):
     must agree on a sane platform and diverge loudly on a broken one."""
     import numpy as np
 
-    from flink_http_full_cache_connector_spark.operators.dedup import (
+    from training_data_ops.operators.dedup import (
         DEDUP_LSH_TABLES,
         _embedding_lsh_survivors_arrow,
     )
-    from flink_http_full_cache_connector_spark.operators.similarity import (
+    from training_data_ops.operators.similarity import (
         LSH_PLANE_BASE,
         lsh_planes,
         lsh_signatures,
     )
-    from flink_http_full_cache_connector_spark.functions.vectors import (
+    from training_data_ops.functions.vectors import (
         as_double,
     )
 
@@ -2049,7 +2045,7 @@ def test_pca_power_kernels_agree(spark):
     them apart) and both must satisfy the registered query's booleans."""
     import numpy as np
 
-    from flink_http_full_cache_connector_spark.operators.similarity import (
+    from training_data_ops.operators.similarity import (
         pca_power_train,
     )
 

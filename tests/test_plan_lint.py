@@ -12,7 +12,7 @@ never appear in any executed plan, now or in future rounds —
 
 import pytest
 
-from flink_http_full_cache_connector_spark.plans.registry import all_queries
+from training_data_ops.registry import all_queries
 
 SF_DIR = "/root/testdata/sf0.01"
 

@@ -17,7 +17,7 @@ def optimized_of(df) -> str:
 
 
 def test_lookup_join_broadcasts_dimension(spark):
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["lookup_join_inner"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -26,7 +26,7 @@ def test_lookup_join_broadcasts_dimension(spark):
 
 
 def test_projection_prunes_parquet_scan(spark):
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["projection"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -38,7 +38,7 @@ def test_projection_prunes_parquet_scan(spark):
 
 
 def test_filter_pushdown_reaches_scan(spark):
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["nested_subquery"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -47,7 +47,7 @@ def test_filter_pushdown_reaches_scan(spark):
 
 
 def test_dedup_exact_single_shuffle(spark):
-    from flink_http_full_cache_connector_spark.operators.dedup import dedup_exact
+    from training_data_ops.operators.dedup import dedup_exact
 
     plan = plan_of(dedup_exact(spark, SF_DIR))
     # one hash-partitioned exchange on the digest (plus AQE reads); partial
@@ -59,7 +59,7 @@ def test_dedup_exact_single_shuffle(spark):
 def test_topk_has_no_query_id_only_exchange(spark):
     """The two-stage top-k must not shuffle the full scored corpus on the
     (few-key, skewed) query_id alone before pre-ranking."""
-    from flink_http_full_cache_connector_spark.operators.similarity import (
+    from training_data_ops.operators.similarity import (
         sim_topk_cosine,
     )
 
@@ -85,7 +85,7 @@ def test_posting_head_prunes_hot_terms_map_side(spark):
     below the term exchange — every map task ships <= head rows per term
     and the final task ranks <= partitions*head survivors.  Pin both the
     Partial node and its position below the exchange."""
-    from flink_http_full_cache_connector_spark.operators.retrieval import (
+    from training_data_ops.operators.retrieval import (
         posting_lists,
     )
 
@@ -110,7 +110,7 @@ def test_bm25_batch_has_no_query_id_only_exchange(spark):
     """Batched multi-query BM25: the per-query top-k must pre-rank per
     (input-partition, query) — an exchange on the few-key query_id alone
     would funnel the whole scored relation through #queries tasks."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["bm25_batch_topk"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -135,8 +135,8 @@ def test_bm25_batch_has_no_query_id_only_exchange(spark):
 
 
 def test_ivf_assign_uses_partial_aggregation(spark):
-    from flink_http_full_cache_connector_spark.functions.vectors import as_double
-    from flink_http_full_cache_connector_spark.operators.similarity import ivf_assign
+    from training_data_ops.functions.vectors import as_double
+    from training_data_ops.operators.similarity import ivf_assign
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     cent = emb.where(F.col("vec_id") < 4).select(
@@ -154,8 +154,8 @@ def test_lsh_signature_shuffle_is_per_vector(spark):
     """LSH signatures: planes broadcast, bit contributions partially
     aggregated map-side — the shuffle carries one row per vector, never
     the L*B per-bit rows, and no window runs over the corpus."""
-    from flink_http_full_cache_connector_spark.functions.vectors import as_double
-    from flink_http_full_cache_connector_spark.operators.similarity import (
+    from training_data_ops.functions.vectors import as_double
+    from training_data_ops.operators.similarity import (
         lsh_planes,
         lsh_signatures,
     )
@@ -171,7 +171,7 @@ def test_lsh_signature_shuffle_is_per_vector(spark):
 def test_lsh_recall_overlaps_exact_topk(spark):
     """ANN sanity: LSH candidates must recover a non-trivial share of the
     exact top-k (the oracle pins correctness; this pins usefulness)."""
-    from flink_http_full_cache_connector_spark.operators.similarity import (
+    from training_data_ops.operators.similarity import (
         sim_ann_lsh,
         sim_topk_cosine,
     )
@@ -184,7 +184,7 @@ def test_lsh_recall_overlaps_exact_topk(spark):
 
 
 def test_pricing_summary_pushes_filter_and_partial_aggs(spark):
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["pricing_summary"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -218,7 +218,7 @@ def test_lookup_df_is_local_relation(spark, http_server):
 
 
 def test_text_ops_are_scan_only(spark):
-    from flink_http_full_cache_connector_spark.operators.text import text_quality_score
+    from training_data_ops.operators.text import text_quality_score
 
     plan = plan_of(text_quality_score(spark, SF_DIR))
     # per-row select: the only exchange allowed is the widen() round-robin
@@ -229,7 +229,7 @@ def test_text_ops_are_scan_only(spark):
 def test_shipping_priority_heap_broadcast_pushdown(spark):
     """Q3 shape: pushed date filters, broadcast customer side, and a
     TakeOrderedAndProject top-k (never a global range-partitioned sort)."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["shipping_priority"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -243,7 +243,7 @@ def test_shipping_priority_heap_broadcast_pushdown(spark):
 
 def test_rolling_window_single_key_shuffle(spark):
     """The RANGE-frame rolling window costs exactly one user_id exchange."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["rolling_1h_events"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -254,7 +254,7 @@ def test_rolling_window_single_key_shuffle(spark):
 def test_weighted_sample_is_shuffle_free(spark):
     """Weighted Bernoulli sampling is a map-side filter: no exchange beyond
     the local-parallelism widen() round-robin (which is not a hash shuffle)."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["sample_weighted"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -264,7 +264,7 @@ def test_weighted_sample_is_shuffle_free(spark):
 def test_unpivot_partial_aggregates_before_shuffle(spark):
     """Expand (4 metric rows per input row) must collapse via map-side
     partial aggregation before the single tiny metric-key exchange."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["unpivot_lineitem_metrics"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -277,7 +277,7 @@ def test_unpivot_partial_aggregates_before_shuffle(spark):
 def test_dim_stats_partial_aggregates_explode(spark):
     """posexplode fan-out is collapsed by partial aggregation: the dim-keyed
     exchange carries O(partitions x dims) rows, not corpus x dims."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["embedding_dim_stats"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -289,7 +289,7 @@ def test_dim_stats_partial_aggregates_explode(spark):
 def test_udtf_is_arrow_batched(spark):
     """The chunking UDTF must compile to ArrowEvalPythonUDTF (useArrow=True)
     — row-at-a-time BatchEvalPythonUDTF would also trip the fleet lint."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["text_chunks_udtf"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -298,7 +298,7 @@ def test_udtf_is_arrow_batched(spark):
 
 def test_variant_parse_stays_jvm_side(spark):
     """VariantType extraction is JVM expressions — no Python eval nodes."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["variant_props_stats"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -310,7 +310,7 @@ def test_gapfill_two_key_exchanges_no_tie_shuffle(spark):
     """Gap-fill canonicalizes same-us ties inside the running window's
     ORDER BY — no (key, us) tie-dedup shuffle may appear; total cost is
     the bounds aggregation + the running window, both keyed on user_id."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["gapfill_locf_events"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -324,7 +324,7 @@ def test_pack_sequences_window_is_bucket_partitioned(spark):
     """The packing prefix-sum must run per hash bucket — a global-order
     window (SinglePartition exchange) would serialize the whole corpus
     through one task."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["pack_sequences"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -337,7 +337,7 @@ def test_pack_sequences_window_is_bucket_partitioned(spark):
 def test_quantize_broadcasts_dim_stats(spark):
     """Per-dim min/max stats (O(dims) rows) must come back as a broadcast
     join onto the flattened scan, never a sort-merge shuffle of the data."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["embedding_quantize_int8"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -348,7 +348,7 @@ def test_quantize_broadcasts_dim_stats(spark):
 def test_decontaminate_broadcasts_eval_shingles(spark):
     """The eval shingle set is tiny by construction; the overlap test must
     be a broadcast join, with the train side streaming map-side."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["decontaminate"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -361,7 +361,7 @@ def test_trigram_lang_profile_is_broadcast(spark):
     scale-killer); the scores-to-docs LEFT join on doc_id may sort-merge —
     both of its sides are corpus-sized at scale (AQE downgrades it to
     broadcast at runtime on small inputs)."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["text_lang_id"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -375,7 +375,7 @@ def test_repetition_signals_shuffles_only_on_doc_keys(spark):
     """Both aggregations of the repetition scan must key on doc_id(+gram) —
     uniform keys — and the short-doc branch must be a pushed-down filter
     scan, not a join against the gram table."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["text_repetition_signals"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -388,7 +388,7 @@ def test_canonicalize_broadcasts_component_table(spark):
     """The cluster table (from the LSH pair graph) is small by construction:
     members and singletons must resolve via broadcast joins — the corpus
     itself must never shuffle for the keep/drop sweep."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["dedup_canonicalize"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -402,7 +402,7 @@ def test_token_budget_boundary_only_window(spark):
     boundary group (partitioned by qs_m+bucket, never SinglePartition over
     base data).  The unpartitioned running-total window runs over the
     metadata-sized aggregate only."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["corpus_token_budget"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -418,7 +418,7 @@ def test_ivf_pq_scoring_is_map_side_lookup(spark):
     shuffles into #queries partitions.  (The remaining query_id-only
     exchanges are metadata-sized: the 16-row probe ranking and the
     partitions*k top-k survivors.)"""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["sim_ann_ivf_pq"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -435,7 +435,7 @@ def test_ivf_2level_pq_adc_stays_map_side(spark):
     stream never shuffles into #queries partitions.  The ADC lookup
     itself is a literal-array expression (no join adds rows after the
     codes attach)."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["sim_ann_ivf_2level_pq"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -450,7 +450,7 @@ def test_ivf_2level_pq_recall_overlaps_exact_rerank(spark):
     """The combined index shares cell geometry with sim_ann_ivf_2level
     (identical probes/candidates); only ADC quantization can diverge the
     top-10.  Pin the overlap measured-minus-slack (measured at sf0.01)."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     pq = all_queries()["sim_ann_ivf_2level_pq"].spark(spark, SF_DIR).collect()
     exact = all_queries()["sim_ann_ivf_2level"].spark(spark, SF_DIR).collect()
@@ -473,7 +473,7 @@ def test_collocations_broadcast_topk_not_vocab(spark):
     """Both marginal-count joins must broadcast the k-row top list, never
     the vocab-sized unigram table; the top-k itself must be a TakeOrdered,
     not a global sort."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["text_collocations"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -487,7 +487,7 @@ def test_volume_shipping_pushes_daterange_broadcasts_nations(spark):
     as PushedFilters (the fact never materializes out-of-window rows), and
     the two nation dims must broadcast — a shuffle keyed on nationkey
     (25 values) would be the skew-killer at scale."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["volume_shipping"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -506,7 +506,7 @@ def test_market_share_prunes_part_type_at_scan(spark):
     """Q8 shape: the p_type predicate must be a pushed parquet filter on
     the part scan (pruning the join build side before any shuffle), and
     region/nation must broadcast."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["market_share"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -523,7 +523,7 @@ def test_important_parts_aggregates_before_threshold_join(spark):
     exchange (identical plan_id on every partkey exchange mention)."""
     import re
 
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["important_parts"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -540,7 +540,7 @@ def test_cust_order_distribution_counts_survive_left_join(spark):
     """Q13 shape: the customer⋈orders join must stay LEFT OUTER in the
     executed plan (zero-order customers are the point of the query), and
     both aggregates partial-agg before their exchange."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["cust_order_distribution"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -551,7 +551,7 @@ def test_cust_order_distribution_counts_survive_left_join(spark):
 def test_parts_supplier_counts_pushes_exclusions(spark):
     """Q16 shape: the brand/type exclusion predicates must reach the part
     parquet scan as pushed Not(EqualTo) filters."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["parts_supplier_counts"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -565,7 +565,7 @@ def test_idle_customers_anti_join_and_scalar_broadcast(spark):
     """Q22 shape: NOT EXISTS must compile to a LeftAnti join on custkey
     (one fact-sized shuffle at scale) and the positive-balance average
     must arrive as a broadcast 1-row relation, not a shuffle."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["idle_customers"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -578,7 +578,7 @@ def test_pagerank_reuses_persisted_edges(spark):
     are persisted once and every iteration reads the cache (no re-derivation
     of the orders-lineitem join per iteration), and no iteration collects to
     the driver — the plan is pure joins + aggregates."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["pagerank_nodes"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -594,7 +594,7 @@ def test_graph_triangles_orients_before_wedge_join(spark):
     raw symmetric edge list against itself three ways; the weighted pair
     relation is persisted (threshold scalar + edge filter + closing-edge
     lookup all reuse it)."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["graph_triangles"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -607,7 +607,7 @@ def test_anomaly_zscore_windows_over_aggregated_hours(spark):
     not raw events: the plan's window sort input comes from a HashAggregate
     (partial+final around a (event_type, hour_idx) exchange), and the only
     other exchange is the window's event_type repartition."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["event_anomaly_zscore"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -623,7 +623,7 @@ def test_winsorize_broadcasts_bounds(spark):
     """The 5-row percentile bounds table must broadcast onto the orders
     scan — re-shuffling orders on the 5-value mktsegment key would be the
     skew-killer."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["winsorize_prices"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -641,7 +641,7 @@ def test_surprisal_broadcasts_vocab_not_word_join(spark):
     stream — an exchange keyed on the raw word would hit Zipf skew. The
     only hashpartitioning exchanges allowed are the vocab build's own
     word-key agg and the per-doc re-assembly."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["text_surprisal_lm"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -653,7 +653,7 @@ def test_surprisal_broadcasts_vocab_not_word_join(spark):
 def test_bpe_encode_is_single_arrow_pass(spark):
     """Encoding must be one Arrow-batched map over the corpus (merge list
     in the closure): MapInPandas, no join, no row-at-a-time Python."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["bpe_encode_stats"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -665,7 +665,7 @@ def test_bpe_encode_is_single_arrow_pass(spark):
 def test_json_roundtrip_is_scan_only(spark):
     """Serialize + parse + compare must stay inside the scan's projection:
     no exchange, no Python worker."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["json_codec_roundtrip"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -676,7 +676,7 @@ def test_json_roundtrip_is_scan_only(spark):
 def test_discount_effect_pushes_all_three_predicates(spark):
     """Q6 shape: date range, discount band, and quantity cap must ALL reach
     the parquet scan; the plan is scan -> partial agg -> 1-row exchange."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["discount_effect"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -690,7 +690,7 @@ def test_event_transitions_reuses_window_partitioning(spark):
     """The lead() window and the transition agg must not shuffle the
     event stream more than twice (user-key window + (from,to) agg); the
     totals join broadcasts the type-matrix-sized relation."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["event_transitions"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -705,7 +705,7 @@ def test_event_transitions_reuses_window_partitioning(spark):
 def test_split_balance_audit_single_corpus_scan(spark):
     """The per-lang totals must derive from the persisted 15-row cell
     table, not a second corpus scan."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["split_balance_audit"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -717,7 +717,7 @@ def test_scd2_apply_windows_delta_only(spark):
     """The change-application window must run over the DELTA stream, and
     the dim-delta join key on the uniform user id — no dimension rebuild
     over the union (two windows total: dim intervals + delta chaining)."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["scd2_apply_changes"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -732,7 +732,7 @@ def test_histogram_quantiles_partial_aggregates_before_tiny_shuffle(spark):
     window and the 5-row quantile join run AFTER the aggregation — any
     fact-sized window or sort-merge join here breaks the mergeable-sketch
     posture."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["histogram_quantiles"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -754,7 +754,7 @@ def test_text_novelty_shuffles_only_on_shingle_and_doc_keys(spark):
     """Corpus-wide df + per-doc rollup: every data exchange keys on the
     uniform shingle value or doc_id — no global sorts, no broadcast of the
     corpus-sized relation."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["text_novelty"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -769,7 +769,7 @@ def test_phash_clusters_single_hash_key_shuffle(spark):
     """Decode + hash are one mapInPandas pass; the ONLY data shuffle is the
     partial-aggregated 64-bit-hash groupBy (uniform key).  No joins at all
     — exact-hash clustering is a pure aggregation."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["multimodal_phash_clusters"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -786,7 +786,7 @@ def test_skyline_pareto_broadcasts_frontier_never_sorts_fact(spark):
     window; the part table joins it via broadcast — no SortMergeJoin, and
     exactly one data-sized hashpartitioning exchange (the partial_min on
     p_size)."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["skyline_pareto"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -801,7 +801,7 @@ def test_zorder_layout_is_codegen_with_one_tiny_shuffle(spark):
     """The Morton interleave must stay a pure JVM integer expression (no
     Python eval), feeding ONE partial-agged shuffle on the 256 file keys;
     the scan reads only the two clustered columns."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["zorder_layout"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -817,7 +817,7 @@ def test_rollup_incremental_merge_reaggregates_day_states_only(spark):
     """Two-level rollup: the (day, type) exchange is the only one fed by
     event rows; the month merge exchanges pre-aggregated day-state rows
     (both stages partial-aggregate map-side first)."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["rollup_incremental_merge"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -832,7 +832,7 @@ def test_local_supplier_volume_pushes_range_and_broadcasts_dims(spark):
     """Q5 flavor: the order-date RANGE must reach the orders parquet scan
     (year(col) = Y would be opaque to pushdown), and the region-filtered
     nation dim must broadcast — never shuffle."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["local_supplier_volume"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -846,7 +846,7 @@ def test_returned_item_report_pushes_flag_and_takes_ordered(spark):
     """Q10 flavor: the returnflag filter prunes lineitem AT THE SCAN, and
     the top-K is TakeOrderedAndProject over the customer-sized aggregate —
     no global Sort of fact rows."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["returned_item_report"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -862,7 +862,7 @@ def test_event_autocorr_aggregates_hours_before_lag_join(spark):
     24-hour lag self-join — the first exchange carries partial counts, the
     join input is the metadata-sized hourly relation, and the scan reads
     only (ts, event_type)."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["event_autocorr"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -894,7 +894,7 @@ def test_skyline_matches_bruteforce_dominance(spark):
     # dominated by 4; the brute force handles that via the strict clause
     expected = {p[0] for p in rows if not dominated(p, rows)}
 
-    from flink_http_full_cache_connector_spark.plans.analytics_queries import (
+    from training_data_ops.plans.analytics_queries import (
         skyline_pareto,
     )
     import tempfile
@@ -910,7 +910,7 @@ def test_skyline_matches_bruteforce_dominance(spark):
 def test_zorder_interleave_matches_python_reference(spark):
     """The SQL Morton interleave must equal a plain-Python bit interleave
     for every (ub, vb) byte pair on a sampled grid."""
-    from flink_http_full_cache_connector_spark.plans.analytics_queries import (
+    from training_data_ops.plans.analytics_queries import (
         _zorder_expr,
     )
 
@@ -937,7 +937,7 @@ def test_importance_weights_broadcasts_buckets_no_merge_join(spark):
     1-row totals must BROADCAST; no SortMergeJoin anywhere; the only
     data-sized hashpartitioning exchanges are the bucket partial-counts
     and the uniform doc_id rollup (never a gram-keyed fact join)."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["corpus_importance_weights"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -956,7 +956,7 @@ def test_importance_weights_broadcasts_buckets_no_merge_join(spark):
 def test_full_outer_preaggregates_both_sides(spark):
     """Both inputs reduce to user cardinality BEFORE the full outer join:
     partial_count on each side, exchanges keyed on user_id only."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     df = all_queries()["full_outer_reconcile"].spark(spark, SF_DIR)
     plan = plan_of(df)
@@ -972,12 +972,12 @@ def test_bm25_topk_matches_hand_computation(spark, tmp_path):
     single-partition global window over the hit relation."""
     from pyspark.sql import Row
 
-    from flink_http_full_cache_connector_spark.plans.analytics_queries import (
+    from training_data_ops.plans.analytics_queries import (
         BM25_B,
         BM25_K1,
         bm25_topk,
     )
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     d = str(tmp_path / "bm")
     rows = [
@@ -1016,7 +1016,7 @@ def test_inverted_index_head_postings_capped_and_ordered(spark, tmp_path):
     while df/cf/max_tf cover the FULL list (the segment-header contract)."""
     from pyspark.sql import Row
 
-    from flink_http_full_cache_connector_spark.plans.analytics_queries import (
+    from training_data_ops.plans.analytics_queries import (
         POSTINGS_HEAD,
         inverted_index_postings,
     )
@@ -1052,7 +1052,7 @@ def test_bm25_library_surface_parameterized(spark, tmp_path):
 
     from pyspark.sql import Row
 
-    from flink_http_full_cache_connector_spark.operators.retrieval import (
+    from training_data_ops.operators.retrieval import (
         bm25_topk_scores,
         posting_lists,
     )
@@ -1090,7 +1090,7 @@ def test_hybrid_rrf_fusion_hand_checkable(spark, tmp_path):
     two reciprocal terms add in fixed order, ties break on doc_id."""
     import math
 
-    from flink_http_full_cache_connector_spark.operators.retrieval import (
+    from training_data_ops.operators.retrieval import (
         rrf_fuse,
     )
 

@@ -9,7 +9,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from flink_http_full_cache_connector_spark.functions.png_codec import (
+from training_data_ops.functions.png_codec import (
     PngError,
     decode_png,
     encode_png,
@@ -100,7 +100,7 @@ def test_decode_resize_images_runs_real_codec_in_spark(spark):
     dims and NN-thumbnail bytes must match a local reference."""
     from pyspark.sql import Row
 
-    from flink_http_full_cache_connector_spark.operators.multimodal import (
+    from training_data_ops.operators.multimodal import (
         decode_resize_images,
     )
 

@@ -5,10 +5,10 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from flink_http_full_cache_connector_spark.operators.rangejoin import (
+from training_data_ops.operators.rangejoin import (
     banded_interval_join,
 )
-from flink_http_full_cache_connector_spark.operators.sampling import (
+from training_data_ops.operators.sampling import (
     NUM_BUCKETS,
     deterministic_sample,
     hash_bucket,

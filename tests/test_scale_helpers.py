@@ -6,8 +6,8 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
-from flink_http_full_cache_connector_spark.operators.scale import widen
-from flink_http_full_cache_connector_spark.operators.skew import salted_join
+from training_data_ops.operators.scale import widen
+from training_data_ops.operators.skew import salted_join
 
 
 @pytest.fixture()
@@ -62,7 +62,7 @@ def test_parquet_num_rows_skips_staging_and_hidden_files(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from flink_http_full_cache_connector_spark.operators.scale import parquet_num_rows
+    from training_data_ops.operators.scale import parquet_num_rows
 
     table_dir = tmp_path / "t.parquet"
     (table_dir / "_temporary").mkdir(parents=True)
@@ -131,7 +131,7 @@ def test_write_slice_files_layout_and_content(spark, tmp_path):
     exactly the input relation."""
     import glob
 
-    from flink_http_full_cache_connector_spark.streaming.upsert import (
+    from training_data_ops.streaming.upsert import (
         write_slice_files,
     )
 
@@ -181,7 +181,7 @@ def test_pca_gram_matches_numpy_and_kernels(spark):
     must land on the same direction as the pass-per-step arrow kernel."""
     import numpy as np
 
-    from flink_http_full_cache_connector_spark.operators.similarity import (
+    from training_data_ops.operators.similarity import (
         pca_gram,
         pca_power_train,
     )
@@ -207,7 +207,7 @@ def test_two_level_assign_carry_through_matches_scored_selection(spark):
     the stage-2 cogroup instead.  The SELECTION must equal the scored
     kernel's selection row-for-row, and the carried vector must be the
     double-widened input vector itself."""
-    from flink_http_full_cache_connector_spark.operators.similarity import (
+    from training_data_ops.operators.similarity import (
         two_level_assign,
         two_level_index,
     )

@@ -9,12 +9,12 @@ import math
 import numpy as np
 import pyarrow.parquet as pq
 
-from flink_http_full_cache_connector_spark.operators.dedup import (
+from training_data_ops.operators.dedup import (
     SEMANTIC_DUP_THRESHOLD,
     SEMANTIC_MIN_CELLS,
     semantic_cells_for,
 )
-from flink_http_full_cache_connector_spark.plans.registry import all_queries
+from training_data_ops.registry import all_queries
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -131,7 +131,7 @@ def test_property_matches_numpy_model_on_generated_corpora(
 # two-level (coarse-quantizer) variant
 # ---------------------------------------------------------------------------
 
-from flink_http_full_cache_connector_spark.operators.dedup import (  # noqa: E402
+from training_data_ops.operators.dedup import (  # noqa: E402
     SEMANTIC_CELL_TARGET,
     SEMANTIC_COARSE_MIN,
     semantic_2level_cells_for,
@@ -212,7 +212,7 @@ def test_2level_plan_is_scale_shaped(spark):
     aggregate (the wide-row max_by trap), no cartesian product, and the
     n-row relation is never range/hash-partitioned by anything but
     vec_id."""
-    from flink_http_full_cache_connector_spark.operators.dedup import (
+    from training_data_ops.operators.dedup import (
         dedup_semantic_2level,
     )
 
@@ -259,7 +259,7 @@ def test_prototype_pruning_cut_is_exact_per_cell(spark):
     are dropped, they are the most-prototypical prefix under
     (cent_sim DESC, vec_id), and ties never straddle the cut ambiguously
     (the vec_id tie-break totalizes the order)."""
-    from flink_http_full_cache_connector_spark.operators.dedup import (
+    from training_data_ops.operators.dedup import (
         PROTO_PRUNE_PPM,
     )
 
@@ -295,11 +295,11 @@ def test_two_level_index_kernels_agree(spark):
     stable on a sane platform, loud on a divergent one)."""
     import pyspark.sql.functions as F
 
-    from flink_http_full_cache_connector_spark.operators.dedup import (
+    from training_data_ops.operators.dedup import (
         semantic_2level_cells_for,
         semantic_coarse_for,
     )
-    from flink_http_full_cache_connector_spark.operators.similarity import (
+    from training_data_ops.operators.similarity import (
         two_level_index,
     )
 

@@ -5,8 +5,8 @@ import glob
 import pytest
 from pyspark.sql import functions as F
 
-from flink_http_full_cache_connector_spark.operators.sampling import split_column
-from flink_http_full_cache_connector_spark.sinks import write_training_shards
+from training_data_ops.operators.sampling import split_column
+from training_data_ops.sinks import write_training_shards
 
 SF_DIR = "/root/testdata/sf0.01"
 

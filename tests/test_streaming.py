@@ -280,7 +280,7 @@ def test_upsert_stream_later_batch_wins(spark, tmp_path):
     replace the earlier record; untouched keys survive each merge."""
     from pyspark.sql import functions as F
 
-    from flink_http_full_cache_connector_spark.streaming.upsert import (
+    from training_data_ops.streaming.upsert import (
         run_upsert_stream,
     )
 
@@ -391,7 +391,7 @@ def test_heavy_hitter_counts_accumulate_across_microbatches(spark, tmp_path):
     final per-key table takes the max — emission order cannot matter."""
     import pandas as pd
 
-    from flink_http_full_cache_connector_spark.streaming.heavy_hitters import (
+    from training_data_ops.streaming.heavy_hitters import (
         running_counts_stream,
     )
 
@@ -437,7 +437,7 @@ def test_sessionize_continues_and_splits_across_microbatches(spark, tmp_path):
     the update stream must equal batch sessionization of the union."""
     import pandas as pd
 
-    from flink_http_full_cache_connector_spark.streaming.session import (
+    from training_data_ops.streaming.session import (
         STREAM_SESSION_GAP_US,
         sessionize_stream,
     )
@@ -495,7 +495,7 @@ def test_transition_increments_bridge_across_microbatches(spark, tmp_path):
     semantics over the union."""
     import pandas as pd
 
-    from flink_http_full_cache_connector_spark.streaming.heavy_hitters import (
+    from training_data_ops.streaming.heavy_hitters import (
         transition_counts_stream,
     )
 
@@ -559,7 +559,7 @@ def test_finalize_memory_sink_drops_view_and_keeps_result(spark):
 def test_registered_streaming_queries_leave_no_sink_views(spark):
     """Every memory-sink-backed registered query must clean up its
     uuid-named temp view before returning (round-3 ADVICE leak)."""
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     qd = all_queries()["streaming_sessionize"]
     before = {t.name for t in spark.catalog.listTables() if t.isTemporary}
@@ -639,7 +639,7 @@ def test_streaming_rollup_day_states_fold_across_microbatches(spark, tmp_path):
     (cnt, sum, min, max) decomposition is slice-order independent."""
     import pandas as pd
 
-    from flink_http_full_cache_connector_spark.plans.warehouse_queries import (
+    from training_data_ops.plans.warehouse_queries import (
         _day_state_aggs,
         _merge_day_states,
     )
@@ -754,7 +754,7 @@ def test_streaming_ks_counts_fold_across_microbatches(spark, tmp_path):
     relation equals the batch query on the concatenated data."""
     import pandas as pd
 
-    from flink_http_full_cache_connector_spark.plans.timeseries_queries import (
+    from training_data_ops.plans.timeseries_queries import (
         _ks_from_counts,
         _ks_group_counts,
     )
@@ -823,7 +823,7 @@ def test_update_merge_stream_emits_deltas_and_reconstructs(spark, tmp_path):
     the batch aggregation of the concatenated input."""
     import pandas as pd
 
-    from flink_http_full_cache_connector_spark.streaming.upsert import (
+    from training_data_ops.streaming.upsert import (
         run_update_merge_stream,
     )
 

@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from flink_http_full_cache_connector_spark.operators.substring_dedup import (
+from training_data_ops.operators.substring_dedup import (
     SUBSTR_K,
     duplicated_spans,
     kgram_positions,
@@ -162,7 +162,7 @@ def test_incremental_spans_equal_full_corpus_restriction(spark, tmp_path):
     """Append-mode serving ≡ from-scratch: batch-doc spans answered from
     the persisted historical fingerprint store + batch-internal dups must
     equal the full-corpus span report restricted to batch docs."""
-    from flink_http_full_cache_connector_spark.operators.substring_dedup import (
+    from training_data_ops.operators.substring_dedup import (
         NEW_BATCH_MOD,
         incremental_span_hits,
         _spans_from_hits,
@@ -185,7 +185,7 @@ def test_incremental_batch_internal_dup_found(spark, tmp_path):
     """Two NEW docs duplicating each other (nothing in history) must still
     surface — the store alone would miss them; the internal ≥2-doc pass
     is what catches them."""
-    from flink_http_full_cache_connector_spark.operators.substring_dedup import (
+    from training_data_ops.operators.substring_dedup import (
         incremental_span_hits,
         _spans_from_hits,
     )

@@ -11,8 +11,8 @@ import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from flink_http_full_cache_connector_spark.operators.asof import asof_join
-from flink_http_full_cache_connector_spark.operators.rangejoin import (
+from training_data_ops.operators.asof import asof_join
+from training_data_ops.operators.rangejoin import (
     banded_interval_join,
 )
 
@@ -121,7 +121,7 @@ def test_forward_asof_matches_pandas(spark, lr):
     )
 )
 def test_connected_components_matches_union_find(spark, edge_list):
-    from flink_http_full_cache_connector_spark.operators.dedup import (
+    from training_data_ops.operators.dedup import (
         connected_components,
     )
 
@@ -170,7 +170,7 @@ GAP_STEP_US = 30 * 1_000_000  # 30-second buckets
 @settings(max_examples=12, deadline=None)
 @given(gap_events)
 def test_gapfill_locf_matches_brute_force(spark, rows):
-    from flink_http_full_cache_connector_spark.operators.gapfill import gapfill_locf
+    from training_data_ops.operators.gapfill import gapfill_locf
 
     # tie-break id = list position; value derived from it so ties at one
     # (key, ts) have distinct values and the canonicalization is observable
@@ -226,7 +226,7 @@ def test_stateful_sessionize_matches_brute_force(spark, events, n_batches):
 
     import pandas as pd
 
-    from flink_http_full_cache_connector_spark.streaming.session import (
+    from training_data_ops.streaming.session import (
         STREAM_SESSION_GAP_US,
         sessionize_stream,
     )
@@ -320,7 +320,7 @@ def test_stateful_transitions_matches_batch_under_ordered_slicing(
     import tempfile
     import uuid
 
-    from flink_http_full_cache_connector_spark.streaming.heavy_hitters import (
+    from training_data_ops.streaming.heavy_hitters import (
         transition_counts_stream,
     )
 
@@ -398,7 +398,7 @@ def _write_session_batches(tmp, rows, n_batches):
 def _run_evicting(spark, tmp):
     import uuid
 
-    from flink_http_full_cache_connector_spark.streaming.session import (
+    from training_data_ops.streaming.session import (
         sessionize_stream_evicting,
     )
 
@@ -436,7 +436,7 @@ def test_evicting_sessionize_matches_brute_force_ordered(spark, events, n_batche
     import shutil
     import tempfile
 
-    from flink_http_full_cache_connector_spark.streaming.session import (
+    from training_data_ops.streaming.session import (
         STREAM_SESSION_GAP_US,
     )
 
@@ -489,7 +489,7 @@ def test_evicting_sessionize_times_out_idle_sessions(spark):
     import shutil
     import tempfile
 
-    from flink_http_full_cache_connector_spark.streaming.session import (
+    from training_data_ops.streaming.session import (
         STREAM_SESSION_GAP_US,
     )
 

@@ -7,8 +7,8 @@ import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from flink_http_full_cache_connector_spark.plans.registry import all_queries
-from flink_http_full_cache_connector_spark.plans.warehouse_queries import (
+from training_data_ops.registry import all_queries
+from training_data_ops.plans.warehouse_queries import (
     NEW_BATCH_MOD,
     SESSION_GAP_US,
 )
@@ -89,7 +89,7 @@ def test_pagerank_micro_unit_invariants(spark):
     n * 1e6 (integer truncation only ever loses mass, never creates it);
     suppliers (hub side of the bipartite graph) absorb more rank than the
     uniform start on average."""
-    from flink_http_full_cache_connector_spark.operators.graph import (
+    from training_data_ops.operators.graph import (
         PR_BASE_MICRO,
         PR_MICRO,
         pagerank_nodes,

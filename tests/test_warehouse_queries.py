@@ -7,7 +7,7 @@ import datetime
 
 import pytest
 
-from flink_http_full_cache_connector_spark.plans.registry import all_queries
+from training_data_ops.registry import all_queries
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -136,7 +136,7 @@ def test_retention_single_aggregation_exchange_reused(spark):
 def test_fk_integrity_counts_planted_orphans(spark, tmp_path):
     """Orphan child keys must be counted per FK edge; intact edges report
     zero. Crafted mini-warehouse with two dangling o_custkey rows."""
-    from flink_http_full_cache_connector_spark.plans.warehouse_queries import (
+    from training_data_ops.plans.warehouse_queries import (
         fk_integrity,
     )
 
@@ -187,7 +187,7 @@ def test_profile_counts_planted_nulls(spark, tmp_path):
     """Null and distinct counts per column must be exact on crafted data."""
     import datetime
 
-    from flink_http_full_cache_connector_spark.plans.warehouse_queries import (
+    from training_data_ops.plans.warehouse_queries import (
         profile_events_columns,
     )
 
@@ -214,7 +214,7 @@ def test_profile_counts_planted_nulls(spark, tmp_path):
 def test_embedding_drift_flags_planted_shift(spark, tmp_path):
     """A new cohort shifted hard in one dimension must flag exactly that
     dimension; identically-distributed dims stay quiet."""
-    from flink_http_full_cache_connector_spark.operators.similarity import (
+    from training_data_ops.operators.similarity import (
         embedding_drift_int8,
     )
 

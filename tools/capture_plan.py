@@ -21,7 +21,7 @@ def main(out_dir: str, suffix: str, names: list[str]) -> None:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     from flink_http_full_cache_connector_spark.session import build_session
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries
+    from training_data_ops.registry import all_queries
 
     spark = build_session("capture-plan", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")

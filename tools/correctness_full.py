@@ -9,10 +9,7 @@ way bench.py runs all benches — and writes CORRECTNESS_FULL.json:
      "queries": {name: {"rows": n, "status": "pass|rows_only|fail|err",
                         "detail": "..."}}}
 
-The per-round driver budget (50 rows/round) lets a query go ~4 rounds
-between re-verifications at a 196-query registry; this artifact is the
-zero-staleness complement — one file proving the WHOLE registry green at a
-single commit.
+One file proving the WHOLE registry green at a single commit.
 
 Usage:  python tools/correctness_full.py   (env: SPARK_GRAFT_SF_DIR)
 """

@@ -32,12 +32,12 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from flink_http_full_cache_connector_spark.operators.dedup import (
+    from training_data_ops.operators.dedup import (
         MINHASH_BUCKET_CAP,
         minhash_incremental_pairs,
         minhash_store_save,
     )
-    from flink_http_full_cache_connector_spark.operators.substring_dedup import (
+    from training_data_ops.operators.substring_dedup import (
         NEW_BATCH_MOD,
     )
     from flink_http_full_cache_connector_spark.session import build_session
