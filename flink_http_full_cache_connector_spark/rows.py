@@ -14,10 +14,51 @@ ignoreParseErrors=false, TimestampFormat.SQL``):
 - Nested ROW columns recurse (nested projection supported,
   ``HttpLookupTableSource.scala:70``).
 
-:func:`arrow_table` is the columnar fast path over the same nodes.  It
-takes a column only when its JSON values need no conversion the reference
-would judge differently, and otherwise declines, so the caller runs
-:func:`deserialize_nodes` and keeps the reference's values and error text.
+Two paths build the Arrow table a refresh hands to Spark:
+
+- **The reader**, :func:`read_arrow`, reads the HTTP body straight into
+  Arrow in one C++ ``pyarrow.json`` pass.  Its explicit schema comes from
+  the declared columns and the JSON pointer, so no Python object is made
+  per value.  Each column is read as the JSON-native type (``_READ_AS``)
+  whose conversion equals :func:`coerce_value` on every value it accepts.
+- **The exact path** is ``http_client.parse_payload`` (``json.loads``, the
+  pointer, the fan-out), then :func:`deserialize_nodes` and
+  :func:`rows_table`.  It gives the reference's values and error text.
+
+The reader declines, and the exact path runs, wherever the two could
+differ:
+
+- the read fails: a value of another JSON kind than its column's, an int64
+  overflow, ``1e400``, a repeated declared key, a lone-surrogate escape, or
+  malformed JSON (which then fails in ``json.loads`` with the reference's
+  message);
+- the body starts with a BOM, which ``json.loads`` refuses and the reader
+  skips, holds more than one document, or (pointer ``""``) more than one
+  value;
+- the body holds ``Inf``, ``-Inf`` or ``-NaN``, which ``json.loads``
+  refuses (``_NON_JSON_LITERALS``);
+- a pointer step, the array or an element is null or missing, or the
+  pointer needs an array index;
+- a float column holds a -0.0 or a non-finite value and the body holds a
+  literal ``json.loads`` reads differently (``_LITERAL_TRAPS``: a bare
+  ``-0`` is the int 0 there, a 309-digit integer an error);
+- a timestamp or date string is outside the regex below, an integer is out
+  of the declared range, or a DECIMAL, ROW, ARRAY or MAP column holds a
+  value (those read as null);
+- a column name repeats, or the body is past one int32 block.
+
+Outside the declared columns the reader parses with its own grammar, not
+CPython's: a body whose ignored members hold an integer literal past
+CPython's 4300-digit limit or nesting past its recursion limit is read,
+where ``json.loads`` refuses it (a known divergence, pinned by
+``tests/test_rows_property.py``).
+
+Measured in-process on perfbench ``dim_load``'s 20k-row, 7-column body
+(3.5 MB, pointer ``/data``), on a 4-core VM, medians: the reader ~30-45 ms,
+about the same for the records as a root array (pointer ``""``); the exact
+path ~0.4-0.5 s, of which ``json.loads`` ~35-45 ms,
+:func:`deserialize_nodes` ~0.35-0.4 s and :func:`rows_table` ~7 ms.  A
+body the reader declines pays both.
 """
 
 from __future__ import annotations
@@ -25,10 +66,13 @@ from __future__ import annotations
 import datetime as _dt
 import decimal
 import json
+import re
 from typing import Any
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.json as pj
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
@@ -152,23 +196,41 @@ def deserialize_nodes(nodes: list[Any], schema: StructType) -> list[tuple]:
     return out
 
 
-# --- columnar fast path -----------------------------------------------------
+# --- the reader: the body straight into Arrow ---------------------------------
 
-#: declared type → the JSON value types it takes without a conversion the
-#: reference could judge differently.  ``bool`` is its own type here (never
-#: an ``int``); inferring with ``pa.array`` instead would read
-#: ``[1.5, True]`` as ``double [1.5, 1.0]`` where the reference rejects True.
-_AS_IS: dict[type, frozenset[type]] = {
-    LongType: frozenset({int}),
-    IntegerType: frozenset({int}),
-    ShortType: frozenset({int}),
-    DoubleType: frozenset({int, float}),
-    FloatType: frozenset({int, float}),
-    StringType: frozenset({str}),
-    BooleanType: frozenset({bool}),
-    TimestampType: frozenset({str}),
-    DateType: frozenset({str}),
+#: declared type → the JSON-native type the reader reads it as, whose
+#: conversion equals :func:`coerce_value` on every value the reader accepts
+#: (a value of another JSON kind fails the read).  Any other declared type
+#: reads as null, which accepts all-null columns only.
+_READ_AS: dict[type, pa.DataType] = {
+    LongType: pa.int64(),
+    IntegerType: pa.int64(),
+    ShortType: pa.int64(),
+    DoubleType: pa.float64(),
+    FloatType: pa.float64(),
+    StringType: pa.string(),
+    BooleanType: pa.bool_(),
+    TimestampType: pa.string(),
+    DateType: pa.string(),
 }
+
+#: number literals the reader reads as values where ``json.loads`` refuses
+#: the body: ``Inf``, ``-Inf`` and ``-NaN``, anywhere in the body.  Text
+#: inside strings can match too, which only declines.  Each pattern starts
+#: with a literal, which ``re`` finds fast: ~2 ms each on a 3.5 MB body.
+_NON_JSON_LITERALS = (re.compile(rb"Inf\s*[,\]}]"), re.compile(rb"-NaN\s*[,\]}]"))
+
+#: text a root array read as ``{"_": body}`` needs to hide members after
+#: itself (``[...],"x":2``); only a body holding it pays the second read
+#: that rules them out (~18 ms on 3.5 MB)
+_MEMBER_AFTER_ARRAY = re.compile(rb'\]\s*,\s*"')
+
+#: number literals ``json.loads`` reads differently from the reader: a bare
+#: ``-0`` (the int 0 there, so 0.0 in a DOUBLE column; -0.0 here) and an
+#: integer literal of 309 or more digits (past the double range: an error
+#: there, inf here).  Text inside strings can match too, which only
+#: declines.
+_LITERAL_TRAPS = re.compile(rb"-0\s*[,\]}]|(?<!\d)\d{309}")
 
 # The subsets of ``_parse_sql_timestamp`` and ``date.fromisoformat`` that
 # Arrow's ISO-8601 cast parses to the same value: zero-padded fields, year
@@ -180,14 +242,13 @@ _DATE_RE = rf"^{_YEAR}-\d{{2}}-\d{{2}}$"
 _TIMESTAMP_RE = rf"^{_YEAR}-\d{{2}}-\d{{2}}[ T]\d{{2}}:\d{{2}}:\d{{2}}(?:\.\d{{1,6}})?Z?$"
 
 
-def _temporal_column(values: list[Any], dtype: DataType, target: pa.DataType) -> pa.Array | None:
+def _temporal_column(text: pa.Array, dtype: DataType, target: pa.DataType) -> pa.Array | None:
     """TIMESTAMP/DATE strings → Arrow, or None when any value could parse
     differently from the reference.  A TIMESTAMP is read as a UTC instant,
     as :func:`coerce_value` reads it."""
-    text = pa.array(values, pa.string())
     is_ts = isinstance(dtype, TimestampType)
     matched = pc.match_substring_regex(text, _TIMESTAMP_RE if is_ts else _DATE_RE)
-    if pc.sum(matched).as_py() != len(values) - text.null_count:
+    if not pc.all(matched, min_count=0).as_py():
         return None
     if is_ts:
         naive = pc.utf8_rtrim(text, characters="Z").cast(pa.timestamp("us"))
@@ -195,40 +256,103 @@ def _temporal_column(values: list[Any], dtype: DataType, target: pa.DataType) ->
     return text.cast(target)
 
 
-def arrow_table(nodes: list[Any], schema: StructType) -> pa.Table | None:
-    """Parsed row-nodes → Arrow table of ``schema``, or None to decline.
-
-    A column is built only from values of the types ``_AS_IS`` lists for
-    its declared type, or from nulls alone (any declared type).  Anything
-    else declines: a non-object node, DECIMAL or nested ROW/ARRAY/MAP
-    values, a value out of the declared range, a timestamp or date string
-    outside the regex, and any Arrow error.
-    """
-    if not all(type(node) is dict for node in nodes):
+def _float_column(column: pa.Array, target: pa.DataType, data: bytes) -> pa.Array | None:
+    """float64 values → ``target``, or None when ``json.loads`` could read
+    them differently: a -0.0 or a non-finite value, where ``data`` holds
+    one of the ``_LITERAL_TRAPS``."""
+    values = column.drop_null().to_numpy()
+    unusual = ~np.isfinite(values) | (np.signbit(values) & (values == 0))
+    if unusual.any() and _LITERAL_TRAPS.search(data):
         return None
+    return column.cast(target)
+
+
+def _read_json(data: bytes, schema: pa.Schema) -> pa.Table:
+    """One ``pyarrow.json`` read of ``data`` in a single block, reading the
+    members ``schema`` names and parsing past the others."""
+    return pj.read_json(
+        pa.BufferReader(data),
+        read_options=pj.ReadOptions(use_threads=False, block_size=len(data) + 1),
+        parse_options=pj.ParseOptions(
+            explicit_schema=schema,
+            unexpected_field_behavior="ignore",
+            newlines_in_values=True,
+        ),
+    )
+
+
+def read_arrow(body: str, pointer: str, schema: StructType) -> pa.Table | None:
+    """The row-nodes at JSON ``pointer`` in ``body`` → Arrow table of
+    ``schema`` in one ``pyarrow.json`` pass, or None to decline.
+
+    The explicit read schema nests the pointer's member tokens as structs
+    around ``list<struct<declared columns>>``, each column typed as
+    ``_READ_AS`` says; other members are ignored.  A root array (pointer
+    ``""``) is read as the member of ``{"_": body}``, since the reader reads
+    objects.  That wrapper also parses one value followed by members
+    (``[...],"x":2``), which ``json.loads`` refuses; ``{"_": [body]}``
+    parses one value followed by values or by an early ``]`` and members.
+    Only a single value parses in both, so a root array holding
+    ``_MEMBER_AFTER_ARRAY`` is first checked to parse there too.
+    It declines when a read fails, when the body holds more than one
+    document or a literal ``json.loads`` refuses, when a pointer step, the
+    array or an element is null or missing, when a column name repeats, and
+    when a column's values fail its check or its cast to the declared type.
+    """
+    if pointer and not pointer.startswith("/"):
+        return None
+    if body.startswith("\ufeff"):
+        return None  # json.loads refuses a BOM, which the reader skips
+    if len(set(schema.names)) < len(schema.names):
+        return None  # the reader fills only the first of a repeated name
+    tokens = [t.replace("~1", "/").replace("~0", "~") for t in pointer.split("/")[1:]]
+    node_type = pa.list_(
+        pa.struct([(f.name, _READ_AS.get(type(f.dataType), pa.null())) for f in schema.fields])
+    )
     arrow_schema = to_arrow_schema(schema)
-    columns = []
     try:
-        for field, target in zip(schema.fields, arrow_schema.types):
-            values = [node.get(field.name) for node in nodes]
-            kinds = set(map(type, values))
-            kinds.discard(type(None))
-            if kinds and not kinds <= _AS_IS.get(type(field.dataType), frozenset()):
+        data = body.encode("utf-8")
+        if len(data) >= 2**31 - 16:
+            return None  # past one int32 block with its wrapper
+        if any(literal.search(data) for literal in _NON_JSON_LITERALS):
+            return None
+        if not tokens:
+            if _MEMBER_AFTER_ARRAY.search(data) and _read_json(
+                b'{"_":[' + data + b"]}", pa.schema([])
+            ).num_rows != 1:
                 return None
-            if kinds and isinstance(field.dataType, (TimestampType, DateType)):
-                column = _temporal_column(values, field.dataType, target)
-                if column is None:
-                    return None
+            data, tokens = b'{"_":' + data + b"}", ["_"]
+        for token in reversed(tokens[1:]):
+            node_type = pa.struct([(token, node_type)])
+        doc = _read_json(data, pa.schema([(tokens[0], node_type)]))
+        if doc.num_rows != 1:
+            return None
+        node = doc.column(0).chunk(0)
+        for _ in tokens[1:]:
+            (node,) = node.flatten()  # the one member, null where its parent is
+        if node.null_count:
+            return None
+        elements = node.flatten()
+        if elements.null_count:
+            return None
+        columns = []
+        for field, target, column in zip(schema.fields, arrow_schema.types, elements.flatten()):
+            if isinstance(field.dataType, (TimestampType, DateType)):
+                column = _temporal_column(column, field.dataType, target)
+            elif pa.types.is_float64(column.type):
+                column = _float_column(column, target, data)
             else:
-                column = pa.array(values, target)
+                column = column.cast(target)
+            if column is None:
+                return None
             columns.append(column)
-    except (pa.ArrowException, OverflowError):
+    except (pa.ArrowException, UnicodeEncodeError):
         return None
     return pa.Table.from_arrays(columns, schema=arrow_schema)
 
 
 def rows_table(rows: list[tuple], schema: StructType) -> pa.Table:
     """Driver-side row tuples → Arrow table of ``schema`` (naive datetimes
-    read as UTC instants, like :func:`arrow_table`)."""
+    read as UTC instants, like :func:`read_arrow`)."""
     struct = pa.struct(list(to_arrow_schema(schema)))
     return pa.Table.from_struct_array(pa.array(rows, struct))

@@ -23,14 +23,19 @@ def serve_json(payload: Any | Callable[[int], Any]) -> Iterator[str]:
     callable receiving the 1-based request number and returning the value
     to serve — the hook for endpoints whose content changes per fetch.
     The request counter is locked; callable payloads are re-encoded per
-    request.
+    request.  A ``bytes`` value is served as it is, so a test can serve
+    text that is not what ``json.dumps`` writes.
     """
+
+    def encode(value: Any) -> bytes:
+        return value if isinstance(value, bytes) else json.dumps(value, default=str).encode()
+
     if callable(payload):
         factory = payload
         static_body = b""
     else:
         factory = None
-        static_body = json.dumps(payload, default=str).encode()
+        static_body = encode(payload)
     lock = threading.Lock()
     state = {"n": 0}
 
@@ -42,7 +47,7 @@ def serve_json(payload: Any | Callable[[int], Any]) -> Iterator[str]:
                 with lock:
                     state["n"] += 1
                     n = state["n"]
-                body = json.dumps(factory(n), default=str).encode()
+                body = encode(factory(n))
             self.send_response(200)
             self.send_header("Content-Type", "application/json")
             self.send_header("Content-Length", str(len(body)))

@@ -1,6 +1,7 @@
 """Python Data Source registration tests (A3/A4): format name, declared
 schema, projection narrowing, batch read, microbatch streaming refresh."""
 
+import json
 import time
 
 import pyarrow as pa
@@ -10,7 +11,7 @@ from pyspark.sql.datasource import InputPartition
 from pyspark.sql.types import StructType
 from pyspark.sql.worker.plan_data_source_read import records_to_arrow_batches
 
-from flink_http_full_cache_connector_spark.rows import arrow_table
+from flink_http_full_cache_connector_spark.rows import read_arrow
 from flink_http_full_cache_connector_spark.sources.datasource import (
     HttpLookupDataSource,
     register,
@@ -134,16 +135,19 @@ def los_angeles_tz(monkeypatch):
 
 def test_reader_timestamps_ignore_worker_time_zone(http_server, los_angeles_tz):
     """The reader's rows, converted as Spark's Python data source worker
-    converts them, hold the same instants as the driver's Arrow build: a
+    converts them, hold the same instants as the driver's Arrow reader: a
     timestamp string is UTC whatever the worker process's local zone."""
-    nodes = [
-        {"id": 1, "ts": "2024-01-01 00:00:00"},
-        {"id": 2, "ts": "2024-07-01T12:30:00.250"},
-        {"id": 3, "ts": None},
-    ]
-    http_server.set_payload(nodes)
+    payload = {
+        "data": [
+            {"id": 1, "ts": "2024-01-01 00:00:00"},
+            {"id": 2, "ts": "2024-07-01T12:30:00.250"},
+            {"id": 3, "ts": None},
+        ]
+    }
+    http_server.set_payload(payload)
     schema = StructType.fromDDL("id INT, ts TIMESTAMP")
-    source = HttpLookupDataSource({"url": http_server.url})
+    source = HttpLookupDataSource({"url": http_server.url, "xpath": "/data"})
     rows = source.reader(schema).read(InputPartition(0))
     batches = records_to_arrow_batches(rows, 1000, schema, source)
-    assert pa.Table.from_batches(batches).to_pylist() == arrow_table(nodes, schema).to_pylist()
+    driver = read_arrow(json.dumps(payload), "/data", schema)
+    assert pa.Table.from_batches(batches).to_pylist() == driver.to_pylist()

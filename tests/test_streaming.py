@@ -3,6 +3,7 @@ v1→v2 swap + fail-fast (A5 / pinned behaviors 4-5), watermark (B6),
 collect-N (B10), and the flagship example-job shape (§3.3)."""
 
 import json
+import math
 import os
 import threading
 import time
@@ -21,6 +22,7 @@ from flink_http_full_cache_connector_spark.sources.datagen import (
     datagen_batch,
     datagen_stream,
 )
+from flink_http_full_cache_connector_spark.sources.local_http import serve_json
 from flink_http_full_cache_connector_spark.streaming.pipeline import (
     collect_stream,
     with_watermark,
@@ -109,6 +111,34 @@ def test_refresh_fixed_delay_and_swap(spark, http_server):
     assert m["arrow_fallbacks"] == 0  # the users payload stays columnar
     assert 0 < m["last_refresh_duration_s"] <= m["total_refresh_duration_s"]
     assert 0 < m["http_last_duration_s"] <= m["http_total_duration_s"]
+
+
+def test_refresh_fault_keeps_snapshot_and_exact_path_reads_minus_zero(spark):
+    """A generation with malformed JSON fails the reload with the
+    reference's message, before the swap: the previous snapshot keeps
+    serving and no refresh is counted.  A generation whose body spells a
+    score as a bare ``-0`` (the int 0 to ``json.loads``, -0.0 to the Arrow
+    reader) refreshes through the exact path, to 0.0."""
+    schema = StructType([StructField("id", IntegerType()), StructField("score", DoubleType())])
+    bodies = {
+        1: b'[{"id": 1, "score": 1.5}]',
+        2: b'[{"id": 1, "score": 2.5}',
+        3: b'[{"id": 1, "score": -0}]',
+    }
+    with serve_json(lambda n: bodies[n]) as url:
+        cache = RefreshingLookupCache(spark, {"url": url}, schema)
+        before = cache.current()
+        with pytest.raises(RuntimeError, match="Failed to parse JSON response"):
+            cache.check_and_reload(force=True)
+        assert cache.current() is before
+        assert cache.stats.fetch_count == 1 and cache.stats.arrow_fallbacks == 0
+        assert [tuple(r) for r in before.collect()] == [(1, 1.5)]
+
+        assert cache.check_and_reload(force=True)
+        assert cache.stats.fetch_count == 2 and cache.stats.arrow_fallbacks == 1
+        (row,) = cache.current().collect()
+        assert row.score == 0.0 and math.copysign(1.0, row.score) == 1.0
+        assert cache.stats.http.attempts == 3 and cache.stats.http.retries == 0
 
 
 @pytest.mark.parametrize("local_relation_threshold", [None, "0"])
