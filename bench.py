@@ -100,12 +100,6 @@ def main() -> None:
             # accumulate a new cache entry per run, paying GC/memory
             # pressure in whatever query runs later
             spark.catalog.clearCache()
-        # streaming queries leave uuid-named memory-sink tables behind —
-        # complete-mode sinks pin their rows in memory for the rest of the
-        # sweep; drop them eagerly
-        for t in spark.catalog.listTables():
-            if t.isTemporary and t.name.startswith("stream_"):
-                spark.catalog.dropTempView(t.name)
         # broadcasts/shuffle state are only reclaimed when the JVM GCs and
         # the ContextCleaner notices; a long sweep otherwise
         # accumulates them until late queries pay multi-second GC pauses.

@@ -11,8 +11,9 @@ Re-expresses the reference runtime's fetch path
   stale-cache fallback).
 - ``resolve_json_pointer`` — RFC 6901 resolution incl. ``~0``/``~1``
   unescaping; ``""`` means root; a non-matching pointer is a hard error.
-- ``fan_out`` — JSON array → N rows, single object → 1 row
-  (``HttpInputFormatProvider.scala:149-158``).
+- ``parse_payload`` — parse the body, resolve the pointer, then fan out:
+  JSON array → N rows, single object → 1 row
+  (``HttpInputFormatProvider.scala:126-158``).
 
 Kept free of PySpark imports so both the driver-side cache builder and the
 Python Data Source reader (executor-side) can use it.

@@ -240,13 +240,16 @@ def observed_lookup_join(
       whole-stage pass above the observe that re-projects every row to
       drop the marker.
 
-    ``lookup_total`` is only exact for ``how="left"``: an INNER join
+    ``lookup_total`` is only exact for ``how="left"`` (or its spellings
+    ``"left_outer"`` and ``"leftouter"``): an INNER join
     drops missed probe rows from the output entirely, so nothing can
     count them and the derived hit rate is trivially 100%.  A
     non-``left`` ``how`` therefore emits a ``UserWarning`` — the
     metrics still flow, but ``lookup_total`` then means "probe rows
     that produced output", not "lookup requests".
     """
+    if how in ("left_outer", "leftouter"):
+        how = "left"
     if how != "left":
         import warnings
 

@@ -29,11 +29,12 @@ from pyspark.sql.types import (
 from flink_http_full_cache_connector_spark.operators.lookup_join import lookup_join
 from flink_http_full_cache_connector_spark.plans.registry import (
     load_table,
-    normalize_events_ts,
     register,
+    table_stream,
 )
 from flink_http_full_cache_connector_spark.streaming.pipeline import (
-    scoped_stream_shuffle,
+    collect_stream,
+    run_to_memory,
 )
 from flink_http_full_cache_connector_spark.sources.local_http import (
     parquet_as_records,
@@ -243,36 +244,14 @@ def proctime_lookup_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "proving snapshot-join parity between the streaming and batch planners.",
 )
 def streaming_lookup_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    # load_table sets the TIMESTAMP(NANOS) legacy conf; the stream needs the
-    # file's RAW schema (ts as nanos-long), not the converted one
-    load_table(spark, sf_dir, "events")
-    events_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    customer = load_table(spark, sf_dir, "customer")
-    stream = (
-        spark.readStream.schema(events_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .select("event_id", "user_id", "event_type")
+    stream = table_stream(spark, sf_dir, "events").select(
+        "event_id", "user_id", "event_type"
     )
+    customer = load_table(spark, sf_dir, "customer")
     joined = lookup_join(
         stream, customer, on=[("user_id", "c_custkey")], how="left"
     ).select("event_id", "user_id", "event_type", "c_name")
-    name = f"stream_lookup_{uuid.uuid4().hex[:12]}"
-    with scoped_stream_shuffle(spark):
-        query = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    from flink_http_full_cache_connector_spark.streaming.pipeline import (
-        finalize_memory_sink,
-    )
-
-    return finalize_memory_sink(spark.table(name), name)
+    return run_to_memory(joined)
 
 
 @register(
@@ -289,17 +268,7 @@ def streaming_lookup_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "final state is value-exact against the batch oracle.",
 )
 def streaming_windowed_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    load_table(spark, sf_dir, "events")  # sets the nanosAsLong conf
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .transform(normalize_events_ts)
-        .withWatermark("ts", "5 seconds")
-    )
+    stream = table_stream(spark, sf_dir, "events").withWatermark("ts", "5 seconds")
     agg = (
         stream.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
@@ -315,21 +284,7 @@ def streaming_windowed_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             "max_val",
         )
     )
-    name = f"stream_window_{uuid.uuid4().hex[:12]}"
-    with scoped_stream_shuffle(spark):
-        query = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    from flink_http_full_cache_connector_spark.streaming.pipeline import (
-        finalize_memory_sink,
-    )
-
-    return finalize_memory_sink(spark.table(name), name)
+    return run_to_memory(agg, "complete")
 
 
 @register(
@@ -458,17 +413,9 @@ def http_lookup_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "value-exact against the batch range-join oracle.",
 )
 def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    load_table(spark, sf_dir, "events")  # sets the nanosAsLong conf
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-
     def side(event_type: str, prefix: str) -> DataFrame:
         return (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-            .transform(normalize_events_ts)
+            table_stream(spark, sf_dir, "events")
             .where(F.col("event_type") == event_type)
             .select(
                 F.col("event_id").alias(f"{prefix}_id"),
@@ -497,29 +444,7 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "view_ts",
         )
     )
-    name = f"stream_ivj_{uuid.uuid4().hex[:12]}"
-    # a stateful query's shuffle-partition count IS its state-store count,
-    # fixed at first start: size it to join-key cardinality (~150 users),
-    # not to data volume — at any scale, oversizing multiplies store
-    # setup/commit overhead per microbatch for zero parallelism gain
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        query = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    from flink_http_full_cache_connector_spark.streaming.pipeline import (
-        finalize_memory_sink,
-    )
-
-    return finalize_memory_sink(spark.table(name), name)
+    return run_to_memory(joined)
 
 
 @register(
@@ -688,19 +613,11 @@ BOUNDED_COLLECT_RESIDUE = 7
     "never 'the stream lands on the client'.",
 )
 def streaming_bounded_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flink_http_full_cache_connector_spark.streaming.pipeline import (
-        collect_stream,
-    )
-
     events = load_table(spark, sf_dir, "events")
     cond = (F.col("user_id") % BOUNDED_COLLECT_MOD) == BOUNDED_COLLECT_RESIDUE
     n = events.where(cond).count()
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .transform(normalize_events_ts)
+        table_stream(spark, sf_dir, "events")
         .where(cond)
         .select("event_id", "user_id", "event_type", "value")
     )
@@ -728,19 +645,13 @@ def streaming_bounded_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(exceptions re-raise).",
 )
 def streaming_console_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
     from flink_http_full_cache_connector_spark.streaming.pipeline import (
-        finalize_memory_sink,
         start_console_sink,
     )
 
     region = load_table(spark, sf_dir, "region")
-    raw_schema = spark.read.parquet(f"{sf_dir}/nation.parquet").schema
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "nation.parquet")
-        .parquet(sf_dir)
+        table_stream(spark, sf_dir, "nation")
         .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy("r_regionkey", "r_name")
         .agg(F.count("*").alias("n_nations"))
@@ -753,16 +664,7 @@ def streaming_console_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     console.stop()
     if exc is not None:
         raise exc
-    name = f"console_twin_{uuid.uuid4().hex[:12]}"
-    twin = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    twin.awaitTermination()
-    return finalize_memory_sink(spark.table(name), name)
+    return run_to_memory(stream, "complete")
 
 
 @register(
@@ -782,9 +684,6 @@ def streaming_console_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 def http_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_http_full_cache_connector_spark.sources.datasource import (
         HttpLookupDataSource,
-    )
-    from flink_http_full_cache_connector_spark.streaming.pipeline import (
-        collect_stream,
     )
 
     spark.dataSource.register(HttpLookupDataSource)
@@ -918,17 +817,7 @@ def file_formats_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pinned across SFs.",
 )
 def streaming_windowed_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    load_table(spark, sf_dir, "events")  # sets the nanosAsLong conf
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .transform(normalize_events_ts)
-        .withWatermark("ts", "5 seconds")
-    )
+    stream = table_stream(spark, sf_dir, "events").withWatermark("ts", "5 seconds")
     agg = (
         stream.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
@@ -944,21 +833,7 @@ def streaming_windowed_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             "max_val",
         )
     )
-    name = f"stream_append_{uuid.uuid4().hex[:12]}"
-    with scoped_stream_shuffle(spark):
-        query = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    from flink_http_full_cache_connector_spark.streaming.pipeline import (
-        finalize_memory_sink,
-    )
-
-    return finalize_memory_sink(spark.table(name), name)
+    return run_to_memory(agg)
 
 
 @register(
@@ -999,17 +874,7 @@ def streaming_windowed_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     "w.end <= watermark rule at every SF.",
 )
 def streaming_session_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    load_table(spark, sf_dir, "events")  # sets the nanosAsLong conf
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .transform(normalize_events_ts)
-        .withWatermark("ts", "5 seconds")
-    )
+    stream = table_stream(spark, sf_dir, "events").withWatermark("ts", "5 seconds")
     agg = (
         stream.groupBy(
             F.session_window("ts", "10 minutes").alias("w"), "user_id"
@@ -1021,18 +886,4 @@ def streaming_session_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("user_id", "session_start", "session_end", "cnt")
     )
-    name = f"stream_sess_append_{uuid.uuid4().hex[:12]}"
-    with scoped_stream_shuffle(spark):
-        query = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    from flink_http_full_cache_connector_spark.streaming.pipeline import (
-        finalize_memory_sink,
-    )
-
-    return finalize_memory_sink(spark.table(name), name)
+    return run_to_memory(agg)

@@ -150,9 +150,32 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     values match what the DuckDB oracle sees (UTC sessions — build_session
     pins spark.sql.session.timeZone=UTC).
     """
+    df = _read_raw(spark, sf_dir, name)
+    return normalize_events_ts(df) if name == "events" else df
+
+
+def table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Streaming twin of :func:`load_table`: the table's parquet file read
+    as a file stream, with the same columns and types.
+
+    The stream declares the file's raw schema (``ts`` as nanos-long when
+    the footer says TIMESTAMP(NANOS)) and picks the one file out of
+    ``sf_dir`` with ``pathGlobFilter``; ``events.ts`` is then normalized
+    exactly as the batch read does.
+    """
+    stream = (
+        spark.readStream.schema(_read_raw(spark, sf_dir, name).schema)
+        .option("pathGlobFilter", f"{name}.parquet")
+        .parquet(sf_dir)
+    )
+    return normalize_events_ts(stream) if name == "events" else stream
+
+
+def _read_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The table's parquet file as stored; for ``events`` the session is
+    first told to read TIMESTAMP(NANOS) as longs."""
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return normalize_events_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 

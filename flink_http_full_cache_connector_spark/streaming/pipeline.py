@@ -1,10 +1,14 @@
-"""Streaming pipeline helpers: sinks, watermark, bounded collection.
+"""Streaming pipeline helpers: sinks, watermark, finite and bounded runs.
 
 Covers the reference's exercised streaming surface:
 - B6 watermark declaration — ``with_watermark``
 - B8 print sink           — ``start_console_sink``
-- B9 INSERT INTO sink     — ``start_table_sink`` (writeStream.toTable)
+- finite stream run       — ``run_to_memory`` (availableNow into a memory
+  sink, result materialized and the sink released)
 - B10 bounded collection  — ``collect_stream`` (memory sink, take first N)
+
+B9 (``INSERT INTO``) needs no helper: it is
+``writeStream.option("checkpointLocation", ...).toTable(name)``.
 """
 
 from __future__ import annotations
@@ -65,15 +69,6 @@ def start_console_sink(
     return writer.start()
 
 
-def start_table_sink(df: DataFrame, table_name: str, checkpoint: str, **options) -> StreamingQuery:
-    """B9: INSERT INTO <table> SELECT ... (managed table sink)."""
-    return (
-        df.writeStream.option("checkpointLocation", checkpoint)
-        .options(**options)
-        .toTable(table_name)
-    )
-
-
 def finalize_memory_sink(reduced: DataFrame, sink_name: str) -> DataFrame:
     """Materialize a finished memory-sink stream's reduced result and DROP
     the uuid-named sink view.
@@ -97,37 +92,54 @@ def finalize_memory_sink(reduced: DataFrame, sink_name: str) -> DataFrame:
     return out
 
 
-def collect_stream(
-    df: DataFrame,
-    n: int,
-    *,
-    timeout_s: float = 60.0,
-    foreach_batch=None,
-) -> list[Row]:
+def run_to_memory(df: DataFrame, output_mode: str = "append") -> DataFrame:
+    """Run a finite stream to completion and return its result.
+
+    The stream runs once through a ``stream_<uuid>`` memory sink with
+    ``trigger(availableNow=True)`` under :func:`scoped_stream_shuffle`;
+    the result is materialized and the sink view dropped by
+    :func:`finalize_memory_sink`.  A failed query re-raises after its view
+    is dropped.
+    """
+    spark = df.sparkSession
+    name = f"stream_{uuid.uuid4().hex[:12]}"
+    try:
+        with scoped_stream_shuffle(spark):
+            query = (
+                df.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode)
+                .trigger(availableNow=True)
+                .start()
+            )
+            query.awaitTermination()
+    except BaseException:
+        spark.catalog.dropTempView(name)
+        raise
+    return finalize_memory_sink(spark.table(name), name)
+
+
+def collect_stream(df: DataFrame, n: int, *, timeout_s: float = 60.0) -> list[Row]:
     """B10: run the stream and take the first ``n`` results (client-side
     iterator take-N, ``HttpLookupConnectorTest.scala:71-81``).
 
     Uses a memory sink and polls until ``n`` rows arrive or the query fails
-    (failures re-raise — fail-fast parity) or the timeout lapses.
+    (failures re-raise — fail-fast parity) or the timeout lapses.  The
+    query stops and its sink view is dropped once the rows are collected.
     """
     name = f"collect_{uuid.uuid4().hex[:12]}"
     spark = df.sparkSession
-    writer = df.writeStream.format("memory").queryName(name)
-    if foreach_batch is not None:
-        writer = df.writeStream.foreachBatch(foreach_batch)
-    query = writer.start()
+    query = df.writeStream.format("memory").queryName(name).start()
     try:
         deadline = time.monotonic() + timeout_s
         while time.monotonic() < deadline:
             if query.exception() is not None:
                 raise query.exception()
-            if foreach_batch is None:
-                rows = spark.sql(f"SELECT * FROM {name}").limit(n).collect()
-                if len(rows) >= n:
-                    return rows[:n]
+            rows = spark.sql(f"SELECT * FROM {name}").limit(n).collect()
+            if len(rows) >= n:
+                return rows[:n]
             time.sleep(0.2)
-        if foreach_batch is None:
-            return spark.sql(f"SELECT * FROM {name}").limit(n).collect()
-        return []
+        return spark.sql(f"SELECT * FROM {name}").limit(n).collect()
     finally:
         query.stop()
+        spark.catalog.dropTempView(name)

@@ -81,7 +81,6 @@ class RefreshingLookupCache:
 
 
 def enrich_stream(
-    probe_stream: DataFrame,
     cache: RefreshingLookupCache,
     on,
     how: str = "left",

@@ -298,6 +298,32 @@ def test_observed_lookup_join_hit_rate_batch(spark, http_server):
     assert obs2.get == {"lookup_total": 5, "lookup_hits": 5}
 
 
+@pytest.mark.parametrize("how", ["left_outer", "leftouter"])
+def test_observed_lookup_join_left_spellings_observe_as_left(spark, http_server, how):
+    """lookup_join accepts every spelling of a left join; the observed join
+    treats them all as "left": no inexact-total warning, same metrics."""
+    import warnings
+
+    from pyspark.sql import Observation
+
+    from flink_http_full_cache_connector_spark.operators.lookup_join import (
+        observed_lookup_join,
+    )
+
+    cache = create_lookup_df(spark, {"url": http_server.url}, USERS_SCHEMA)
+    probe = spark.createDataFrame(
+        [Row(order_id=i, user_id=(i % 5) + 1 if i < 5 else 99) for i in range(7)]
+    )
+    obs = Observation(f"http_lookup_{how}")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        joined = observed_lookup_join(
+            probe, cache, on=[("user_id", "id")], how=how, observation=obs
+        )
+    assert joined.count() == 7
+    assert obs.get == {"lookup_total": 7, "lookup_hits": 5}
+
+
 def test_observed_lookup_join_streaming_progress(spark, http_server, tmp_path):
     """String-named observation on a streaming probe: lookup_total/
     lookup_hits surface in StreamingQueryProgress.observedMetrics — the

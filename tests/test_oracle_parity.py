@@ -90,13 +90,22 @@ def _fast_sample(items, stride: int = 10):
     return ordered[::stride]
 
 
+def _temp_views(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
 #: The FULL registry sweep is the driver's own correctness gate replicated
 #: locally.  The driver contract's queries run in full in the default tier;
 #: the rest of the sweep is ~6 min of wall, so the slow tier runs all of it
-#: and the fast tier keeps the deterministic sample below.
+#: and the fast tier keeps the deterministic sample below.  A driver-contract
+#: query must also release every temporary view it made (a memory sink's
+#: view pins its rows in driver memory for the rest of the session).
 @pytest.mark.parametrize(("name", "fn", "sql"), full_sweep())
 def test_query_matches_oracle(spark, oracle_con, name, fn, sql):
+    before = _temp_views(spark)
     _parity_check(spark, oracle_con, name, fn, sql)
+    if name in entry_mod.queries():
+        assert _temp_views(spark) - before == set(), f"{name}: leaked temp views"
 
 
 @pytest.mark.parametrize(

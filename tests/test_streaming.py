@@ -25,6 +25,7 @@ from flink_http_full_cache_connector_spark.sources.datagen import (
 from flink_http_full_cache_connector_spark.sources.local_http import serve_json
 from flink_http_full_cache_connector_spark.streaming.pipeline import (
     collect_stream,
+    run_to_memory,
     with_watermark,
 )
 from flink_http_full_cache_connector_spark.streaming.refresh import (
@@ -80,6 +81,17 @@ def test_datagen_stream_is_streaming(spark):
     assert df.isStreaming
     rows = collect_stream(df, 5, timeout_s=30)
     assert len(rows) == 5 and all(1 <= r.user_id <= 3 for r in rows)
+
+
+def test_run_to_memory_releases_its_sink_when_the_query_fails(spark, tmp_path):
+    spark.range(3).write.parquet(str(tmp_path / "ids"))
+    stream = spark.readStream.schema("id LONG").parquet(str(tmp_path / "ids"))
+    before = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    with pytest.raises(Exception, match="id must stay below 2"):
+        run_to_memory(
+            stream.select(F.assert_true(F.col("id") < 2, "id must stay below 2"))
+        )
+    assert {t.name for t in spark.catalog.listTables() if t.isTemporary} == before
 
 
 # --- refresh manager (A5; pinned behaviors 4-5) ------------------------------
@@ -283,7 +295,7 @@ def test_enrich_stream_example_job_shape(spark, http_server):
     def sink(df, epoch_id):
         seen.extend(df.collect())
 
-    process = enrich_stream(probe, cache, on=[("user_id", "id")], how="left", sink=sink)
+    process = enrich_stream(cache, on=[("user_id", "id")], how="left", sink=sink)
     query = probe.writeStream.foreachBatch(process).start()
     try:
         deadline = time.monotonic() + 30
