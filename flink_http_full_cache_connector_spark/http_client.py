@@ -175,6 +175,13 @@ def fetch_with_retry(
     ) from last_exception
 
 
+def _pointer_tokens(pointer: str) -> list[str]:
+    """The reference tokens of an RFC 6901 pointer: split on ``/`` after
+    the leading one, then ``~1``→``/`` and ``~0``→``~`` (in that order, so
+    ``~01`` is ``~1``).  ``""`` has none."""
+    return [t.replace("~1", "/").replace("~0", "~") for t in pointer.split("/")[1:]]
+
+
 def resolve_json_pointer(document: Any, pointer: str) -> Any:
     """RFC 6901 JSON Pointer resolution (≙ Jackson ``JsonNode.at``).
 
@@ -191,8 +198,7 @@ def resolve_json_pointer(document: Any, pointer: str) -> Any:
         raise RuntimeError(
             f"JSON Pointer '{pointer}' did not match any node in the response"
         )
-    for raw_token in pointer.split("/")[1:]:
-        token = raw_token.replace("~1", "/").replace("~0", "~")
+    for token in _pointer_tokens(pointer):
         nxt: Any = _MISSING
         if isinstance(node, dict):
             nxt = node.get(token, _MISSING)

@@ -91,6 +91,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from flink_http_full_cache_connector_spark.http_client import _pointer_tokens
 
 #: wide enough for any DECIMAL(38, s) value
 _DECIMAL_CONTEXT = decimal.Context(prec=38)
@@ -305,7 +306,7 @@ def read_arrow(body: str, pointer: str, schema: StructType) -> pa.Table | None:
         return None  # json.loads refuses a BOM, which the reader skips
     if len(set(schema.names)) < len(schema.names):
         return None  # the reader fills only the first of a repeated name
-    tokens = [t.replace("~1", "/").replace("~0", "~") for t in pointer.split("/")[1:]]
+    tokens = _pointer_tokens(pointer)
     node_type = pa.list_(
         pa.struct([(f.name, _READ_AS.get(type(f.dataType), pa.null())) for f in schema.fields])
     )

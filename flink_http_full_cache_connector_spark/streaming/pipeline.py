@@ -3,8 +3,8 @@
 Covers the reference's exercised streaming surface:
 - B6 watermark declaration — ``with_watermark``
 - B8 print sink           — ``start_console_sink``
-- finite stream run       — ``run_to_memory`` (availableNow into a memory
-  sink, result materialized and the sink released)
+- finite stream run       — ``run_to_memory``, for both packages (availableNow
+  into a memory sink; ``finalize_memory_sink`` is its last step)
 - B10 bounded collection  — ``collect_stream`` (memory sink, take first N)
 
 B9 (``INSERT INTO``) needs no helper: it is
@@ -28,10 +28,10 @@ from pyspark.sql.streaming import StreamingQuery
 #: makes every microbatch of a metadata-sized-state stream pay
 #: (partitions × state-store load/commit) for a handful of keys (r11
 #: profile: 3-microbatch update streams spent most of their wall in
-#: 32-instance HDFS state-store overhead).  8 matches the pre-existing
-#: house precedent (streaming_sessionize / streaming_heavy_hitters set it
-#: inline since round 4).  Deployments whose state is NOT metadata-sized
-#: (real key spaces at 100 TB) size this to state volume via the env knob
+#: 32-instance HDFS state-store overhead).  Every finite stream in both
+#: packages runs under it through :func:`run_to_memory` or the upsert
+#: runners.  Deployments whose state is NOT metadata-sized (real key
+#: spaces at 100 TB) size this to state volume via the env knob
 #: instead — the value is a per-stream capacity choice, never derived
 #: from the driver's core count, so the bench stays comparable across
 #: SPARK_GRAFT_CPUS settings.
@@ -40,12 +40,10 @@ STREAM_SHUFFLE_DEFAULT = 8
 
 
 @contextlib.contextmanager
-def scoped_stream_shuffle(spark: SparkSession, partitions: int | None = None):
+def scoped_stream_shuffle(spark: SparkSession):
     """Scope ``spark.sql.shuffle.partitions`` for one streaming query's
     start+run (set → yield → restore).  See STREAM_SHUFFLE_DEFAULT."""
-    n = partitions or int(
-        os.environ.get(STREAM_SHUFFLE_ENV, STREAM_SHUFFLE_DEFAULT)
-    )
+    n = int(os.environ.get(STREAM_SHUFFLE_ENV, STREAM_SHUFFLE_DEFAULT))
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:

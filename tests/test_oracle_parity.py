@@ -98,13 +98,14 @@ def _temp_views(spark) -> set[str]:
 #: locally.  The driver contract's queries run in full in the default tier;
 #: the rest of the sweep is ~6 min of wall, so the slow tier runs all of it
 #: and the fast tier keeps the deterministic sample below.  A driver-contract
-#: query must also release every temporary view it made (a memory sink's
-#: view pins its rows in driver memory for the rest of the session).
+#: query and every streaming query must also release every temporary view
+#: it made (a memory sink's view pins its rows in driver memory for the rest
+#: of the session).
 @pytest.mark.parametrize(("name", "fn", "sql"), full_sweep())
 def test_query_matches_oracle(spark, oracle_con, name, fn, sql):
     before = _temp_views(spark)
     _parity_check(spark, oracle_con, name, fn, sql)
-    if name in entry_mod.queries():
+    if name in entry_mod.queries() or name.startswith("streaming_"):
         assert _temp_views(spark) - before == set(), f"{name}: leaked temp views"
 
 

@@ -17,7 +17,7 @@ from training_data_ops.registry import all_queries
 SF_DIR = "/root/testdata/sf0.01"
 
 # streaming queries run to completion inside their builder and return a
-# memory-sink table (their plan is a table scan); lint the batch ones
+# plan over the materialized sink rows; lint the batch ones
 BATCH_QUERIES = sorted(
     name for name in all_queries() if not name.startswith("streaming_")
 )

@@ -104,7 +104,7 @@ def test_kafka_reader_is_declarative(spark):
 # --- r11 optimization helpers -------------------------------------------
 
 
-def test_scoped_stream_shuffle_sets_and_restores(spark):
+def test_scoped_stream_shuffle_sets_and_restores(spark, monkeypatch):
     """The streaming scope must apply its partition count inside the block
     (default 8, env-overridable) and restore the previous session value on
     exit, including on error — a leaked value would silently resize every
@@ -117,8 +117,9 @@ def test_scoped_stream_shuffle_sets_and_restores(spark):
     with scoped_stream_shuffle(spark):
         assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", "5")
     with pytest.raises(RuntimeError):
-        with scoped_stream_shuffle(spark, partitions=5):
+        with scoped_stream_shuffle(spark):
             assert spark.conf.get("spark.sql.shuffle.partitions") == "5"
             raise RuntimeError("boom")
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev

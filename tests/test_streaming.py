@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, IntegerType, StringType, StructField, StructType
 
 from flink_http_full_cache_connector_spark.http_client import HttpFetchError
+from flink_http_full_cache_connector_spark.plans.registry import load_table, table_stream
 from flink_http_full_cache_connector_spark.sources.datagen import (
     RandomDouble,
     RandomInt,
@@ -32,7 +33,7 @@ from flink_http_full_cache_connector_spark.streaming.refresh import (
     RefreshingLookupCache,
     enrich_stream,
 )
-from tests.conftest import USERS_V1, USERS_V2
+from tests.conftest import SF_DIR, USERS_V1, USERS_V2
 
 USERS_SCHEMA = StructType(
     [
@@ -92,6 +93,46 @@ def test_run_to_memory_releases_its_sink_when_the_query_fails(spark, tmp_path):
             stream.select(F.assert_true(F.col("id") < 2, "id must stay below 2"))
         )
     assert {t.name for t in spark.catalog.listTables() if t.isTemporary} == before
+
+
+def test_run_to_memory_update_mode_reduced_after_equals_batch(spark):
+    """An update-mode run may re-emit a key's count as it grows; reducing
+    what run_to_memory returns by max per key gives the batch count, and
+    the sink's view is gone by then."""
+    before = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    updates = run_to_memory(
+        table_stream(spark, SF_DIR, "nation").groupBy("n_regionkey").count(),
+        "update",
+    )
+    final = updates.groupBy("n_regionkey").agg(F.max("count").alias("count"))
+    batch = load_table(spark, SF_DIR, "nation").groupBy("n_regionkey").count()
+    assert sorted(final.collect()) == sorted(batch.collect())
+    assert {t.name for t in spark.catalog.listTables() if t.isTemporary} == before
+
+
+def test_finite_streams_run_through_one_runner_and_one_reader():
+    """Both packages run a finite stream into a memory sink only through
+    streaming/pipeline.py (run_to_memory, collect_stream), and read a
+    single driver table as a file stream only through plans/registry.py
+    (table_stream); slice-directory streams (``*.parquet``) are not
+    single-table reads."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    memory_sink = re.compile(r"""format\(\s*["']memory["']\s*\)""")
+    one_file = re.compile(r"""["']pathGlobFilter["']\s*,\s*f?["'][^"'*]*\.parquet["']""")
+    sinks, readers = set(), set()
+    for package in ("flink_http_full_cache_connector_spark", "training_data_ops"):
+        for path in sorted((root / package).rglob("*.py")):
+            text = path.read_text()
+            rel = path.relative_to(root).as_posix()
+            if memory_sink.search(text):
+                sinks.add(rel)
+            if one_file.search(text):
+                readers.add(rel)
+    assert sinks == {"flink_http_full_cache_connector_spark/streaming/pipeline.py"}
+    assert readers == {"flink_http_full_cache_connector_spark/plans/registry.py"}
 
 
 # --- refresh manager (A5; pinned behaviors 4-5) ------------------------------

@@ -43,11 +43,11 @@ from training_data_ops.functions.rounding import duck_trunc6, trunc6
 from training_data_ops.operators.scale import widen
 from flink_http_full_cache_connector_spark.plans.registry import (
     load_table,
-    normalize_events_ts,
+    table_stream,
 )
 from training_data_ops.registry import register
 from flink_http_full_cache_connector_spark.streaming.pipeline import (
-    scoped_stream_shuffle,
+    run_to_memory,
 )
 from training_data_ops.functions.tokenize import TOKEN_DELIM_RE
 
@@ -242,33 +242,12 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     "mode memory sink — final state must equal the batch result (oracle).",
 )
 def streaming_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    schema = load_table(spark, sf_dir, "documents").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(sf_dir)
+    agg = (
+        table_stream(spark, sf_dir, "documents")
+        .groupBy(F.md5(F.col("text")).alias("text_hash"))
+        .agg(F.min("doc_id").alias("keep_id"), F.count("*").alias("dup_count"))
     )
-    agg = stream.groupBy(F.md5(F.col("text")).alias("text_hash")).agg(
-        F.min("doc_id").alias("keep_id"), F.count("*").alias("dup_count")
-    )
-    name = f"stream_dedup_{uuid.uuid4().hex[:12]}"
-    with scoped_stream_shuffle(spark):
-        query = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    from flink_http_full_cache_connector_spark.streaming.pipeline import (
-        finalize_memory_sink,
-    )
-
-    return finalize_memory_sink(spark.table(name), name)
+    return run_to_memory(agg, "complete")
 
 
 def stateful_dedup_stream(hashed: DataFrame) -> DataFrame:
@@ -327,31 +306,10 @@ def stateful_dedup_stream(hashed: DataFrame) -> DataFrame:
     "batch groupBy oracle, cross-batch suppression pinned by unit test.",
 )
 def streaming_dedup_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    schema = load_table(spark, sf_dir, "documents").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-        .select("doc_id", F.md5(F.col("text")).alias("text_hash"))
+    stream = table_stream(spark, sf_dir, "documents").select(
+        "doc_id", F.md5(F.col("text")).alias("text_hash")
     )
-    deduped = stateful_dedup_stream(stream)
-    name = f"stateful_dedup_{uuid.uuid4().hex[:12]}"
-    with scoped_stream_shuffle(spark):
-        query = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    from flink_http_full_cache_connector_spark.streaming.pipeline import (
-        finalize_memory_sink,
-    )
-
-    return finalize_memory_sink(spark.table(name), name)
+    return run_to_memory(stateful_dedup_stream(stream), "update")
 
 
 # ---------------------------------------------------------------------------
@@ -1328,36 +1286,13 @@ def dedup_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     "single availableNow pass makes value-exact against DISTINCT.",
 )
 def streaming_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    from flink_http_full_cache_connector_spark.plans.registry import load_table
-
-    load_table(spark, sf_dir, "events")  # sets the nanosAsLong conf
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .transform(normalize_events_ts)
+        table_stream(spark, sf_dir, "events")
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["user_id"])
         .select("user_id")
     )
-    name = f"stream_ddww_{uuid.uuid4().hex[:12]}"
-    with scoped_stream_shuffle(spark):
-        query = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    from flink_http_full_cache_connector_spark.streaming.pipeline import (
-        finalize_memory_sink,
-    )
-
-    return finalize_memory_sink(spark.table(name), name)
+    return run_to_memory(stream, "append")
 
 
 # ---------------------------------------------------------------------------

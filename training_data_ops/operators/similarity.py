@@ -45,10 +45,13 @@ from training_data_ops.operators.scale import (
     record_phase,
     widen,
 )
-from flink_http_full_cache_connector_spark.plans.registry import load_table
+from flink_http_full_cache_connector_spark.plans.registry import (
+    load_table,
+    table_stream,
+)
 from training_data_ops.registry import register
 from flink_http_full_cache_connector_spark.streaming.pipeline import (
-    scoped_stream_shuffle,
+    run_to_memory,
 )
 
 NUM_QUERIES = 10
@@ -1945,18 +1948,13 @@ def two_level_index_load(
 def streaming_ann_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
-    import uuid
 
     from training_data_ops.functions.vectors import (
         cosine_with_norms,
         norm,
     )
-    from flink_http_full_cache_connector_spark.streaming.pipeline import (
-        finalize_memory_sink,
-    )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    raw_schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
     work = tempfile.mkdtemp(prefix="spark_graft_ivfstream_")
     try:
         _t0 = time.perf_counter()
@@ -1975,9 +1973,7 @@ def streaming_ann_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.collect_list(F.struct("cent_id", "cv", "nc")).alias("fines")
         )
         stream = (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "embeddings.parquet")
-            .parquet(sf_dir)
+            table_stream(spark, sf_dir, "embeddings")
             .where(F.col("vec_id") < NUM_QUERIES)
             .select(
                 F.col("vec_id").alias("query_id"),
@@ -2049,17 +2045,7 @@ def streaming_ann_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(1).cast("int").alias("rank"),
             )
         )
-        name = f"ann_lookup_{uuid.uuid4().hex[:12]}"
-        with scoped_stream_shuffle(spark):
-            query = (
-                top1.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("complete")
-                .trigger(availableNow=True)
-                .start()
-            )
-            query.awaitTermination()
-        return finalize_memory_sink(spark.table(name), name)
+        return run_to_memory(top1, "complete")
     finally:
         shutil.rmtree(work, ignore_errors=True)
 

@@ -25,10 +25,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from training_data_ops.functions.rounding import duck_trunc6, trunc6
-from flink_http_full_cache_connector_spark.plans.registry import load_table
+from flink_http_full_cache_connector_spark.plans.registry import (
+    load_table,
+    table_stream,
+)
 from training_data_ops.registry import register
 from flink_http_full_cache_connector_spark.streaming.pipeline import (
-    scoped_stream_shuffle,
+    run_to_memory,
 )
 
 HOUR_US = 3600 * 1_000_000
@@ -800,43 +803,18 @@ SHQ_WIDTH = 1
     "for key spaces that are not metadata-sized.",
 )
 def streaming_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    from flink_http_full_cache_connector_spark.plans.registry import normalize_events_ts
-    from flink_http_full_cache_connector_spark.streaming.pipeline import (
-        finalize_memory_sink,
-    )
-
-    load_table(spark, sf_dir, "events")  # sets the nanosAsLong conf
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .transform(normalize_events_ts)
-    )
     bins = (
-        stream.groupBy(
+        table_stream(spark, sf_dir, "events")
+        .groupBy(
             F.least(F.lit(SHQ_BINS - 1), F.floor(F.col("value") / SHQ_WIDTH))
             .cast("long")
             .alias("bin")
         )
         .agg(F.count("*").alias("cnt"))
     )
-    name = f"stream_hist_{uuid.uuid4().hex[:12]}"
-    with scoped_stream_shuffle(spark):
-        query = (
-            bins.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    out = _quantiles_from_bins(
-        spark, spark.table(name), HQ_QUANTILES, SHQ_WIDTH
+    return _quantiles_from_bins(
+        spark, run_to_memory(bins, "complete"), HQ_QUANTILES, SHQ_WIDTH
     )
-    return finalize_memory_sink(out, name)
 
 
 HIST_UPDATE_SLICES = 3  # microbatches the update-mode twin consumes
@@ -1183,37 +1161,15 @@ def _ks_from_counts(counts: DataFrame) -> DataFrame:
     "one).",
 )
 def streaming_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    from flink_http_full_cache_connector_spark.plans.registry import normalize_events_ts
-    from flink_http_full_cache_connector_spark.streaming.pipeline import (
-        finalize_memory_sink,
-    )
-
-    load_table(spark, sf_dir, "events")  # sets the nanosAsLong conf
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .transform(normalize_events_ts)
-    )
-    counts = _ks_group_counts(stream).groupBy("event_type", "v").agg(
-        F.sum(F.when(F.col("wk") == 0, 1).otherwise(0)).alias("c0"),
-        F.sum("wk").cast("long").alias("c1"),
-    )
-    name = f"stream_ks_{uuid.uuid4().hex[:12]}"
-    with scoped_stream_shuffle(spark):
-        query = (
-            counts.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
+    counts = (
+        _ks_group_counts(table_stream(spark, sf_dir, "events"))
+        .groupBy("event_type", "v")
+        .agg(
+            F.sum(F.when(F.col("wk") == 0, 1).otherwise(0)).alias("c0"),
+            F.sum("wk").cast("long").alias("c1"),
         )
-        query.awaitTermination()
-    out = _ks_from_counts(spark.table(name))
-    return finalize_memory_sink(out, name)
+    )
+    return _ks_from_counts(run_to_memory(counts, "complete"))
 
 
 KS_UPDATE_SLICES = 3  # microbatches the update-mode twin consumes

@@ -22,10 +22,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from flink_http_full_cache_connector_spark.plans.registry import load_table
+from flink_http_full_cache_connector_spark.plans.registry import (
+    load_table,
+    table_stream,
+)
 from training_data_ops.registry import register
 from flink_http_full_cache_connector_spark.streaming.pipeline import (
-    scoped_stream_shuffle,
+    run_to_memory,
 )
 
 TOPK_N = 100
@@ -910,36 +913,12 @@ def rollup_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     "merge) for key spaces that are not.",
 )
 def streaming_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    from flink_http_full_cache_connector_spark.plans.registry import normalize_events_ts
-    from flink_http_full_cache_connector_spark.streaming.pipeline import (
-        finalize_memory_sink,
+    daily = (
+        table_stream(spark, sf_dir, "events")
+        .groupBy(F.date_trunc("day", F.col("ts")).alias("day"), "event_type")
+        .agg(*_day_state_aggs())
     )
-
-    load_table(spark, sf_dir, "events")  # sets the nanosAsLong conf
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .transform(normalize_events_ts)
-    )
-    daily = stream.groupBy(
-        F.date_trunc("day", F.col("ts")).alias("day"),
-        "event_type",
-    ).agg(*_day_state_aggs())
-    name = f"stream_rollup_{uuid.uuid4().hex[:12]}"
-    with scoped_stream_shuffle(spark):
-        query = (
-            daily.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return finalize_memory_sink(_merge_day_states(spark.table(name)), name)
+    return _merge_day_states(run_to_memory(daily, "complete"))
 
 
 ROLLUP_UPDATE_SLICES = 3  # microbatches the update-mode twin consumes

@@ -19,11 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_http_full_cache_connector_spark.plans.registry import load_table
+from flink_http_full_cache_connector_spark.plans.registry import table_stream
 from training_data_ops.registry import register
-from flink_http_full_cache_connector_spark.streaming.pipeline import (
-    scoped_stream_shuffle,
-)
+from flink_http_full_cache_connector_spark.streaming.pipeline import run_to_memory
 
 HH_SHARE_DEN = 20  # heavy hitter = key holding >= 1/20 of all events
 
@@ -75,36 +73,11 @@ def running_counts_stream(events: DataFrame) -> DataFrame:
     "cardinality, not stream volume; value-exact vs the batch GROUP BY.",
 )
 def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    load_table(spark, sf_dir, "events")  # sets the nanosAsLong conf
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .select("event_id", "event_type")
-    )
-    updates = running_counts_stream(stream)
-    name = f"heavy_hitters_{uuid.uuid4().hex[:12]}"
-    with scoped_stream_shuffle(spark):
-        query = (
-            updates.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    from flink_http_full_cache_connector_spark.streaming.pipeline import (
-        finalize_memory_sink,
-    )
-
-    final = finalize_memory_sink(
-        spark.table(name)
+    stream = table_stream(spark, sf_dir, "events").select("event_id", "event_type")
+    final = (
+        run_to_memory(running_counts_stream(stream), "update")
         .groupBy("event_type")
-        .agg(F.max("cnt").alias("cnt"), F.min("first_id").alias("first_id")),
-        name,
+        .agg(F.max("cnt").alias("cnt"), F.min("first_id").alias("first_id"))
     )
     total = final.agg(F.sum("cnt").alias("total"))
     return final.crossJoin(F.broadcast(total)).select(
@@ -202,46 +175,14 @@ def transition_counts_stream(events: DataFrame) -> DataFrame:
     "probability ppm view).",
 )
 def streaming_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid
-
-    from flink_http_full_cache_connector_spark.plans.registry import normalize_events_ts
-
-    load_table(spark, sf_dir, "events")  # sets the nanosAsLong conf
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .transform(normalize_events_ts)
-        .select(
-            "user_id",
-            "event_id",
-            F.unix_micros(F.col("ts")).alias("us"),
-            "event_type",
-        )
+    stream = table_stream(spark, sf_dir, "events").select(
+        "user_id",
+        "event_id",
+        F.unix_micros(F.col("ts")).alias("us"),
+        "event_type",
     )
-    name = f"stream_trans_{uuid.uuid4().hex[:12]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        query = (
-            transition_counts_stream(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    from flink_http_full_cache_connector_spark.streaming.pipeline import (
-        finalize_memory_sink,
-    )
-
-    return finalize_memory_sink(
-        spark.table(name)
+    return (
+        run_to_memory(transition_counts_stream(stream), "append")
         .groupBy("from_type", "to_type")
-        .agg(F.sum("inc").alias("n")),
-        name,
+        .agg(F.sum("inc").alias("n"))
     )

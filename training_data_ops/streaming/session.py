@@ -91,16 +91,11 @@ def sessionize_stream(events: "DataFrame") -> "DataFrame":
 
 
 def _register_streaming_sessionize() -> None:
-    import uuid
-
     from pyspark.sql import functions as F
 
-    from flink_http_full_cache_connector_spark.plans.registry import (
-
-        load_table,
-
-        normalize_events_ts,
-
+    from flink_http_full_cache_connector_spark.plans.registry import table_stream
+    from flink_http_full_cache_connector_spark.streaming.pipeline import (
+        run_to_memory,
     )
     from training_data_ops.registry import register
 
@@ -145,39 +140,12 @@ def _register_streaming_sessionize() -> None:
         "path and scale-mode sweeps run it alone (round-4 verdict #4).",
     )
     def streaming_sessionize(spark, sf_dir):
-        load_table(spark, sf_dir, "events")  # sets the nanosAsLong conf
-        raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-        stream = (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-            .transform(normalize_events_ts)
-            .select(
-                "user_id", "event_id", F.unix_micros(F.col("ts")).alias("us")
-            )
+        stream = table_stream(spark, sf_dir, "events").select(
+            "user_id", "event_id", F.unix_micros(F.col("ts")).alias("us")
         )
-        sessions = sessionize_stream(stream)
-        name = f"stream_sess_{uuid.uuid4().hex[:12]}"
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            query = (
-                sessions.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            query.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
         # reduce provisional re-emissions: last version per (user, session)
-        from flink_http_full_cache_connector_spark.streaming.pipeline import (
-            finalize_memory_sink,
-        )
-
-        reduced = (
-            spark.table(name)
+        return (
+            run_to_memory(sessionize_stream(stream), "update")
             .groupBy("user_id", "session_num")
             .agg(
                 F.max("n_events").alias("n_events"),
@@ -185,7 +153,6 @@ def _register_streaming_sessionize() -> None:
                 F.max("end_us").alias("end_us"),
             )
         )
-        return finalize_memory_sink(reduced, name)
 
 
 _register_streaming_sessionize()
@@ -299,21 +266,13 @@ def sessionize_stream_evicting(
 
 
 def _register_streaming_sessionize_evicting() -> None:
-    import uuid
-
     from pyspark.sql import functions as F
 
-    from flink_http_full_cache_connector_spark.plans.registry import (
-
-        load_table,
-
-        normalize_events_ts,
-
+    from flink_http_full_cache_connector_spark.plans.registry import table_stream
+    from flink_http_full_cache_connector_spark.streaming.pipeline import (
+        run_to_memory,
     )
     from training_data_ops.registry import register
-    from flink_http_full_cache_connector_spark.streaming.pipeline import (
-        finalize_memory_sink,
-    )
 
     @register(
         "streaming_sessionize_evicting",
@@ -354,13 +313,8 @@ def _register_streaming_sessionize_evicting() -> None:
         "eviction + closed-flag behavior pinned by unit/property tests.",
     )
     def streaming_sessionize_evicting(spark, sf_dir):
-        load_table(spark, sf_dir, "events")  # sets the nanosAsLong conf
-        raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
         stream = (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-            .transform(normalize_events_ts)
+            table_stream(spark, sf_dir, "events")
             # Nonzero delay: the stateful pre-filter drops events at/behind
             # the watermark, so with a 0s delay a multi-microbatch source
             # (several files, or maxFilesPerTrigger) would silently drop
@@ -374,23 +328,8 @@ def _register_streaming_sessionize_evicting() -> None:
                 F.unix_micros(F.col("ts")).alias("us"),
             )
         )
-        sessions = sessionize_stream_evicting(stream)
-        name = f"stream_sesse_{uuid.uuid4().hex[:12]}"
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            query = (
-                sessions.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            query.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        reduced = (
-            spark.table(name)
+        return (
+            run_to_memory(sessionize_stream_evicting(stream), "update")
             .groupBy("user_id", "start_us")
             .agg(
                 F.max("n_events").alias("n_events"),
@@ -398,7 +337,6 @@ def _register_streaming_sessionize_evicting() -> None:
             )
             .select("user_id", "start_us", "end_us", "n_events")
         )
-        return finalize_memory_sink(reduced, name)
 
 
 _register_streaming_sessionize_evicting()
