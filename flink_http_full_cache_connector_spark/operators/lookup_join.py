@@ -38,6 +38,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from flink_http_full_cache_connector_spark.sources.lookup import SNAPSHOTS
+
 
 def lookup_join(
     probe: DataFrame,
@@ -117,13 +119,16 @@ def _profile(cache: DataFrame, keys: tuple[str, ...]) -> tuple[str, ...]:
     and the non-key columns' null flags, collected as Arrow.
 
     Only a cache whose rows are the same on every evaluation is read: a
-    bare in-memory local relation, as :func:`~sources.lookup.create_lookup_df`
-    builds below Arrow's local relation threshold.  Anything else — a
-    data-source read, a table, file or RDD scan, a query over any relation
-    — may yield other rows on its next evaluation, so a profile of one
-    says nothing of the next; it has no candidates.
+    bare in-memory local relation (``cache.isLocal()``), or a snapshot
+    :func:`~sources.lookup.create_lookup_df` built (in
+    :data:`~sources.lookup.SNAPSHOTS`), whose Arrow batches the driver
+    shipped once and every scan decodes alike.  Anything else — a
+    data-source read, a table, file or RDD scan, a caller's own Arrow-batch
+    relation, a query over any relation — may yield other rows on its
+    next evaluation, so a profile of one says nothing of the next; it has
+    no candidates.
     """
-    if not cache.isLocal():
+    if not (cache.isLocal() or cache in SNAPSHOTS):
         return ()
     types = {f.name: f.dataType for f in cache.schema}
     others = [c for c in types if c not in keys]
@@ -203,14 +208,14 @@ def observed_lookup_join(
     lives.  A refreshed :class:`~streaming.refresh.RefreshingLookupCache`
     snapshot is a new object and is decided again.
 
-    - **Witness path** — the cache's rows are fixed: it is a bare
-      in-memory local relation (``cache.isLocal()``), as
-      :func:`~sources.lookup.create_lookup_df` builds up to
-      ``spark.sql.execution.arrow.localRelationThreshold``.  A
-      driver-side profile of those rows — one collect of the key columns
-      and the null flags as Arrow — finds the non-null join keys unique
-      and some non-key cache column (the *witness*) non-null on every row
-      with non-null keys, sharing its name with no probe column.  Each
+    - **Witness path** — the cache's rows are fixed: it is a snapshot
+      :func:`~sources.lookup.create_lookup_df` built (an Arrow-batch
+      relation, whose batches each scan decodes in its tasks) or a bare
+      in-memory local relation (``cache.isLocal()``).  A driver-side
+      profile of those rows — one collect of the key columns and the null
+      flags as Arrow — finds the non-null join keys unique and some
+      non-key cache column (the *witness*) non-null on every row with
+      non-null keys, sharing its name with no probe column.  Each
       probe row then yields exactly one output row, and the witness is
       non-null exactly on the hits, so the observe is ``count(1)`` and
       ``count(witness)`` over the plain join, the last operator of the
@@ -218,10 +223,10 @@ def observed_lookup_join(
       ``noop`` sink (8M-row, 16-partition probe, 10k-row snapshot,
       ``local[4]``, interleaved in one process): 0.34 s against 0.28 s
       (+22%), plus one profile per snapshot (0.1–0.3 s for 10k rows).
-      A local relation that fails the profile (duplicate keys, no
-      witness) pays that profile once and then takes the marker path; a
-      caller that builds a new snapshot object for every join pays it on
-      every join (+0.15–0.19 s measured on 10k rows).
+      A snapshot that fails the profile (duplicate keys, no witness) pays
+      that profile once and then takes the marker path; a caller that
+      builds a new snapshot object for every join pays it on every join
+      (+0.15–0.19 s measured on 10k rows).
     - **Marker path** — every other cache: rows that may change between
       evaluations (a data-source read, a table, file or RDD scan — these
       are never profiled), duplicate keys, key columns only, no usable

@@ -8,9 +8,11 @@ atomically replaces the old; a reload whose retries exhaust **fails the
 job** (no stale-cache fallback, pinned by
 ``HttpLookupConnectorIntegrationTest.scala:546-672``).
 
-Spark realization: the snapshot is a driver-built local relation
-(:func:`sources.lookup.create_lookup_df`), whose rows already live in the
-JVM when the build returns, so it needs no Spark cache and nothing to
+Spark realization: the snapshot is Spark's Arrow-batch relation
+(:func:`sources.lookup.create_lookup_df`): the driver ships the refreshed
+table to the JVM as Arrow IPC batches, which each scan of the snapshot
+(for a join, the broadcast job) decodes in its tasks.  The batches live in
+the JVM when the build returns, so it needs no Spark cache and nothing to
 release: the old snapshot goes once no plan refers to it.
 ``check_and_reload`` is invoked between microbatches (from ``foreachBatch``
 or any driver loop) — never concurrently with a running batch, so the swap

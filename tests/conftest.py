@@ -9,6 +9,7 @@ which counts requests (cache-proof assertions).
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import threading
@@ -73,6 +74,25 @@ def _clear_spark_cache(request):
             request.getfixturevalue("spark").catalog.clearCache()
         except Exception:
             pass
+
+
+RELATION_THRESHOLD = "spark.sql.execution.arrow.localRelationThreshold"
+
+
+@contextlib.contextmanager
+def session_conf(spark, key: str, value: str | None):
+    """``key`` set to ``value`` (left as found for None) within the block,
+    then the session's own value, or its absence, restored."""
+    saved = spark.conf.get(key, None)
+    if value is not None:
+        spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if saved is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, saved)
 
 
 # --- golden 10-user fixture (FIXTURES.md F1; integration test :57-84) ------

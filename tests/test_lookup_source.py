@@ -19,7 +19,7 @@ from flink_http_full_cache_connector_spark.operators.lookup_join import (
     with_proc_time,
 )
 from flink_http_full_cache_connector_spark.sources.lookup import FetchStats, create_lookup_df
-from tests.conftest import USERS_V1
+from tests.conftest import RELATION_THRESHOLD, USERS_V1, session_conf
 
 USERS_SCHEMA = StructType(
     [
@@ -29,6 +29,9 @@ USERS_SCHEMA = StructType(
         StructField("email", StringType()),
     ]
 )
+
+#: plan nodes of a relation that runs Python workers
+PYTHON_NODES = ("PythonRDD", "BatchEvalPython", "ArrowEvalPython")
 
 
 def test_full_cache_contains_all_records(spark, http_server):
@@ -149,8 +152,8 @@ def test_empty_payload_yields_empty_typed_df(spark, http_server):
 
 def test_nested_row_schema_through_arrow_path(spark, http_server):
     """Nested ROW columns (HttpLookupTableSourceFactoryTest.scala:189-193)
-    must survive the Arrow local-relation path: struct values populated,
-    missing nested field -> NULL, plan stays a LocalTableScan."""
+    must survive the Arrow path: struct values populated, missing nested
+    field -> NULL, plan is the Arrow-batch relation with no Python worker."""
     from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
     nested = StructType(
@@ -171,7 +174,9 @@ def test_nested_row_schema_through_arrow_path(spark, http_server):
     rows = {r.id: r.address for r in df.collect()}
     assert rows[1].city == "Oslo" and rows[1].zip == "0150"
     assert rows[2] is None
-    assert "LocalTableScan" in df._jdf.queryExecution().executedPlan().toString()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Scan ExistingRDD arrow" in plan, plan
+    assert not any(p in plan for p in PYTHON_NODES), plan
 
 
 @pytest.mark.parametrize(
@@ -388,3 +393,153 @@ def test_observed_lookup_join_counts_probe_rows_not_output_rows(spark):
     )
     assert joined.count() == 4  # the join output itself keeps every match
     assert obs.get == {"lookup_total": 3, "lookup_hits": 2}
+
+
+#: scalar columns: the Arrow reader takes the body
+SCALAR_DDL = (
+    "id BIGINT, i INT, s SMALLINT, d DOUBLE, f FLOAT, name STRING, ok BOOLEAN, "
+    "at TIMESTAMP, day DATE"
+)
+SCALAR_ROWS = [
+    {"id": 1, "i": 2147483647, "s": -32768, "d": -0.0, "f": 1.5, "name": "Zoë 東京 🚀",
+     "ok": True, "at": "2024-01-02 03:04:05", "day": "2024-01-02"},
+    {"id": 2, "i": None, "s": 7, "d": 2.25, "f": -0.0, "name": "ß", "ok": False,
+     "at": "2024-06-30T23:59:59.5Z", "day": "1999-12-31"},
+    {"id": 9007199254740993, "name": "c"},
+]
+#: DECIMAL, ROW, ARRAY and MAP values: the exact path builds the table
+NESTED_DDL = (
+    "id BIGINT, amount DECIMAL(10,2), addr STRUCT<city: STRING, zip: STRING>, "
+    "tags ARRAY<INT>, attrs MAP<STRING, INT>, name STRING"
+)
+NESTED_ROWS = [
+    {"id": 1, "amount": 12.34, "addr": {"city": "Malmö", "zip": "211 20"},
+     "tags": [1, None, 3], "attrs": {"a": 1, "ß": None}, "name": "x"},
+    {"id": 2, "amount": None, "addr": None, "tags": [], "attrs": {}, "name": "y"},
+    {"id": 3, "name": "z"},
+]
+
+
+@pytest.mark.parametrize(
+    "ddl, payload, fallbacks",
+    [(SCALAR_DDL, SCALAR_ROWS, 0), (NESTED_DDL, NESTED_ROWS, 1), (SCALAR_DDL, [], 0)],
+    ids=["scalar", "nested", "empty"],
+)
+def test_arrow_batch_snapshot_equals_local_relation_snapshot(
+    spark, http_server, monkeypatch, ddl, payload, fallbacks
+):
+    """The snapshot ``create_lookup_df`` builds (Spark's Arrow-batch
+    relation, decoded in the scan's tasks) and a local relation built from
+    the same Arrow table (the relation it replaced, decoded on the driver)
+    collect the same rows and observe the same hit counts, both on the
+    witness path."""
+    import math
+
+    from pyspark.sql import Observation
+
+    from flink_http_full_cache_connector_spark.operators.lookup_join import (
+        observed_lookup_join,
+    )
+    from flink_http_full_cache_connector_spark.sources import lookup
+
+    tables = []
+    build = lookup._arrow_relation
+    monkeypatch.setattr(
+        lookup,
+        "_arrow_relation",
+        lambda session, table, schema: tables.append(table) or build(session, table, schema),
+    )
+    schema = StructType.fromDDL(ddl)
+    http_server.set_payload(payload)
+    stats = FetchStats()
+    snapshot = create_lookup_df(spark, {"url": http_server.url}, schema, stats=stats)
+    assert stats.arrow_fallbacks == fallbacks
+    local = spark.createDataFrame(tables[0], schema)
+
+    plans = [df._jdf.queryExecution().executedPlan().toString() for df in (snapshot, local)]
+    if payload:
+        assert "Scan ExistingRDD arrow" in plans[0], plans[0]
+        assert "LocalTableScan" in plans[1], plans[1]
+    else:
+        # no batch, no bytes: Spark keeps an empty table a local relation
+        # under any threshold
+        assert [df._jdf.rdd().getNumPartitions() for df in (snapshot, local)] == [0, 0], plans
+    assert not any(p in plan for plan in plans for p in PYTHON_NODES), plans
+
+    got, want = (sorted(df.collect()) for df in (snapshot, local))
+    assert got == want and len(got) == len(payload)
+    # -0.0 == 0.0 in Python: compare floating values by sign as well
+    for g, w in zip(got, want):
+        for c in ("d", "f"):
+            if c in schema.names and g[c] is not None:
+                assert math.copysign(1.0, g[c]) == math.copysign(1.0, w[c])
+    if "at" in schema.names:
+        micros = [
+            [r[0] for r in df.orderBy("id").select(F.unix_micros("at")).collect()]
+            for df in (snapshot, local)
+        ]
+        assert micros[0] == micros[1] == [1704164645000000, 1719791999500000, None][: len(payload)]
+
+    probe = spark.createDataFrame([(r["id"],) for r in payload] + [(-1,), (-2,)], "id BIGINT")
+    for df in (snapshot, local):
+        obs = Observation()
+        joined = observed_lookup_join(probe, df, "id", observation=obs)
+        joined.write.format("noop").mode("overwrite").save()
+        assert obs.get == {"lookup_total": len(payload) + 2, "lookup_hits": len(payload)}
+        assert "Window" not in joined._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("threshold", [None, "1000"])
+def test_create_lookup_df_leaves_the_relation_threshold_as_found(
+    spark, http_server, monkeypatch, threshold
+):
+    """``create_lookup_df`` sets the threshold to 0 for its one
+    ``createDataFrame`` call only: the caller's value (or its absence)
+    reads back after a build, after a failed build, and after two threads
+    build at once."""
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    def setting():
+        return spark.conf.get(RELATION_THRESHOLD), spark.conf.get(RELATION_THRESHOLD, None)
+
+    with session_conf(spark, RELATION_THRESHOLD, threshold):
+        before = setting()
+        create_lookup_df(spark, {"url": http_server.url}, USERS_SCHEMA)
+        assert setting() == before
+
+        seen = []
+
+        def boom(*args, **kwargs):
+            seen.append(spark.conf.get(RELATION_THRESHOLD))
+            raise RuntimeError("createDataFrame failed")
+
+        with monkeypatch.context() as m:
+            m.setattr(spark, "createDataFrame", boom)
+            with pytest.raises(RuntimeError, match="createDataFrame failed"):
+                create_lookup_df(spark, {"url": http_server.url}, USERS_SCHEMA)
+        assert seen == ["0"]
+        assert setting() == before
+
+        # a slow createDataFrame, and a second thread that starts half-way
+        # through the first one's, so that the two builds overlap
+        create = spark.createDataFrame
+
+        def slow(*args, **kwargs):
+            time.sleep(0.1)
+            return create(*args, **kwargs)
+
+        def builds(delay):
+            time.sleep(delay)
+            return [
+                create_lookup_df(spark, {"url": http_server.url}, USERS_SCHEMA) for _ in range(2)
+            ]
+
+        with monkeypatch.context() as m:
+            m.setattr(spark, "createDataFrame", slow)
+            with ThreadPoolExecutor(2) as pool:
+                futures = [pool.submit(builds, delay) for delay in (0.0, 0.05)]
+                snapshots = [df for f in futures for df in f.result(timeout=120)]
+        assert setting() == before
+        for df in snapshots:
+            assert "Scan ExistingRDD arrow" in df._jdf.queryExecution().executedPlan().toString()

@@ -6,8 +6,9 @@ exact on any cache, so it is the reference.  Both must give the same
 ``(lookup_total, lookup_hits)`` as a pure-Python count of lookup requests,
 and the same join output rows, on random caches with unique, duplicate
 and null keys, null non-key values, and key columns only.  The caches are
-in-memory local relations, as ``create_lookup_df`` builds; a cache whose
-rows may change between evaluations must take the marker path unprofiled.
+in-memory local relations built from Arrow; ``create_lookup_df`` snapshots
+(Arrow-batch relations) are profiled too, and a cache whose rows may change
+between evaluations must take the marker path unprofiled.
 """
 
 from __future__ import annotations
@@ -26,8 +27,9 @@ from pyspark.sql.types import StructType
 
 from flink_http_full_cache_connector_spark.operators import lookup_join as lj
 from flink_http_full_cache_connector_spark.sources.datasource import register
+from flink_http_full_cache_connector_spark.sources.lookup import create_lookup_df
 from flink_http_full_cache_connector_spark.streaming.refresh import RefreshingLookupCache
-from tests.conftest import USERS_V1
+from tests.conftest import RELATION_THRESHOLD, USERS_V1, session_conf
 from tests.test_lookup_source import USERS_SCHEMA
 
 #: value column names: plain, or a dotted second one (a top-level column
@@ -195,6 +197,14 @@ def test_declined_keys_take_the_marker_path(
     assert "Window" in df._jdf.queryExecution().executedPlan().toString()
 
 
+def own_arrow_batches(spark, df):
+    """``df``'s rows as ``createDataFrame(arrow_table)`` under threshold 0."""
+    with session_conf(spark, RELATION_THRESHOLD, "0"):
+        own = spark.createDataFrame(df.toArrow(), df.schema)
+    assert "Scan ExistingRDD arrow" in own._jdf.queryExecution().executedPlan().toString()
+    return own
+
+
 @pytest.mark.parametrize(
     "build",
     [
@@ -203,15 +213,29 @@ def test_declined_keys_take_the_marker_path(
         lambda spark, base: base.withColumn("r", F.rand()),
         lambda spark, base: base.withColumn("t", F.current_timestamp()),
         lambda spark, base: spark.range(1, 3).withColumn("v", F.lit("a")),
+        # the caller's own Arrow-batch relation, the kind a snapshot is,
+        # which the engine did not build
+        own_arrow_batches,
     ],
-    ids=["rdd", "rand", "clock", "range"],
+    ids=["rdd", "rand", "clock", "range", "own-arrow-batches"],
 )
 def test_caches_whose_rows_may_change_are_not_profiled(spark, build):
-    """Each cache has unique keys and a non-null ``v``; only the bare
-    local relation is profiled and finds ``v``."""
+    """Each cache has unique keys and a non-null ``v``; of these, only the
+    bare local relation is profiled and finds ``v``."""
     base = local_df(spark, [(1, "a"), (2, "b")], "id bigint, v string")
     assert lj._profile(base, ("id",)) == ("v",)
     assert lj._profile(build(spark, base), ("id",)) == ()
+
+
+@pytest.mark.parametrize("threshold", [None, "0", "1g"])
+def test_snapshot_is_profiled_at_any_relation_threshold(spark, http_server, threshold):
+    """A ``create_lookup_df`` snapshot is the Arrow-batch relation whatever
+    the session's threshold, and is profiled; a query over it is not."""
+    with session_conf(spark, RELATION_THRESHOLD, threshold):
+        snapshot = create_lookup_df(spark, {"url": http_server.url}, USERS_SCHEMA)
+    assert "Scan ExistingRDD arrow" in snapshot._jdf.queryExecution().executedPlan().toString()
+    assert lj._profile(snapshot, ("id",)) == ("name", "username", "email")
+    assert lj._profile(snapshot.where("id > 0"), ("id",)) == ()
 
 
 def test_data_source_cache_counts_every_generation_exactly(spark, http_server):

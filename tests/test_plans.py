@@ -197,8 +197,9 @@ def test_pricing_summary_pushes_filter_and_partial_aggs(spark):
 
 
 def test_lookup_df_is_local_relation(spark, http_server):
-    """The HTTP cache must materialize as a JVM local relation (no Python
-    workers, broadcastable without a scan stage)."""
+    """The HTTP cache must materialize as the JVM's Arrow-batch relation:
+    the driver ships IPC batches, each scan's tasks decode them, and no
+    Python worker runs."""
     from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
     from flink_http_full_cache_connector_spark.sources.lookup import create_lookup_df
@@ -214,7 +215,9 @@ def test_lookup_df_is_local_relation(spark, http_server):
         ]
     )
     df = create_lookup_df(spark, {"url": http_server.url}, schema)
-    assert "LocalTableScan" in plan_of(df)
+    plan = plan_of(df)
+    assert "Scan ExistingRDD arrow" in plan, plan
+    assert not any(p in plan for p in ("PythonRDD", "BatchEvalPython", "ArrowEvalPython")), plan
 
 
 def test_text_ops_are_scan_only(spark):

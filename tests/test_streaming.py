@@ -33,7 +33,7 @@ from flink_http_full_cache_connector_spark.streaming.refresh import (
     RefreshingLookupCache,
     enrich_stream,
 )
-from tests.conftest import SF_DIR, USERS_V1, USERS_V2
+from tests.conftest import RELATION_THRESHOLD, SF_DIR, USERS_V1, USERS_V2, session_conf
 
 USERS_SCHEMA = StructType(
     [
@@ -196,17 +196,15 @@ def test_refresh_fault_keeps_snapshot_and_exact_path_reads_minus_zero(spark):
 
 @pytest.mark.parametrize("local_relation_threshold", [None, "0"])
 def test_refresh_snapshots_hold_no_spark_cache(spark, http_server, local_relation_threshold):
-    """Reloads build local relations and never register them with Spark's
-    cache, so nothing accumulates across reloads; the snapshot serves joins
-    from the JVM without fetching again.  A threshold of 0 turns the
-    snapshot into an RDD of Arrow batches instead of a LocalTableScan."""
+    """Reloads build Arrow-batch relations and never register them with
+    Spark's cache, so nothing accumulates across reloads; the snapshot
+    serves joins from the JVM without fetching again.  The snapshot is the
+    Arrow-batch relation whatever the session's threshold, and the
+    threshold reads back as the caller set it."""
     from flink_http_full_cache_connector_spark.operators.lookup_join import lookup_join
 
-    key = "spark.sql.execution.arrow.localRelationThreshold"
-    saved = spark.conf.get(key)
-    if local_relation_threshold is not None:
-        spark.conf.set(key, local_relation_threshold)
-    try:
+    with session_conf(spark, RELATION_THRESHOLD, local_relation_threshold):
+        threshold = spark.conf.get(RELATION_THRESHOLD)
         cache = RefreshingLookupCache(
             spark, {"url": http_server.url, "cache.refresh-interval": "PT1H"}, USERS_SCHEMA
         )
@@ -216,18 +214,15 @@ def test_refresh_snapshots_hold_no_spark_cache(spark, http_server, local_relatio
         snapshot = cache.current()
         plan = snapshot._jdf.queryExecution().executedPlan().toString()
         assert "InMemoryTableScan" not in plan
-        if local_relation_threshold is None:
-            assert "LocalTableScan" in plan, plan
-        else:
-            assert "LocalTableScan" not in plan and "ExistingRDD" in plan, plan
+        assert "Scan ExistingRDD arrow" in plan, plan
+        assert not any(p in plan for p in ("PythonRDD", "BatchEvalPython", "ArrowEvalPython"))
+        assert spark.conf.get(RELATION_THRESHOLD) == threshold
         fetched = http_server.request_count
         assert fetched == 21
         probe = spark.range(1, 13).select(F.col("id").cast("int").alias("user_id"))
         out = lookup_join(probe, snapshot, on=[("user_id", "id")], how="left").collect()
         assert sum(r.name is not None for r in out) == 10
         assert http_server.request_count == fetched
-    finally:
-        spark.conf.set(key, saved)
 
 
 def test_refresh_fail_fast_propagates(spark, http_server):
