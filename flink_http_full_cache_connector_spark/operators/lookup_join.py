@@ -18,9 +18,9 @@ from __future__ import annotations
 
 import functools
 import operator
-import weakref
 from collections.abc import Sequence
 
+import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -34,11 +34,12 @@ from pyspark.sql.types import (
     LongType,
     ShortType,
     StringType,
+    StructType,
     TimestampNTZType,
     TimestampType,
 )
 
-from flink_http_full_cache_connector_spark.sources.lookup import SNAPSHOTS
+from flink_http_full_cache_connector_spark.sources.lookup import RECORDS, Snapshot
 
 
 def lookup_join(
@@ -63,28 +64,21 @@ def lookup_join(
     """
     if how not in ("inner", "left", "left_outer", "leftouter"):
         raise ValueError(f"lookup_join supports inner/left, got {how!r}")
+    _cache_keys(on)  # refuses an on that names no key
 
     dim = F.broadcast(cache)
-
-    if isinstance(on, str):
+    if isinstance(on, (str, Column)):
         return probe.join(dim, on=on, how=how)
-    # a Column is truthy-hostile (PySpark raises CANNOT_CONVERT_COLUMN_INTO_BOOL
-    # on `if col`), so dispatch on it before any sequence inspection
-    if isinstance(on, Column):
-        return probe.join(dim, on=on, how=how)
-    if on and isinstance(on[0], tuple):
-        cond: Column | None = None
-        for probe_col, cache_col in on:  # type: ignore[misc]
-            clause = probe[probe_col] == cache[cache_col]
-            cond = clause if cond is None else (cond & clause)
-        joined = probe.join(dim, on=cond, how=how)
-        # The probe key column carries the value; the cache-side key is
-        # redundant (and NULL on LEFT misses) — drop it, matching the
-        # lookup-join select-lists which always project the probe key.
-        for _, cache_col in on:  # type: ignore[misc]
-            joined = joined.drop(cache[cache_col])
-        return joined
-    return probe.join(dim, on=list(on), how=how)  # type: ignore[arg-type]
+    if not isinstance(on[0], tuple):
+        return probe.join(dim, on=list(on), how=how)
+    cond = functools.reduce(operator.and_, (probe[p] == cache[c] for p, c in on))
+    joined = probe.join(dim, on=cond, how=how)
+    # The probe key column carries the value; the cache-side key is
+    # redundant (and NULL on LEFT misses) — drop it, matching the
+    # lookup-join select-lists which always project the probe key.
+    for _, cache_col in on:  # type: ignore[misc]
+        joined = joined.drop(cache[cache_col])
+    return joined
 
 
 _HIT_MARKER = "__lookup_hit__"
@@ -97,40 +91,23 @@ _EXACT_KEY_TYPES = (
     DateType, TimestampType, TimestampNTZType, BinaryType,
 )
 
-#: cache DataFrame → {cache key columns: witness candidates}
-_WITNESSES: weakref.WeakKeyDictionary[DataFrame, dict[tuple[str, ...], tuple[str, ...]]] = (
-    weakref.WeakKeyDictionary()
-)
-
 
 def _quoted(name: str) -> Column:
     """The column ``name`` as written, dots and backticks included."""
     return F.col("`" + name.replace("`", "``") + "`")
 
 
-def _profile(cache: DataFrame, keys: tuple[str, ...]) -> tuple[str, ...]:
-    """The witness candidates of ``cache`` joined on ``keys``.
+def _profile(table: pa.Table, schema: StructType, keys: tuple[str, ...]) -> tuple[str, ...]:
+    """The witness candidates of the rows ``table`` holds, typed by
+    ``schema``, joined on ``keys``.
 
     A candidate is a non-key column that is non-null on every row whose
     keys are all non-null (only those rows can match), and there are
     candidates only when those rows' keys are unique.  Then every probe
     row yields exactly one output row, and a candidate is non-null
-    exactly on the hits.  One driver-side pass: the matchable rows' keys
-    and the non-key columns' null flags, collected as Arrow.
-
-    Only a cache whose rows are the same on every evaluation is read: a
-    bare in-memory local relation (``cache.isLocal()``), or a snapshot
-    :func:`~sources.lookup.create_lookup_df` built (in
-    :data:`~sources.lookup.SNAPSHOTS`), whose Arrow batches the driver
-    shipped once and every scan decodes alike.  Anything else — a
-    data-source read, a table, file or RDD scan, a caller's own Arrow-batch
-    relation, a query over any relation — may yield other rows on its
-    next evaluation, so a profile of one says nothing of the next; it has
-    no candidates.
+    exactly on the hits.  One pyarrow pass on the driver, no Spark job.
     """
-    if not (cache.isLocal() or cache in SNAPSHOTS):
-        return ()
-    types = {f.name: f.dataType for f in cache.schema}
+    types = {f.name: f.dataType for f in schema}
     others = [c for c in types if c not in keys]
     # a key named in another case than the cache column takes the marker path
     exact = all(
@@ -139,44 +116,57 @@ def _profile(cache: DataFrame, keys: tuple[str, ...]) -> tuple[str, ...]:
     )
     if not others or not exact:
         return ()
-    matchable = functools.reduce(operator.and_, (_quoted(k).isNotNull() for k in keys))
-    table = (
-        cache.where(matchable)
-        .select(*map(_quoted, keys), *(_quoted(c).isNotNull() for c in others))
-        .toArrow()
-    )
+    rows = table.filter(functools.reduce(pc.and_, (pc.is_valid(table[k]) for k in keys)))
     # a set of Python tuples, not Arrow's group_by: same answer on these
     # key types, without loading Arrow's query engine into the driver
-    if len(set(zip(*(table.column(i).to_pylist() for i in range(len(keys)))))) != table.num_rows:
+    if len(set(zip(*(rows[k].to_pylist() for k in keys)))) != rows.num_rows:
         return ()
-    return tuple(
-        c for i, c in enumerate(others, len(keys))
-        if pc.all(table.column(i), min_count=0).as_py()
-    )
+    return tuple(c for c in others if rows[c].null_count == 0)
+
+
+def _candidates(cache: DataFrame, keys: tuple[str, ...]) -> tuple[str, ...]:
+    """The witness candidates of ``cache`` joined on ``keys``, profiled once
+    per key tuple and kept on the cache's record.
+
+    Only a cache whose rows are the same on every evaluation has a record:
+    a snapshot :func:`~sources.lookup.create_lookup_df` built, holding the
+    table its Arrow batches came from, or a bare in-memory local relation
+    (``cache.isLocal()``), whose record one ``toArrow`` fills.  Anything
+    else — a data-source read, a table, file or RDD scan, a caller's own
+    Arrow-batch relation, a query over any relation — may yield other rows
+    on its next evaluation, so it has no candidates.
+    """
+    record = RECORDS.get(cache)
+    if record is None:
+        if not cache.isLocal():
+            return ()
+        record = RECORDS[cache] = Snapshot(cache.toArrow())
+    if keys not in record.witnesses:
+        record.witnesses[keys] = _profile(record.table, cache.schema, keys)
+    return record.witnesses[keys]
 
 
 def _witness(probe: DataFrame, cache: DataFrame, keys: tuple[str, ...]) -> str | None:
     """A witness candidate no probe column shares a name with, so it
     resolves by name in the join output, even when the probe derives from
-    the cache itself.  :func:`_profile` runs once per cache DataFrame and
-    key tuple."""
-    by_keys = _WITNESSES.setdefault(cache, {})
-    if keys not in by_keys:
-        by_keys[keys] = _profile(cache, keys)
+    the cache itself."""
     # Spark resolves names case-insensitively by default
     taken = {c.lower() for c in probe.columns}
-    return next((c for c in by_keys[keys] if c.lower() not in taken), None)
+    return next((c for c in _candidates(cache, keys) if c.lower() not in taken), None)
 
 
 def _cache_keys(on) -> tuple[str, ...] | None:
-    """The cache-side key columns of ``on``; None for a raw ``Column``."""
-    if isinstance(on, str):
-        return (on,)
+    """The cache-side key columns of ``on``; None for a raw ``Column``.
+    An ``on`` that names no key is refused here, where Spark's ``join``
+    would fail on it with an unrelated error."""
     if isinstance(on, Column):
         return None
-    if on and isinstance(on[0], tuple):
-        return tuple(c for _, c in on)
-    return tuple(on)
+    if isinstance(on, str):
+        return (on,)
+    keys = tuple(c for _, c in on) if on and isinstance(on[0], tuple) else tuple(on)
+    if not keys:
+        raise ValueError(f"on must name at least one join key column, got {on!r}")
+    return keys
 
 
 def observed_lookup_join(
@@ -203,30 +193,32 @@ def observed_lookup_join(
     Both metrics count PROBE rows (lookup requests), not join output
     rows: a cache with duplicate join keys fans one probe row out to
     several matches, and counting output rows would inflate the hit rate.
-    Which of two plans counts them is decided once per cache DataFrame
-    object (and key columns), and remembered for as long as the DataFrame
-    lives.  A refreshed :class:`~streaming.refresh.RefreshingLookupCache`
-    snapshot is a new object and is decided again.
+    Which of two plans counts them is decided per cache DataFrame object
+    and key columns; for a cache with fixed rows, the profile that decides
+    is kept on its record for as long as the DataFrame lives.  A refreshed
+    :class:`~streaming.refresh.RefreshingLookupCache` snapshot is a new
+    object and is profiled again.
 
-    - **Witness path** — the cache's rows are fixed: it is a snapshot
+    - **Witness path** — the cache's rows are fixed: a snapshot
       :func:`~sources.lookup.create_lookup_df` built (an Arrow-batch
-      relation, whose batches each scan decodes in its tasks) or a bare
-      in-memory local relation (``cache.isLocal()``).  A driver-side
-      profile of those rows — one collect of the key columns and the null
-      flags as Arrow — finds the non-null join keys unique and some
-      non-key cache column (the *witness*) non-null on every row with
-      non-null keys, sharing its name with no probe column.  Each
-      probe row then yields exactly one output row, and the witness is
-      non-null exactly on the hits, so the observe is ``count(1)`` and
-      ``count(witness)`` over the plain join, the last operator of the
-      plan.  Measured against plain :func:`lookup_join` written to the
-      ``noop`` sink (8M-row, 16-partition probe, 10k-row snapshot,
-      ``local[4]``, interleaved in one process): 0.34 s against 0.28 s
-      (+22%), plus one profile per snapshot (0.1–0.3 s for 10k rows).
-      A snapshot that fails the profile (duplicate keys, no witness) pays
-      that profile once and then takes the marker path; a caller that
-      builds a new snapshot object for every join pays it on every join
-      (+0.15–0.19 s measured on 10k rows).
+      relation) or a bare in-memory local relation (``cache.isLocal()``).
+      A pyarrow profile of those rows on the driver — the table the
+      snapshot was built from, or one ``toArrow`` of the local relation —
+      finds the non-null join keys unique and some non-key cache column
+      (the *witness*) non-null on every row with non-null keys, sharing
+      its name with no probe column.  Each probe row then yields exactly
+      one output row, and the witness is non-null exactly on the hits, so
+      the observe is ``count(1)`` and ``count(witness)`` over the plain
+      join, the last operator of the plan.  Measured against plain
+      :func:`lookup_join` written to the ``noop`` sink (8M-row,
+      16-partition probe, 10k-row snapshot, ``local[4]``, interleaved in
+      one process): 0.34 s against 0.28 s (+22%).  Over a snapshot,
+      building the observed join starts no Spark job; its one profile
+      takes ~5 ms for 10k rows and ~9 ms for 20k (perfbench dimension,
+      4-core VM), which a caller that builds a new snapshot for every join
+      pays on every join (a 200k-row observed join: 0.102 s against a
+      fresh snapshot and against the same one).  A snapshot that fails the
+      profile (duplicate keys, no witness) takes the marker path.
     - **Marker path** — every other cache: rows that may change between
       evaluations (a data-source read, a table, file or RDD scan — these
       are never profiled), duplicate keys, key columns only, no usable
@@ -253,6 +245,7 @@ def observed_lookup_join(
     metrics still flow, but ``lookup_total`` then means "probe rows
     that produced output", not "lookup requests".
     """
+    key_cols = _cache_keys(on)
     if how in ("left_outer", "leftouter"):
         how = "left"
     if how != "left":
@@ -266,7 +259,6 @@ def observed_lookup_join(
             UserWarning,
             stacklevel=2,
         )
-    key_cols = _cache_keys(on)
     witness = None if key_cols is None else _witness(probe, cache, key_cols)
     if witness is None:
         return _marked_join(probe, cache, on, how, observation, key_cols)

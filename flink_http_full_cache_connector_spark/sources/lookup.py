@@ -67,9 +67,19 @@ class FetchStats:
         }
 
 
-#: the snapshots :func:`create_lookup_df` built; their rows are the same on
-#: every evaluation (see :func:`operators.lookup_join._profile`)
-SNAPSHOTS: weakref.WeakSet[DataFrame] = weakref.WeakSet()
+@dataclass
+class Snapshot:
+    """The rows of a DataFrame that are the same on every evaluation, as
+    the Arrow table they came from; ``witnesses`` keeps what
+    :func:`operators.lookup_join._profile` found in it per key tuple."""
+
+    table: pa.Table
+    witnesses: dict[tuple[str, ...], tuple[str, ...]] = dataclass_field(default_factory=dict)
+
+
+#: the snapshots :func:`create_lookup_df` built and the bare local relations
+#: an observed join profiled; a record, table and all, goes with its DataFrame
+RECORDS: weakref.WeakKeyDictionary[DataFrame, Snapshot] = weakref.WeakKeyDictionary()
 
 _RELATION_THRESHOLD = "spark.sql.execution.arrow.localRelationThreshold"
 #: serializes the scoped threshold below across threads sharing a session;
@@ -109,46 +119,40 @@ def create_lookup_df(
     """Build the full-cache lookup DataFrame (one bounded scan).
 
     The whole payload lives on the driver ≙ the reference's single
-    ``GenericInputSplit`` (``HttpInputFormatProvider.scala:80-81``).  The
-    body becomes one Arrow table, which is handed to the JVM as Spark's
-    Arrow-batch relation:
+    ``GenericInputSplit`` (``HttpInputFormatProvider.scala:80-81``) and
+    becomes one Arrow table:
 
-    - :func:`rows.read_arrow` reads the body straight into Arrow in one
-      C++ ``pyarrow.json`` pass, with no Python object per value;
-    - when it declines a body it might read differently from the
-      reference (see :mod:`rows`), the exact path builds the table:
+    - :func:`rows.read_arrow` reads the body in one C++ ``pyarrow.json``
+      pass, with no Python object per value;
+    - a body it declines, one it might read differently from the
+      reference (see :mod:`rows`), takes the exact path:
       :func:`parse_payload` (``json.loads``, the pointer, the fan-out),
-      :func:`rows.deserialize_nodes` and :func:`rows.rows_table`.  It gives
-      the reference's values and error text, and counts in
-      ``stats.arrow_fallbacks``.
+      :func:`rows.deserialize_nodes` and :func:`rows.rows_table`, with the
+      reference's values and error text; ``stats.arrow_fallbacks`` counts it.
 
     On perfbench ``dim_load``'s 20k-row, 7-column body (4-core VM,
-    in-process) the reader takes ~30-45 ms.  A body it declines pays that
-    pass on top of the exact path: ~0.45-0.6 s in all, nearly all of it
-    :func:`rows.deserialize_nodes` (a ``-0`` score, an ``id`` as text or a
-    7-digit fraction in one of the 20k records).  The table is coerced
-    and cast to the declared Arrow schema eagerly, so a payload that does
-    not coerce fails here; decoding a valid IPC batch cannot fail on values.
+    in-process) the reader takes ~30-45 ms; a declined body pays that on
+    top of the exact path, ~0.45-0.6 s in all.  The table is coerced and
+    cast to the declared Arrow schema eagerly, so a payload that does not
+    coerce fails here; decoding a valid IPC batch cannot fail on values.
 
-    The relation is always **``Scan ExistingRDD arrow``**, a ``LogicalRDD``
-    over the IPC batches the driver shipped (one per
-    ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows), whatever
+    The table goes to the JVM as Spark's Arrow-batch relation, **``Scan
+    ExistingRDD arrow``**, whatever
     ``spark.sql.execution.arrow.localRelationThreshold`` is: it is set to 0
     around the one ``createDataFrame`` call, under a module lock, and the
-    caller's value is restored.  The Arrow → row decode runs in the tasks
-    of each scan (for a lookup join, the broadcast job), not on the driver;
-    no Python worker runs.  A table with no rows ships no batch, and Spark
-    keeps it an empty local relation.
+    caller's value is restored.  Each scan (for a lookup join, the
+    broadcast job) decodes the batches in its tasks, with no Python worker;
+    a table with no rows ships no batch and stays an empty local relation.
+    The default threshold's ``LocalTableScan`` would copy every row into a
+    driver-side ``LocalRelation`` that the analyzer walks on every refresh
+    and every join plan: on perfbench's bodies (4-core VM, medians)
+    ``createDataFrame`` of 20k rows 54 → 14 ms, planning one join of the
+    8M-row probe 74 → 20 ms.
 
-    Why not the ``LocalTableScan`` the default threshold gives up to 48 MB:
-    it copies every row into a driver-side ``LocalRelation``, which the
-    analyzer walks row by row on every refresh and again for every join
-    planned over the snapshot.  Measured in-process on perfbench's bodies
-    (4-core VM, medians, local relation → Arrow-batch relation):
-    ``createDataFrame`` of the 20k-row table 54 → 14 ms; planning one join
-    of the 8M-row probe against the snapshot 74 → 20 ms (20k rows) and
-    42 → 18 ms (10k rows); a ``count`` over the 20k-row snapshot
-    185 → 97 ms.
+    The table stays on the driver in the snapshot's :data:`RECORDS` entry
+    for as long as the snapshot lives (1.76 MB at 20k rows), so an observed
+    join profiles its witness with no Spark job
+    (:func:`operators.lookup_join._profile`).
     """
     if isinstance(schema, str):
         # DDL-string convenience (`"id INT, name STRING"`); without this,
@@ -164,7 +168,7 @@ def create_lookup_df(
     if declined:
         table = rows_table(deserialize_nodes(parse_payload(body, opts.xpath), schema), schema)
     df = _arrow_relation(spark, table, schema)
-    SNAPSHOTS.add(df)
+    RECORDS[df] = Snapshot(table)
     stats.fetch_count += 1
     stats.arrow_fallbacks += declined
     stats.last_fetch_duration_s = time.monotonic() - t0

@@ -7,25 +7,35 @@ exact on any cache, so it is the reference.  Both must give the same
 and the same join output rows, on random caches with unique, duplicate
 and null keys, null non-key values, and key columns only.  The caches are
 in-memory local relations built from Arrow; ``create_lookup_df`` snapshots
-(Arrow-batch relations) are profiled too, and a cache whose rows may change
-between evaluations must take the marker path unprofiled.
+(Arrow-batch relations) are profiled too, from the table they were built
+from and with no Spark job, and a cache whose rows may change between
+evaluations must take the marker path unprofiled.  The profile over an
+Arrow table is checked against the Spark-side profile it replaced.
 """
 
 from __future__ import annotations
 
+import functools
+import gc
+import operator
 import re
 import warnings
+import weakref
+from datetime import date, datetime, timezone
+from decimal import Decimal
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import Observation, Row
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_type
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StringType, StructType
 
 from flink_http_full_cache_connector_spark.operators import lookup_join as lj
+from flink_http_full_cache_connector_spark.sources import lookup
 from flink_http_full_cache_connector_spark.sources.datasource import register
 from flink_http_full_cache_connector_spark.sources.lookup import create_lookup_df
 from flink_http_full_cache_connector_spark.streaming.refresh import RefreshingLookupCache
@@ -51,16 +61,21 @@ key = st.one_of(st.none(), st.integers(0, 3))
 value = st.one_of(st.none(), st.text("xyz", max_size=2))
 
 
-def local_df(spark, rows, ddl):
-    """``rows`` as an in-memory local relation, built from Arrow as
-    ``create_lookup_df`` builds a snapshot."""
+def arrow_table(rows, ddl):
+    """``rows`` as an Arrow table of the DDL schema ``ddl``, and that schema."""
     schema = StructType.fromDDL(ddl)
     columns = list(zip(*rows)) or [()] * len(schema)
     table = pa.Table.from_arrays(
         [pa.array(c, to_arrow_type(f.dataType)) for c, f in zip(columns, schema)],
         names=schema.names,
     )
-    return spark.createDataFrame(table, schema)
+    return table, schema
+
+
+def local_df(spark, rows, ddl):
+    """``rows`` as an in-memory local relation, built from Arrow as
+    ``create_lookup_df`` builds a snapshot."""
+    return spark.createDataFrame(*arrow_table(rows, ddl))
 
 
 @st.composite
@@ -197,6 +212,85 @@ def test_declined_keys_take_the_marker_path(
     assert "Window" in df._jdf.queryExecution().executedPlan().toString()
 
 
+#: per key type, a value for each small int the ``cases`` keys draw: every
+#: type the witness path profiles, and the floating types it declines
+KEY_VALUES = {
+    "boolean": lambda i: i % 2 == 1,
+    "tinyint": lambda i: i - 2,
+    "smallint": lambda i: i * 1000,
+    "int": lambda i: i,
+    "bigint": lambda i: i << 40,
+    "decimal(5,2)": lambda i: Decimal(i) / 4,
+    "date": lambda i: date(2024, 1, 1 + i),
+    "timestamp": lambda i: datetime(2024, 1, 1, i, tzinfo=timezone.utc),
+    "timestamp_ntz": lambda i: datetime(2024, 1, 1, 0, 0, i),
+    "binary": lambda i: bytes([i]) * i,
+    "string": lambda i: "é" * i,
+    "double": lambda i: i / 2,
+    "float": lambda i: i / 2,
+}
+
+
+def spark_profile(cache, keys):
+    """The Spark-side profile that the profile over the snapshot's table
+    replaced: one job collects the matchable rows' keys and the non-key
+    columns' null flags as Arrow."""
+    types = {f.name: f.dataType for f in cache.schema}
+    others = [c for c in types if c not in keys]
+    exact = all(
+        isinstance(types.get(k), lj._EXACT_KEY_TYPES) or types.get(k) == StringType()
+        for k in keys
+    )
+    if not others or not exact:
+        return ()
+    matchable = functools.reduce(operator.and_, (lj._quoted(k).isNotNull() for k in keys))
+    table = (
+        cache.where(matchable)
+        .select(*map(lj._quoted, keys), *(lj._quoted(c).isNotNull() for c in others))
+        .toArrow()
+    )
+    if len(set(zip(*(table.column(i).to_pylist() for i in range(len(keys)))))) != table.num_rows:
+        return ()
+    return tuple(
+        c for i, c in enumerate(others, len(keys))
+        if pc.all(table.column(i), min_count=0).as_py()
+    )
+
+
+@pytest.mark.parametrize(
+    ("key_type", "key_case"),
+    [(t, False) for t in KEY_VALUES] + [("int", True)],
+    ids=[*KEY_VALUES, "key-case"],
+)
+@settings(max_examples=6, deadline=None)
+@given(case=cases())
+# a witness, unless declined: the null value is on a row a null key
+# keeps from matching
+@example(
+    case=("str", 2, [(None, None, "x"), (1, "a", None), (2, "b", "y")], [], "left", NAMES[0])
+)
+# a duplicated key, among null ones
+@example(case=("multi", 1, [(1, None, "a"), (1, 2, "b"), (1, 2, "c")], [], "left", NAMES[1]))
+def test_table_profile_matches_spark_profile(spark, key_type, key_case, case):
+    """The profile over an Arrow table gives the Spark-side profile's
+    witnesses, over the snapshot relation built from the table and over
+    a local relation of it; declined key types and a key named in another
+    case have none."""
+    shape, n_values, cache_rows, _, _, names = case
+    cache_keys = SHAPES[shape][0]
+    width = len(cache_keys)
+    value = KEY_VALUES[key_type]
+    rows = [tuple(k if k is None else value(k) for k in r[:width]) + r[width:] for r in cache_rows]
+    columns = [f"{k} {key_type}" for k in cache_keys] + [f"`{n}` string" for n in names[:n_values]]
+    table, schema = arrow_table(rows, ", ".join(columns))
+    keys = tuple(k.upper() for k in cache_keys) if key_case else cache_keys
+    want = spark_profile(lookup._arrow_relation(spark, table, schema), keys)
+    assert lj._profile(table, schema, keys) == want
+    assert lj._candidates(spark.createDataFrame(table, schema), keys) == want
+    if key_case or key_type in ("double", "float"):
+        assert want == ()
+
+
 def own_arrow_batches(spark, df):
     """``df``'s rows as ``createDataFrame(arrow_table)`` under threshold 0."""
     with session_conf(spark, RELATION_THRESHOLD, "0"):
@@ -223,8 +317,8 @@ def test_caches_whose_rows_may_change_are_not_profiled(spark, build):
     """Each cache has unique keys and a non-null ``v``; of these, only the
     bare local relation is profiled and finds ``v``."""
     base = local_df(spark, [(1, "a"), (2, "b")], "id bigint, v string")
-    assert lj._profile(base, ("id",)) == ("v",)
-    assert lj._profile(build(spark, base), ("id",)) == ()
+    assert lj._candidates(base, ("id",)) == ("v",)
+    assert lj._candidates(build(spark, base), ("id",)) == ()
 
 
 @pytest.mark.parametrize("threshold", [None, "0", "1g"])
@@ -234,8 +328,8 @@ def test_snapshot_is_profiled_at_any_relation_threshold(spark, http_server, thre
     with session_conf(spark, RELATION_THRESHOLD, threshold):
         snapshot = create_lookup_df(spark, {"url": http_server.url}, USERS_SCHEMA)
     assert "Scan ExistingRDD arrow" in snapshot._jdf.queryExecution().executedPlan().toString()
-    assert lj._profile(snapshot, ("id",)) == ("name", "username", "email")
-    assert lj._profile(snapshot.where("id > 0"), ("id",)) == ()
+    assert lj._candidates(snapshot, ("id",)) == ("name", "username", "email")
+    assert lj._candidates(snapshot.where("id > 0"), ("id",)) == ()
 
 
 def test_data_source_cache_counts_every_generation_exactly(spark, http_server):
@@ -280,11 +374,14 @@ def operators(df) -> list[str]:
 def test_unique_snapshot_plan_and_one_profile_per_snapshot(spark, http_server, monkeypatch):
     """On a unique-keyed refresh snapshot the observe is the plan's last
     operator, over a join with no Window and no cache-side shuffle, and the
-    snapshot is profiled once, then once more after a reload."""
+    snapshot is profiled once, then once more after a reload.  The old
+    snapshot's record, kept table and profile, goes with it."""
     profiles = []
     profile = lj._profile
     monkeypatch.setattr(
-        lj, "_profile", lambda cache, keys: profiles.append(keys) or profile(cache, keys)
+        lj,
+        "_profile",
+        lambda table, schema, keys: profiles.append(keys) or profile(table, schema, keys),
     )
     cache = RefreshingLookupCache(
         spark, {"url": http_server.url, "cache.refresh-interval": "PT1H"}, USERS_SCHEMA
@@ -307,6 +404,68 @@ def test_unique_snapshot_plan_and_one_profile_per_snapshot(spark, http_server, m
     assert profiles == [("id",)]
     join()
     assert profiles == [("id",)]  # same snapshot object: no second profile
+    record = weakref.ref(lookup.RECORDS[cache.current()])
+    assert record().table.num_rows == len(USERS_V1)
+    assert record().witnesses == {("id",): ("name", "username", "email")}
     cache.check_and_reload(force=True)
+    gc.collect()
+    assert record() is None
     join()
     assert profiles == [("id",), ("id",)]
+
+
+def test_observed_join_over_a_snapshot_starts_no_job(spark, http_server):
+    """Building an observed join over a ``create_lookup_df`` or
+    ``RefreshingLookupCache`` snapshot profiles it from the kept table:
+    no Spark job runs until the join's own action."""
+    refreshing = RefreshingLookupCache(
+        spark, {"url": http_server.url, "cache.refresh-interval": "PT1H"}, USERS_SCHEMA
+    )
+    snapshots = {
+        "create_lookup_df": create_lookup_df(spark, {"url": http_server.url}, USERS_SCHEMA),
+        "refreshing": refreshing.current(),
+    }
+    probe = spark.createDataFrame([Row(user_id=i % 12 + 1) for i in range(12)])
+    sc = spark.sparkContext
+    listener_bus = sc._jsc.sc().listenerBus()
+
+    def jobs(group):
+        listener_bus.waitUntilEmpty()
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+
+    for name, snapshot in snapshots.items():
+        group = f"observed-join-over-{name}"
+        sc.setJobGroup(group, "build an observed join, then run it")
+        try:
+            obs = Observation()
+            joined = lj.observed_lookup_join(
+                probe, snapshot, [("user_id", "id")], observation=obs
+            )
+            built = jobs(group)
+            joined.write.format("noop").mode("overwrite").save()
+            ran = jobs(group)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert built == [] and ran, (name, built, ran)
+        assert obs.get == {"lookup_total": 12, "lookup_hits": 10}
+        assert "Window" not in operators(joined)
+
+
+@pytest.mark.parametrize("on", [[], ()], ids=["list", "tuple"])
+@pytest.mark.parametrize(
+    "join",
+    [
+        lj.lookup_join,
+        lambda probe, cache, on: lj.observed_lookup_join(
+            probe, cache, on, observation=Observation()
+        ),
+    ],
+    ids=["lookup_join", "observed_lookup_join"],
+)
+def test_empty_on_is_refused(spark, join, on):
+    """An ``on`` that names no join key is refused at the boundary, with
+    an error that names the argument."""
+    cache = local_df(spark, [(1, "a")], "id int, v string")
+    probe = spark.createDataFrame([(1,)], "id int")
+    with pytest.raises(ValueError, match=r"^on must name at least one join key"):
+        join(probe, cache, on)

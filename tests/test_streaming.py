@@ -5,6 +5,8 @@ collect-N (B10), and the flagship example-job shape (§3.3)."""
 import json
 import math
 import os
+import socket
+import struct
 import threading
 import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -251,8 +253,10 @@ def test_refresh_fail_fast_propagates(spark, http_server):
 
 @pytest.fixture()
 def truncating_server():
-    """Serves USERS_V1; the first GET's body stops halfway through its
-    declared ``Content-Length`` and the connection closes."""
+    """Serves USERS_V1; the first GET's body, or every GET's once
+    ``broken`` is set, stops halfway through its declared
+    ``Content-Length``.  The connection then closes, or with ``reset`` set
+    it is reset: ``SO_LINGER`` 0 makes the close send an RST."""
 
     class Handler(BaseHTTPRequestHandler):
         def do_GET(self):  # noqa: N802
@@ -262,13 +266,22 @@ def truncating_server():
             self.send_header("Content-Type", "application/json")
             self.send_header("Content-Length", str(len(body)))
             self.end_headers()
-            self.wfile.write(body if self.server.gets > 1 else body[: len(body) // 2])
+            if self.server.gets > 1 and not self.server.broken:
+                self.wfile.write(body)
+                return
+            self.wfile.write(body[: len(body) // 2])
+            if self.server.reset:
+                self.connection.setsockopt(
+                    socket.SOL_SOCKET, socket.SO_LINGER, struct.pack("ii", 1, 0)
+                )
+                self.rfile.close()  # the socket closes once no file holds it
+                self.connection.close()
 
         def log_message(self, *args):
             pass
 
     httpd = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-    httpd.gets = 0
+    httpd.gets, httpd.broken, httpd.reset = 0, False, False
     thread = threading.Thread(target=httpd.serve_forever, daemon=True)
     thread.start()
     try:
@@ -279,19 +292,34 @@ def truncating_server():
 
 
 def test_refresh_retries_a_truncated_body(spark, truncating_server):
-    """A body shorter than its Content-Length is a failed attempt: the
-    load retries, and the next, whole response becomes the snapshot."""
+    """A body shorter than its Content-Length is a failed attempt, whether
+    the connection then closes or is reset mid-body: the load retries, and
+    the next, whole response becomes the snapshot.  An endpoint that resets
+    every response fails the reload fast with the reference's message, and
+    the old snapshot keeps serving."""
     host, port = truncating_server.server_address
-    cache = RefreshingLookupCache(
-        spark,
-        {"url": f"http://{host}:{port}/users", "max.retries": "2", "retry.delay.ms": "1"},
-        USERS_SCHEMA,
-    )
-    assert truncating_server.gets == 2
-    m = cache.metrics()
-    assert (m["http_attempts"], m["http_retries"], m["http_failures"]) == (2, 1, 1)
-    assert m["refresh_count"] == 1
-    assert sorted(r.id for r in cache.current().collect()) == list(range(1, 11))
+    url = f"http://{host}:{port}/users"
+    for reset in (False, True):
+        truncating_server.gets, truncating_server.reset = 0, reset
+        cache = RefreshingLookupCache(
+            spark, {"url": url, "max.retries": "2", "retry.delay.ms": "1"}, USERS_SCHEMA
+        )
+        assert truncating_server.gets == 2
+        m = cache.metrics()
+        assert (m["http_attempts"], m["http_retries"], m["http_failures"]) == (2, 1, 1)
+        assert m["refresh_count"] == 1
+        assert sorted(r.id for r in cache.current().collect()) == list(range(1, 11))
+
+    truncating_server.broken = True
+    before = cache.current()
+    t0 = time.monotonic()
+    with pytest.raises(HttpFetchError) as exc:
+        cache.check_and_reload(force=True)
+    assert time.monotonic() - t0 < 10  # the read timeout is 30 s
+    assert str(exc.value) == f"Failed to fetch data from {url} after 2 retries"
+    assert isinstance(exc.value.__cause__, ConnectionResetError)
+    assert truncating_server.gets == 5
+    assert cache.current() is before
 
 
 def test_refresh_schema_drift_fails_and_old_snapshot_serves(spark, http_server):
