@@ -20,9 +20,8 @@ import time
 
 #: The driver records only the LAST 2000 stdout bytes; the machine line plus
 #: its newline is the final thing printed, so anything <= this budget
-#: survives the window whole.  ONE constant shared with the contract test
-#: (tests/test_bench_contract.py) — round-7 ADVICE flagged the loop and the
-#: test pinning two different numbers (1985 vs 1990).
+#: survives the window whole.  The contract test
+#: (tests/test_bench_contract.py) asserts the line fits it.
 MACHINE_LINE_BUDGET = 1985
 
 
@@ -112,30 +111,13 @@ def main() -> None:
 
     total = round(sum(timings.values()), 3)
 
-    # The driver keeps only the LAST 2000 bytes of stdout (BENCH_r01.json:
-    # len(tail) == 2000, parsed: null — the full-name line was ~4 KB and lost
-    # its head).  So the one machine-read line uses deterministic short query
-    # keys (registry.short_keys) and compact separators to stay well under
-    # the window; the full-name timings + the key mapping go to repo files
-    # (BENCH_FULL.json, BENCH_KEYS.json) and to stderr above.
-    from flink_http_full_cache_connector_spark.plans.registry import short_keys
-
-    skey = short_keys(list(timings))
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
+    # The full timings and the run's conditions go to a file; stdout's one
+    # machine line carries the per-query timings alone.
     # SPARK_GRAFT_BENCH_OUT: alternate full-timings path so scale/spot
-    # sweeps don't clobber the driver-read BENCH_FULL.json / BENCH_KEYS.json
-    out_full = os.environ.get("SPARK_GRAFT_BENCH_OUT")
-    if out_full is None:
-        out_full = os.path.join(repo_dir, "BENCH_FULL.json")
-        keys_path = os.path.join(repo_dir, "BENCH_KEYS.json")
-    else:
-        # subset/spot runs (SPARK_GRAFT_ONLY) resolve short-key collisions
-        # against the SUBSET's name list, which can disagree with the
-        # committed BENCH_KEYS.json — write the run's own mapping next to
-        # out_full and point the machine line's keymap there instead
-        keys_path = os.path.splitext(out_full)[0] + ".keys.json"
-    with open(keys_path, "w") as f:
-        json.dump({v: k for k, v in skey.items()}, f, indent=1, sort_keys=True)
+    # sweeps don't clobber the committed BENCH_FULL.json
+    out_full = os.environ.get("SPARK_GRAFT_BENCH_OUT") or os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"
+    )
     with open(out_full, "w") as f:
         json.dump(
             {
@@ -165,56 +147,21 @@ def main() -> None:
             indent=1,
         )
 
-    def _num(v: float, decimals: int) -> float | int:
-        # integral values serialize as ints ("2", not "2.0") — without this
-        # the 0-decimal fallback rung never actually shrank the line
-        # (round(v, 0) is a float, json prints "2.0"), and at 200+ queries
-        # the ".0" tax decides whether the 1-decimal rung fits
-        r = round(v, decimals)
-        i = int(r)
-        return i if i == r else r
-
-    def machine_line(decimals: int, keymap: bool = True) -> str:
-        q = {skey[n]: _num(t, decimals) for n, t in timings.items()}
-        # value recomputed FROM the emitted per-query values so the line is
-        # internally consistent at any rounding (value == sum(queries))
-        payload = {
-            "metric": "total_query_wall_seconds",
-            "value": round(sum(q.values()), decimals),
-            "unit": "sec",
-            "queries": q,
-            "sf": sf,
-            "cpus": cpus,
-        }
-        if keymap:
-            payload["keymap"] = os.path.basename(keys_path)
-        return json.dumps(payload, separators=(",", ":"))
-
-    # never hand the driver a head-truncatable line (it keeps only the last
-    # 2000 stdout bytes): drop per-query precision until the line fits —
-    # full 3-decimal timings always live in BENCH_FULL.json.  The keymap
-    # pointer is shed before the final precision drop: 1-decimal timings
-    # are worth more than 27 bytes of self-description (the mapping still
-    # lives in BENCH_KEYS.json either way).
-    # fit budget: MACHINE_LINE_BUDGET (module top) — keeping it high is what
-    # keeps the 1-decimal rung alive at 200+ queries under noisy
-    # (longer-digit) timings; the 0-decimal fallback costs sub-second
-    # fidelity for most of the registry
-    line = machine_line(3)
-    for decimals, keymap in ((2, True), (1, True), (1, False), (0, False)):
-        if len(line) <= MACHINE_LINE_BUDGET:
-            break
-        line = machine_line(decimals, keymap)
-    if len(line) > MACHINE_LINE_BUDGET:
-        # even the 0-decimal rung overflowed (a much larger registry than
-        # today's): say so loudly on stderr — the driver's window WILL
-        # truncate the line's head and lose timings
-        print(
-            f"# WARNING: machine line is {len(line)} bytes, over the "
-            f"{MACHINE_LINE_BUDGET}-byte driver window even at 0 decimals",
-            file=sys.stderr,
+    # full query names at 3 decimals: 22 queries make a line of ~760 bytes
+    # at worst, inside MACHINE_LINE_BUDGET
+    print(
+        json.dumps(
+            {
+                "metric": "total_query_wall_seconds",
+                "value": total,
+                "unit": "sec",
+                "queries": timings,
+                "sf": sf,
+                "cpus": cpus,
+            },
+            separators=(",", ":"),
         )
-    print(line)
+    )
     spark.stop()
 
 

@@ -8,12 +8,19 @@ Re-expresses the reference runtime's fetch path
   read, redirects followed, non-200 → retry, up to
   ``max_retries`` retries with a fixed ``retry_delay_ms`` sleep; exhaustion
   raises ``RuntimeError`` with the reference's message text (fail-fast, no
-  stale-cache fallback).
+  stale-cache fallback).  It returns the body as UTF-8 bytes, undecoded.
 - ``resolve_json_pointer`` — RFC 6901 resolution incl. ``~0``/``~1``
   unescaping; ``""`` means root; a non-matching pointer is a hard error.
-- ``parse_payload`` — parse the body, resolve the pointer, then fan out:
-  JSON array → N rows, single object → 1 row
+- ``parse_payload`` — decode the body, parse it, resolve the pointer, then
+  fan out: JSON array → N rows, single object → 1 row
   (``HttpInputFormatProvider.scala:126-158``).
+
+The body is decoded the way the reference's ``BodyHandlers.ofString()``
+decodes it: in the Content-Type's charset, UTF-8 when that is missing or
+unsupported, malformed bytes read as U+FFFD.  So a decode never fails an
+attempt.  A body in another charset is transcoded to UTF-8 on receipt; a
+UTF-8 body stays the bytes received until the one decode in
+``parse_payload``, which a body ``rows.read_arrow`` takes never pays.
 
 Kept free of PySpark imports so both the driver-side cache builder and the
 Python Data Source reader (executor-side) can use it.
@@ -21,6 +28,7 @@ Python Data Source reader (executor-side) can use it.
 
 from __future__ import annotations
 
+import codecs
 import http.client
 import json
 import time
@@ -105,14 +113,27 @@ class _HTTPSHandler(urllib.request.HTTPSHandler):
 _OPENER = urllib.request.build_opener(_HTTPHandler, _HTTPSHandler)
 
 
+def _as_utf8(body: bytes, charset: str) -> bytes:
+    """``body``, in ``charset``, as UTF-8: the very object when the charset
+    is UTF-8, missing (``charset`` then is ``"utf-8"``) or unsupported, else
+    one decode with malformed bytes as U+FFFD and one encode."""
+    try:
+        name = codecs.lookup(charset).name
+        return body if name == "utf-8" else body.decode(name, "replace").encode()
+    except (LookupError, UnicodeError):
+        # unknown, not a text encoding (``base64``) or unable to replace
+        # (``idna``): read as UTF-8, as ofString() reads an unsupported one
+        return body
+
+
 def fetch_with_retry(
     opts: HttpLookupOptions,
     *,
     sleep: Callable[[float], None] = time.sleep,
     opener: Callable[..., Any] = _OPENER.open,
     metrics: RequestMetrics | None = None,
-) -> str:
-    """GET ``opts.url`` returning the response body as text.
+) -> bytes:
+    """GET ``opts.url`` returning the response body as UTF-8 bytes.
 
     Semantics pinned by ``HttpInputFormatProvider.scala:83-124``: the loop
     runs ``max_retries + 1`` attempts total; any exception (including a
@@ -122,7 +143,8 @@ def fetch_with_retry(
     followed (urllib default ≙ HttpClient.Redirect.NORMAL).
     ``connect_timeout_seconds`` bounds the connect and
     ``read_timeout_seconds`` each socket read; a timeout is a failed
-    attempt like any other.
+    attempt like any other.  The body's bytes never fail an attempt
+    (:func:`_as_utf8`).
 
     ``sleep``/``opener`` are injection points for tests: ``opener`` is
     called as ``opener(request, timeout=(connect_s, read_s))``.  Without
@@ -154,7 +176,7 @@ def fetch_with_retry(
                     charset = headers.get_content_charset() or "utf-8"
                 metrics.last_duration_s = time.monotonic() - t0
                 metrics.total_duration_s += metrics.last_duration_s
-                return body.decode(charset)
+                return _as_utf8(body, charset)
         except urllib.error.HTTPError as e:
             # urllib raises on 4xx/5xx; normalize to the reference's message.
             body = e.read().decode("utf-8", "replace") if e.fp else ""
@@ -213,15 +235,18 @@ def resolve_json_pointer(document: Any, pointer: str) -> Any:
     return node
 
 
-def parse_payload(body: str, pointer: str = "") -> list[Any]:
-    """Parse the HTTP body and fan out to a list of row-nodes.
+def parse_payload(body: bytes, pointer: str = "") -> list[Any]:
+    """Parse the UTF-8 HTTP body and fan out to a list of row-nodes.
 
     ``HttpInputFormatProvider.scala:126-158``: malformed JSON →
     ``RuntimeError("Failed to parse JSON response")``; pointer-extract; then
-    array → one node per element, anything else → single node.
+    array → one node per element, anything else → single node.  The body
+    is decoded once, malformed bytes as U+FFFD, and the ``str`` parsed:
+    ``json.loads`` of the bytes would guess their encoding and skip a
+    UTF-8 BOM, which fails the parse here as it does in the reference.
     """
     try:
-        document = json.loads(body)
+        document = json.loads(body.decode("utf-8", "replace"))
     except Exception as e:
         raise RuntimeError("Failed to parse JSON response") from e
     node = resolve_json_pointer(document, pointer)

@@ -42,6 +42,15 @@ from pyspark.sql.types import (
 from flink_http_full_cache_connector_spark.sources.lookup import RECORDS, Snapshot
 
 
+#: the ``how`` values :func:`lookup_join` and :func:`observed_lookup_join` take
+_HOWS = ("inner", "left", "left_outer", "leftouter")
+
+
+def _check_how(how: str) -> None:
+    if how not in _HOWS:
+        raise ValueError(f"lookup_join supports inner/left, got {how!r}")
+
+
 def lookup_join(
     probe: DataFrame,
     cache: DataFrame,
@@ -62,8 +71,7 @@ def lookup_join(
     always broadcast: the reference's memory contract is that the whole
     dimension fits in memory next to the probe.
     """
-    if how not in ("inner", "left", "left_outer", "leftouter"):
-        raise ValueError(f"lookup_join supports inner/left, got {how!r}")
+    _check_how(how)
     _cache_keys(on)  # refuses an on that names no key
 
     dim = F.broadcast(cache)
@@ -245,6 +253,7 @@ def observed_lookup_join(
     metrics still flow, but ``lookup_total`` then means "probe rows
     that produced output", not "lookup requests".
     """
+    _check_how(how)  # before the warning below and the profile
     key_cols = _cache_keys(on)
     if how in ("left_outer", "leftouter"):
         how = "left"

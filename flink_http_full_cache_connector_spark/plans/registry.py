@@ -72,72 +72,6 @@ def all_queries() -> dict[str, QueryDef]:
     return dict(_REGISTRY)
 
 
-def short_keys(names: list[str]) -> dict[str, str]:
-    """Deterministic short key per query name for the bench JSON line.
-
-    The driver keeps only the last 2000 bytes of bench.py stdout
-    (BENCH_r01.json: ``tail`` is exactly 2000 chars and ``parsed`` is null
-    because the full-name line was ~4 KB).  Keys compress each ``_``-word to
-    its first letters (2 for the head word, 1 for the rest — tightened when
-    the registry passed ~135 names and the 3+2 scheme overflowed the budget
-    even at 1 decimal); collisions widen the suffix-word slice until unique.
-    Independent of input order (widening applies to whole colliding groups
-    at once), so the mapping depends only on the SET of registered names.
-    Full mapping is written to BENCH_KEYS.json next to the bench output.
-
-    When the word-compressed keys can no longer fit a 1-decimal line in the
-    driver's 2000-byte window (the registry crossed that point at 168
-    names), the scheme switches WHOLESALE to dense base36 codes assigned by
-    sorted name — still a pure function of the name set, ~2 bytes/key, good
-    to 1296 names.  Readability lives in BENCH_KEYS.json / BENCH_FULL.json
-    either way; the machine line's job is to survive the stdout window with
-    per-query precision intact.
-    """
-
-    def key(name: str, k: int) -> str:
-        words = name.split("_")
-        return words[0][:2] + "".join(w[:k] for w in words[1:])
-
-    out: dict[str, str] = {}
-    remaining = list(names)
-    k = 1
-    while remaining:
-        cand = {n: key(n, k) for n in remaining}
-        counts: dict[str, int] = {}
-        for s in cand.values():
-            counts[s] = counts.get(s, 0) + 1
-        taken = set(out.values())
-        next_round = []
-        for n, s in cand.items():
-            if counts[s] == 1 and s not in taken:
-                out[n] = s
-            else:
-                next_round.append(n)
-        if next_round == remaining:  # widening no longer separates; bail out
-            for i, n in enumerate(sorted(next_round)):
-                out[n] = f"{key(n, k)}{i}"
-            break
-        remaining = next_round
-        k += 1
-    # budget check: fixed JSON overhead ~135 B + per entry quotes/colon/
-    # comma + a typical 3-char 1-decimal value.  Past the window, dense
-    # codes keep per-query precision where the word keys would force the
-    # 0-decimal fallback.
-    est = 135 + sum(len(s) + 7 for s in out.values())
-    if est > 1900:
-        digits = "0123456789abcdefghijklmnopqrstuvwxyz"
-        code_len = 1 if len(names) <= 36 else 2
-        ordered = sorted(names)
-        if len(ordered) > 36 * 36:
-            raise ValueError("short_keys: > 1296 names")
-        codes = {
-            n: (digits[i // 36] + digits[i % 36])[-code_len:]
-            for i, n in enumerate(ordered)
-        }
-        return {n: codes[n] for n in names}
-    return {n: out[n] for n in names}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load a driver parquet table.
 

@@ -16,14 +16,15 @@ ignoreParseErrors=false, TimestampFormat.SQL``):
 
 Two paths build the Arrow table a refresh hands to Spark:
 
-- **The reader**, :func:`read_arrow`, reads the HTTP body straight into
-  Arrow in one C++ ``pyarrow.json`` pass.  Its explicit schema comes from
-  the declared columns and the JSON pointer, so no Python object is made
-  per value.  Each column is read as the JSON-native type (``_READ_AS``)
-  whose conversion equals :func:`coerce_value` on every value it accepts.
-- **The exact path** is ``http_client.parse_payload`` (``json.loads``, the
-  pointer, the fan-out), then :func:`deserialize_nodes` and
-  :func:`rows_table`.  It gives the reference's values and error text.
+- **The reader**, :func:`read_arrow`, reads the HTTP body's UTF-8 bytes
+  straight into Arrow in one C++ ``pyarrow.json`` pass, with no decode.
+  Its explicit schema comes from the declared columns and the JSON
+  pointer, so no Python object is made per value.  Each column is read as
+  the JSON-native type (``_READ_AS``) whose conversion equals
+  :func:`coerce_value` on every value it accepts.
+- **The exact path** is ``http_client.parse_payload`` (the one decode,
+  ``json.loads``, the pointer, the fan-out), then :func:`deserialize_nodes`
+  and :func:`rows_table`.  It gives the reference's values and error text.
 
 The reader declines, and the exact path runs, wherever the two could
 differ:
@@ -35,6 +36,11 @@ differ:
 - the body starts with a BOM, which ``json.loads`` refuses and the reader
   skips, holds more than one document, or (pointer ``""``) more than one
   value;
+- a string the reader reads is not valid UTF-8: ``pyarrow.json`` keeps
+  the bytes as they are, where the decode reads U+FFFD (invalid UTF-8 in
+  the members it parses past is taken: the decode changes no declared
+  value there), or a declared column name holds U+FFFD, which a key with
+  invalid UTF-8 matches only after the decode;
 - the body holds ``Inf``, ``-Inf`` or ``-NaN``, which ``json.loads``
   refuses (``_NON_JSON_LITERALS``);
 - a pointer step, the array or an element is null or missing, or the
@@ -63,6 +69,7 @@ body the reader declines pays both.
 
 from __future__ import annotations
 
+import codecs
 import datetime as _dt
 import decimal
 import json
@@ -282,9 +289,11 @@ def _read_json(data: bytes, schema: pa.Schema) -> pa.Table:
     )
 
 
-def read_arrow(body: str, pointer: str, schema: StructType) -> pa.Table | None:
-    """The row-nodes at JSON ``pointer`` in ``body`` → Arrow table of
-    ``schema`` in one ``pyarrow.json`` pass, or None to decline.
+def read_arrow(body: bytes, pointer: str, schema: StructType) -> pa.Table | None:
+    """The row-nodes at JSON ``pointer`` in the UTF-8 ``body`` → Arrow
+    table of ``schema`` in one ``pyarrow.json`` pass, or None to decline.
+    ``body`` is read where it lies; no copy of it is made, unless the
+    pointer is ``""``.
 
     The explicit read schema nests the pointer's member tokens as structs
     around ``list<struct<declared columns>>``, each column typed as
@@ -297,37 +306,42 @@ def read_arrow(body: str, pointer: str, schema: StructType) -> pa.Table | None:
     ``_MEMBER_AFTER_ARRAY`` is first checked to parse there too.
     It declines when a read fails, when the body holds more than one
     document or a literal ``json.loads`` refuses, when a pointer step, the
-    array or an element is null or missing, when a column name repeats, and
-    when a column's values fail its check or its cast to the declared type.
+    array or an element is null or missing, when a column name repeats,
+    when a string it read is not valid UTF-8 (``Table.validate(full=True)``,
+    ~0.8 ms on 20k rows of 7 columns), and when a column's values fail its
+    check or its cast to the declared type.
     """
     if pointer and not pointer.startswith("/"):
         return None
-    if body.startswith("\ufeff"):
+    if body.startswith(codecs.BOM_UTF8):
         return None  # json.loads refuses a BOM, which the reader skips
     if len(set(schema.names)) < len(schema.names):
         return None  # the reader fills only the first of a repeated name
+    if any("\ufffd" in name for name in schema.names):
+        return None  # a key with invalid UTF-8 matches it after the decode only
+    if len(body) >= 2**31 - 16:
+        return None  # past one int32 block with its wrapper
+    if any(literal.search(body) for literal in _NON_JSON_LITERALS):
+        return None
     tokens = _pointer_tokens(pointer)
     node_type = pa.list_(
         pa.struct([(f.name, _READ_AS.get(type(f.dataType), pa.null())) for f in schema.fields])
     )
     arrow_schema = to_arrow_schema(schema)
+    data = body
     try:
-        data = body.encode("utf-8")
-        if len(data) >= 2**31 - 16:
-            return None  # past one int32 block with its wrapper
-        if any(literal.search(data) for literal in _NON_JSON_LITERALS):
-            return None
         if not tokens:
-            if _MEMBER_AFTER_ARRAY.search(data) and _read_json(
-                b'{"_":[' + data + b"]}", pa.schema([])
+            if _MEMBER_AFTER_ARRAY.search(body) and _read_json(
+                b'{"_":[' + body + b"]}", pa.schema([])
             ).num_rows != 1:
                 return None
-            data, tokens = b'{"_":' + data + b"}", ["_"]
+            data, tokens = b'{"_":' + body + b"}", ["_"]
         for token in reversed(tokens[1:]):
             node_type = pa.struct([(token, node_type)])
         doc = _read_json(data, pa.schema([(tokens[0], node_type)]))
         if doc.num_rows != 1:
             return None
+        doc.validate(full=True)  # the reader keeps invalid UTF-8 as it is
         node = doc.column(0).chunk(0)
         for _ in tokens[1:]:
             (node,) = node.flatten()  # the one member, null where its parent is
@@ -341,13 +355,13 @@ def read_arrow(body: str, pointer: str, schema: StructType) -> pa.Table | None:
             if isinstance(field.dataType, (TimestampType, DateType)):
                 column = _temporal_column(column, field.dataType, target)
             elif pa.types.is_float64(column.type):
-                column = _float_column(column, target, data)
+                column = _float_column(column, target, body)
             else:
                 column = column.cast(target)
             if column is None:
                 return None
             columns.append(column)
-    except (pa.ArrowException, UnicodeEncodeError):
+    except pa.ArrowException:
         return None
     return pa.Table.from_arrays(columns, schema=arrow_schema)
 

@@ -99,9 +99,10 @@ class HttpLookupStreamReader(SimpleDataSourceStreamReader):
 
     Offset = monotonically increasing snapshot epoch.  A new snapshot is
     taken when ``cache.refresh-interval`` has elapsed since the previous
-    snapshot *completed* (FIXED_DELAY, ``HttpLookupTableSource.scala:49-52``);
-    otherwise the batch is empty.  Exhausted retries raise → the streaming
-    query fails (fail-fast, no stale data).
+    snapshot *completed* (FIXED_DELAY, ``HttpLookupTableSource.scala:49-52``),
+    or when the wall clock reads earlier than that completion (a step
+    back); otherwise the batch is empty.  Exhausted retries raise → the
+    streaming query fails (fail-fast, no stale data).
     """
 
     def __init__(self, schema: StructType, opts: HttpLookupOptions):
@@ -112,9 +113,10 @@ class HttpLookupStreamReader(SimpleDataSourceStreamReader):
         return {"epoch": 0, "last_load_end_ms": 0}
 
     def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
-        now_ms = int(time.time() * 1000)
-        interval_ms = int(self.opts.refresh_interval_seconds * 1000)
-        if now_ms - start["last_load_end_ms"] < interval_ms:
+        elapsed_ms = int(time.time() * 1000) - start["last_load_end_ms"]
+        # negative after the wall clock steps back: due now, rather than
+        # once the clock has caught up with the last load's end
+        if 0 <= elapsed_ms < int(self.opts.refresh_interval_seconds * 1000):
             return iter(()), start
         rows = fetch_rows(self.opts, self.schema_)
         end = {"epoch": start["epoch"] + 1, "last_load_end_ms": int(time.time() * 1000)}

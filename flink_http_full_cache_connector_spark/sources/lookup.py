@@ -43,10 +43,11 @@ class FetchStats:
     durations, row counts, and (via ``http``) request/retry/failure
     counts and response times.  ``arrow_fallbacks`` counts refreshes whose
     body the Arrow reader (:func:`rows.read_arrow`) declined, so they ran
-    the exact path: ``json.loads`` and the row-at-a-time coercer.  A
-    refresh's duration runs from the GET to the Arrow-batch relation's
-    return; the Arrow → row decode is not in it, since it runs in the
-    tasks of each scan of the snapshot."""
+    the exact path: the body's one decode, ``json.loads`` and the
+    row-at-a-time coercer; a body with invalid UTF-8 where the reader
+    reads it is one.  A refresh's duration runs from the GET to the
+    Arrow-batch relation's return; the Arrow → row decode is not in it,
+    since it runs in the tasks of each scan of the snapshot."""
 
     fetch_count: int = 0
     last_fetch_duration_s: float = 0.0
@@ -105,7 +106,7 @@ def _arrow_relation(spark: SparkSession, table: pa.Table, schema: StructType) ->
 
 
 def fetch_rows(opts: HttpLookupOptions, schema: StructType) -> list[tuple]:
-    """One full scan: GET → parse → pointer → fan-out → typed rows."""
+    """One full scan: GET → decode → parse → pointer → fan-out → typed rows."""
     return deserialize_nodes(parse_payload(fetch_with_retry(opts), opts.xpath), schema)
 
 
@@ -120,13 +121,16 @@ def create_lookup_df(
 
     The whole payload lives on the driver ≙ the reference's single
     ``GenericInputSplit`` (``HttpInputFormatProvider.scala:80-81``) and
-    becomes one Arrow table:
+    becomes one Arrow table.  The body stays the bytes received (a
+    charset other than UTF-8 is transcoded on receipt, see
+    :mod:`http_client`):
 
-    - :func:`rows.read_arrow` reads the body in one C++ ``pyarrow.json``
-      pass, with no Python object per value;
+    - :func:`rows.read_arrow` reads those bytes in one C++ ``pyarrow.json``
+      pass, with no decode and no Python object per value;
     - a body it declines, one it might read differently from the
       reference (see :mod:`rows`), takes the exact path:
-      :func:`parse_payload` (``json.loads``, the pointer, the fan-out),
+      :func:`parse_payload` (the one decode, malformed bytes as U+FFFD,
+      ``json.loads``, the pointer, the fan-out),
       :func:`rows.deserialize_nodes` and :func:`rows.rows_table`, with the
       reference's values and error text; ``stats.arrow_fallbacks`` counts it.
 

@@ -12,10 +12,10 @@ import pytest
 
 @pytest.mark.slow
 def test_bench_emits_one_json_line_with_required_keys(tmp_path):
-    # SPARK_GRAFT_BENCH_OUT redirects the full-timings + key-map artifacts
-    # to tmp: without it this test CLOBBERS the committed sf0.1
-    # BENCH_FULL.json / BENCH_KEYS.json with an sf0.001 test run (which is
-    # exactly how round 6 accidentally committed the sf0.001 version)
+    # SPARK_GRAFT_BENCH_OUT redirects the full-timings artifact to tmp:
+    # without it this test CLOBBERS the committed sf0.1 BENCH_FULL.json
+    # with an sf0.001 test run (which is exactly how round 6 accidentally
+    # committed the sf0.001 version)
     out_full = str(tmp_path / "BENCH_TEST.json")
     env = dict(
         os.environ,
@@ -38,8 +38,7 @@ def test_bench_emits_one_json_line_with_required_keys(tmp_path):
     lines = [ln for ln in proc.stdout.strip().splitlines() if ln.startswith("{")]
     assert len(lines) == 1, proc.stdout
     # the driver records only the last 2000 stdout bytes; the machine line
-    # must survive that window whole (BENCH_r01 lost 34 timings to it) —
-    # same constant the emit loop targets (round-7 ADVICE: one budget)
+    # must survive that window whole (BENCH_r01 lost 34 timings to it)
     import bench
 
     assert len(lines[0]) <= bench.MACHINE_LINE_BUDGET, len(lines[0])
@@ -47,17 +46,12 @@ def test_bench_emits_one_json_line_with_required_keys(tmp_path):
     assert payload["unit"] == "sec"
     assert payload["sf"] == 0.001
     assert payload["value"] == pytest.approx(sum(payload["queries"].values()), abs=0.05)
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries, short_keys
+    from flink_http_full_cache_connector_spark.plans.registry import all_queries
 
+    # the full query names, and no key file beside the timings
     names = list(all_queries())
-    skey = short_keys(names)
-    assert set(payload["queries"]) == set(skey.values())
-    # subset-run artifacts land NEXT TO out_full (bench.py writes the run's
-    # own key mapping to a sibling so SPARK_GRAFT_ONLY spot runs can never
-    # point the machine line at a stale committed BENCH_KEYS.json)
-    with open(str(tmp_path / "BENCH_TEST.keys.json")) as f:
-        keymap = json.load(f)
-    assert set(keymap.values()) == set(names)
+    assert set(payload["queries"]) == set(names)
+    assert os.listdir(tmp_path) == ["BENCH_TEST.json"]
     with open(out_full) as f:
         full = json.load(f)
     assert set(full["queries"]) == set(names)
@@ -65,15 +59,5 @@ def test_bench_emits_one_json_line_with_required_keys(tmp_path):
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with open(os.path.join(repo, "BENCH_FULL.json")) as f:
         assert json.load(f)["sf"] != 0.001
+    assert not os.path.exists(os.path.join(repo, "BENCH_KEYS.json"))
 
-
-def test_short_keys_unique_and_stable():
-    from flink_http_full_cache_connector_spark.plans.registry import all_queries, short_keys
-
-    names = list(all_queries())
-    skey = short_keys(names)
-    assert len(set(skey.values())) == len(names)
-    # order-independent: same mapping regardless of input order
-    assert short_keys(sorted(names)) == {n: skey[n] for n in sorted(names)}
-    rev = short_keys(list(reversed(names)))
-    assert {n: rev[n] for n in names} == skey

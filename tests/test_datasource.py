@@ -16,6 +16,8 @@ from flink_http_full_cache_connector_spark.sources.datasource import (
     HttpLookupDataSource,
     register,
 )
+from flink_http_full_cache_connector_spark.sources.local_http import serve_json
+from flink_http_full_cache_connector_spark.sources.lookup import FetchStats, create_lookup_df
 from tests.conftest import USERS_V1, USERS_V2
 
 DDL = "id INT, name STRING, username STRING, email STRING"
@@ -123,6 +125,47 @@ def test_stream_refresh_v1_to_v2(registered, http_server, tmp_path):
     assert http_server.request_count >= 2
 
 
+def test_stream_reader_refreshes_after_a_backwards_clock_step(spark, http_server):
+    """The last load ended an hour "later" than now: the wall clock stepped
+    back.  A refresh is due now, not once the clock has caught up (65 min
+    at ``PT5M``); a load that did end within the interval still waits."""
+    source = HttpLookupDataSource(
+        {"url": http_server.url, "cache.refresh-interval": "PT5M"}
+    )
+    reader = source.simpleStreamReader(StructType.fromDDL(DDL))
+    now_ms = int(time.time() * 1000)
+    waiting = {"epoch": 3, "last_load_end_ms": now_ms - 60_000}
+    rows, end = reader.read(waiting)
+    assert (list(rows), end, http_server.request_count) == ([], waiting, 0)
+    rows, end = reader.read({"epoch": 3, "last_load_end_ms": now_ms + 3_600_000})
+    assert len(list(rows)) == len(USERS_V1) and end["epoch"] == 4
+    assert end["last_load_end_ms"] >= now_ms
+    assert http_server.request_count == 1
+
+
+def test_malformed_utf8_reads_as_replacement_character(registered):
+    """A body with a byte that is not UTF-8 is served in one attempt, the
+    byte read as U+FFFD as the reference's ``BodyHandlers.ofString()``
+    reads it: through ``create_lookup_df``, by the exact path the reader
+    declines to, and through the data source."""
+    body = b'{"data":[{"id":1,"name":"a\xffb"},{"id":2,"name":"ok"}]}'
+    want = [(1, "a\ufffdb"), (2, "ok")]
+    with serve_json(body) as url:
+        options = {"url": url, "xpath": "/data"}
+        stats = FetchStats()
+        cache = create_lookup_df(registered, options, "id INT, name STRING", stats=stats)
+        assert sorted(map(tuple, cache.collect())) == want
+        assert stats.arrow_fallbacks == 1
+        assert (stats.http.attempts, stats.http.failures) == (1, 0)
+        read = (
+            registered.read.format("http-lookup-full-cache")
+            .schema("id INT, name STRING")
+            .options(**options)
+            .load()
+        )
+        assert sorted(map(tuple, read.collect())) == want
+
+
 @pytest.fixture
 def los_angeles_tz(monkeypatch):
     """The Python process's local zone set away from UTC, for one test."""
@@ -149,5 +192,5 @@ def test_reader_timestamps_ignore_worker_time_zone(http_server, los_angeles_tz):
     source = HttpLookupDataSource({"url": http_server.url, "xpath": "/data"})
     rows = source.reader(schema).read(InputPartition(0))
     batches = records_to_arrow_batches(rows, 1000, schema, source)
-    driver = read_arrow(json.dumps(payload), "/data", schema)
+    driver = read_arrow(json.dumps(payload).encode(), "/data", schema)
     assert pa.Table.from_batches(batches).to_pylist() == driver.to_pylist()

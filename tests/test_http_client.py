@@ -3,6 +3,7 @@
 hermetic integration suite)."""
 
 import datetime
+import email.message
 
 import pytest
 from pyspark.sql.types import (
@@ -16,6 +17,7 @@ from pyspark.sql.types import (
 
 from flink_http_full_cache_connector_spark.http_client import (
     HttpFetchError,
+    RequestMetrics,
     fetch_with_retry,
     parse_payload,
     resolve_json_pointer,
@@ -33,7 +35,7 @@ def test_fetch_retries_then_succeeds(http_server):
         HttpLookupOptions(url=http_server.url, max_retries=3, retry_delay_ms=10),
         sleep=sleeps.append,
     )
-    assert '"Mock User 1"' in body
+    assert b'"Mock User 1"' in body
     assert http_server.request_count == 3  # 500, 500, 200 → exactly 3 calls
     assert sleeps == [0.01, 0.01]
 
@@ -67,8 +69,6 @@ def test_metrics_count_http_error_failures():
     'failure counts / response times' metrics would be hollow without it."""
     import io
     import urllib.error
-
-    from flink_http_full_cache_connector_spark.http_client import RequestMetrics
 
     def opener(req, timeout=None):
         raise urllib.error.HTTPError(
@@ -105,8 +105,6 @@ def test_read_timeout_applies_separately_from_connect(scheme, connect_s, read_s)
     import socket
     import time
 
-    from flink_http_full_cache_connector_spark.http_client import RequestMetrics
-
     # the kernel completes the handshake for the listen backlog: the
     # connect succeeds, what the client sends is buffered, and no byte
     # ever comes back
@@ -128,6 +126,63 @@ def test_read_timeout_applies_separately_from_connect(scheme, connect_s, read_s)
     assert 0.9 <= elapsed < 5, elapsed
     assert "timed out" in str(exc.value.__cause__)
     assert (metrics.attempts, metrics.failures) == (1, 1)
+
+
+class _Response:
+    """What the opener hands back for a 200: the body, as the very object
+    given, under a Content-Type header."""
+
+    status = 200
+
+    def __init__(self, body: bytes, content_type: str):
+        self.body = body
+        self.headers = email.message.Message()
+        self.headers["Content-Type"] = content_type
+
+    def read(self) -> bytes:
+        return self.body
+
+    def __enter__(self):
+        return self
+
+    def __exit__(self, *exc):
+        return False
+
+
+@pytest.mark.parametrize(
+    ("content_type", "body", "want"),
+    [
+        # malformed UTF-8 is the parse's to replace, not an attempt's to fail
+        ("application/json", b'{"n":"a\xffb"}', None),
+        ("application/json; charset=UTF8", '{"n":"é"}'.encode(), None),
+        # an unsupported charset, a codec that is no text encoding or one
+        # that cannot replace reads as UTF-8
+        ("application/json; charset=x-bogus", b'{"n":"a\xffb"}', None),
+        ("application/json; charset=base64", b'{"n":"a\xffb"}', None),
+        ("application/json; charset=idna", b'{"n":"a\xffb"}', None),
+        # any other charset is transcoded to UTF-8 once, on receipt
+        ("application/json; charset=iso-8859-1", b'{"n":"\xe9"}', '{"n":"é"}'.encode()),
+        ("application/json; charset=utf-16", '{"n":"é"}'.encode("utf-16"), '{"n":"é"}'.encode()),
+        ("application/json; charset=us-ascii", b'{"n":"a\xffb"}', '{"n":"a\ufffdb"}'.encode()),
+    ],
+    ids=["no-charset", "UTF8", "x-bogus", "base64", "idna", "iso-8859-1", "utf-16", "us-ascii"],
+)
+def test_fetch_returns_utf8_bytes_in_one_attempt(content_type, body, want):
+    """The body comes back as UTF-8 bytes after one attempt whatever its
+    bytes and charset: the very object received when it is read as UTF-8
+    (``want`` None), else its one transcoding."""
+    metrics = RequestMetrics()
+    got = fetch_with_retry(
+        HttpLookupOptions(url="http://example.invalid/x", max_retries=2, retry_delay_ms=1),
+        sleep=lambda s: None,
+        opener=lambda req, timeout=None: _Response(body, content_type),
+        metrics=metrics,
+    )
+    if want is None:
+        assert got is body
+    else:
+        assert got == want
+    assert (metrics.attempts, metrics.retries, metrics.failures) == (1, 0, 0)
 
 
 # --- JSON pointer (RFC 6901; HttpInputFormatProvider.scala:137-146) ---------
@@ -161,20 +216,29 @@ def test_json_pointer_miss_is_hard_error(pointer):
 # --- payload parse + fan-out (array→N rows, object→1 row) -------------------
 
 def test_parse_array_fans_out():
-    assert parse_payload('[{"a":1},{"a":2}]') == [{"a": 1}, {"a": 2}]
+    assert parse_payload(b'[{"a":1},{"a":2}]') == [{"a": 1}, {"a": 2}]
 
 
 def test_parse_single_object_one_row():
-    assert parse_payload('{"a":1}') == [{"a": 1}]
+    assert parse_payload(b'{"a":1}') == [{"a": 1}]
 
 
 def test_parse_with_pointer():
-    assert parse_payload('{"wrap":{"rows":[{"a":1}]}}', "/wrap/rows") == [{"a": 1}]
+    assert parse_payload(b'{"wrap":{"rows":[{"a":1}]}}', "/wrap/rows") == [{"a": 1}]
 
 
 def test_parse_malformed_json_fails():
     with pytest.raises(RuntimeError, match="Failed to parse JSON response"):
-        parse_payload("not json {{{")
+        parse_payload(b"not json {{{")
+
+
+def test_parse_decodes_utf8_once():
+    """Malformed bytes read as U+FFFD, and no other encoding is guessed: a
+    UTF-16 body fails the parse, where ``json.loads`` of the bytes would
+    detect and read it."""
+    assert parse_payload(b'[{"name":"a\xffb"}]') == [{"name": "a\ufffdb"}]
+    with pytest.raises(RuntimeError, match="Failed to parse JSON response"):
+        parse_payload('{"a":1}'.encode("utf-16"))
 
 
 # --- row coercion (flink-json semantics) ------------------------------------

@@ -469,3 +469,26 @@ def test_empty_on_is_refused(spark, join, on):
     probe = spark.createDataFrame([(1,)], "id int")
     with pytest.raises(ValueError, match=r"^on must name at least one join key"):
         join(probe, cache, on)
+
+
+def test_unsupported_how_is_refused_before_the_warning_and_the_profile(spark):
+    """``observed_lookup_join`` checks ``how`` first: a ``how`` that
+    ``lookup_join`` refuses raises its ``ValueError`` with no warning about
+    ``lookup_total`` and no profile of the cache, so no Spark job, even
+    over a bare local relation, which one ``toArrow`` job would profile."""
+    cache = local_df(spark, [(1, "a")], "id int, v string")
+    probe = spark.createDataFrame([(1,)], "id int")
+    sc = spark.sparkContext
+    group = "observed-join-unsupported-how"
+    sc.setJobGroup(group, "build an observed join with an unsupported how")
+    try:
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            with pytest.raises(ValueError, match=r"^lookup_join supports inner/left, got 'right'$"):
+                lj.observed_lookup_join(probe, cache, "id", "right", observation=Observation())
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+    assert lookup.RECORDS.get(cache) is None

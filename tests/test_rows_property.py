@@ -3,7 +3,8 @@ round-trip fidelity, missing/null handling, and strictness invariants hold
 for arbitrary generated payloads — not just the golden fixtures.  The
 reader (``rows.read_arrow``, the body straight into Arrow) is checked
 differentially against the exact path it stands in for
-(``parse_payload`` → ``deserialize_nodes`` → ``rows_table``), on JSON text."""
+(``parse_payload`` → ``deserialize_nodes`` → ``rows_table``), on the
+body's UTF-8 bytes, as the lookup path hands them to both."""
 
 import datetime as dt
 import json
@@ -299,7 +300,8 @@ def _outcome(build):
 
 
 def _exact(body, pointer, schema):
-    """The exact path: ``json.loads``, the pointer, the row coercer."""
+    """The exact path: the decode, ``json.loads``, the pointer, the row
+    coercer."""
     return rows_table(deserialize_nodes(parse_payload(body, pointer), schema), schema)
 
 
@@ -315,13 +317,30 @@ def _assert_body_same_as_reference(body, pointer, schema):
 
 
 def _assert_same_as_reference(nodes, schema):
-    _assert_body_same_as_reference(json.dumps({"data": nodes}), "/data", schema)
+    _assert_body_same_as_reference(json.dumps({"data": nodes}).encode(), "/data", schema)
 
 
 @settings(max_examples=400, deadline=None)
 @given(case=payloads_and_schemas())
 def test_arrow_fast_path_matches_reference(case):
     _assert_same_as_reference(*case)
+
+
+#: bytes of 0x80 and up: never JSON syntax, valid UTF-8 or not
+high_bytes = st.binary(min_size=1, max_size=4).map(lambda b: bytes(x | 0x80 for x in b))
+
+
+@settings(max_examples=300, deadline=None)
+@given(case=payloads_and_schemas(), junk=high_bytes, data=st.data())
+def test_arrow_fast_path_matches_reference_on_raw_bytes(case, junk, data):
+    """The same on a body written as raw UTF-8, not ``\\u`` escapes, with
+    bytes that may not be UTF-8 put after one of the nodes' quotes: into a
+    key, a string value, or between members, where the body is no JSON."""
+    nodes, schema = case
+    body = json.dumps({"data": nodes}, ensure_ascii=False).encode()
+    cuts = [i + 1 for i, byte in enumerate(body) if byte == ord('"')][2:]
+    cut = data.draw(st.sampled_from(cuts)) if cuts else len(body)
+    _assert_body_same_as_reference(body[:cut] + junk + body[cut:], "/data", schema)
 
 
 #: declared type → JSON values the reference takes as they are
@@ -361,20 +380,27 @@ def plain_payloads_and_schemas(draw):
 @given(case=plain_payloads_and_schemas())
 def test_arrow_fast_path_takes_plain_values(case):
     nodes, schema = case
-    body = json.dumps({"data": nodes})
+    body = json.dumps({"data": nodes}).encode()
     table = read_arrow(body, "/data", schema)
     assert table is not None  # no needless fall back to the exact path
     assert _outcome(lambda: table) == _outcome(lambda: _exact(body, "/data", schema))
 
 
 class Body(NamedTuple):
-    """A hand-written JSON body, read at ``pointer`` into one column
-    ``column``; ``read`` says whether the reader takes it or declines."""
+    """A hand-written JSON body, as text or as raw bytes, read at
+    ``pointer`` into one column ``column``; ``read`` says whether the
+    reader takes it or declines, and ``error``, when set, is the message
+    the refresh fails with."""
 
-    text: str
+    text: str | bytes
     pointer: str = "/data"
     column: str = "c"
     read: bool = True
+    error: str | None = None
+
+    @property
+    def data(self) -> bytes:
+        return self.text if isinstance(self.text, bytes) else self.text.encode()
 
 
 @pytest.mark.parametrize(
@@ -459,23 +485,84 @@ class Body(NamedTuple):
         (Body('{"data":[{"c":1,"x":[-Inf]}]}', read=False), LongType()),
         (Body('{"data":[{"c":1}],"x": -NaN }', read=False), LongType()),
         (Body('{"data":[{"c":"Inf","x":"Information"}]}'), StringType()),
+        # raw bytes: the reader keeps invalid UTF-8 as it is, where the
+        # decode reads U+FFFD
+        (Body(b'{"data":[{"c":"a\xffb"}]}', read=False), StringType()),
+        (Body(b'{"data":[{"c":"\xed\xa0\x80"},{"c":"ok"}]}', read=False), StringType()),
+        (Body(b'{"data":[{"c":"2024-01-02 03:04:05\xc0"}]}', read=False), TimestampType()),
+        (Body(b'[{"c":"a\xffb"}]', "", read=False), StringType()),
+        (Body(b'{"data":[{"c":1,"x":"a\xffb","\xff":2}],"m":"\xfe"}'), LongType()),
+        (Body(b'{"data":[{"c":"\xc3\xa9\xe2\x82\xac"}]}'), StringType()),
+        (Body(b'{"data":[{"c\xff":1}]}'), LongType()),
+        (Body(b'{"data":[{"\xff":1}]}', column="\ufffd", read=False), LongType()),
+        (Body(b'{"\xff":[{"c":1}]}', "/\ufffd", read=False), LongType()),
+        (
+            Body(b'\xef\xbb\xbf{"data":[{"c":1}]}', read=False, error="Failed to parse JSON response"),
+            LongType(),
+        ),
     ],
 )
 def test_arrow_fast_path_measured_traps(values, dtype):
     if isinstance(values, Body):
         schema = StructType([StructField(values.column, dtype)])
-        assert (read_arrow(values.text, values.pointer, schema) is not None) == values.read
-        _assert_body_same_as_reference(values.text, values.pointer, schema)
+        assert (read_arrow(values.data, values.pointer, schema) is not None) == values.read
+        _assert_body_same_as_reference(values.data, values.pointer, schema)
+        if values.error is not None:
+            outcome = _outcome(lambda: _engine(values.data, values.pointer, schema))
+            assert outcome[0] == "error" and outcome[2] == values.error, outcome
     else:
         schema = StructType([StructField("c", dtype)])
         _assert_same_as_reference([{"c": v} for v in values], schema)
+
+
+def test_reader_takes_the_body_without_copying_it():
+    """A body the reader takes is read where it lies: the Python
+    allocations while reading a 20k-row, 7-column body (perfbench
+    ``dim_load``'s shape, ~3.5 MB) stay under a quarter of the body.  Arrow's
+    own buffers are not Python allocations and do not count."""
+    import tracemalloc
+
+    schema = StructType(
+        [
+            StructField("id", LongType()),
+            *(StructField(name, StringType()) for name in ("name", "email", "city")),
+            StructField("score", DoubleType()),
+            StructField("updated_at", TimestampType()),
+            StructField("active", BooleanType()),
+        ]
+    )
+    records = [
+        {
+            "id": key,
+            "name": f"user-{key}-{key * 7919:010x}",
+            "email": f"u{key}.{key * 31 % 2**24:06x}@example.com",
+            "city": ("Amsterdam", "Berlin", "Chennai")[key % 3],
+            "score": key * 0.5 + 1,
+            "updated_at": f"2024-{key % 12 + 1:02d}-{key % 28 + 1:02d} 03:04:05.{key % 1000:03d}",
+            "active": key % 2 == 0,
+        }
+        for key in range(20_000)
+    ]
+    body = json.dumps({"data": records}).encode()
+    # a first read loads the modules read_arrow uses, which are no copy
+    read_arrow(json.dumps({"data": records[:1]}).encode(), "/data", schema)
+    tracemalloc.start()
+    try:
+        tracemalloc.reset_peak()
+        before, _ = tracemalloc.get_traced_memory()
+        table = read_arrow(body, "/data", schema)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert table is not None and table.num_rows == 20_000
+    assert peak - before < len(body) / 4, (peak - before, len(body))
 
 
 def test_reader_declines_a_repeated_column_name():
     """The reader fills only the first of two same-named columns; the exact
     path coerces the value into both."""
     schema = StructType([StructField("c", LongType()), StructField("c", StringType())])
-    body = '{"data":[{"c":5},{"c":null}]}'
+    body = b'{"data":[{"c":5},{"c":null}]}'
     assert read_arrow(body, "/data", schema) is None
     _assert_body_same_as_reference(body, "/data", schema)
 
@@ -492,7 +579,7 @@ def test_reader_reads_past_what_json_loads_refuses_outside_the_columns():
     sys.set_int_max_str_digits(4300)
     try:
         for extra in ("1" + "0" * 4400, "[" * 1100 + "]" * 1100):
-            body = '{"data":[{"c":1,"x":%s}]}' % extra
+            body = b'{"data":[{"c":1,"x":%s}]}' % extra.encode()
             assert read_arrow(body, "/data", schema).to_pylist() == [{"c": 1}]
             with pytest.raises(RuntimeError, match="Failed to parse JSON response"):
                 _exact(body, "/data", schema)
