@@ -8,7 +8,9 @@ Re-expresses the reference runtime's fetch path
   read, redirects followed, non-200 → retry, up to
   ``max_retries`` retries with a fixed ``retry_delay_ms`` sleep; exhaustion
   raises ``RuntimeError`` with the reference's message text (fail-fast, no
-  stale-cache fallback).  It returns the body as UTF-8 bytes, undecoded.
+  stale-cache fallback).  A 4xx/5xx is read like any other response, so a
+  failure while reading its body is a failed, retried attempt.  It returns
+  the body as UTF-8 bytes, undecoded.
 - ``resolve_json_pointer`` — RFC 6901 resolution incl. ``~0``/``~1``
   unescaping; ``""`` means root; a non-matching pointer is a hard error.
 - ``parse_payload`` — decode the body, parse it, resolve the pointer, then
@@ -143,8 +145,12 @@ def fetch_with_retry(
     followed (urllib default ≙ HttpClient.Redirect.NORMAL).
     ``connect_timeout_seconds`` bounds the connect and
     ``read_timeout_seconds`` each socket read; a timeout is a failed
-    attempt like any other.  The body's bytes never fail an attempt
-    (:func:`_as_utf8`).
+    attempt like any other.  A 4xx/5xx (urllib's ``HTTPError``) is read
+    as the response it is: its body is read inside the attempt, so a
+    timeout or reset there is retried too.  The body's bytes never fail an
+    attempt (:func:`_as_utf8`).  An attempt's duration runs from the GET
+    to the body as returned, so it includes a non-UTF-8 body's one
+    transcode.
 
     ``sleep``/``opener`` are injection points for tests: ``opener`` is
     called as ``opener(request, timeout=(connect_s, read_s))``.  Without
@@ -152,45 +158,33 @@ def fetch_with_retry(
     """
     metrics = metrics or RequestMetrics()
     timeout = (opts.connect_timeout_seconds, opts.read_timeout_seconds)
-
+    request = urllib.request.Request(opts.url, method="GET")
     last_exception: Exception | None = None
-    attempt = 0
-    while attempt <= opts.max_retries:
-        t0 = time.monotonic()
-        metrics.attempts += 1
-        if attempt > 0:
+    for attempt in range(opts.max_retries + 1):
+        if attempt:
             metrics.retries += 1
+            sleep(opts.retry_delay_ms / 1000.0)
+        metrics.attempts += 1
+        t0 = time.monotonic()
         try:
-            req = urllib.request.Request(opts.url, method="GET")
-            with opener(req, timeout=timeout) as resp:
-                status = getattr(resp, "status", 200)
+            try:
+                resp = opener(request, timeout=timeout)
+            except urllib.error.HTTPError as e:
+                resp = e  # urllib raises on 4xx/5xx: the error is the response
+            with resp:
                 body = resp.read()
-                if status != 200:
+                if resp.status != 200:
                     raise RuntimeError(
-                        f"HTTP request failed with status {status}. "
+                        f"HTTP request failed with status {resp.status}. "
                         f"Response body: {body.decode('utf-8', 'replace')}"
                     )
-                charset = "utf-8"
-                headers = getattr(resp, "headers", None)
-                if headers is not None:
-                    charset = headers.get_content_charset() or "utf-8"
-                metrics.last_duration_s = time.monotonic() - t0
-                metrics.total_duration_s += metrics.last_duration_s
-                return _as_utf8(body, charset)
-        except urllib.error.HTTPError as e:
-            # urllib raises on 4xx/5xx; normalize to the reference's message.
-            body = e.read().decode("utf-8", "replace") if e.fp else ""
-            last_exception = RuntimeError(
-                f"HTTP request failed with status {e.code}. Response body: {body}"
-            )
+                return _as_utf8(body, resp.headers.get_content_charset() or "utf-8")
         except Exception as e:  # noqa: BLE001 — any failure triggers retry
+            metrics.failures += 1
             last_exception = e
-        metrics.failures += 1
-        metrics.last_duration_s = time.monotonic() - t0
-        metrics.total_duration_s += metrics.last_duration_s
-        attempt += 1
-        if attempt <= opts.max_retries:
-            sleep(opts.retry_delay_ms / 1000.0)
+        finally:
+            metrics.last_duration_s = time.monotonic() - t0
+            metrics.total_duration_s += metrics.last_duration_s
 
     raise HttpFetchError(
         f"Failed to fetch data from {opts.url} after {opts.max_retries} retries"

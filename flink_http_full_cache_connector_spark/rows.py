@@ -293,7 +293,7 @@ def read_arrow(body: bytes, pointer: str, schema: StructType) -> pa.Table | None
     """The row-nodes at JSON ``pointer`` in the UTF-8 ``body`` → Arrow
     table of ``schema`` in one ``pyarrow.json`` pass, or None to decline.
     ``body`` is read where it lies; no copy of it is made, unless the
-    pointer is ``""``.
+    pointer is ``""``: then each read is of one wrapped copy.
 
     The explicit read schema nests the pointer's member tokens as structs
     around ``list<struct<declared columns>>``, each column typed as
@@ -332,10 +332,10 @@ def read_arrow(body: bytes, pointer: str, schema: StructType) -> pa.Table | None
     try:
         if not tokens:
             if _MEMBER_AFTER_ARRAY.search(body) and _read_json(
-                b'{"_":[' + body + b"]}", pa.schema([])
+                b"".join((b'{"_":[', body, b"]}")), pa.schema([])
             ).num_rows != 1:
                 return None
-            data, tokens = b'{"_":' + body + b"}", ["_"]
+            data, tokens = b"".join((b'{"_":', body, b"}")), ["_"]
         for token in reversed(tokens[1:]):
             node_type = pa.struct([(token, node_type)])
         doc = _read_json(data, pa.schema([(tokens[0], node_type)]))

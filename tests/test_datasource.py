@@ -19,6 +19,7 @@ from flink_http_full_cache_connector_spark.sources.datasource import (
 from flink_http_full_cache_connector_spark.sources.local_http import serve_json
 from flink_http_full_cache_connector_spark.sources.lookup import FetchStats, create_lookup_df
 from tests.conftest import USERS_V1, USERS_V2
+from tests.test_lookup_source import NESTED_DDL, NESTED_ROWS, SCALAR_DDL, SCALAR_ROWS
 
 DDL = "id INT, name STRING, username STRING, email STRING"
 
@@ -164,6 +165,32 @@ def test_malformed_utf8_reads_as_replacement_character(registered):
             .load()
         )
         assert sorted(map(tuple, read.collect())) == want
+
+
+@pytest.mark.parametrize(
+    "ddl, payload, fallbacks",
+    [(SCALAR_DDL, SCALAR_ROWS, 0), (NESTED_DDL, NESTED_ROWS, 1)],
+    ids=["scalar", "nested"],
+)
+def test_data_source_reads_the_rows_the_cache_holds(registered, ddl, payload, fallbacks):
+    """The data source and ``create_lookup_df`` give the same rows for one
+    body: DECIMAL, ROW, ARRAY, MAP, -0.0, non-BMP text and the declared
+    types the reader takes.  The cache takes the scalar body through the
+    reader and declines the nested one to the exact path."""
+    import math
+
+    with serve_json(payload) as url:
+        stats = FetchStats()
+        cache = create_lookup_df(registered, {"url": url}, ddl, stats=stats)
+        assert stats.arrow_fallbacks == fallbacks
+        read = registered.read.format("http-lookup-full-cache").schema(ddl).option("url", url).load()
+        got, want = (sorted(df.collect(), key=lambda r: r.id) for df in (read, cache))
+    assert got == want and len(got) == len(payload)
+    # -0.0 == 0.0 in Python: compare floating values by sign as well
+    for g, w in zip(got, want):
+        for c in ("d", "f"):
+            if c in g and g[c] is not None:
+                assert math.copysign(1.0, g[c]) == math.copysign(1.0, w[c]), (c, g, w)
 
 
 @pytest.fixture

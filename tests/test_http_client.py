@@ -128,6 +128,53 @@ def test_read_timeout_applies_separately_from_connect(scheme, connect_s, read_s)
     assert (metrics.attempts, metrics.failures) == (1, 1)
 
 
+def test_error_body_stalled_past_the_read_timeout_is_retried():
+    """A 503 whose body stops halfway and then stalls past the read timeout
+    is a failed attempt like any other: each attempt times out reading the
+    error body, is retried, and exhaustion raises the reference's message."""
+    import threading
+    import time
+    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
+    release = threading.Event()
+
+    class Handler(BaseHTTPRequestHandler):
+        def do_GET(self):  # noqa: N802
+            body = b"service unavailable, retry later"
+            self.send_response(503)
+            self.send_header("Content-Length", str(len(body)))
+            self.end_headers()
+            self.wfile.write(body[: len(body) // 2])
+            release.wait(30)
+
+        def log_message(self, *args):
+            pass
+
+    httpd = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+    threading.Thread(target=httpd.serve_forever, daemon=True).start()
+    host, port = httpd.server_address
+    url = f"http://{host}:{port}/users"
+    metrics = RequestMetrics()
+    t0 = time.monotonic()
+    try:
+        with pytest.raises(HttpFetchError) as exc:
+            fetch_with_retry(
+                HttpLookupOptions(
+                    url=url, read_timeout_seconds=1, max_retries=2, retry_delay_ms=10
+                ),
+                metrics=metrics,
+            )
+        elapsed = time.monotonic() - t0
+    finally:
+        release.set()
+        httpd.shutdown()
+        httpd.server_close()
+    assert str(exc.value) == f"Failed to fetch data from {url} after 2 retries"
+    assert isinstance(exc.value.__cause__, TimeoutError), repr(exc.value.__cause__)
+    assert (metrics.attempts, metrics.retries, metrics.failures) == (3, 2, 3)
+    assert elapsed < 10, elapsed
+
+
 class _Response:
     """What the opener hands back for a 200: the body, as the very object
     given, under a Content-Type header."""

@@ -255,18 +255,20 @@ def test_refresh_fail_fast_propagates(spark, http_server):
 def truncating_server():
     """Serves USERS_V1; the first GET's body, or every GET's once
     ``broken`` is set, stops halfway through its declared
-    ``Content-Length``.  The connection then closes, or with ``reset`` set
-    it is reset: ``SO_LINGER`` 0 makes the close send an RST."""
+    ``Content-Length`` and comes with ``status``.  The connection then
+    closes, or with ``reset`` set it is reset: ``SO_LINGER`` 0 makes the
+    close send an RST."""
 
     class Handler(BaseHTTPRequestHandler):
         def do_GET(self):  # noqa: N802
             self.server.gets += 1
             body = json.dumps(USERS_V1).encode()
-            self.send_response(200)
+            whole = self.server.gets > 1 and not self.server.broken
+            self.send_response(200 if whole else self.server.status)
             self.send_header("Content-Type", "application/json")
             self.send_header("Content-Length", str(len(body)))
             self.end_headers()
-            if self.server.gets > 1 and not self.server.broken:
+            if whole:
                 self.wfile.write(body)
                 return
             self.wfile.write(body[: len(body) // 2])
@@ -281,7 +283,7 @@ def truncating_server():
             pass
 
     httpd = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-    httpd.gets, httpd.broken, httpd.reset = 0, False, False
+    httpd.gets, httpd.broken, httpd.reset, httpd.status = 0, False, False, 200
     thread = threading.Thread(target=httpd.serve_forever, daemon=True)
     thread.start()
     try:
@@ -293,14 +295,16 @@ def truncating_server():
 
 def test_refresh_retries_a_truncated_body(spark, truncating_server):
     """A body shorter than its Content-Length is a failed attempt, whether
-    the connection then closes or is reset mid-body: the load retries, and
-    the next, whole response becomes the snapshot.  An endpoint that resets
-    every response fails the reload fast with the reference's message, and
-    the old snapshot keeps serving."""
+    the connection then closes or is reset mid-body, and whether it is a
+    200's or a 503's: the load retries, and the next, whole response
+    becomes the snapshot.  An endpoint that resets every response fails
+    the reload fast with the reference's message, and the old snapshot
+    keeps serving."""
     host, port = truncating_server.server_address
     url = f"http://{host}:{port}/users"
-    for reset in (False, True):
+    for status, reset in ((200, False), (200, True), (503, False), (503, True)):
         truncating_server.gets, truncating_server.reset = 0, reset
+        truncating_server.status = status
         cache = RefreshingLookupCache(
             spark, {"url": url, "max.retries": "2", "retry.delay.ms": "1"}, USERS_SCHEMA
         )
@@ -310,7 +314,7 @@ def test_refresh_retries_a_truncated_body(spark, truncating_server):
         assert m["refresh_count"] == 1
         assert sorted(r.id for r in cache.current().collect()) == list(range(1, 11))
 
-    truncating_server.broken = True
+    truncating_server.status, truncating_server.broken = 200, True
     before = cache.current()
     t0 = time.monotonic()
     with pytest.raises(HttpFetchError) as exc:
