@@ -14,7 +14,8 @@ ignoreParseErrors=false, TimestampFormat.SQL``):
 - Nested ROW columns recurse (nested projection supported,
   ``HttpLookupTableSource.scala:70``).
 
-Two paths build the Arrow table a refresh hands to Spark:
+Two paths build the Arrow table of one load
+(:func:`sources.lookup.load_table`, for the cache and the data source):
 
 - **The reader**, :func:`read_arrow`, reads the HTTP body's UTF-8 bytes
   straight into Arrow in one C++ ``pyarrow.json`` pass, with no decode.

@@ -21,6 +21,11 @@ Parity notes:
 - **One input split** (``HttpInputFormatProvider.scala:80-81``): a single
   partition fetches the whole payload *on the executor* (scan runs on the
   task, as in Flink; plan construction stays driver-side and serializable).
+- **One load path**, like the reference's one ``HttpInputFormatProvider``
+  behind both its lookup cache and its bounded scan: every read runs
+  :func:`sources.lookup.load_table`, the Arrow build the driver-side cache
+  runs, and yields that table's rows as tuples.  Cache and source hold the
+  same rows for one body, and fail with the same text.
 - **Streaming**: ``spark.readStream`` on this source re-snapshots the
   endpoint per microbatch once ``cache.refresh-interval`` has elapsed
   (FIXED_DELAY), mirroring ``FullCachingLookupProvider`` +
@@ -30,8 +35,9 @@ Parity notes:
 from __future__ import annotations
 
 import time
-from typing import Iterator
+from typing import Any, Iterator
 
+import pyarrow as pa
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -46,7 +52,7 @@ from flink_http_full_cache_connector_spark.options import (
     ValidationException,
     validate_options,
 )
-from flink_http_full_cache_connector_spark.sources.lookup import fetch_rows
+from flink_http_full_cache_connector_spark.sources.lookup import FetchStats, load_table
 
 #: reader-side option keys injected by Spark itself, not user DDL
 _SPARK_INTERNAL_OPTIONS = {"path", "paths"}
@@ -55,6 +61,35 @@ _SPARK_INTERNAL_OPTIONS = {"path", "paths"}
 def _validated(options: dict) -> HttpLookupOptions:
     cleaned = {k: v for k, v in options.items() if k not in _SPARK_INTERNAL_OPTIONS}
     return validate_options(cleaned)
+
+
+def _as_py(value: Any, dtype: pa.DataType) -> Any:
+    """``value``, as ``to_pylist()`` gives it for ``dtype``, with every map
+    a dict at any depth: pyarrow gives a map as a list of pairs, and
+    Spark's row converter asserts a dict for a MAP."""
+    if value is None:
+        return None
+    if pa.types.is_map(dtype):
+        return {k: _as_py(v, dtype.item_type) for k, v in value}
+    if pa.types.is_struct(dtype):
+        return {f.name: _as_py(value[f.name], f.type) for f in dtype}
+    if pa.types.is_list(dtype):
+        return [_as_py(v, dtype.value_type) for v in value]
+    return value
+
+
+def _rows(opts: HttpLookupOptions, schema: StructType) -> Iterator[tuple]:
+    """The rows of one :func:`load_table`, built column by column.  A
+    TIMESTAMP stays an aware UTC datetime, so the worker's conversion does
+    not read it in its local zone; a ROW is a dict of its fields."""
+    table = load_table(opts, schema, FetchStats())
+    columns = []
+    for column in table.columns:
+        values = column.to_pylist()
+        if pa.types.is_nested(column.type):
+            values = [_as_py(v, column.type) for v in values]
+        columns.append(values)
+    return zip(*columns)
 
 
 class HttpLookupDataSource(DataSource):
@@ -91,7 +126,7 @@ class HttpLookupReader(DataSourceReader):
         return [InputPartition(0)]
 
     def read(self, partition: InputPartition) -> Iterator[tuple]:
-        yield from fetch_rows(self.opts, self.schema_)
+        yield from _rows(self.opts, self.schema_)
 
 
 class HttpLookupStreamReader(SimpleDataSourceStreamReader):
@@ -118,16 +153,16 @@ class HttpLookupStreamReader(SimpleDataSourceStreamReader):
         # once the clock has caught up with the last load's end
         if 0 <= elapsed_ms < int(self.opts.refresh_interval_seconds * 1000):
             return iter(()), start
-        rows = fetch_rows(self.opts, self.schema_)
+        rows = _rows(self.opts, self.schema_)
         end = {"epoch": start["epoch"] + 1, "last_load_end_ms": int(time.time() * 1000)}
-        return iter(rows), end
+        return rows, end
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
         # Replay after failure: re-fetch (snapshot semantics — the cache is
         # always rebuilt from scratch, never persisted).
         if end["epoch"] <= start["epoch"]:
             return iter(())
-        return iter(fetch_rows(self.opts, self.schema_))
+        return _rows(self.opts, self.schema_)
 
 
 def register(spark) -> None:

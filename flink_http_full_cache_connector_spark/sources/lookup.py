@@ -41,13 +41,14 @@ class FetchStats:
     """Cache observability — the metric families the reference README
     documents but never registers (``README.md:199-208``): refresh
     durations, row counts, and (via ``http``) request/retry/failure
-    counts and response times.  ``arrow_fallbacks`` counts refreshes whose
-    body the Arrow reader (:func:`rows.read_arrow`) declined, so they ran
-    the exact path: the body's one decode, ``json.loads`` and the
-    row-at-a-time coercer; a body with invalid UTF-8 where the reader
-    reads it is one.  A refresh's duration runs from the GET to the
-    Arrow-batch relation's return; the Arrow → row decode is not in it,
-    since it runs in the tasks of each scan of the snapshot."""
+    counts and response times.  :func:`load_table` fills ``http`` and
+    ``arrow_fallbacks``, the loads whose body the Arrow reader
+    (:func:`rows.read_arrow`) declined, so they ran the exact path: the
+    body's one decode, ``json.loads`` and the row-at-a-time coercer; a
+    body with invalid UTF-8 where the reader reads it is one.  A refresh's
+    duration runs from the GET to the Arrow-batch relation's return; the
+    Arrow → row decode is not in it, since it runs in the tasks of each
+    scan of the snapshot."""
 
     fetch_count: int = 0
     last_fetch_duration_s: float = 0.0
@@ -105,25 +106,12 @@ def _arrow_relation(spark: SparkSession, table: pa.Table, schema: StructType) ->
                 spark.conf.set(_RELATION_THRESHOLD, prev)
 
 
-def fetch_rows(opts: HttpLookupOptions, schema: StructType) -> list[tuple]:
-    """One full scan: GET → decode → parse → pointer → fan-out → typed rows."""
-    return deserialize_nodes(parse_payload(fetch_with_retry(opts), opts.xpath), schema)
+def load_table(opts: HttpLookupOptions, schema: StructType, stats: FetchStats) -> pa.Table:
+    """One full scan, the one way the engine turns the endpoint into rows:
+    the GET, then the body as an Arrow table of ``schema``.
 
-
-def create_lookup_df(
-    spark: SparkSession,
-    options: dict[str, object] | HttpLookupOptions,
-    schema: StructType | str,
-    *,
-    stats: FetchStats | None = None,
-) -> DataFrame:
-    """Build the full-cache lookup DataFrame (one bounded scan).
-
-    The whole payload lives on the driver ≙ the reference's single
-    ``GenericInputSplit`` (``HttpInputFormatProvider.scala:80-81``) and
-    becomes one Arrow table.  The body stays the bytes received (a
-    charset other than UTF-8 is transcoded on receipt, see
-    :mod:`http_client`):
+    The body stays the bytes received (a charset other than UTF-8 is
+    transcoded on receipt, see :mod:`http_client`):
 
     - :func:`rows.read_arrow` reads those bytes in one C++ ``pyarrow.json``
       pass, with no decode and no Python object per value;
@@ -137,8 +125,34 @@ def create_lookup_df(
     On perfbench ``dim_load``'s 20k-row, 7-column body (4-core VM,
     in-process) the reader takes ~30-45 ms; a declined body pays that on
     top of the exact path, ~0.45-0.6 s in all.  The table is coerced and
-    cast to the declared Arrow schema eagerly, so a payload that does not
-    coerce fails here; decoding a valid IPC batch cannot fail on values.
+    cast to the declared Arrow schema here, so a payload that does not
+    coerce fails before any relation or row exists.  The cache
+    (:func:`create_lookup_df`) and both readers of the data source
+    (:mod:`sources.datasource`) load through this function, so they hold
+    the same rows for one body and fail with the same text.
+    """
+    body = fetch_with_retry(opts, metrics=stats.http)
+    table = read_arrow(body, opts.xpath, schema)
+    if table is None:
+        table = rows_table(deserialize_nodes(parse_payload(body, opts.xpath), schema), schema)
+        stats.arrow_fallbacks += 1
+    return table
+
+
+def create_lookup_df(
+    spark: SparkSession,
+    options: dict[str, object] | HttpLookupOptions,
+    schema: StructType | str,
+    *,
+    stats: FetchStats | None = None,
+) -> DataFrame:
+    """Build the full-cache lookup DataFrame (one bounded scan).
+
+    The whole payload lives on the driver ≙ the reference's single
+    ``GenericInputSplit`` (``HttpInputFormatProvider.scala:80-81``) and
+    becomes one Arrow table through :func:`load_table`, the load the
+    ``http-lookup-full-cache`` data source runs too; decoding a valid IPC
+    batch cannot fail on values.
 
     The table goes to the JVM as Spark's Arrow-batch relation, **``Scan
     ExistingRDD arrow``**, whatever
@@ -166,15 +180,10 @@ def create_lookup_df(
     opts = validate_options(options)
     stats = stats or FetchStats()
     t0 = time.monotonic()
-    body = fetch_with_retry(opts, metrics=stats.http)
-    table = read_arrow(body, opts.xpath, schema)
-    declined = table is None
-    if declined:
-        table = rows_table(deserialize_nodes(parse_payload(body, opts.xpath), schema), schema)
+    table = load_table(opts, schema, stats)
     df = _arrow_relation(spark, table, schema)
     RECORDS[df] = Snapshot(table)
     stats.fetch_count += 1
-    stats.arrow_fallbacks += declined
     stats.last_fetch_duration_s = time.monotonic() - t0
     stats.total_fetch_duration_s += stats.last_fetch_duration_s
     stats.last_row_count = table.num_rows

@@ -1,17 +1,21 @@
 """Python Data Source registration tests (A3/A4): format name, declared
 schema, projection narrowing, batch read, microbatch streaming refresh."""
 
+import datetime
 import json
+import re
 import time
 
 import pyarrow as pa
 import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import InputPartition
-from pyspark.sql.types import StructType
+from pyspark.sql.types import MapType, StructType
 from pyspark.sql.worker.plan_data_source_read import records_to_arrow_batches
 
 from flink_http_full_cache_connector_spark.rows import read_arrow
+from flink_http_full_cache_connector_spark.sources import lookup
 from flink_http_full_cache_connector_spark.sources.datasource import (
     HttpLookupDataSource,
     register,
@@ -203,7 +207,7 @@ def los_angeles_tz(monkeypatch):
     time.tzset()
 
 
-def test_reader_timestamps_ignore_worker_time_zone(http_server, los_angeles_tz):
+def test_reader_timestamps_ignore_worker_time_zone(spark, http_server, los_angeles_tz):
     """The reader's rows, converted as Spark's Python data source worker
     converts them, hold the same instants as the driver's Arrow reader: a
     timestamp string is UTC whatever the worker process's local zone."""
@@ -212,6 +216,10 @@ def test_reader_timestamps_ignore_worker_time_zone(http_server, los_angeles_tz):
             {"id": 1, "ts": "2024-01-01 00:00:00"},
             {"id": 2, "ts": "2024-07-01T12:30:00.250"},
             {"id": 3, "ts": None},
+            # the two instants of Los Angeles' repeated hour (01:30 PDT and
+            # 01:30 PST): one naive local time for both
+            {"id": 4, "ts": "2024-11-03T08:30:00Z"},
+            {"id": 5, "ts": "2024-11-03T09:30:00Z"},
         ]
     }
     http_server.set_payload(payload)
@@ -219,5 +227,81 @@ def test_reader_timestamps_ignore_worker_time_zone(http_server, los_angeles_tz):
     source = HttpLookupDataSource({"url": http_server.url, "xpath": "/data"})
     rows = source.reader(schema).read(InputPartition(0))
     batches = records_to_arrow_batches(rows, 1000, schema, source)
+    got = pa.Table.from_batches(batches).to_pylist()
     driver = read_arrow(json.dumps(payload).encode(), "/data", schema)
-    assert pa.Table.from_batches(batches).to_pylist() == driver.to_pylist()
+    assert got == driver.to_pylist()
+    utc = datetime.timezone.utc
+    assert [r["ts"] for r in got[3:]] == [
+        datetime.datetime(2024, 11, 3, h, 30, tzinfo=utc) for h in (8, 9)
+    ]
+
+
+def _as_read(value):
+    """A collected value in the form the data source's readers yield it: a
+    ROW as a dict and a TIMESTAMP (collected as naive local time) as an
+    aware UTC datetime."""
+    if isinstance(value, Row):
+        return {k: _as_read(v) for k, v in value.asDict().items()}
+    if isinstance(value, dict):
+        return {k: _as_read(v) for k, v in value.items()}
+    if isinstance(value, list):
+        return [_as_read(v) for v in value]
+    if isinstance(value, datetime.datetime):
+        return value.astimezone(datetime.timezone.utc)
+    return value
+
+
+@pytest.mark.parametrize(
+    "ddl, payload, coercions",
+    [(SCALAR_DDL, SCALAR_ROWS, 0), (NESTED_DDL, NESTED_ROWS, 1)],
+    ids=["scalar", "nested"],
+)
+def test_readers_yield_the_rows_of_the_cache_table(spark, monkeypatch, ddl, payload, coercions):
+    """The batch reader, the stream reader and its replay load through the
+    cache's Arrow build: the exact path's coercer runs only for a body the
+    Arrow reader declines, once per read, and each reader yields
+    ``create_lookup_df``'s rows, a MAP as a dict."""
+    calls = []
+    coerce = lookup.deserialize_nodes
+    monkeypatch.setattr(
+        lookup, "deserialize_nodes", lambda nodes, schema: calls.append(1) or coerce(nodes, schema)
+    )
+    schema = StructType.fromDDL(ddl)
+    with serve_json(payload) as url:
+        source = HttpLookupDataSource({"url": url})
+        stream = source.simpleStreamReader(schema)
+        reads = [list(source.reader(schema).read(InputPartition(0)))]
+        assert len(calls) == coercions
+        rows, end = stream.read(stream.initialOffset())
+        reads.append(list(rows))
+        assert len(calls) == 2 * coercions
+        reads.append(list(stream.readBetweenOffsets(stream.initialOffset(), end)))
+        assert len(calls) == 3 * coercions
+        cache = create_lookup_df(spark, {"url": url}, schema).collect()
+    want = sorted((tuple(map(_as_read, row)) for row in cache), key=lambda r: r[0])
+    maps = [i for i, f in enumerate(schema.fields) if isinstance(f.dataType, MapType)]
+    for got in reads:
+        assert sorted(got, key=lambda r: r[0]) == want and len(got) == len(payload)
+        assert all(isinstance(row[i], dict) for row in got for i in maps if row[i] is not None)
+
+
+@pytest.mark.parametrize("fault", ["retries", "coercion"])
+def test_data_source_fails_fast_with_the_reference_text(registered, http_server, fault):
+    """A scan and a stream read fail with the reference's text when retries
+    run out (``max.retries`` 1: two GETs each) and when a body the Arrow
+    reader declines holds a value that does not coerce."""
+    if fault == "retries":
+        http_server.set_status_sequence([500] * 4)
+        options = {"url": http_server.url, "max.retries": "1", "retry.delay.ms": "1"}
+        message = re.escape(f"Failed to fetch data from {http_server.url} after 1 retries")
+    else:
+        http_server.set_payload({"data": [{"id": 1, "name": "a"}, {"id": "x", "name": "b"}]})
+        options = {"url": http_server.url, "xpath": "/data"}
+        message = "Failed to deserialize JSON node"
+    df = registered.read.format("http-lookup-full-cache").schema(DDL).options(**options).load()
+    with pytest.raises(Exception, match=message):
+        df.collect()
+    stream = HttpLookupDataSource(options).simpleStreamReader(StructType.fromDDL(DDL))
+    with pytest.raises(RuntimeError, match=message):
+        stream.read(stream.initialOffset())
+    assert http_server.request_count == (4 if fault == "retries" else 2)
