@@ -104,6 +104,12 @@ from flink_http_full_cache_connector_spark.http_client import _pointer_tokens
 #: wide enough for any DECIMAL(38, s) value
 _DECIMAL_CONTEXT = decimal.Context(prec=38)
 
+#: (min, max) of each declared integer type's signed width; a value outside
+#: it fails, as flink-json's ``Short.parseShort``/``Integer.parseInt``/
+#: ``Long.parseLong`` fallback fails it
+_INT_RANGE = {ShortType: (-(2**15), 2**15 - 1), IntegerType: (-(2**31), 2**31 - 1),
+              LongType: (-(2**63), 2**63 - 1)}
+
 
 def _parse_sql_timestamp(text: str) -> _dt.datetime:
     """SQL-format text → UTC-aware datetime.  Aware, so Spark's Python
@@ -140,12 +146,17 @@ def coerce_value(value: Any, dtype: DataType) -> Any:
         if isinstance(value, bool):
             raise ValueError(f"cannot cast {value!r} to integer")
         if isinstance(value, int):
-            return value
-        if isinstance(value, str):
-            return int(value.strip())
-        if isinstance(value, float) and value.is_integer():
-            return int(value)
-        raise ValueError(f"cannot cast {value!r} to integer")
+            n = value
+        elif isinstance(value, str):
+            n = int(value.strip())
+        elif isinstance(value, float) and value.is_integer():
+            n = int(value)
+        else:
+            raise ValueError(f"cannot cast {value!r} to integer")
+        lo, hi = _INT_RANGE[type(dtype)]
+        if not lo <= n <= hi:
+            raise ValueError(f"{value!r} is out of range for {dtype.simpleString()}")
+        return n
     if isinstance(dtype, (DoubleType, FloatType)):
         if isinstance(value, bool):
             raise ValueError(f"cannot cast {value!r} to double")

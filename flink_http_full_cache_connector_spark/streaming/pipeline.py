@@ -14,7 +14,6 @@ B9 (``INSERT INTO``) needs no helper: it is
 from __future__ import annotations
 
 import contextlib
-import os
 import time
 import uuid
 
@@ -30,22 +29,18 @@ from pyspark.sql.streaming import StreamingQuery
 #: profile: 3-microbatch update streams spent most of their wall in
 #: 32-instance HDFS state-store overhead).  Every finite stream in both
 #: packages runs under it through :func:`run_to_memory` or the upsert
-#: runners.  Deployments whose state is NOT metadata-sized (real key
-#: spaces at 100 TB) size this to state volume via the env knob
-#: instead — the value is a per-stream capacity choice, never derived
+#: runners.  The value is a per-stream capacity choice, never derived
 #: from the driver's core count, so the bench stays comparable across
 #: SPARK_GRAFT_CPUS settings.
-STREAM_SHUFFLE_ENV = "SPARK_GRAFT_STREAM_SHUFFLE"
-STREAM_SHUFFLE_DEFAULT = 8
+STREAM_SHUFFLE_PARTITIONS = 8
 
 
 @contextlib.contextmanager
 def scoped_stream_shuffle(spark: SparkSession):
     """Scope ``spark.sql.shuffle.partitions`` for one streaming query's
-    start+run (set → yield → restore).  See STREAM_SHUFFLE_DEFAULT."""
-    n = int(os.environ.get(STREAM_SHUFFLE_ENV, STREAM_SHUFFLE_DEFAULT))
+    start+run (set → yield → restore).  See STREAM_SHUFFLE_PARTITIONS."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
     try:
         yield
     finally:

@@ -38,7 +38,7 @@ def test_bench_emits_one_json_line_with_required_keys(tmp_path):
     lines = [ln for ln in proc.stdout.strip().splitlines() if ln.startswith("{")]
     assert len(lines) == 1, proc.stdout
     # the driver records only the last 2000 stdout bytes; the machine line
-    # must survive that window whole (BENCH_r01 lost 34 timings to it)
+    # must survive that window whole (round 1's bench line lost 34 timings to it)
     import bench
 
     assert len(lines[0]) <= bench.MACHINE_LINE_BUDGET, len(lines[0])

@@ -285,17 +285,19 @@ def test_readers_yield_the_rows_of_the_cache_table(spark, monkeypatch, ddl, payl
         assert all(isinstance(row[i], dict) for row in got for i in maps if row[i] is not None)
 
 
-@pytest.mark.parametrize("fault", ["retries", "coercion"])
+@pytest.mark.parametrize("fault", ["retries", "coercion", "overflow"])
 def test_data_source_fails_fast_with_the_reference_text(registered, http_server, fault):
     """A scan and a stream read fail with the reference's text when retries
     run out (``max.retries`` 1: two GETs each) and when a body the Arrow
-    reader declines holds a value that does not coerce."""
+    reader declines holds a value that does not coerce: text in an INT
+    column, or an integer past its 32 bits."""
+    bad_id = {"coercion": "x", "overflow": 2**31}.get(fault)
     if fault == "retries":
         http_server.set_status_sequence([500] * 4)
         options = {"url": http_server.url, "max.retries": "1", "retry.delay.ms": "1"}
         message = re.escape(f"Failed to fetch data from {http_server.url} after 1 retries")
     else:
-        http_server.set_payload({"data": [{"id": 1, "name": "a"}, {"id": "x", "name": "b"}]})
+        http_server.set_payload({"data": [{"id": 1, "name": "a"}, {"id": bad_id, "name": "b"}]})
         options = {"url": http_server.url, "xpath": "/data"}
         message = "Failed to deserialize JSON node"
     df = registered.read.format("http-lookup-full-cache").schema(DDL).options(**options).load()

@@ -150,6 +150,15 @@ def test_empty_payload_yields_empty_typed_df(spark, http_server):
     assert df.schema == USERS_SCHEMA
 
 
+@pytest.mark.parametrize("column, value", [("s", 2**15), ("i", -(2**31) - 1), ("l", str(2**63))])
+def test_out_of_range_integer_fails_with_the_reference_text(spark, http_server, column, value):
+    """An integer past its declared column's width fails the load with the
+    reference's text naming the node, not with Arrow's overflow error."""
+    http_server.set_payload([{"s": 1, "i": 1, "l": 1}, {column: value}])
+    with pytest.raises(RuntimeError, match="Failed to deserialize JSON node"):
+        create_lookup_df(spark, {"url": http_server.url}, "s SMALLINT, i INT, l BIGINT")
+
+
 def test_nested_row_schema_through_arrow_path(spark, http_server):
     """Nested ROW columns (HttpLookupTableSourceFactoryTest.scala:189-193)
     must survive the Arrow path: struct values populated, missing nested

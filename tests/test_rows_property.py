@@ -119,11 +119,29 @@ def test_deserialize_nodes_failure_names_the_node(node):
 @settings(max_examples=50, deadline=None)
 @given(num=st.floats(allow_nan=False, allow_infinity=False))
 def test_int_column_rejects_fractional_floats(num):
-    if num.is_integer():
+    if num.is_integer() and -(2**63) <= num < 2**63:
         assert coerce_value(num, LongType()) == int(num)
     else:
         with pytest.raises(ValueError):
             coerce_value(num, LongType())
+
+
+@pytest.mark.parametrize(
+    "dtype, bits", [(ShortType(), 16), (IntegerType(), 32), (LongType(), 64)], ids=str
+)
+@pytest.mark.parametrize("as_text", [False, True], ids=["number", "string"])
+def test_int_column_fails_outside_its_declared_width(dtype, bits, as_text):
+    """min and max load; min-1 and max+1 fail with the reference's text
+    inside ``deserialize_nodes``, where flink-json's ``parseShort``,
+    ``parseInt`` and ``parseLong`` fail them, not in the Arrow build."""
+    lo, hi = -(2 ** (bits - 1)), 2 ** (bits - 1) - 1
+    schema = StructType([StructField("n", dtype)])
+    form = str if as_text else int
+    rows = deserialize_nodes([{"n": form(lo)}, {"n": form(hi)}], schema)
+    assert rows_table(rows, schema).column("n").to_pylist() == [lo, hi]
+    for bad in (lo - 1, hi + 1):
+        with pytest.raises(RuntimeError, match="Failed to deserialize JSON node"):
+            deserialize_nodes([{"n": form(bad)}], schema)
 
 
 def test_bool_not_accepted_as_number():

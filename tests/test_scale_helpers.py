@@ -104,23 +104,23 @@ def test_kafka_reader_is_declarative(spark):
 # --- r11 optimization helpers -------------------------------------------
 
 
-def test_scoped_stream_shuffle_sets_and_restores(spark, monkeypatch):
-    """The streaming scope must apply its partition count inside the block
-    (default 8, env-overridable) and restore the previous session value on
-    exit, including on error — a leaked value would silently resize every
-    later batch query's shuffles."""
+def test_scoped_stream_shuffle_sets_and_restores(spark):
+    """The streaming scope must apply its partition count (8) inside the
+    block and restore the previous session value on exit, including on
+    error — a leaked value would silently resize every later batch query's
+    shuffles."""
     from flink_http_full_cache_connector_spark.streaming.pipeline import (
         scoped_stream_shuffle,
     )
 
     prev = spark.conf.get("spark.sql.shuffle.partitions")
+    assert prev != "8"  # else a restore would not show
     with scoped_stream_shuffle(spark):
         assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", "5")
     with pytest.raises(RuntimeError):
         with scoped_stream_shuffle(spark):
-            assert spark.conf.get("spark.sql.shuffle.partitions") == "5"
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
             raise RuntimeError("boom")
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
 

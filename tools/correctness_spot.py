@@ -1,9 +1,8 @@
 #!/usr/bin/env python
 """Spot-check named registered queries against their DuckDB oracles with
-the driver-identical canonicalization — the single-query complement of
-tools/correctness_full.py (which sweeps the whole registry and writes the
-CORRECTNESS_FULL.json artifact; this prints per-query verdicts and writes
-nothing).
+the driver-identical canonicalization.  Every registered name resolves: the
+22 reference queries and the training-data operator set's.  Prints one
+verdict per query and writes nothing.
 
 Usage:  python tools/correctness_spot.py q1 [q2 ...]   (env: SPARK_GRAFT_SF_DIR)
 """
@@ -20,9 +19,8 @@ def main(names: list[str]) -> int:
 
     import duckdb
 
-    import __spark_entry__ as entry_mod
     from flink_http_full_cache_connector_spark.session import build_session
-    from tests.test_driver_canon import TABLES, driver_canon, value_hash
+    from tests.test_driver_canon import TABLES, driver_canon, queries_and_oracles, value_hash
 
     spark = build_session(
         "flink-http-full-cache-connector-spark-correctness-spot",
@@ -33,15 +31,15 @@ def main(names: list[str]) -> int:
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    qs, osql = entry_mod.queries(), entry_mod.oracle_sql()
+    registered = {name: (fn, sql) for name, fn, sql in queries_and_oracles()}
     bad = 0
     for name in names:
-        if name not in qs:
+        if name not in registered:
             print(f"{name}: UNKNOWN QUERY")
             bad += 1
             continue
-        sdf = qs[name](spark, sf_dir).toPandas()
-        sql = osql.get(name)
+        fn, sql = registered[name]
+        sdf = fn(spark, sf_dir).toPandas()
         if sql is None:
             print(f"{name}: rows_only ({len(sdf)} rows)")
             continue
