@@ -132,6 +132,9 @@ def main() -> None:
                 "queries": timings,
                 "sf": sf,
                 "cpus": cpus,
+                # the cores the local[cpus] threads share: cpus is the Spark
+                # parallelism, not the size of the host
+                "host_cpus": os.cpu_count(),
                 # machine-load markers (r8 verdict #8: two same-code min-of-2
                 # runs differed ~30% under snapshot-window load — record the
                 # conditions so round-over-round deltas are interpretable).

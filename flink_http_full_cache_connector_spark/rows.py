@@ -24,8 +24,9 @@ Two paths build the Arrow table of one load
   the JSON-native type (``_READ_AS``) whose conversion equals
   :func:`coerce_value` on every value it accepts.
 - **The exact path** is ``http_client.parse_payload`` (the one decode,
-  ``json.loads``, the pointer, the fan-out), then :func:`deserialize_nodes`
-  and :func:`rows_table`.  It gives the reference's values and error text.
+  ``json.loads``, the pointer, the fan-out), then :func:`deserialize_nodes`:
+  :func:`coerce_value` per node, then one struct-array build.  It gives the
+  reference's values and error text.
 
 The reader declines, and the exact path runs, wherever the two could
 differ:
@@ -63,8 +64,8 @@ where ``json.loads`` refuses it (a known divergence, pinned by
 Measured in-process on perfbench ``dim_load``'s 20k-row, 7-column body
 (3.5 MB, pointer ``/data``), on a 4-core VM, medians: the reader ~30-45 ms,
 about the same for the records as a root array (pointer ``""``); the exact
-path ~0.4-0.5 s, of which ``json.loads`` ~35-45 ms,
-:func:`deserialize_nodes` ~0.35-0.4 s and :func:`rows_table` ~7 ms.  A
+path ~0.35-0.55 s, of which ``json.loads`` ~35-45 ms and
+:func:`deserialize_nodes` ~0.3-0.5 s (the Arrow build in it ~7 ms).  A
 body the reader declines pays both.
 """
 
@@ -166,13 +167,22 @@ def coerce_value(value: Any, dtype: DataType) -> Any:
             return float(value.strip())
         raise ValueError(f"cannot cast {value!r} to double")
     if isinstance(dtype, DecimalType):
+        number = decimal.Decimal(str(value))
+        if not number.is_finite():
+            raise ValueError(f"cannot cast {value!r} to DECIMAL")
         # rounded half-up to the declared scale, as flink's
-        # DecimalData.fromBigDecimal and Spark's Decimal.set round
-        return decimal.Decimal(str(value)).quantize(
-            decimal.Decimal(1).scaleb(-dtype.scale),
-            rounding=decimal.ROUND_HALF_UP,
-            context=_DECIMAL_CONTEXT,
-        )
+        # DecimalData.fromBigDecimal and Spark's Decimal.set round; null past
+        # the declared precision, or the 38 digits any DECIMAL holds, as
+        # fromBigDecimal returns it
+        try:
+            number = number.quantize(
+                decimal.Decimal(1).scaleb(-dtype.scale),
+                rounding=decimal.ROUND_HALF_UP,
+                context=_DECIMAL_CONTEXT,
+            )
+        except decimal.InvalidOperation:
+            return None
+        return number if len(number.as_tuple().digits) <= dtype.precision else None
     if isinstance(dtype, TimestampType):
         if isinstance(value, str):
             return _parse_sql_timestamp(value)
@@ -183,7 +193,8 @@ def coerce_value(value: Any, dtype: DataType) -> Any:
         raise ValueError(f"cannot cast {value!r} to DATE")
     if isinstance(dtype, StructType):
         if isinstance(value, dict):
-            return coerce_object(value, dtype)
+            # missing field → None; extra fields are ignored
+            return tuple(coerce_value(value.get(f.name), f.dataType) for f in dtype.fields)
         raise ValueError(f"cannot cast {value!r} to ROW")
     if isinstance(dtype, ArrayType):
         if isinstance(value, list):
@@ -196,24 +207,21 @@ def coerce_value(value: Any, dtype: DataType) -> Any:
     raise ValueError(f"unsupported declared type: {dtype.simpleString()}")
 
 
-def coerce_object(node: Any, schema: StructType) -> tuple:
-    """JSON object → row tuple per declared schema; missing field → None."""
-    if not isinstance(node, dict):
-        raise ValueError(f"expected JSON object, got {type(node).__name__}")
-    return tuple(coerce_value(node.get(f.name), f.dataType) for f in schema.fields)
-
-
-def deserialize_nodes(nodes: list[Any], schema: StructType) -> list[tuple]:
-    """Deserialize row-nodes; per-node failure raises with the node text
-    (≙ ``deserializeNode``, ``HttpInputFormatProvider.scala:163-172``)."""
-    out: list[tuple] = []
+def deserialize_nodes(nodes: list[Any], schema: StructType) -> pa.Table:
+    """Row-nodes → Arrow table of ``schema`` (naive datetimes read as UTC
+    instants, like :func:`read_arrow`); per-node failure raises with the
+    node text (≙ ``deserializeNode``, ``HttpInputFormatProvider.scala:163-172``)."""
+    rows: list[tuple] = []
     for node in nodes:
         try:
-            out.append(coerce_object(node, schema))
+            if not isinstance(node, dict):
+                raise ValueError(f"expected JSON object, got {type(node).__name__}")
+            rows.append(coerce_value(node, schema))
         except Exception as e:
             pretty = json.dumps(node, indent=2, default=str)
             raise RuntimeError(f"Failed to deserialize JSON node: {pretty}") from e
-    return out
+    struct = pa.struct(list(to_arrow_schema(schema)))
+    return pa.Table.from_struct_array(pa.array(rows, struct))
 
 
 # --- the reader: the body straight into Arrow ---------------------------------
@@ -376,10 +384,3 @@ def read_arrow(body: bytes, pointer: str, schema: StructType) -> pa.Table | None
     except pa.ArrowException:
         return None
     return pa.Table.from_arrays(columns, schema=arrow_schema)
-
-
-def rows_table(rows: list[tuple], schema: StructType) -> pa.Table:
-    """Driver-side row tuples → Arrow table of ``schema`` (naive datetimes
-    read as UTC instants, like :func:`read_arrow`)."""
-    struct = pa.struct(list(to_arrow_schema(schema)))
-    return pa.Table.from_struct_array(pa.array(rows, struct))

@@ -33,7 +33,7 @@ from flink_http_full_cache_connector_spark.http_client import (
     parse_payload,
 )
 from flink_http_full_cache_connector_spark.options import HttpLookupOptions, validate_options
-from flink_http_full_cache_connector_spark.rows import deserialize_nodes, read_arrow, rows_table
+from flink_http_full_cache_connector_spark.rows import deserialize_nodes, read_arrow
 
 
 @dataclass
@@ -118,13 +118,13 @@ def load_table(opts: HttpLookupOptions, schema: StructType, stats: FetchStats) -
     - a body it declines, one it might read differently from the
       reference (see :mod:`rows`), takes the exact path:
       :func:`parse_payload` (the one decode, malformed bytes as U+FFFD,
-      ``json.loads``, the pointer, the fan-out),
-      :func:`rows.deserialize_nodes` and :func:`rows.rows_table`, with the
-      reference's values and error text; ``stats.arrow_fallbacks`` counts it.
+      ``json.loads``, the pointer, the fan-out), then
+      :func:`rows.deserialize_nodes`, with the reference's values and error
+      text; ``stats.arrow_fallbacks`` counts it.
 
     On perfbench ``dim_load``'s 20k-row, 7-column body (4-core VM,
     in-process) the reader takes ~30-45 ms; a declined body pays that on
-    top of the exact path, ~0.45-0.6 s in all.  The table is coerced and
+    top of the exact path, ~0.35-0.55 s in all.  The table is coerced and
     cast to the declared Arrow schema here, so a payload that does not
     coerce fails before any relation or row exists.  The cache
     (:func:`create_lookup_df`) and both readers of the data source
@@ -134,7 +134,7 @@ def load_table(opts: HttpLookupOptions, schema: StructType, stats: FetchStats) -
     body = fetch_with_retry(opts, metrics=stats.http)
     table = read_arrow(body, opts.xpath, schema)
     if table is None:
-        table = rows_table(deserialize_nodes(parse_payload(body, opts.xpath), schema), schema)
+        table = deserialize_nodes(parse_payload(body, opts.xpath), schema)
         stats.arrow_fallbacks += 1
     return table
 

@@ -3,6 +3,7 @@ schema, projection narrowing, batch read, microbatch streaming refresh."""
 
 import datetime
 import json
+from decimal import Decimal
 import re
 import time
 
@@ -169,6 +170,34 @@ def test_malformed_utf8_reads_as_replacement_character(registered):
             .load()
         )
         assert sorted(map(tuple, read.collect())) == want
+
+
+def test_decimal_past_its_precision_reads_null(registered):
+    """A DECIMAL value whose digits, rounded half-up to the scale, exceed
+    the declared precision reads NULL, as flink's
+    ``DecimalData.fromBigDecimal`` returns it, and so does one past the 38
+    digits any DECIMAL holds; a value at the precision loads exactly.  The
+    reader declines every non-null DECIMAL, so this is the exact path's
+    rule, through ``create_lookup_df``, the batch read and the stream
+    reader alike."""
+    body = (
+        b'{"data":[{"id":1,"amount":123456789012.5},'
+        b'{"id":2,"amount":1234567890123456789012345678901234567890},'
+        b'{"id":3,"amount":99999999.99},{"id":4,"amount":-99999999.99},{"id":5,"amount":"0.005"}]}'
+    )
+    ddl = "id INT, amount DECIMAL(10,2)"
+    want = [(1, None), (2, None), (3, Decimal("99999999.99")), (4, Decimal("-99999999.99")),
+            (5, Decimal("0.01"))]
+    with serve_json(body) as url:
+        options = {"url": url, "xpath": "/data"}
+        stats = FetchStats()
+        cache = create_lookup_df(registered, options, ddl, stats=stats).collect()
+        assert stats.arrow_fallbacks == 1
+        read = registered.read.format("http-lookup-full-cache").schema(ddl).options(**options).load()
+        stream = HttpLookupDataSource(options).simpleStreamReader(StructType.fromDDL(ddl))
+        streamed, _ = stream.read(stream.initialOffset())
+        for got in (cache, read.collect(), streamed):
+            assert sorted(map(tuple, got)) == want
 
 
 @pytest.mark.parametrize(

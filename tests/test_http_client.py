@@ -23,7 +23,7 @@ from flink_http_full_cache_connector_spark.http_client import (
     resolve_json_pointer,
 )
 from flink_http_full_cache_connector_spark.options import HttpLookupOptions
-from flink_http_full_cache_connector_spark.rows import coerce_object, deserialize_nodes
+from flink_http_full_cache_connector_spark.rows import coerce_value, deserialize_nodes
 
 
 # --- retry (pinned behavior 3/5 from FIXTURES.md) ---------------------------
@@ -301,7 +301,7 @@ SCHEMA = StructType(
 
 
 def test_coerce_full_row():
-    row = coerce_object(
+    row = coerce_value(
         {"id": 7, "name": "x", "amount": 1.5, "ts": "2024-01-02 03:04:05.678"}, SCHEMA
     )
     assert row == (
@@ -311,12 +311,12 @@ def test_coerce_full_row():
 
 def test_missing_field_is_null_and_extra_ignored():
     # failOnMissingField=false: absent → NULL; extra JSON fields ignored
-    row = coerce_object({"id": 1, "extra": "ignored"}, SCHEMA)
+    row = coerce_value({"id": 1, "extra": "ignored"}, SCHEMA)
     assert row == (1, None, None, None)
 
 
 def test_json_null_is_null():
-    assert coerce_object({"id": None, "name": None}, SCHEMA)[:2] == (None, None)
+    assert coerce_value({"id": None, "name": None}, SCHEMA)[:2] == (None, None)
 
 
 def test_malformed_value_fails_job():
@@ -326,12 +326,12 @@ def test_malformed_value_fails_job():
 
 
 def test_numeric_widening_and_string_numbers():
-    row = coerce_object({"id": "42", "amount": 7}, SCHEMA)
+    row = coerce_value({"id": "42", "amount": 7}, SCHEMA)
     assert row[0] == 42 and row[2] == 7.0
 
 
 def test_timestamp_sql_format_no_fraction():
-    row = coerce_object({"ts": "2024-01-02 03:04:05"}, SCHEMA)
+    row = coerce_value({"ts": "2024-01-02 03:04:05"}, SCHEMA)
     assert row[3] == datetime.datetime(2024, 1, 2, 3, 4, 5, tzinfo=datetime.timezone.utc)
 
 
@@ -347,5 +347,5 @@ def test_nested_row():
             ),
         ]
     )
-    row = coerce_object({"id": 1, "address": {"city": "Oslo", "zip": "0150"}}, nested)
+    row = coerce_value({"id": 1, "address": {"city": "Oslo", "zip": "0150"}}, nested)
     assert row == (1, ("Oslo", "0150"))

@@ -223,7 +223,7 @@ def test_lookup_df_matches_row_build_under_non_utc_session(spark, http_server, p
     reference coercer now does it."""
     import pandas as pd
 
-    from flink_http_full_cache_connector_spark.rows import deserialize_nodes
+    from flink_http_full_cache_connector_spark.rows import coerce_value
 
     schema = StructType.fromDDL("id BIGINT, at TIMESTAMP, day DATE, v DOUBLE, amount DECIMAL(10,1)")
     http_server.set_payload(payload)
@@ -237,7 +237,7 @@ def test_lookup_df_matches_row_build_under_non_utc_session(spark, http_server, p
         # next to NULLs) converted through Arrow
         spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
         pdf = pd.DataFrame(
-            deserialize_nodes(payload, schema), columns=schema.fieldNames(), dtype=object
+            [coerce_value(node, schema) for node in payload], columns=schema.fieldNames(), dtype=object
         )
         want = spark.createDataFrame(pdf, schema)
         assert sorted(got.collect()) == sorted(want.collect())

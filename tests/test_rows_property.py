@@ -3,8 +3,8 @@ round-trip fidelity, missing/null handling, and strictness invariants hold
 for arbitrary generated payloads — not just the golden fixtures.  The
 reader (``rows.read_arrow``, the body straight into Arrow) is checked
 differentially against the exact path it stands in for
-(``parse_payload`` → ``deserialize_nodes`` → ``rows_table``), on the
-body's UTF-8 bytes, as the lookup path hands them to both."""
+(``parse_payload`` → ``deserialize_nodes``), on the body's UTF-8 bytes, as
+the lookup path hands them to both."""
 
 import datetime as dt
 import json
@@ -33,13 +33,7 @@ from pyspark.sql.types import (
 )
 
 from flink_http_full_cache_connector_spark.http_client import parse_payload
-from flink_http_full_cache_connector_spark.rows import (
-    coerce_object,
-    coerce_value,
-    deserialize_nodes,
-    read_arrow,
-    rows_table,
-)
+from flink_http_full_cache_connector_spark.rows import coerce_value, deserialize_nodes, read_arrow
 
 SCHEMA = StructType(
     [
@@ -68,7 +62,7 @@ payloads = st.fixed_dictionaries(
 @settings(max_examples=200, deadline=None)
 @given(node=payloads)
 def test_coercion_round_trips_arbitrary_payloads(node):
-    row = coerce_object(node, SCHEMA)
+    row = coerce_value(node, SCHEMA)
     assert len(row) == len(SCHEMA.fields)
     for value, field in zip(row, SCHEMA.fields):
         orig = node.get(field.name)
@@ -137,8 +131,8 @@ def test_int_column_fails_outside_its_declared_width(dtype, bits, as_text):
     lo, hi = -(2 ** (bits - 1)), 2 ** (bits - 1) - 1
     schema = StructType([StructField("n", dtype)])
     form = str if as_text else int
-    rows = deserialize_nodes([{"n": form(lo)}, {"n": form(hi)}], schema)
-    assert rows_table(rows, schema).column("n").to_pylist() == [lo, hi]
+    table = deserialize_nodes([{"n": form(lo)}, {"n": form(hi)}], schema)
+    assert table.column("n").to_pylist() == [lo, hi]
     for bad in (lo - 1, hi + 1):
         with pytest.raises(RuntimeError, match="Failed to deserialize JSON node"):
             deserialize_nodes([{"n": form(bad)}], schema)
@@ -159,6 +153,8 @@ def test_bool_not_accepted_as_number():
         (-2.5, DecimalType(10, 0), "-3"),
         (7, DecimalType(38, 10), "7.0000000000"),
         ("123456789012345678901234567.5", DecimalType(38, 0), "123456789012345678901234568"),
+        (99999999.99, DecimalType(10, 2), "99999999.99"),
+        ("-99999999.99", DecimalType(10, 2), "-99999999.99"),
     ],
 )
 def test_decimal_rounds_half_up_to_declared_scale(value, dtype, want):
@@ -166,6 +162,29 @@ def test_decimal_rounds_half_up_to_declared_scale(value, dtype, want):
     and Spark's Decimal.set do."""
     out = coerce_value(value, dtype)
     assert str(out) == want
+
+
+@pytest.mark.parametrize(
+    "value, dtype",
+    [
+        (123456789012.5, DecimalType(10, 2)),
+        ("-123456789012.5", DecimalType(10, 2)),
+        (99999999.995, DecimalType(10, 2)),  # rounds up to 11 digits
+        (10**39, DecimalType(38, 0)),
+        ("1" * 40 + ".5", DecimalType(38, 2)),
+    ],
+)
+def test_decimal_past_its_precision_is_null(value, dtype):
+    """Rounded half-up to the scale, a value with more digits than the
+    declared precision is null, as flink's ``DecimalData.fromBigDecimal``
+    returns it; so is one past the 38 digits any DECIMAL holds."""
+    assert coerce_value(value, dtype) is None
+
+
+@pytest.mark.parametrize("value", [float("inf"), float("nan"), "x", True, [1]])
+def test_decimal_fails_on_a_value_that_is_no_number(value):
+    with pytest.raises((ValueError, ArithmeticError)):
+        coerce_value(value, DecimalType(10, 2))
 
 
 @settings(max_examples=50, deadline=None)
@@ -320,7 +339,7 @@ def _outcome(build):
 def _exact(body, pointer, schema):
     """The exact path: the decode, ``json.loads``, the pointer, the row
     coercer."""
-    return rows_table(deserialize_nodes(parse_payload(body, pointer), schema), schema)
+    return deserialize_nodes(parse_payload(body, pointer), schema)
 
 
 def _engine(body, pointer, schema):
@@ -531,6 +550,59 @@ def test_arrow_fast_path_measured_traps(values, dtype):
     else:
         schema = StructType([StructField("c", dtype)])
         _assert_same_as_reference([{"c": v} for v in values], schema)
+
+
+def _one(dtype):
+    return StructType([StructField("c", dtype)])
+
+
+TWO_INTS = StructType([StructField("a", IntegerType()), StructField("b", IntegerType())])
+NESTED = StructType(
+    [
+        StructField("r", StructType([StructField("a", IntegerType()), StructField("b", StringType())])),
+        StructField("l", ArrayType(LongType())),
+        StructField("m", MapType(StringType(), DoubleType())),
+    ]
+)
+
+
+@pytest.mark.parametrize(
+    "nodes, schema",
+    [
+        # a value of another JSON kind than the column's: 1.5 or 2.0 among
+        # ints, a bool as a number and a number as a bool or a string
+        ([{"c": 2}, {"c": 1.5}, {"c": 3}], _one(LongType())),
+        ([{"c": 2.0}, {"c": 7}], _one(LongType())),
+        ([{"c": 1}, {"c": True}], _one(IntegerType())),
+        ([{"c": True}, {"c": 0}], _one(BooleanType())),
+        ([{"c": 1.5}, {"c": False}], _one(DoubleType())),
+        ([{"c": "x"}, {"c": 5}, {"c": [1, "y"]}], _one(StringType())),
+        ([{"c": 2**53 + 1}, {"c": 0.5}], _one(DoubleType())),
+        ([{"c": 2**31}], _one(IntegerType())),
+        # failures: a node that is not an object, and two columns failing
+        # at different rows and at the same row; the first failing node in
+        # document order is named
+        ([{"a": 1}, {"a": 2}, 7, {"a": "x"}], TWO_INTS),
+        ([{"a": 1}, {"a": "x"}, [1], {"a": 2}], TWO_INTS),
+        ([{"a": 1, "b": 2}, {"a": 1, "b": "x"}, {"a": "y", "b": 1}], TWO_INTS),
+        ([{"a": 1, "b": 2}, {"a": "x", "b": "y"}], TWO_INTS),
+        ([{"a": 1, "b": "y"}, {"a": "x", "b": 3}], TWO_INTS),
+        ([{"a": 1, "b": 2.5}, {"a": 1.5, "b": 2}], TWO_INTS),
+        ([{"a": 1, "b": "x"}, {"a": 2**40, "b": "y"}], TWO_INTS),
+        # nested columns
+        ([{"r": {"a": 1, "b": "x"}, "l": [1, None], "m": {"k": 1.5}}, {"r": {"a": "2"}, "m": {}}, {}], NESTED),
+        ([{"r": {"a": 1}, "l": [1]}, {"r": [1], "l": [2]}], NESTED),
+        ([{"l": [1, "z"], "m": {"k": "w"}}], NESTED),
+        ([{"r": {"a": 1, "b": {"c": 1}}, "l": None, "m": {"k": 2, "j": None}}], NESTED),
+        ([], NESTED),
+    ],
+)
+def test_hand_written_nodes_read_as_the_exact_path_reads_them(nodes, schema):
+    """Hand-written nodes where the reader could convert a value that
+    :func:`coerce_value` converts differently or refuses, or read a body
+    the exact path fails on.  Each case is compared with the exact path's
+    rows, or its error's type and text."""
+    _assert_same_as_reference(nodes, schema)
 
 
 def test_reader_takes_the_body_without_copying_it():

@@ -1079,9 +1079,8 @@ def connected_components(
 
     n_edges = sym.count()
     if n_edges <= local_threshold:
+        import pyarrow as pa
         from pyspark.sql.types import LongType, StructField, StructType
-
-        from flink_http_full_cache_connector_spark.rows import rows_table
 
         parent: dict[int, int] = {}
 
@@ -1101,7 +1100,8 @@ def connected_components(
         schema = StructType(
             [StructField("id", LongType()), StructField("label", LongType())]
         )
-        return edges.sparkSession.createDataFrame(rows_table(rows, schema), schema)
+        pairs = pa.array(rows, pa.struct([("id", pa.int64()), ("label", pa.int64())]))
+        return edges.sparkSession.createDataFrame(pa.Table.from_struct_array(pairs), schema)
     labels = sym.select(F.col("a").alias("id")).distinct().withColumn(
         "label", F.col("id")
     )
