@@ -645,10 +645,6 @@ def streaming_bounded_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(exceptions re-raise).",
 )
 def streaming_console_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flink_http_full_cache_connector_spark.streaming.pipeline import (
-        start_console_sink,
-    )
-
     region = load_table(spark, sf_dir, "region")
     stream = (
         table_stream(spark, sf_dir, "nation")
@@ -656,8 +652,11 @@ def streaming_console_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("r_regionkey", "r_name")
         .agg(F.count("*").alias("n_nations"))
     )
-    console = start_console_sink(
-        stream, output_mode="complete", numRows=5, truncate=False
+    console = (
+        stream.writeStream.format("console")
+        .outputMode("complete")
+        .options(numRows=5, truncate=False)
+        .start()
     )
     console.processAllAvailable()
     exc = console.exception()
@@ -672,8 +671,8 @@ def streaming_console_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     "SELECT n_nationkey, n_name, n_regionkey FROM nation",
     doc="A5's stream twin through the REGISTERED FORMAT: "
     "spark.readStream.format('http-lookup-full-cache') drives "
-    "HttpLookupStreamReader (simpleStreamReader microbatch re-snapshot, "
-    "datasource.py:97-135 ≙ FullCachingLookupProvider + "
+    "sources/datasource.py's HttpLookupStreamReader (simpleStreamReader "
+    "microbatch re-snapshot ≙ FullCachingLookupProvider + "
     "PeriodicCacheReloadTrigger).  PT0S refresh makes every microbatch a "
     "fresh fetch; the bounded collector takes exactly one snapshot's "
     "cardinality, and because epoch 1 delivers the complete payload in "

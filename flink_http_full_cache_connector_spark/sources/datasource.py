@@ -26,10 +26,10 @@ Parity notes:
   :func:`sources.lookup.load_table`, the Arrow build the driver-side cache
   runs, and yields that table's rows as tuples.  Cache and source hold the
   same rows for one body, and fail with the same text.
-- **Streaming**: ``spark.readStream`` on this source re-snapshots the
-  endpoint per microbatch once ``cache.refresh-interval`` has elapsed
-  (FIXED_DELAY), mirroring ``FullCachingLookupProvider`` +
-  ``PeriodicCacheReloadTrigger`` (A5, ``HttpLookupTableSource.scala:36-54``).
+- **Streaming**: ``spark.readStream`` re-snapshots the endpoint per
+  microbatch by the cache's FIXED_DELAY rule on the monotonic clock, as
+  ``PeriodicCacheReloadTrigger`` does (A5, ``HttpLookupTableSource.scala:36-54``).
+  Its offset is the snapshot epoch alone, so a restarted query loads at once.
 """
 
 from __future__ import annotations
@@ -53,6 +53,7 @@ from flink_http_full_cache_connector_spark.options import (
     validate_options,
 )
 from flink_http_full_cache_connector_spark.sources.lookup import FetchStats, load_table
+from flink_http_full_cache_connector_spark.streaming.refresh import reload_due
 
 #: reader-side option keys injected by Spark itself, not user DDL
 _SPARK_INTERNAL_OPTIONS = {"path", "paths"}
@@ -132,30 +133,28 @@ class HttpLookupReader(DataSourceReader):
 class HttpLookupStreamReader(SimpleDataSourceStreamReader):
     """Microbatch re-snapshot stream (FIXED_DELAY refresh semantics).
 
-    Offset = monotonically increasing snapshot epoch.  A new snapshot is
-    taken when ``cache.refresh-interval`` has elapsed since the previous
-    snapshot *completed* (FIXED_DELAY, ``HttpLookupTableSource.scala:49-52``),
-    or when the wall clock reads earlier than that completion (a step
-    back); otherwise the batch is empty.  Exhausted retries raise → the
-    streaming query fails (fail-fast, no stale data).
+    Offset = ``{"epoch": n}``, the snapshot epoch; only ``epoch`` is read.
+    The reader keeps its last load's end on ``time.monotonic()`` itself; by
+    :func:`streaming.refresh.reload_due` a snapshot is due before its first
+    load (a restart loads at once), then FIXED_DELAY from the last load's
+    end.  Otherwise the batch is empty.  Exhausted retries raise → the query
+    fails (no stale data).
     """
 
     def __init__(self, schema: StructType, opts: HttpLookupOptions):
         self.schema_ = schema
         self.opts = opts
+        self._last_load_end: float | None = None
 
     def initialOffset(self) -> dict:
-        return {"epoch": 0, "last_load_end_ms": 0}
+        return {"epoch": 0}
 
     def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
-        elapsed_ms = int(time.time() * 1000) - start["last_load_end_ms"]
-        # negative after the wall clock steps back: due now, rather than
-        # once the clock has caught up with the last load's end
-        if 0 <= elapsed_ms < int(self.opts.refresh_interval_seconds * 1000):
+        if not reload_due(self.opts, self._last_load_end):
             return iter(()), start
         rows = _rows(self.opts, self.schema_)
-        end = {"epoch": start["epoch"] + 1, "last_load_end_ms": int(time.time() * 1000)}
-        return rows, end
+        self._last_load_end = time.monotonic()
+        return rows, {"epoch": start["epoch"] + 1}
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
         # Replay after failure: re-fetch (snapshot semantics — the cache is

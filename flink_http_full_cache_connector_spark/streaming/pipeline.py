@@ -1,13 +1,14 @@
-"""Streaming pipeline helpers: sinks, watermark, finite and bounded runs.
+"""Streaming pipeline helpers: finite and bounded runs.
 
-Covers the reference's exercised streaming surface:
-- B6 watermark declaration — ``with_watermark``
-- B8 print sink           — ``start_console_sink``
+Covers the parts of the reference's exercised streaming surface that are
+more than one Spark call:
 - finite stream run       — ``run_to_memory``, for both packages (availableNow
   into a memory sink; ``finalize_memory_sink`` is its last step)
 - B10 bounded collection  — ``collect_stream`` (memory sink, take first N)
 
-B9 (``INSERT INTO``) needs no helper: it is
+The rest is plain Spark (SURVEY.md §2.B): B6, the watermark declaration, is
+``df.withWatermark(col, "5 seconds")``; B8, the print sink, is
+``writeStream.format("console")``; B9 (``INSERT INTO``) is
 ``writeStream.option("checkpointLocation", ...).toTable(name)``.
 """
 
@@ -18,7 +19,6 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, Row, SparkSession
-from pyspark.sql.streaming import StreamingQuery
 
 #: Stateful-shuffle partition count scoped around streaming query starts.
 #: Structured Streaming gets NO AQE partition coalescing, and the stateful
@@ -45,21 +45,6 @@ def scoped_stream_shuffle(spark: SparkSession):
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
-def with_watermark(df: DataFrame, event_time_col: str, delay: str = "5 seconds") -> DataFrame:
-    """B6: ``WATERMARK FOR event_time AS event_time - INTERVAL '5' SECOND``."""
-    return df.withWatermark(event_time_col, delay)
-
-
-def start_console_sink(
-    df: DataFrame, *, output_mode: str | None = None, **options
-) -> StreamingQuery:
-    """B8: print sink."""
-    writer = df.writeStream.format("console").options(**options)
-    if output_mode is not None:
-        writer = writer.outputMode(output_mode)
-    return writer.start()
 
 
 def finalize_memory_sink(reduced: DataFrame, sink_name: str) -> DataFrame:

@@ -6,7 +6,10 @@ snapshot lives in memory; every ``cache.refresh-interval`` *measured from
 completion of the previous load*, the scan re-runs and the new snapshot
 atomically replaces the old; a reload whose retries exhaust **fails the
 job** (no stale-cache fallback, pinned by
-``HttpLookupConnectorIntegrationTest.scala:546-672``).
+``HttpLookupConnectorIntegrationTest.scala:546-672``).  The timing is
+:func:`reload_due`, for the stream reader too: on ``time.monotonic()``, and
+due at once before a process's first load, so a restarted stream, whose
+offset is its epoch alone, loads at once as the reference does on deploy.
 
 Spark realization: the snapshot is Spark's Arrow-batch relation
 (:func:`sources.lookup.create_lookup_df`): the driver ships the refreshed
@@ -29,6 +32,15 @@ from pyspark.sql.types import StructType
 
 from flink_http_full_cache_connector_spark.options import HttpLookupOptions, validate_options
 from flink_http_full_cache_connector_spark.sources.lookup import FetchStats, create_lookup_df
+
+
+def reload_due(opts: HttpLookupOptions, last_load_end: float | None) -> bool:
+    """FIXED_DELAY: due when no load has ended yet, or once
+    ``cache.refresh-interval`` has passed on ``time.monotonic()`` since the
+    last one ended (``last_load_end``, a reading of that clock)."""
+    if last_load_end is None:
+        return True
+    return time.monotonic() - last_load_end >= opts.refresh_interval_seconds
 
 
 class RefreshingLookupCache:
@@ -61,7 +73,7 @@ class RefreshingLookupCache:
 
     def due(self) -> bool:
         """FIXED_DELAY: next reload is timed from *completion* of the last."""
-        return (time.monotonic() - self._last_load_end) >= self.opts.refresh_interval_seconds
+        return reload_due(self.opts, self._last_load_end)
 
     def check_and_reload(self, *, force: bool = False) -> bool:
         """Reload if due.  Returns True if a reload happened.

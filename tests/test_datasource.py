@@ -16,13 +16,14 @@ from pyspark.sql.types import MapType, StructType
 from pyspark.sql.worker.plan_data_source_read import records_to_arrow_batches
 
 from flink_http_full_cache_connector_spark.rows import read_arrow
-from flink_http_full_cache_connector_spark.sources import lookup
+from flink_http_full_cache_connector_spark.sources import datasource, lookup
 from flink_http_full_cache_connector_spark.sources.datasource import (
     HttpLookupDataSource,
     register,
 )
 from flink_http_full_cache_connector_spark.sources.local_http import serve_json
 from flink_http_full_cache_connector_spark.sources.lookup import FetchStats, create_lookup_df
+from flink_http_full_cache_connector_spark.streaming import refresh
 from tests.conftest import USERS_V1, USERS_V2
 from tests.test_lookup_source import NESTED_DDL, NESTED_ROWS, SCALAR_DDL, SCALAR_ROWS
 
@@ -131,22 +132,123 @@ def test_stream_refresh_v1_to_v2(registered, http_server, tmp_path):
     assert http_server.request_count >= 2
 
 
-def test_stream_reader_refreshes_after_a_backwards_clock_step(spark, http_server):
-    """The last load ended an hour "later" than now: the wall clock stepped
-    back.  A refresh is due now, not once the clock has caught up (65 min
-    at ``PT5M``); a load that did end within the interval still waits."""
-    source = HttpLookupDataSource(
-        {"url": http_server.url, "cache.refresh-interval": "PT5M"}
-    )
-    reader = source.simpleStreamReader(StructType.fromDDL(DDL))
-    now_ms = int(time.time() * 1000)
-    waiting = {"epoch": 3, "last_load_end_ms": now_ms - 60_000}
-    rows, end = reader.read(waiting)
-    assert (list(rows), end, http_server.request_count) == ([], waiting, 0)
-    rows, end = reader.read({"epoch": 3, "last_load_end_ms": now_ms + 3_600_000})
-    assert len(list(rows)) == len(USERS_V1) and end["epoch"] == 4
-    assert end["last_load_end_ms"] >= now_ms
+class _Clock:
+    """Stands in for the ``time`` module of the modules that time stream
+    refreshes: ``time()`` is the wall clock and ``monotonic()`` the clock
+    FIXED_DELAY runs on.  Each moves only when a test moves it."""
+
+    def __init__(self):
+        self.wall, self.mono = time.time(), time.monotonic()
+
+    def time(self) -> float:
+        return self.wall
+
+    def monotonic(self) -> float:
+        return self.mono
+
+
+@pytest.fixture
+def clock(monkeypatch):
+    """The stub, in place of ``time`` in the reader's and the rule's
+    modules only: Spark's and py4j's threads share the global module."""
+    stub = _Clock()
+    monkeypatch.setattr(datasource, "time", stub)
+    monkeypatch.setattr(refresh, "time", stub)
+    return stub
+
+
+def _stream_reader(url: str, interval: str):
+    source = HttpLookupDataSource({"url": url, "cache.refresh-interval": interval})
+    return source.simpleStreamReader(StructType.fromDDL(DDL))
+
+
+def test_stream_reader_ignores_a_forward_clock_step(spark, http_server, clock):
+    """The wall clock steps an hour forward after a load under ``PT5M``:
+    no refresh is due, since FIXED_DELAY runs on the monotonic clock."""
+    reader = _stream_reader(http_server.url, "PT5M")
+    rows, end = reader.read(reader.initialOffset())
+    assert len(list(rows)) == len(USERS_V1) and end["epoch"] == 1
+    clock.wall += 3600
+    rows, again = reader.read(end)
+    assert (list(rows), again, http_server.request_count) == ([], end, 1)
+
+
+def test_stream_reader_refreshes_after_a_backwards_clock_step(spark, http_server, clock):
+    """The wall clock steps an hour back after a load under ``PT5M``: a
+    minute later on the monotonic clock no refresh is due yet, and five
+    minutes after the load one is, as if the wall clock had not moved."""
+    reader = _stream_reader(http_server.url, "PT5M")
+    rows, end = reader.read(reader.initialOffset())
+    assert len(list(rows)) == len(USERS_V1) and end == {"epoch": 1}
+    clock.wall -= 3600
+    clock.mono += 60
+    rows, again = reader.read(end)
+    assert (list(rows), again, http_server.request_count) == ([], end, 1)
+    clock.wall += 240
+    clock.mono += 240
+    rows, later = reader.read(end)
+    assert len(list(rows)) == len(USERS_V1) and later == {"epoch": 2}
+    assert http_server.request_count == 2
+
+
+def test_stream_reader_loads_at_once_from_an_old_offset(spark, http_server, clock):
+    """A fresh reader, as after a restart, given an offset checkpointed
+    when it still held the last load's wall time, loads at once though that
+    load ended just now, and returns the next epoch alone."""
+    reader = _stream_reader(http_server.url, "PT5M")
+    rows, end = reader.read({"epoch": 3, "last_load_end_ms": int(clock.wall * 1000)})
+    assert len(list(rows)) == len(USERS_V1) and end == {"epoch": 4}
     assert http_server.request_count == 1
+
+
+def test_stream_replay_reads_old_offsets(spark, http_server):
+    """``readBetweenOffsets`` replays a pair of offsets that still hold the
+    last load's wall time: only their epochs are read."""
+    reader = _stream_reader(http_server.url, "PT5M")
+    now_ms = int(time.time() * 1000)
+    start = {"epoch": 3, "last_load_end_ms": now_ms - 60_000}
+    end = {"epoch": 4, "last_load_end_ms": now_ms}
+    assert sorted(row[0] for row in reader.readBetweenOffsets(start, end)) == [
+        u["id"] for u in USERS_V1
+    ]
+    assert list(reader.readBetweenOffsets(end, end)) == []
+    assert http_server.request_count == 1
+
+
+def test_restarted_stream_query_loads_at_once(registered, http_server, tmp_path):
+    """A query restarted from its checkpoint under ``PT1H`` delivers a fresh
+    snapshot in its first batch, as the reference's cache loads when its
+    task deploys, rather than an hour after the checkpointed load."""
+    batches = []
+
+    def run() -> None:
+        stream = (
+            registered.readStream.format("http-lookup-full-cache")
+            .schema(DDL)
+            .option("url", http_server.url)
+            .option("cache.refresh-interval", "PT1H")
+            .load()
+        )
+        query = (
+            stream.writeStream.foreachBatch(
+                lambda df, epoch: batches.append((epoch, sorted(r.name for r in df.collect())))
+            )
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .start()
+        )
+        try:
+            query.processAllAvailable()
+        finally:
+            query.stop()
+
+    run()
+    http_server.set_payload(USERS_V2)
+    run()
+    assert batches == [
+        (0, sorted(u["name"] for u in USERS_V1)),
+        (1, sorted(u["name"] for u in USERS_V2)),
+    ]
+    assert http_server.request_count == 2
 
 
 def test_malformed_utf8_reads_as_replacement_character(registered):

@@ -29,7 +29,6 @@ from flink_http_full_cache_connector_spark.sources.local_http import serve_json
 from flink_http_full_cache_connector_spark.streaming.pipeline import (
     collect_stream,
     run_to_memory,
-    with_watermark,
 )
 from flink_http_full_cache_connector_spark.streaming.refresh import (
     RefreshingLookupCache,
@@ -381,7 +380,7 @@ def test_enrich_stream_example_job_shape(spark, http_server):
 
 def test_watermark_declaration(spark):
     df = datagen_stream(spark, {"user_id": RandomInt(1, 10)}, rows_per_second=1)
-    wm = with_watermark(df.withColumn("event_time", F.col("proc_time")), "event_time")
+    wm = df.withColumn("event_time", F.col("proc_time")).withWatermark("event_time", "5 seconds")
     assert wm.isStreaming  # declaration survives; feeds no windowed op (B6 parity)
 
 
